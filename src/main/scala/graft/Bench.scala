@@ -205,6 +205,37 @@ object Bench {
     "bpe_encode" -> "bpeenc",
     "update_" -> "upd_", "upsert_" -> "ups_")
 
+  /** Trailing zeros carry no information but cost tail budget
+    * ("0.500" -> "0.5"): with 80+ queries the saved chars decide
+    * whether the metric line survives a 2000-char output tail. */
+  private def fmt(v: Double, dec: Int): String = {
+    val s = s"%.${dec}f".format(v)
+    if (s.contains('.')) {
+      val t = s.reverse.dropWhile(_ == '0').reverse
+      if (t.endsWith(".")) t.dropRight(1) else t
+    } else s
+  }
+
+  /** The last-resort tail line over `rows` (name, seconds, error):
+    * every error entry, plus the `keepN` slowest successes; the other
+    * successes are counted in `fast_omitted` and summed in `fast_sum`.
+    * Errors carry no time, so they are in neither field nor in the
+    * total. `tail` holds the remaining fields and the closing brace. */
+  private[graft] def valveLine(rows: Seq[(String, Double, Option[String])],
+      keepN: Int, tail: String): String = {
+    val (errs, oks) = rows.partition(_._3.isDefined)
+    val kept = oks.sortBy(-_._2).take(keepN).map(_._1).toSet
+    val omitted = oks.filterNot(r => kept(r._1))
+    val qs = rows.collect {
+      case (k, _, Some(err)) => "\"" + k + "\":\"err:" + err + "\""
+      case (k, v, None) if kept(k) => "\"" + k + "\":" + fmt(v, 1)
+    }.mkString("{", ",", "}")
+    val errField = if (errs.nonEmpty) s""","errors":${errs.size}""" else ""
+    s"""{"metric":"total","value":${fmt(oks.map(_._2).sum, 1)},"unit":"sec",""" +
+      s""""queries":$qs,"fast_omitted":${omitted.length}""" +
+      s""","fast_sum":${fmt(omitted.map(_._2).sum, 1)}$errField""" + tail
+  }
+
   private[graft] def shortName(k: String): String =
     Abbrev.foldLeft(k.stripPrefix("q_")) { case (s, (full, short)) =>
       if (s.startsWith(full)) short + s.substring(full.length) else s
@@ -392,16 +423,6 @@ object Bench {
             retries.toDouble))
       }
     CacheScope.drain(spark)
-    // trailing zeros carry no information but cost tail budget
-    // ("0.500" -> "0.5") — with 80+ queries the saved chars decide
-    // whether the metric line survives the driver's tail capture
-    def fmt(v: Double, dec: Int): String = {
-      val s = s"%.${dec}f".format(v)
-      if (s.contains('.')) {
-        val t = s.reverse.dropWhile(_ == '0').reverse
-        if (t.endsWith(".")) t.dropRight(1) else t
-      } else s
-    }
     val _assertInjective = {
       val names = SparkEntry.queries.keys.toSeq
       val dup = names.groupBy(shortName).collect {
@@ -489,31 +510,17 @@ object Bench {
     // per-query coverage of 335 queries cannot physically fit the
     // driver's 2000-char capture (335 entries x >= ~9 chars each >
     // 3000 chars); bench_local.json keeps the complete record.
-    def valve(keepN: Int): String = {
-      val bySize = results.sortBy { case (_, v, e, _) =>
-        (if (e.isDefined) Double.MinValue else -v) }
-      val kept = bySize.take(keepN).map(_._1).toSet
-      val omitted = results.filterNot(r => kept(r._1))
-      val qs = results.filter(r => kept(r._1)).map {
-        case (k, _, Some(err), _) => "\"" + shortName(k) + "\":\"err:" + err + "\""
-        case (k, v, None, _) => "\"" + shortName(k) + "\":" + fmt(v, 1)
-      }.mkString("{", ",", "}")
-      val total = fmt(results.collect { case (_, v, None, _) => v }.sum, 1)
-      val nErr = results.count(_._3.isDefined)
-      val errField = if (nErr > 0) s""","errors":$nErr""" else ""
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs""" +
-        s""","fast_omitted":${omitted.length}""" +
-        s""","fast_sum":${fmt(omitted.map(_._2).sum, 1)}$errField""" +
-        adjField(6) + driftField +
-        s""","sf":"${sfDir.split('/').last}"}"""
-    }
+    val valveRows = results.map { case (k, v, e, _) => (shortName(k), v, e) }
+    val valveTail = adjField(6) + driftField +
+      s""","sf":"${sfDir.split('/').last}"}"""
+    def valve(keepN: Int): String = valveLine(valveRows, keepN, valveTail)
     // binary search the largest keepN whose line fits (length is
     // monotone in keepN up to +/- a few chars of fmt jitter, so the
     // result is re-verified and backed off if needed)
     val safeLine =
       if (line.length <= 1950) line
       else {
-        var lo = 0; var hi = results.length
+        var lo = 0; var hi = results.count(_._3.isEmpty)
         while (lo < hi) {
           val mid = (lo + hi + 1) / 2
           if (valve(mid).length <= 1950) lo = mid else hi = mid - 1

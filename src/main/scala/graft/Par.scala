@@ -27,10 +27,13 @@ object Par {
   private implicit val ec: ExecutionContext = ExecutionContext.global
 
   /** Evaluate `a` and `b` concurrently; `a` runs on the caller
-    * thread. Exceptions from either propagate to the caller. */
+    * thread. Exceptions from either propagate to the caller (a's
+    * first). Never returns while `b` still runs, even when `a` throws:
+    * b's jobs and cached frames must not outlive the call. Waits
+    * without a cap, so a slow input stays slow instead of failing. */
   def two[A, B](a: => A, b: => B): (A, B) = {
     val fb = Future(b)
-    val ra = a
-    (ra, Await.result(fb, Duration(600, "s")))
+    val ra = try a finally Await.ready(fb, Duration.Inf)
+    (ra, Await.result(fb, Duration.Inf))
   }
 }

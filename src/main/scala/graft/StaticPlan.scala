@@ -1,45 +1,61 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
 /**
- * The AQE-off-when-measured-small static-planning law, extracted from
- * the r16 leiden/louvain family so every bounded-round operator can
- * apply it (the r15 ScratchJobs probe showed those operators' wall is
- * the SUM of hundreds of tiny sequential jobs — AQE materializes one
- * job per exchange to re-plan it, which is pure overhead once the
- * engine has MEASURED the frames small).
+ * The small-input law: when the engine can SHOW an input is small, the
+ * fixed per-job and per-plan costs that Spark's defaults amortize over
+ * large inputs (adaptive re-planning jobs, many-task shuffles, Janino
+ * compiles of generated code) dominate, so the engine turns them off
+ * for that input only. Large inputs never arm, so at 100 TB the
+ * session's own settings (AQE skew joins, runtime coalescing,
+ * whole-stage codegen) keep working. Results are identical either
+ * way: AQE, partition counts, hints and codegen never change
+ * semantics. The law has two uses.
  *
- * The law: when the operator has measured its loop frames under
- * [[SmallRows]], (1) AQE is disabled for the loop's jobs — every join
- * side is statically known broadcast-able, so there is nothing left
- * for runtime re-planning to discover, and each rotation's multi-
- * exchange stage tree collapses into ONE job; (2) shuffle partitions
- * drop to 1 — a 32-task shuffle of a 5 k-row frame pays 32 task
- * schedules for microseconds of work each; (3) callers get a
- * broadcast-hint function for their vertex-sized join sides (rotated
- * leaves carry capped "unknown" stats, so static planning would
- * otherwise SMJ everything).
+ * 1. The loop conf window, [[withMeasured]]. A bounded-round operator
+ *    measures its loop frames' ROW count; under [[SmallRows]] the
+ *    loop body runs with (1) AQE off below [[AqeOffRows]] — every join
+ *    side is statically broadcast-able, and each rotation's multi-
+ *    exchange stage tree collapses into ONE job instead of one job
+ *    per exchange; (2) shuffle partitions derived from the measured
+ *    rows ([[RowsPerPartition]] each); (3) whole-stage codegen off at
+ *    one partition's worth of rows, since round-varying literals make
+ *    every rotation compile fresh classes; (4) a broadcast-hint
+ *    function for the caller's vertex-sized join sides (rotated
+ *    leaves carry capped "unknown" stats, so static planning would
+ *    otherwise sort-merge everything). The window sets session confs,
+ *    saved and restored on every exit path under a lock.
  *
- * At 100 TB the measured bound does NOT arm: a level-1 graph or a
- * production embedding corpus exceeds 500 k rows, the body runs with
- * the session's own AQE/partition settings, and skew joins + runtime
- * coalescing keep working — the cases AQE exists for. Results are
- * identical either way: AQE and partition counts never change
- * semantics, and the hints only pick the physical join.
+ * 2. The serve binding, [[bindSmall]]. A per-request operator (point
+ *    reads, index lookups, scan pages, snapshot mutations) returns a
+ *    frame whose leaf size estimate (file listings and local data: no
+ *    job) is under [[SmallBytes]]; the frame is rebound into a child
+ *    session of the caller's that runs interpreted. The caller's
+ *    session is never touched.
  *
- * Why a ROW bound is safe (r15 ADVICE adjudication, kept from the
- * leiden law): every hinted side in these operators is a narrow
- * fixed-shape frame — (v,label)/(v,color) pairs, (v,k) strengths,
- * (id,score) ranks — 2-5 primitive columns, ≤ ~48 bytes per unsafe
- * row, so 500 k rows ≤ ~24 MB serialized: inside Spark's 8 GB
- * broadcast-build cap by 300× and a rounding error against executor
- * memory. The bound is never applied to arbitrary user frames.
+ * Why `spark.sql.codegen.factoryMode=NO_CODEGEN` and not only
+ * `wholeStage=false`: Spark inlines long, double and string literals
+ * into generated source, so each request's fresh id list, cursor,
+ * price or key compiles new classes. Without whole-stage codegen the
+ * per-operator projections, predicates and orderings are STILL
+ * generated (one Janino compile each) unless the factory mode selects
+ * their interpreted versions. Under [[SmallBytes]] interpreted
+ * evaluation costs less than the compiles it avoids; a serve_mixed
+ * cycle of 17 requests went from about 105 compiles to none.
+ * `factoryMode` is an internal conf: ServePathSpec
+ * asserts zero compiles, so a Spark version that stops honouring it
+ * fails there.
  *
- * The session confs are saved/restored on every exit path (leaking
- * "false" would strip AQE from unrelated queries); nesting is safe —
- * an inner wrap saves the outer wrap's values and restores them.
+ * Why a ROW bound is safe for the loop window (r15 ADVICE
+ * adjudication, kept from the leiden law): every hinted side in these
+ * operators is a narrow fixed-shape frame — (v,label)/(v,color) pairs,
+ * (v,k) strengths, (id,score) ranks — 2-5 primitive columns, ≤ ~48
+ * bytes per unsafe row, so 500 k rows ≤ ~24 MB serialized: inside
+ * Spark's 8 GB broadcast-build cap by 300× and a rounding error
+ * against executor memory. The row bound is never applied to
+ * arbitrary user frames; the serve binding bounds bytes instead.
  */
 object StaticPlan {
   /** Measured row bound under which static planning arms — the same
@@ -82,6 +98,64 @@ object StaticPlan {
     * partition (32 tasks of microseconds each was the floor being
     * cut), a 400 k-row edge frame keeps real parallelism. */
   val RowsPerPartition = 32768L
+
+  /** Leaf bytes under which [[bindSmall]] runs a frame interpreted,
+    * from the measured crossover of interpreted against codegen runs
+    * with fresh literals on every call (local[4]; CHANGES.md has the
+    * table). Pruned reads (GetProps, Lookup, GetNeighbors) ran 17-48 %
+    * faster interpreted at every size up to 1.5 M order rows (19 MB).
+    * Full-snapshot rewrites (addRows, deleteRows) cross over near
+    * 150 k rows (1.9 MB: 3-9 % slower interpreted) and lose 13-29 % at
+    * 500 k rows (6.4 MB), 44-62 % at 1.5 M. The rewrites bound it. */
+  val SmallBytes = 2L << 20
+
+  private val FactoryModeKey = "spark.sql.codegen.factoryMode"
+
+  /** parent -> (parent confs at clone time, interpreted child), and
+    * child -> parent. Neither map keeps a session alive: the child is
+    * softly held, so a young GC does not discard it between requests,
+    * and once the caller drops its session both entries go with the
+    * child's soft reference. */
+  private val children = new java.util.WeakHashMap[SparkSession,
+    (Map[String, String], java.lang.ref.SoftReference[SparkSession])]()
+  private val parents = new java.util.WeakHashMap[SparkSession,
+    java.lang.ref.WeakReference[SparkSession]]()
+
+  /** The session `spark` was cloned from by [[bindSmall]], or `spark`
+    * itself. Catalog DDL must run there: each session keeps its own
+    * relation cache, and a DROP issued from a child would leave the
+    * caller's cached relation pointing at deleted files. */
+  def rootOf(spark: SparkSession): SparkSession = parents.synchronized {
+    Option(parents.get(spark)).flatMap(r => Option(r.get)).getOrElse(spark)
+  }
+
+  /** The interpreted child of `parent`, re-cloned whenever the
+    * parent's confs changed since the clone (a `session.timeZone`
+    * change changes answers). */
+  private def childOf(parent: SparkSession): SparkSession = parents.synchronized {
+    val confs = parent.conf.getAll
+    Option(children.get(parent)).collect {
+      case (seen, ref) if seen == confs => ref.get
+    }.flatMap(Option(_)).getOrElse {
+      val child = GraftExpressionBridge.cloneSession(parent)
+      child.conf.set(CodegenKey, "false")
+      child.conf.set(FactoryModeKey, "NO_CODEGEN")
+      children.put(parent, (confs, new java.lang.ref.SoftReference(child)))
+      parents.put(child, new java.lang.ref.WeakReference(parent))
+      child
+    }
+  }
+
+  /** The serve binding: `df` rebound into its session's interpreted
+    * child when its leaves hold under [[SmallBytes]], else `df`
+    * unchanged (large inputs keep codegen). A frame already bound is
+    * returned as it is; so is a streaming frame. */
+  def bindSmall(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    if (df.isStreaming || rootOf(spark) != spark ||
+        GraftExpressionBridge.leafBytes(df) >= SmallBytes) df
+    else GraftExpressionBridge.rebind(childOf(spark), df)
+  }
 
   /** Measured row bound under which AQE is disabled while armed —
     * r17 re-tune of the r16 law (VERDICT r16 "Next #1"): the r16 law

@@ -1035,8 +1035,7 @@ object GraphAnalytics {
         val trimmed = rotate("tmp", verts.join(keep, Seq("v"), "left_anti")
           .observe(obsT, count(lit(1)).as("n")))
         val nTrim = scala.concurrent.Await
-          .result(obsT.future, scala.concurrent.duration.Duration(60,
-            java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+          .result(obsT.future, scala.concurrent.duration.Duration.Inf).getLong(0)
         if (nTrim == 0L) trimming = false
         else {
           done = rotate("done", done.unionByName(
@@ -1074,8 +1073,7 @@ object GraphAnalytics {
                 count(when(col("c") =!= col("c0"), lit(1))).as("n"))
               .select(col("v"), col("c")), None)
           propChanged = scala.concurrent.Await
-            .result(obsP.future, scala.concurrent.duration.Duration(60,
-              java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+            .result(obsP.future, scala.concurrent.duration.Duration.Inf).getLong(0)
           slots("color").foreach(i => sc.getPersistentRDDs.get(i)
             .foreach(_.unpersist(blocking = false)))
           slots("color") = updId
@@ -1100,8 +1098,7 @@ object GraphAnalytics {
               .distinct()
               .observe(obsG, count(lit(1)).as("n")), None)
           val nGrown = scala.concurrent.Await
-            .result(obsG.future, scala.concurrent.duration.Duration(60,
-              java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+            .result(obsG.future, scala.concurrent.duration.Duration.Inf).getLong(0)
           slots("mark").foreach(i => sc.getPersistentRDDs.get(i)
             .foreach(_.unpersist(blocking = false)))
           slots("mark") = grownId
@@ -1294,8 +1291,7 @@ object GraphAnalytics {
     prevCkptId = id0
     edges = e0
     val nEdges = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration(60,
-        java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
     graft.StaticPlan.withMeasured(edges.sparkSession, nEdges) { _ =>
     var peels = 0
     var below = -1L
@@ -1612,8 +1608,7 @@ object GraphAnalytics {
     prevCkptId = id0
     edges = e0
     val nEdges = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration(60,
-        java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
     graft.StaticPlan.withMeasured(edges.sparkSession, nEdges) { _ =>
     var peels = 0
     var below = -1L
@@ -1934,8 +1929,7 @@ object GraphAnalytics {
       prevCkptId = ckptId
       state = next
       fullyColored = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration(60,
-          java.util.concurrent.TimeUnit.SECONDS)).getLong(0) == 0L
+        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0) == 0L
       r += 1
     }
     state.select(col("v").as(GraphStore.VID), col("color"))
@@ -2041,8 +2035,7 @@ object GraphAnalytics {
     live = live1
     prevCkptId = liveId1
     var nLive = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration(60,
-        java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
     // per-round live counts ride the rotation job as a CollectMetrics
     // observation (the semiSyncLpa one-job-per-round law) instead of a
     // separate count job
@@ -2083,8 +2076,7 @@ object GraphAnalytics {
       graft.CacheScope.unpersist(win)
       live = next
       nLive = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration(60,
-          java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
     }
     // Edge-free input: the while loop never runs and the empty
     // accumulator IS the maximal matching.
@@ -2496,8 +2488,7 @@ object GraphAnalytics {
             .observe(obs, count(when(col("chg"), lit(1))).as("n")),
           None)
         val changed = scala.concurrent.Await
-          .result(obs.future, scala.concurrent.duration.Duration(60,
-            java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+          .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
         prevId.foreach(i => sc.getPersistentRDDs.get(i)
           .foreach(_.unpersist(blocking = false)))
         prevId = ckptId
@@ -2557,8 +2548,7 @@ object GraphAnalytics {
             col("label") =!= col("_prev"), lit(1))).as("n"))
           .select(col("v"), col("label")), None)
       changed = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration(60,
-          java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
       prevId.foreach(i => sc.getPersistentRDDs.get(i)
         .foreach(_.unpersist(blocking = false)))
       prevId = ckptId
@@ -2645,8 +2635,7 @@ object GraphAnalytics {
             col("dist") =!= col("_prev"), lit(1))).as("n"))
           .select(col("v"), col("dist")), None)
       changed = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration(60,
-          java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
       prevId.foreach(i => sc.getPersistentRDDs.get(i)
         .foreach(_.unpersist(blocking = false)))
       prevId = ckptId
@@ -2733,8 +2722,7 @@ object GraphAnalytics {
           .select(col("seed"), col("vid"), col("arr_us")),
         None)
       changed = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration(60,
-          java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
       prevId.foreach(i => sc.getPersistentRDDs.get(i)
         .foreach(_.unpersist(blocking = false)))
       prevId = ckptId
@@ -3013,7 +3001,7 @@ object GraphAnalytics {
     implicit val ec: ExecutionContext = ExecutionContext.global
     var pendingNf: Option[(Long, Future[Long], Option[Int])] = None
     def harvest(): Unit = pendingNf.foreach { case (t, f, id) =>
-      totals += ((t, Await.result(f, Duration(600, "s"))))
+      totals += ((t, Await.result(f, Duration.Inf)))
       id.foreach(i => sc.getPersistentRDDs.get(i)
         .foreach(_.unpersist(blocking = false)))
       pendingNf = None
@@ -3092,8 +3080,7 @@ object GraphAnalytics {
     prevCkptId = id0
     var cur = cur0
     var curCount = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration(60,
-        java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
     val trace = collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var round = 0L
     var changed = -1L
@@ -3140,8 +3127,7 @@ object GraphAnalytics {
             count(col("_old")).as("inter"))
           .select(col("u"), col("v")), None)
       val row = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration(60,
-          java.util.concurrent.TimeUnit.SECONDS))
+        .result(obs.future, scala.concurrent.duration.Duration.Inf)
       val nextCount = row.getLong(0)
       changed = curCount + nextCount - 2L * row.getLong(1)
       curCount = nextCount
@@ -4143,8 +4129,7 @@ object GraphAnalytics {
         .transform(graft.CacheScope.persist(_))
       next.count()
       val res = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration(60,
-          java.util.concurrent.TimeUnit.SECONDS))
+        .result(obs.future, scala.concurrent.duration.Duration.Inf)
       out += ((i.toLong, res.getDouble(0), res.getDouble(1)))
       graft.CacheScope.unpersist(ranks)
       ranks = next
@@ -4473,8 +4458,7 @@ object GraphAnalytics {
     prevCkptId = id0
     e = e0
     val nEdges = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration(60,
-        java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
     graft.StaticPlan.withMeasured(e.sparkSession, nEdges) { _ =>
     // level-end vertex frames are persisted AND materialized before the
     // next level's rotation releases the checkpoint blocks they derive

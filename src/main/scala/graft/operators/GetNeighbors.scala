@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.StaticPlan.bindSmall
 import graft.expr.FilterExpr
 import graft.model.GraphStore
 import org.apache.spark.sql.{Column, DataFrame}
@@ -29,7 +30,9 @@ import org.apache.spark.sql.functions._
  * Scale notes: the vertex-id filter is an `isin` (pushed to parquet
  * row-group pruning) for small id lists and a broadcast semi-join above
  * the threshold; the window and groupBy shuffle once on `_vid` and AQE
- * handles skewed hot vertices.
+ * handles skewed hot vertices. Results over small snapshots run
+ * interpreted ([[graft.StaticPlan.bindSmall]]): every request's id list
+ * and filter literals would otherwise compile fresh classes.
  */
 object GetNeighbors {
 
@@ -136,11 +139,11 @@ object GetNeighbors {
           .filter(col("_rn") <= k).drop("_rn")
       case None => edges
     }
-    req.sample match {
+    bindSmall(req.sample match {
       case Some(k) =>
         Sample.hashSamplePerGroup(limited, "_vid", col("_nbr"), keyOrder, k)
       case None => limited
-    }
+    })
   }
 
   /** Per-vertex `_stats` aggregates over the post-filter edge stream
@@ -166,7 +169,7 @@ object GetNeighbors {
         case other => throw new IllegalArgumentException(s"stat $other")
       }).as(s.alias)
     }
-    edges.groupBy(col("_vid")).agg(aggs.head, aggs.tail: _*)
+    bindSmall(edges.groupBy(col("_vid")).agg(aggs.head, aggs.tail: _*))
   }
 
   /**
@@ -212,10 +215,10 @@ object GetNeighbors {
     // `_tag:t:p1:p2…` cells: one struct column per requested tag with
     // the input vertex's tag props (null struct when the vertex lacks
     // the tag — the reference's empty Value).
-    req.tagProps.foldLeft(result) { case (df, (tag, props)) =>
+    bindSmall(req.tagProps.foldLeft(result) { case (df, (tag, props)) =>
       val cell = store.tag(tag).select(col(GraphStore.VID).as("_vid"),
         struct(props.map(col): _*).as(s"_tag_$tag"))
       df.join(cell, Seq("_vid"), "left_outer")
-    }
+    })
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.StaticPlan.bindSmall
 import graft.expr.FilterExpr
 import graft.model.GraphStore
 import org.apache.spark.sql.DataFrame
@@ -15,7 +16,8 @@ import org.apache.spark.sql.functions._
  * to `isin` (parquet row-group pruning does the "point" part), large key
  * sets become a broadcast semi-join. Projection is plain `select` —
  * column pruning reaches the scan (reference's PropContext `returned_`
- * flags, src/storage/query/QueryBaseProcessor.h:33-102).
+ * flags, src/storage/query/QueryBaseProcessor.h:33-102). Results of
+ * small snapshots run interpreted ([[graft.StaticPlan.bindSmall]]).
  */
 object GetProps {
 
@@ -32,7 +34,7 @@ object GetProps {
         Seq(GraphStore.VID), "left_semi")
     val filtered = filter.map(f => keyed.filter(FilterExpr.predicate(f)))
       .getOrElse(keyed)
-    filtered.select((GraphStore.VID +: props).map(col): _*)
+    bindSmall(filtered.select((GraphStore.VID +: props).map(col): _*))
   }
 
   /** Fetch edge props by full edge key (src, rank, dst) — the reference's
@@ -58,10 +60,10 @@ object GetProps {
       else df.join(
         broadcast(Keys.frame(spark, srcs, GraphStore.SRC)),
         Seq(GraphStore.SRC), "left_semi")
-    pruned
+    bindSmall(pruned
       .join(keyDf, Seq(GraphStore.SRC, GraphStore.RANK, GraphStore.DST),
         "left_semi")
       .select((Seq(GraphStore.SRC, GraphStore.RANK, GraphStore.DST) ++ props)
-        .map(col): _*)
+        .map(col): _*))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.StaticPlan.bindSmall
 import graft.expr.FilterExpr
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -71,9 +72,9 @@ object Lookup {
         case None => scanned
       }
     }
-    perContext.reduce(_ unionByName _)
+    bindSmall(perContext.reduce(_ unionByName _)
       .dropDuplicates(req.dedupKeys)
-      .select(req.yieldCols.map(col): _*)
+      .select(req.yieldCols.map(col): _*))
   }
 
   /**
@@ -104,8 +105,8 @@ object Lookup {
         case None => fetched
       }
     }
-    perContext.reduce(_ unionByName _)
+    bindSmall(perContext.reduce(_ unionByName _)
       .dropDuplicates(req.dedupKeys)
-      .select(req.yieldCols.map(col): _*)
+      .select(req.yieldCols.map(col): _*))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.StaticPlan.bindSmall
 import graft.expr.FilterExpr
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -21,6 +22,10 @@ import org.apache.spark.sql.functions._
  *    write with a condition filter, dependency-ordered SET evaluation
  *    (`a = 1, b = a + 1` — :67-118), and insertable mode that fills
  *    unset props from defaults before applying SETs.
+ *
+ * Snapshot transforms over small snapshots run interpreted
+ * ([[graft.StaticPlan.bindSmall]]): each batch's keys and SET values
+ * are literals that would otherwise compile fresh classes per write.
  */
 object Mutations {
 
@@ -52,9 +57,9 @@ object Mutations {
       if (ifNotExists) Seq(col("_prio").asc, col("_bord").asc)
       else Seq(col("_prio").desc, col("_bord").desc)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
-    tagged.withColumn("_rn", row_number().over(w))
+    bindSmall(tagged.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
-      .drop("_prio", "_bord", "_rn")
+      .drop("_prio", "_bord", "_rn"))
   }
 
   /** Delete rows whose key appears in `keys` (anti-join rewrite).
@@ -62,7 +67,7 @@ object Mutations {
     * broadcast at runtime when the key side actually fits. */
   def deleteRows(existing: DataFrame, keys: DataFrame,
       keyCols: Seq[String]): DataFrame =
-    existing.join(keys, keyCols, "left_anti")
+    bindSmall(existing.join(keys, keyCols, "left_anti"))
 
   /** Delete by predicate (reference's delete-by-lookup composition). */
   def deleteWhere(existing: DataFrame, pred: FilterExpr): DataFrame =
@@ -99,9 +104,9 @@ object Mutations {
     val cond = FilterExpr.predicate(where)
     // Sequential fold: SET i is expressed over columns already rewritten
     // by SETs < i, so `a = a + 1, b = a` uses the *new* a.
-    sets.foldLeft(table.withColumn("_upd", cond)) { case (df, (c, v)) =>
+    bindSmall(sets.foldLeft(table.withColumn("_upd", cond)) { case (df, (c, v)) =>
       df.withColumn(c, when(col("_upd"), v).otherwise(col(c)))
-    }.drop("_upd")
+    }.drop("_upd"))
   }
 
   /**
@@ -137,8 +142,8 @@ object Mutations {
       df.withColumn(c, when(col("_apply"), v).otherwise(col(c)))
     }
     val kept = if (insertable) afterSets else afterSets.filter(exists)
-    kept.withColumn("_inserted", inserted)
-      .select((cols :+ "_inserted").map(col): _*)
+    bindSmall(kept.withColumn("_inserted", inserted)
+      .select((cols :+ "_inserted").map(col): _*))
   }
 
   /**

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
+import graft.StaticPlan.bindSmall
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -26,8 +27,8 @@ object Scan {
       case Some(k) => table.filter(col(keyCol) > lit(k))
       case None => table
     }
-    after.orderBy(col(keyCol)).limit(limit)
-      .select((keyCol +: props).map(col): _*)
+    bindSmall(after.orderBy(col(keyCol)).limit(limit)
+      .select((keyCol +: props).map(col): _*))
   }
 
   /**

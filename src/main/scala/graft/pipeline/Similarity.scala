@@ -686,8 +686,7 @@ object Similarity {
         .drop("_old"),
         None)
       changed = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration(60,
-          java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
       prevId.foreach(i => emb.sparkSession.sparkContext
         .getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
       prevId = nid

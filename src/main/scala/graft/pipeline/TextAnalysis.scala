@@ -132,8 +132,7 @@ object TextAnalysis {
     var (vocab, prevId) = rotate(
       init.observe(obs0, count(lit(1)).as("n")), None)
     val nVocab = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration(60,
-        java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
     val merges = collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     var step = 0
     var exhausted = false
@@ -350,8 +349,7 @@ object TextAnalysis {
     var (vocab, prevId) = rotate(
       init.observe(obs0, count(lit(1)).as("n")), None)
     val nVocab = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration(60,
-        java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
     val merges = collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
     var step = 0
     var exhausted = false
@@ -2015,8 +2013,7 @@ object TextAnalysis {
     var (vocab, prevId) = rotate(
       seed.observe(obs0, count(lit(1)).as("n")), None)
     val nSeed = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration(60,
-        java.util.concurrent.TimeUnit.SECONDS)).getLong(0)
+      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
     val nWords = wf.count()
     graft.StaticPlan.withMeasured(docs.sparkSession,
       math.max(nSeed, nWords) * maxPieceLen) { _ =>

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.StaticPlan
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -18,10 +19,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
  */
 object BucketedStore {
 
-  /** Persist a frame bucketed+sorted on the key columns. */
+  /** Persist a frame bucketed+sorted on the key columns. A small frame
+    * is written interpreted ([[StaticPlan.bindSmall]]); the DROP and
+    * the directory delete run on the caller's root session, whose
+    * relation cache must forget the dropped table's files. */
   def save(df: DataFrame, table: String, buckets: Int,
       keys: Seq[String]): Unit = {
-    val spark = df.sparkSession
+    val spark = StaticPlan.rootOf(df.sparkSession)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     // A managed-table directory from a PRIOR session survives the
     // in-memory catalog (DROP above only sees this session's entries),
@@ -30,7 +34,7 @@ object BucketedStore {
       table.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(loc, true)
-    df.write.mode(SaveMode.Overwrite)
+    StaticPlan.bindSmall(df).write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
@@ -152,11 +156,11 @@ object BucketedStore {
     require(keys.forall(indexCols.contains),
       s"index cols $indexCols must cover the table key $keys " +
         "(the reference embeds the vid in every index key)")
-    oldIndex
+    StaticPlan.bindSmall(oldIndex
       .join(newRows.select(keys.head, keys.tail: _*).distinct(),
         keys, "left_anti")
       .unionByName(newRows.select(indexCols.head, indexCols.tail: _*))
       // the using-column join fronts the key; restore index-key order
-      .select(indexCols.head, indexCols.tail: _*)
+      .select(indexCols.head, indexCols.tail: _*))
   }
 }

@@ -14,6 +14,25 @@ object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A child of `spark`: a copy of its confs and catalog state that
+    * shares its SparkContext, external catalog and cache manager.
+    * Conf changes on either side do not reach the other. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df`'s analyzed plan as a frame of `session`: the frame plans and
+    * runs under `session`'s confs. Already-analyzed plans are not
+    * analyzed again. */
+  def rebind(session: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed)
+
+  /** Summed size estimate of the leaves of `df`'s analyzed plan, from
+    * file listings and local data only: no Spark job runs. A leaf
+    * without an estimate reports the unknown default (Long.MaxValue). */
+  def leafBytes(df: DataFrame): BigInt =
+    df.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
+
   /**
    * Cap a localCheckpoint'd Dataset's FROZEN origin statistics at
    * Long.MaxValue bytes/rows.

@@ -65,6 +65,31 @@ class BucketedStoreSpec extends SparkSpec {
     assert(joined.count() == store.edge("placed").count())
   }
 
+  test("alternating snapshots of bound writes: every load sees the latest rows") {
+    import spark.implicits._
+    // the serve path's publish cycle: read the latest snapshot, apply a
+    // mutation (bound to the interpreted child session), save it under
+    // the table's other name, read it back through the caller's session
+    val names = Seq("bk_gen_0", "bk_gen_1")
+    clearStale(names: _*)
+    var model = (1L to 20L).map(k => k -> s"v$k").toMap
+    BucketedStore.save(model.toSeq.toDF("id", "v"), names(0), 2, Seq("id"))
+    (1 to 3).foreach { g =>
+      val cur = BucketedStore.load(spark, names((g - 1) % 2))
+      val batch = Seq(1L -> s"u$g", (100L + g) -> s"n$g")
+      val out = graft.operators.Mutations.addRows(cur, batch.toDF("id", "v"),
+        Seq("id"), ifNotExists = false)
+      assert(out.sparkSession ne spark, "small mutation was not bound")
+      BucketedStore.save(out, names(g % 2), 2, Seq("id"))
+      model = model ++ batch
+      // a DROP issued from the child session would leave this load on
+      // the caller's stale cached relation of two generations ago
+      val back = BucketedStore.load(spark, names(g % 2)).as[(Long, String)]
+        .collect().toMap
+      assert(back == model, s"generation $g read a stale snapshot")
+    }
+  }
+
   test("compact merges small files, preserving rows (CompactTask)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact")
       .resolve("frag").toString
