@@ -16,9 +16,9 @@ package graft
  * deterministic under any job interleaving — orderings are explicit,
  * aggregations order-independent by the dyadic law), and the shared
  * scaffolding is thread-safe (CacheScope's registry is a concurrent
- * queue; rotateCheckpoint degrades its block-id diff to None under
- * concurrency, deferring release to the harness drain; StaticPlan
- * serializes armed conf windows on a lock).
+ * queue; a [[Rotation]] releases exactly its own checkpoint RDD, taken
+ * from the checkpoint's plan leaf, whatever other threads checkpoint
+ * meanwhile; StaticPlan serializes armed conf windows on a lock).
  */
 object Par {
   import scala.concurrent.{Await, ExecutionContext, Future}

@@ -216,14 +216,12 @@ object GraphAnalytics {
       .union(edges.select(col("d")))
       .distinct()
       .transform(graft.CacheScope.persist(_))
-    // localCheckpoint rotation, NOT plain persist: the in-plan L1
-    // scalar references the round's message frame a second time, so a
+    // checkpoint rotation, NOT plain persist: the in-plan L1 scalar
+    // references the round's message frame a second time, so a
     // persist-rotated loop TRIPLES the logical plan per round and
-    // planning OOMs by iteration 5 (the [[hits]] lesson; reproduced
-    // here in the r13 bench) — the eager checkpoint bottoms every
-    // subtree out at a LogicalRDD
-    var (x, xId) = rotateCheckpoint(
-      verts.select(col("v"), lit(1.0).as("r")), None)
+    // planning OOMs by iteration 5 (reproduced here in the r13 bench)
+    val rot = new graft.Rotation
+    var x = rot(verts.select(col("v"), lit(1.0).as("r")))
     // Measured gate for the static-planning law ([[graft.StaticPlan]])
     val nEdges = edges.count()
     graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
@@ -242,9 +240,8 @@ object GraphAnalytics {
           when(col("mt") > lit(0.0),
             dyadic(coalesce(col("ms"), lit(0.0)) / col("mt")))
             .otherwise(lit(0.0)).as("r"))
-      val (x2, id2) = rotateCheckpoint(next, xId)
+      x = rot(next)
       graft.CacheScope.unpersist(raw)
-      x = x2; xId = id2
     }
     } // StaticPlan.withMeasured
     x.select(col("v").as("_vid"),
@@ -339,10 +336,9 @@ object GraphAnalytics {
     // Measured gate for the static-planning law ([[graft.StaticPlan]])
     val nEdges = e.count()
     graft.StaticPlan.withMeasured(e.sparkSession, nEdges) { bc =>
-    var (comp, compId) = rotateCheckpoint(
-      verts.select(col("x"), col("x").as("c")), None)
-    var (mst, mstId) = rotateCheckpoint(e.limit(0).select("u", "v", "w"),
-      None)
+    val compRot, mstRot = new graft.Rotation
+    var comp = compRot(verts.select(col("x"), col("x").as("c")))
+    var mst = mstRot(e.limit(0).select("u", "v", "w"))
     var round = 0
     var remaining = -1L
     while (round < maxRounds && remaining != 0L) {
@@ -365,17 +361,12 @@ object GraphAnalytics {
         .transform(graft.CacheScope.persist(_))
       remaining = chosen.count() // the round's one observable job
       if (remaining > 0L) {
-        val (m2, mId2) = rotateCheckpoint(
-          mst.union(chosen.select("u", "v", "w")), mstId)
-        mst = m2; mstId = mId2
+        mst = mstRot(mst.union(chosen.select("u", "v", "w")))
         // merge the hooked components: min-label CC over the chosen
         // component graph (component-count-sized, halves per round)
         val cl = ccBigStar(chosen.select(col("cu"), col("cv")), 16)
-        val (c2, cId2) = rotateCheckpoint(
-          comp.join(cl, col("c") === col("_vid"), "left")
-            .select(col("x"), coalesce(col("component"), col("c"))
-              .as("c")), compId)
-        comp = c2; compId = cId2
+        comp = compRot(comp.join(cl, col("c") === col("_vid"), "left")
+          .select(col("x"), coalesce(col("component"), col("c")).as("c")))
       }
       graft.CacheScope.unpersist(chosen)
     }
@@ -463,7 +454,7 @@ object GraphAnalytics {
    *
    * Scale shape per round: two edge⋈score joins + two partial-agg
    * shuffles (the PageRank superstep twice), one broadcast scalar each.
-   * O(1) pinned score frames via the same persist/unpersist rotation.
+   * O(1) pinned score frames via a [[graft.Rotation]].
    *
    * Unlike PageRank's single-chain recurrence, each HITS round
    * references the fresh authority frame TWICE (the output `a` column
@@ -473,12 +464,11 @@ object GraphAnalytics {
    * stored plans expand 2x per round and the plan tree (and its UI
    * string) grows exponentially: 5 rounds OOMed an 8g driver purely in
    * `explainString`. So each round's result is re-exposed behind an
-   * opaque `LogicalRDD` scan via `localCheckpoint(eager)`: the next
-   * round's plan bottoms out there, nothing references the released
-   * frames' SQL plans, and no recompile can expand anything.
-   * (`localCheckpoint` materializes InternalRows directly — the earlier
-   * `createDataFrame(round.rdd, schema)` break paid a full
-   * decode-to-Row + re-encode per round.)
+   * opaque checkpoint scan: the next round's plan bottoms out there,
+   * nothing references the released frames' SQL plans, and no
+   * recompile can expand anything. (The checkpoint materializes
+   * InternalRows directly — the earlier `createDataFrame(round.rdd,
+   * schema)` break paid a full decode-to-Row + re-encode per round.)
    *
    * The edge frame is kept in TWO loop-invariant copies, one hash-
    * partitioned by src and one by dst: the authority superstep joins on
@@ -487,13 +477,9 @@ object GraphAnalytics {
    * 100 TB side) is shuffled once per key for the whole run instead of
    * twice per round.
    *
-   * Contract: because `localCheckpoint` truncates lineage, the returned
-   * frame is NOT recomputable once its blocks are released — consume
-   * (write/collect) the result BEFORE `CacheScope.drain`, which is the
-   * harness protocol already (Verify/Bench drain only after the dump).
-   * localCheckpoint blocks also don't survive executor loss; a fault-
-   * tolerant cluster run would swap in `checkpoint(eager = true)` with
-   * a checkpoint dir at the same call site.
+   * Contract (the [[graft.Rotation]] one): consume (write/collect) the
+   * result BEFORE `CacheScope.drain`, which is the harness protocol
+   * already (Verify/Bench drain only after the dump).
    */
   def hits(store: GraphStore, edgeTypes: Seq[String], iters: Int)
       : DataFrame = {
@@ -510,16 +496,13 @@ object GraphAnalytics {
       .union(edgesByDst.select(col("d")))
       .distinct()
       .transform(graft.CacheScope.persist(_))
-    val sc = verts.sparkSession.sparkContext
     var scores = verts.select(col("v"), lit(1.0).as("a"), lit(1.0).as("h"))
     // Measured gate for the static-planning law ([[graft.StaticPlan]]):
     // the edge frame bounds every per-round frame; the count's fill is
     // paid anyway at round 1.
     val nEdges = edgesBySrc.count()
     graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
-    // Previous round's localCheckpoint RDD id: released per-round below,
-    // so checkpoint blocks stay O(1) for the run instead of O(iters).
-    var prevCkptId: Option[Int] = None
+    val rot = new graft.Rotation
     for (_ <- 1 to iters) {
       // The L1 totals ride in-plan as broadcast one-row scalars
       // (crossJoin(broadcast(agg)), cf. PageRank's normalization):
@@ -553,24 +536,7 @@ object GraphAnalytics {
       // Lineage break (scaladoc): materialized rows behind an opaque
       // scan, so releasing this round's scaffolding can't recompile it.
       // Eager, so the scaffolding unpersists below see no live readers.
-      // The checkpointed Dataset wraps its blocks in a LogicalRDD, so
-      // Dataset.unpersist can't reach them — diff getPersistentRDDs
-      // around the call to learn the block RDD's id, then release the
-      // SUPERSEDED round's id (safe: `next` is eagerly materialized and
-      // no longer reads the previous round's blocks).
-      val before = sc.getPersistentRDDs.keySet
-      val next = round.localCheckpoint(true)
-      // Accept the diff ONLY when it is exactly the one new checkpoint
-      // RDD — if a Spark version registers extra internals here, None
-      // degrades to the previous behavior (blocks swept by the
-      // harness's CacheScope.drain) instead of unpersisting a guess.
-      val ckptId = (sc.getPersistentRDDs.keySet -- before).toList match {
-        case only :: Nil => Some(only)
-        case _ => None
-      }
-      prevCkptId.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevCkptId = ckptId
+      val next = rot(round)
       // Release order matters for the recompile rule: auth first (only
       // hRaw's cached plan references it; that expansion is one small
       // already-aggregated subtree), then the rest — nothing cached
@@ -578,9 +544,6 @@ object GraphAnalytics {
       graft.CacheScope.unpersist(auth)
       graft.CacheScope.unpersist(hRaw)
       graft.CacheScope.unpersist(aRaw)
-      // Superseded checkpoint blocks (vertex-sized) are swept by the
-      // harness's CacheScope.drain via getPersistentRDDs; a very long
-      // run would release them per-round by RDD id instead.
       scores = next
     }
     scores.select(col("v").as("_vid"),
@@ -986,28 +949,21 @@ object GraphAnalytics {
    * vertex/edge frame feeding a combinable min/count aggregate — no
    * windows, no all-pairs; retired SCCs leave the working graph so
    * later peels ride strictly smaller frames; O(1) pinned frames per
-   * slot via rotateCheckpoint.
+   * [[graft.Rotation]] slot.
    */
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
       dstCol: String, maxPeels: Int): DataFrame = {
     require(maxPeels >= 1, "maxPeels must be >= 1")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     import spark.implicits._
-    val slots = collection.mutable.Map.empty[String, Option[Int]]
-    def rotate(slot: String, df: DataFrame): DataFrame = {
-      val (next, id) = rotateCheckpoint(df, slots.getOrElse(slot, None))
-      slots(slot) = id
-      next
-    }
+    val workR, vertsR, tmpR, doneR, colorR, markR = new graft.Rotation
     val rawEdges = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("d"))
-    var work = rotate("work",
-      rawEdges.filter(col("s") =!= col("d")).distinct())
+    var work = workR(rawEdges.filter(col("s") =!= col("d")).distinct())
     // Vertex set from the RAW edges, before the self-loop filter: a
     // vertex whose only arcs are self-loops must still be emitted as
     // its own singleton SCC (the trim step retires it in round 1).
-    var verts = rotate("verts",
+    var verts = vertsR(
       rawEdges.select(col("s").as("v")).union(rawEdges.select(col("d")))
         .distinct())
     var done = Seq.empty[(Long, Long)].toDF("v", "component")
@@ -1031,17 +987,15 @@ object GraphAnalytics {
             Seq("v"), "left_semi")
         // the trimmed count rides the rotation job as a CollectMetrics
         // observation (the semiSyncLpa one-job-per-round law)
-        val obsT = org.apache.spark.sql.Observation()
-        val trimmed = rotate("tmp", verts.join(keep, Seq("v"), "left_anti")
-          .observe(obsT, count(lit(1)).as("n")))
-        val nTrim = scala.concurrent.Await
-          .result(obsT.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+        val (trimmed, nT) = tmpR.observe(
+          verts.join(keep, Seq("v"), "left_anti"), Seq(count(lit(1)).as("n")))
+        val nTrim = nT.getLong(0)
         if (nTrim == 0L) trimming = false
         else {
-          done = rotate("done", done.unionByName(
+          done = doneR(done.unionByName(
             trimmed.select(col("v"), col("v").as("component"))))
-          verts = rotate("verts", verts.join(trimmed, Seq("v"), "left_anti"))
-          work = rotate("work", work
+          verts = vertsR(verts.join(trimmed, Seq("v"), "left_anti"))
+          work = workR(work
             .join(trimmed.select(col("v").as("s")), Seq("s"), "left_anti")
             .join(trimmed.select(col("v").as("d")), Seq("d"), "left_anti"))
           nLeft -= nTrim
@@ -1049,7 +1003,7 @@ object GraphAnalytics {
       }
       if (nLeft > 0) {
         // (b) forward min-color propagation to fixpoint
-        var color = rotate("color", verts.select(col("v"), col("v").as("c")))
+        var color = colorR(verts.select(col("v"), col("v").as("c")))
         var propChanged = -1L
         var prop = 0L
         while (propChanged != 0L) {
@@ -1061,26 +1015,20 @@ object GraphAnalytics {
           // — the min-combine's v-set equals color's v-set, so the
           // left join is total and the flag count matches the old
           // separate inner-join-and-count job exactly
-          val obsP = org.apache.spark.sql.Observation()
-          val (upd, updId) = rotateCheckpoint(
+          val (upd, nP) = colorR.observe(
             work.join(bc(color.select(col("v").as("s"), col("c"))), "s")
               .select(col("d").as("v"), col("c"))
               .unionByName(color.select(col("v"), col("c")))
               .groupBy("v").agg(min(col("c")).as("c"))
               .join(color.select(col("v"), col("c").as("c0")),
-                Seq("v"), "left")
-              .observe(obsP,
-                count(when(col("c") =!= col("c0"), lit(1))).as("n"))
-              .select(col("v"), col("c")), None)
-          propChanged = scala.concurrent.Await
-            .result(obsP.future, scala.concurrent.duration.Duration.Inf).getLong(0)
-          slots("color").foreach(i => sc.getPersistentRDDs.get(i)
-            .foreach(_.unpersist(blocking = false)))
-          slots("color") = updId
+                Seq("v"), "left"),
+            Seq(count(when(col("c") =!= col("c0"), lit(1))).as("n")),
+            _.select(col("v"), col("c")))
+          propChanged = nP.getLong(0)
           color = upd
         }
         // (c) backward mark from the color roots, inside each class
-        var mark = rotate("mark", color.filter(col("v") === col("c")))
+        var mark = markR(color.filter(col("v") === col("c")))
         var nMark = mark.count()
         var growing = true
         var growRounds = 0L
@@ -1089,26 +1037,21 @@ object GraphAnalytics {
           if (growRounds > nLeft + 1) throw new IllegalStateException(
             "SCC: backward mark exceeded the vertex-count bound — " +
               "monotone-fixpoint invariant violated")
-          val obsG = org.apache.spark.sql.Observation()
-          val (grown, grownId) = rotateCheckpoint(
+          val (grown, nG) = markR.observe(
             work.join(bc(mark.select(col("v").as("d"), col("c"))), "d")
               .select(col("s").as("v"), col("c"))
               .join(color, Seq("v", "c"), "left_semi")
               .unionByName(mark.select(col("v"), col("c")))
-              .distinct()
-              .observe(obsG, count(lit(1)).as("n")), None)
-          val nGrown = scala.concurrent.Await
-            .result(obsG.future, scala.concurrent.duration.Duration.Inf).getLong(0)
-          slots("mark").foreach(i => sc.getPersistentRDDs.get(i)
-            .foreach(_.unpersist(blocking = false)))
-          slots("mark") = grownId
+              .distinct(),
+            Seq(count(lit(1)).as("n")))
+          val nGrown = nG.getLong(0)
           mark = grown
           if (nGrown == nMark) growing = false else nMark = nGrown
         }
-        done = rotate("done", done.unionByName(
+        done = doneR(done.unionByName(
           mark.select(col("v"), col("c").as("component"))))
-        verts = rotate("verts", verts.join(mark, Seq("v"), "left_anti"))
-        work = rotate("work", work
+        verts = vertsR(verts.join(mark, Seq("v"), "left_anti"))
+        work = workR(work
           .join(mark.select(col("v").as("s")), Seq("s"), "left_anti")
           .join(mark.select(col("v").as("d")), Seq("d"), "left_anti"))
         nLeft -= nMark
@@ -1116,8 +1059,7 @@ object GraphAnalytics {
     }
     } // StaticPlan.withMeasured
     // release every working slot; only the returned frame stays pinned
-    (slots.keySet - "done").foreach(k => slots(k).foreach(i =>
-      sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false))))
+    Seq(workR, vertsR, tmpR, colorR, markR).foreach(_.release())
     done.select(col("v").as("_vid"), col("component"))
   }
 
@@ -1279,19 +1221,15 @@ object GraphAnalytics {
     // convergence-guarded peel (the r11 label-family law; see kCore):
     // run to the no-edge-below-support fixpoint or throw — a truncated
     // peel returns a superset of the k-truss with no signal
-    // wedgeCounts references the survivor frame several times:
-    // rotateCheckpoint per round keeps the plan AND the pinned blocks
-    // O(1) in peel depth (the kCore note)
-    var prevCkptId: Option[Int] = None
+    // wedgeCounts references the survivor frame several times: a
+    // checkpoint rotation per round keeps the plan AND the pinned
+    // blocks O(1) in peel depth (the kCore note)
+    val rot = new graft.Rotation
     // the canonical-edge count rides the first rotation and doubles as
     // the static-planning gate ([[graft.StaticPlan]])
-    val obs0 = org.apache.spark.sql.Observation()
-    val (e0, id0) = rotateCheckpoint(
-      edges.observe(obs0, count(lit(1)).as("n")), None)
-    prevCkptId = id0
+    val (e0, n0) = rot.observe(edges, Seq(count(lit(1)).as("n")))
     edges = e0
-    val nEdges = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+    val nEdges = n0.getLong(0)
     graft.StaticPlan.withMeasured(edges.sparkSession, nEdges) { _ =>
     var peels = 0
     var below = -1L
@@ -1307,10 +1245,7 @@ object GraphAnalytics {
           s"kTruss: peel not converged within $rounds rounds " +
             s"($below edges still below support ${k - 2}) — raise the " +
             "budget; a truncated peel returns a superset of the k-truss")
-        val (next, ckptId) = rotateCheckpoint(
-          sup.filter(col("common") >= k - 2).select("s", "d"), prevCkptId)
-        prevCkptId = ckptId
-        edges = next
+        edges = rot(sup.filter(col("common") >= k - 2).select("s", "d"))
       }
       graft.CacheScope.unpersist(sup)
     }
@@ -1324,36 +1259,6 @@ object GraphAnalytics {
     * direction collapsed least/greatest, parallel edges deduped) —
     * persisted: it feeds the edge side and both adjacency sides of
     * every neighborhood operator built on it. */
-  /** Eagerly localCheckpoint `df` and release the PREVIOUS round's
-    * checkpoint blocks — the per-round lineage-break law every bounded-
-    * round operator here shares (see [[hits]]'s scaladoc for the full
-    * derivation: the checkpointed Dataset wraps its blocks in a
-    * LogicalRDD that `Dataset.unpersist` can't reach, so the block
-    * RDD's id is learned by diffing `getPersistentRDDs` around the
-    * call; a diff that isn't exactly one new RDD degrades to None —
-    * the harness's CacheScope.drain sweeps those instead of this
-    * helper unpersisting a guess). Returns (checkpointed, newId). */
-  private[graft] def rotateCheckpoint(df: DataFrame,
-      prev: Option[Int]): (DataFrame, Option[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    // capCheckpointStats: localCheckpoint FREEZES the origin plan's
-    // estimated Statistics into the LogicalRDD leaf, so rotation
-    // loops compound size products exponentially across rounds until
-    // stats lookups grind the driver in million-digit BigInteger
-    // multiplies (see the bridge scaladoc; bit first in leidenFull's
-    // seeded levels). The cap only fires on already-garbage values.
-    val next = org.apache.spark.sql.GraftExpressionBridge
-      .capCheckpointStats(df.localCheckpoint(true))
-    val id = (sc.getPersistentRDDs.keySet -- before).toList match {
-      case only :: Nil => Some(only)
-      case _ => None
-    }
-    prev.foreach(i =>
-      sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
-    (next, id)
-  }
-
   private def simpleEdges(store: GraphStore,
       edgeTypes: Seq[String]): DataFrame =
     edgeTypes.map { et =>
@@ -1596,19 +1501,15 @@ object GraphAnalytics {
     // in the oracle's fixed unroll are no-ops, so generous budgets are
     // free on both sides.
     // each round references the survivor frame ~3x (degrees + both
-    // semi-joins): rotateCheckpoint bottoms the plan out per round —
-    // persist alone lets the analyzed plan grow 3^rounds (the HITS
-    // law; OOM'd in plan STRINGIFICATION at depth 11 on a path spec)
-    var prevCkptId: Option[Int] = None
+    // semi-joins): a checkpoint rotation bottoms the plan out per
+    // round — persist alone lets the analyzed plan grow 3^rounds (the
+    // HITS law; OOM'd in plan STRINGIFICATION at depth 11 on a path spec)
+    val rot = new graft.Rotation
     // the canonical-edge count rides the first rotation and doubles as
     // the static-planning gate ([[graft.StaticPlan]])
-    val obs0 = org.apache.spark.sql.Observation()
-    val (e0, id0) = rotateCheckpoint(
-      edges.observe(obs0, count(lit(1)).as("n")), None)
-    prevCkptId = id0
+    val (e0, n0) = rot.observe(edges, Seq(count(lit(1)).as("n")))
     edges = e0
-    val nEdges = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+    val nEdges = n0.getLong(0)
     graft.StaticPlan.withMeasured(edges.sparkSession, nEdges) { _ =>
     var peels = 0
     var below = -1L
@@ -1623,12 +1524,10 @@ object GraphAnalytics {
             s"($below vertices still below k=$k) — raise the budget; " +
             "a truncated peel returns a superset of the k-core")
         val keep = degs.filter(col("deg") >= k).select(col("v"))
-        val (next, ckptId) = rotateCheckpoint(edges
+        edges = rot(edges
           .join(keep.select(col("v").as("s")), Seq("s"), "left_semi")
           .join(keep.select(col("v").as("d")), Seq("d"), "left_semi")
-          .select("s", "d"), prevCkptId)
-        prevCkptId = ckptId
-        edges = next
+          .select("s", "d"))
       }
       graft.CacheScope.unpersist(degs)
     }
@@ -1807,7 +1706,7 @@ object GraphAnalytics {
     // Measured gate for the static-planning law ([[graft.StaticPlan]])
     val nArcs = arcs.count()
     graft.StaticPlan.withMeasured(arcs.sparkSession, nArcs) { bc =>
-    var prevCkptId: Option[Int] = None
+    val rot = new graft.Rotation
     var state = verts.select(col("v"), lit(0).as("st"),
       lit(0).as("round"))
     for (r <- 1 to rounds) {
@@ -1842,12 +1741,9 @@ object GraphAnalytics {
       // mis, removed, state), and the analyzer's self-join
       // deduplication CLONES those subtrees — 6^r nodes by round 3
       // even with every input cached (caches substitute after
-      // analysis). localCheckpoint bottoms the state out at a
-      // LogicalRDD so the next round's analysis starts from an opaque
-      // scan; the superseded round's checkpoint blocks are released
-      // by RDD id, keeping pinned state O(1) for the run.
-      val (next, ckptId) = rotateCheckpoint(round_, prevCkptId)
-      prevCkptId = ckptId
+      // analysis). The checkpoint rotation bottoms the state out at
+      // an opaque scan, keeping pinned state O(1) for the run.
+      val next = rot(round_)
       Seq(undec, live, mis).foreach(graft.CacheScope.unpersist)
       state = next
     }
@@ -1891,7 +1787,7 @@ object GraphAnalytics {
     // paid anyway at round 1's semi-joins.
     val nArcs = arcs.count()
     graft.StaticPlan.withMeasured(arcs.sparkSession, nArcs) { bc =>
-    var prevCkptId: Option[Int] = None
+    val rot = new graft.Rotation
     var state = arcs.select(col("v")).distinct()
       .select(col("v"), lit(-1).as("color"))
     var r = 1
@@ -1914,22 +1810,17 @@ object GraphAnalytics {
           when(col("color") =!= -1, col("color"))
             .when(col("w") === 1, lit(r - 1))
             .otherwise(lit(-1)).as("color"))
-      // localCheckpoint lineage break per round — the lubyMIS/hits law
-      // (the analyzer's self-join dedup clones the per-round subtrees
-      // exponentially otherwise); superseded checkpoint blocks release
-      // by RDD id so pinned state stays O(1). The remaining-uncolored
-      // count rides the checkpoint job as a CollectMetrics observation
-      // (the semiSyncLpaLoop law) — early exit once fully colored is
-      // bit-identical to running the full budget (a winner needs an
-      // uncolored vertex), and the round IS its one checkpoint job.
-      val obs = org.apache.spark.sql.Observation()
-      val (next, ckptId) = rotateCheckpoint(
-        round_.observe(obs,
-          count(when(col("color") === -1, lit(1))).as("n")), prevCkptId)
-      prevCkptId = ckptId
+      // checkpoint rotation per round — the lubyMIS/hits law (the
+      // analyzer's self-join dedup clones the per-round subtrees
+      // exponentially otherwise). The remaining-uncolored count rides
+      // the checkpoint job (the semiSyncLpaLoop law) — early exit once
+      // fully colored is bit-identical to running the full budget (a
+      // winner needs an uncolored vertex), and the round IS its one
+      // checkpoint job.
+      val (next, n) = rot.observe(round_,
+        Seq(count(when(col("color") === -1, lit(1))).as("n")))
       state = next
-      fullyColored = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0) == 0L
+      fullyColored = n.getLong(0) == 0L
       r += 1
     }
     state.select(col("v").as(GraphStore.VID), col("color"))
@@ -2002,8 +1893,7 @@ object GraphAnalytics {
   private def localMinMatchingLoop(ep: DataFrame, rounds: Int,
       what: String): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    var prevCkptId: Option[Int] = None
-    var live = ep
+    val liveR, matchedR = new graft.Rotation
     // The matched output accumulates through its OWN checkpoint
     // rotation (the boruvkaMst mst-slot shape) instead of a buffer of
     // persisted per-round frames (r16-opt): the old shape left each
@@ -2015,7 +1905,6 @@ object GraphAnalytics {
     // nothing recomputes at output time.
     var matched = ep.limit(0).select(col("s"), col("d"),
       lit(0).as("round"))
-    var matchedId: Option[Int] = None
     // convergence-guarded (the r11 label-family law): "maximal" is a
     // CLAIM — a fixed budget that stops with live edges left returns a
     // non-maximal matching indistinguishable from a maximal one. Run
@@ -2029,13 +1918,9 @@ object GraphAnalytics {
     // pass, its count rides the job AND doubles as the static-planning
     // gate ([[graft.StaticPlan]]). The big-input pass itself runs
     // BEFORE the law arms, so it keeps the session's AQE plan.
-    val obs0 = org.apache.spark.sql.Observation()
-    val (live1, liveId1) = rotateCheckpoint(
-      ep.observe(obs0, count(lit(1)).as("n")), None)
-    live = live1
-    prevCkptId = liveId1
-    var nLive = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+    val (live1, n0) = liveR.observe(ep, Seq(count(lit(1)).as("n")))
+    var live = live1
+    var nLive = n0.getLong(0)
     // per-round live counts ride the rotation job as a CollectMetrics
     // observation (the semiSyncLpa one-job-per-round law) instead of a
     // separate count job
@@ -2057,9 +1942,7 @@ object GraphAnalytics {
         .filter(col("p") === col("mns") && col("p") === col("mnd"))
         .select(col("s"), col("d"), lit(r).as("round"))
         .transform(graft.CacheScope.persist(_)) // accumulator + removal
-      val (m2, mId2) = rotateCheckpoint(
-        matched.unionByName(win), matchedId)
-      matched = m2; matchedId = mId2
+      matched = matchedR(matched.unionByName(win))
       val mv = win.select(col("s").as("v"))
         .unionByName(win.select(col("d").as("v")))
       val next0 = live
@@ -2068,15 +1951,11 @@ object GraphAnalytics {
         .select(col("s"), col("d"), col("p"))
       // lineage break per round (lubyMIS law): the live frame feeds
       // 5 consumers next round; checkpoint + release superseded blocks
-      val obs = org.apache.spark.sql.Observation()
-      val (next, ckptId) = rotateCheckpoint(
-        next0.observe(obs, count(lit(1)).as("n")), prevCkptId)
-      prevCkptId = ckptId
+      val (next, n) = liveR.observe(next0, Seq(count(lit(1)).as("n")))
       graft.CacheScope.unpersist(vmin)
       graft.CacheScope.unpersist(win)
       live = next
-      nLive = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+      nLive = n.getLong(0)
     }
     // Edge-free input: the while loop never runs and the empty
     // accumulator IS the maximal matching.
@@ -2409,7 +2288,6 @@ object GraphAnalytics {
       .filter(col("s") =!= col("d"))
       .distinct()
       .transform(graft.CacheScope.persist(_))
-    val sc = e.sparkSession.sparkContext
     val colors = priorityColoring(store, edgeTypes, colorRounds)
       .select(col(GraphStore.VID).as("v"), col("color"))
       .transform(graft.CacheScope.persist(_)) // guard + every step
@@ -2445,10 +2323,8 @@ object GraphAnalytics {
     // init from the coloring's vertex set — identical to e's source
     // set by the invariant above, and already materialized (saves the
     // distinct-over-edges shuffle the r12 code paid here)
-    val (labels0, id0) = rotateCheckpoint(
-      colors.select(col("v")).withColumn("label", col("v")), None)
-    var labels = labels0
-    var prevId = id0
+    val rot = new graft.Rotation
+    var labels = rot(colors.select(col("v")).withColumn("label", col("v")))
     val trace = collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var sweep = 0L
     var sweepChanged = -1L
@@ -2471,27 +2347,20 @@ object GraphAnalytics {
           .agg(min(struct((-col("n")).as("nn"), col("label"))).as("m"))
           .select(col("s").as("v"), col("m.label").as("blabel"))
         // ONE job per step, total: the changed count rides the
-        // checkpoint job itself as a CollectMetrics observation
-        // (eager localCheckpoint executes through the SQL action path,
-        // so the metric fires with the materialization — measured with
-        // ScratchObs before relying on it). r12 paid a full-vertex
-        // anti-join job per step; the first r13 cut made it a cached
-        // scan; this removes the second job entirely — the class step
-        // IS its checkpoint job now.
-        val obs = org.apache.spark.sql.Observation()
-        val (next, ckptId) = rotateCheckpoint(
+        // checkpoint job itself (an eager checkpoint executes through
+        // the SQL action path, so the metric fires with the
+        // materialization). r12 paid a full-vertex anti-join job per
+        // step; the first r13 cut made it a cached scan; this removes
+        // the second job entirely — the class step IS its checkpoint
+        // job now.
+        val (next, n) = rot.observe(
           labels.join(best, Seq("v"), "left")
             .select(col("v"),
               coalesce(col("blabel"), col("label")).as("label"),
               (col("blabel").isNotNull &&
-                col("blabel") =!= col("label")).as("chg"))
-            .observe(obs, count(when(col("chg"), lit(1))).as("n")),
-          None)
-        val changed = scala.concurrent.Await
-          .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
-        prevId.foreach(i => sc.getPersistentRDDs.get(i)
-          .foreach(_.unpersist(blocking = false)))
-        prevId = ckptId
+                col("blabel") =!= col("label")).as("chg")),
+          Seq(count(when(col("chg"), lit(1))).as("n")))
+        val changed = n.getLong(0)
         labels = next.select(col("v"), col("label"))
         sweepChanged += changed
         trace += ((sweep, c.toLong, changed))
@@ -2515,15 +2384,12 @@ object GraphAnalytics {
       .unionByName(dirEdges.select(col("d").as("s"), col("s").as("d")))
       .distinct()
       .transform(graft.CacheScope.persist(_))
-    val sc = e.sparkSession.sparkContext
     // Measured gate for the static-planning law ([[graft.StaticPlan]])
     val nEdges = e.count()
     graft.StaticPlan.withMeasured(e.sparkSession, nEdges) { bc =>
-    val (labels0, id0) = rotateCheckpoint(
-      e.select(col("s").as("v")).distinct()
-        .withColumn("label", col("v")), None)
-    var labels = labels0
-    var prevId = id0
+    val rot = new graft.Rotation
+    var labels = rot(e.select(col("s").as("v")).distinct()
+      .withColumn("label", col("v")))
     val trace = collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var round = 0L
     var changed = -1L
@@ -2537,21 +2403,16 @@ object GraphAnalytics {
       // lineage break per round (the bigStarLoop law): the round
       // references `labels` twice (votes + the change flag); changed
       // rides the checkpoint job as a CollectMetrics observation
-      val obs = org.apache.spark.sql.Observation()
-      val (next, ckptId) = rotateCheckpoint(
+      val (next, n) = rot.observe(
         votes.withColumn("_rk", row_number().over(w))
           .filter(col("_rk") === 1)
           .select(col("s").as("v"), col("label"))
           .join(labels.select(col("v"), col("label").as("_prev")),
-            Seq("v"), "left")
-          .observe(obs, count(when(col("_prev").isNull ||
-            col("label") =!= col("_prev"), lit(1))).as("n"))
-          .select(col("v"), col("label")), None)
-      changed = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
-      prevId.foreach(i => sc.getPersistentRDDs.get(i)
-        .foreach(_.unpersist(blocking = false)))
-      prevId = ckptId
+            Seq("v"), "left"),
+        Seq(count(when(col("_prev").isNull ||
+          col("label") =!= col("_prev"), lit(1))).as("n")),
+        _.select(col("v"), col("label")))
+      changed = n.getLong(0)
       labels = next
       trace += ((round, changed))
     }
@@ -2600,12 +2461,11 @@ object GraphAnalytics {
       maxIters: Int): (DataFrame, Seq[(Long, Long)]) = {
     require(maxIters >= 1, "maxIters must be >= 1")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     import spark.implicits._
     val e = edges.toDF("s", "d", "w")
       .transform(graft.CacheScope.persist(_))
     var dist = seeds.toDF("v").withColumn("dist", lit(0.0))
-    var prevId: Option[Int] = None
+    val rot = new graft.Rotation
     val trace = collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var round = 0L
     var changed = -1L
@@ -2623,22 +2483,17 @@ object GraphAnalytics {
       // — computed as a flag INSIDE the checkpoint job and read via
       // CollectMetrics (the semiSyncLpaLoop one-job-per-round law),
       // not as a separate anti-join job.
-      val obs = org.apache.spark.sql.Observation()
-      val (relaxed, ckptId) = rotateCheckpoint(
+      val (relaxed, n) = rot.observe(
         e.join(dist, e("s") === dist("v"))
           .select(col("d").as("v"), (col("dist") + col("w")).as("dist"))
           .unionByName(dist)
           .groupBy("v").agg(min(col("dist")).as("dist"))
           .join(dist.select(col("v"), col("dist").as("_prev")),
-            Seq("v"), "left")
-          .observe(obs, count(when(col("_prev").isNull ||
-            col("dist") =!= col("_prev"), lit(1))).as("n"))
-          .select(col("v"), col("dist")), None)
-      changed = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
-      prevId.foreach(i => sc.getPersistentRDDs.get(i)
-        .foreach(_.unpersist(blocking = false)))
-      prevId = ckptId
+            Seq("v"), "left"),
+        Seq(count(when(col("_prev").isNull ||
+          col("dist") =!= col("_prev"), lit(1))).as("n")),
+        _.select(col("v"), col("dist")))
+      changed = n.getLong(0)
       dist = relaxed
       trace += ((round, changed))
     }
@@ -2689,7 +2544,6 @@ object GraphAnalytics {
       maxRounds: Int): (DataFrame, Seq[(Long, Long)]) = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     import spark.implicits._
     val e = edges.toDF("s", "d", "t")
       .transform(graft.CacheScope.persist(_))
@@ -2697,7 +2551,7 @@ object GraphAnalytics {
       .withColumn("arr_us", lit(0L))
     // Measured gate for the static-planning law ([[graft.StaticPlan]])
     val nEdges = e.count()
-    var prevId: Option[Int] = None
+    val rot = new graft.Rotation
     val trace = collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var round = 0L
     var changed = -1L
@@ -2708,24 +2562,18 @@ object GraphAnalytics {
       // change diff); changed = appeared-or-improved (seed, vid)
       // arrivals, flagged inside the checkpoint job and read via
       // CollectMetrics (the shortestPathsLoop law)
-      val obs = org.apache.spark.sql.Observation()
-      val (relaxed, ckptId) = rotateCheckpoint(
+      val (relaxed, n) = rot.observe(
         e.join(arr, e("s") === arr("vid") && e("t") >= col("arr_us"))
           .select(col("seed"), col("d").as("vid"),
             col("t").as("arr_us"))
           .unionByName(arr)
           .groupBy("seed", "vid").agg(min(col("arr_us")).as("arr_us"))
           .join(arr.select(col("seed"), col("vid"),
-            col("arr_us").as("_prev")), Seq("seed", "vid"), "left")
-          .observe(obs, count(when(col("_prev").isNull ||
-            col("arr_us") =!= col("_prev"), lit(1))).as("n"))
-          .select(col("seed"), col("vid"), col("arr_us")),
-        None)
-      changed = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
-      prevId.foreach(i => sc.getPersistentRDDs.get(i)
-        .foreach(_.unpersist(blocking = false)))
-      prevId = ckptId
+            col("arr_us").as("_prev")), Seq("seed", "vid"), "left"),
+        Seq(count(when(col("_prev").isNull ||
+          col("arr_us") =!= col("_prev"), lit(1))).as("n")),
+        _.select(col("seed"), col("vid"), col("arr_us")))
+      changed = n.getLong(0)
       arr = relaxed
       trace += ((round, changed))
     }
@@ -2929,17 +2777,15 @@ object GraphAnalytics {
     val gateRows = math.max(scalars.getLong(0),
       scalars.getLong(1) << b)
     graft.StaticPlan.withMeasured(e.sparkSession, gateRows) { _ =>
-    var prevCkptId: Option[Int] = None
+    val rot = new graft.Rotation
     for (_ <- 1 to rounds) {
       val prop = e.join(regs, regs("v") === e("d"))
         .select(e("s").as("v"), col("reg"), col("max_rho"))
         .unionByName(regs.select(col("v"), col("reg"), col("max_rho")))
         .groupBy("v", "reg").agg(max(col("max_rho")).as("max_rho"))
       // lineage break per round (each round embeds `regs` twice — the
-      // HITS law); superseded register blocks release by RDD id
-      val (next, ckptId) = rotateCheckpoint(prop, prevCkptId)
-      prevCkptId = ckptId
-      regs = next
+      // HITS law)
+      regs = rot(prop)
     }
     graft.operators.Stats.hllEstimateBy(regs, Seq("v"), b)
       .select(col("v"), col("n_regs"), col("est").as("est_ball"))
@@ -2963,7 +2809,6 @@ object GraphAnalytics {
       b: Int = 8): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     val e = edges.toDF("s", "d")
       .filter(col("s") =!= col("d")).distinct()
       .transform(graft.CacheScope.persist(_))
@@ -2992,18 +2837,17 @@ object GraphAnalytics {
     // release discipline: regs_t's checkpoint blocks must outlive its
     // in-flight nf, so the superseded round's release happens only
     // AFTER its estimate is awaited — the loop pins at most TWO
-    // register frames instead of one (still O(1); localCheckpoint
-    // blocks are unrecoverable, so releasing under a running reader
-    // would fail the job, not recompute).
+    // register frames instead of one (still O(1); checkpoint blocks
+    // are unrecoverable, so releasing under a running reader would
+    // fail the job, not recompute). Each round gets its own slot.
     graft.StaticPlan.withMeasured(e.sparkSession, gateRows) { _ =>
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    var pendingNf: Option[(Long, Future[Long], Option[Int])] = None
-    def harvest(): Unit = pendingNf.foreach { case (t, f, id) =>
+    var pendingNf: Option[(Long, Future[Long], graft.Rotation)] = None
+    def harvest(): Unit = pendingNf.foreach { case (t, f, rot) =>
       totals += ((t, Await.result(f, Duration.Inf)))
-      id.foreach(i => sc.getPersistentRDDs.get(i)
-        .foreach(_.unpersist(blocking = false)))
+      rot.release()
       pendingNf = None
     }
     for (t <- 1 to rounds) {
@@ -3013,10 +2857,10 @@ object GraphAnalytics {
         .groupBy("v", "reg").agg(max(col("max_rho")).as("max_rho"))
       // lineage break per round (the HITS law); release of the
       // superseded round is deferred to harvest() (see above)
-      val (next, ckptId) = rotateCheckpoint(prop, None)
+      val rot = new graft.Rotation
+      val next = rot(prop)
       harvest() // waits for nf(regs_{t-1}), then releases its blocks
-      val cur = next
-      pendingNf = Some((t.toLong, Future(nf(cur)), ckptId))
+      pendingNf = Some((t.toLong, Future(nf(next)), rot))
       regs = next
     }
     harvest()
@@ -3062,25 +2906,21 @@ object GraphAnalytics {
     * untouched (the r15 broadcast-hint law, extended r16). */
   private def bigStarLoop(edges: DataFrame, maxRounds: Int,
       bc: DataFrame => DataFrame = identity)
-      : (DataFrame, Seq[(Long, Long)], Option[Int]) = {
+      : (DataFrame, Seq[(Long, Long)], graft.Rotation) = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val sc = edges.sparkSession.sparkContext
-    var prevCkptId: Option[Int] = None
+    val rot = new graft.Rotation
     // materialize the canonical edge frame once: round 1 references it
     // ~6 times through adj/mins/ls and would otherwise re-run the
     // scan+distinct per reference; its size is observed off the same
     // job (the symmetric-diff arithmetic below needs |cur| per round)
-    val obs0 = org.apache.spark.sql.Observation()
-    val (cur0, id0) = rotateCheckpoint(
+    val (cur0, n0) = rot.observe(
       edges.toDF("a", "b").filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v"))
-        .distinct()
-        .observe(obs0, count(lit(1)).as("n")), None)
-    prevCkptId = id0
+        .distinct(),
+      Seq(count(lit(1)).as("n")))
     var cur = cur0
-    var curCount = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+    var curCount = n0.getLong(0)
     val trace = collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var round = 0L
     var changed = -1L
@@ -3111,37 +2951,27 @@ object GraphAnalytics {
       // Lineage break per round (the HITS law): one round references
       // `cur` ~6 times through adj/mins/ls/adj2/mins2 and the analyzer
       // CLONES the subtree per reference — exponential plan growth by
-      // round 4 without a localCheckpoint bottom-out. Superseded
-      // round blocks release by RDD id: O(1) pinned state — but only
-      // AFTER this materialization consumed the superseded frame (its
-      // lineage is truncated; released blocks are unrecoverable). The
-      // fixpoint diff |curΔnext| = |cur| + |next| − 2·|cur∩next| rides
-      // the SAME job: both star frames are distinct sets, so the
-      // intersection is a left-join match count and |cur| is the
-      // previous round's observed |next| — one job per round, total.
-      val obs = org.apache.spark.sql.Observation()
-      val (next, ckptId) = rotateCheckpoint(
+      // round 4 without a checkpoint bottom-out. The fixpoint diff
+      // |curΔnext| = |cur| + |next| − 2·|cur∩next| rides the SAME job:
+      // both star frames are distinct sets, so the intersection is a
+      // left-join match count and |cur| is the previous round's
+      // observed |next| — one job per round, total.
+      val (next, row) = rot.observe(
         ss.join(cur.select(col("u"), col("v"), lit(1).as("_old")),
-            Seq("u", "v"), "left")
-          .observe(obs, count(lit(1)).as("n"),
-            count(col("_old")).as("inter"))
-          .select(col("u"), col("v")), None)
-      val row = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration.Inf)
+          Seq("u", "v"), "left"),
+        Seq(count(lit(1)).as("n"), count(col("_old")).as("inter")),
+        _.select(col("u"), col("v")))
       val nextCount = row.getLong(0)
       changed = curCount + nextCount - 2L * row.getLong(1)
       curCount = nextCount
-      prevCkptId.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
-      prevCkptId = ckptId
       cur = next
       trace += ((round, changed))
     }
     } // StaticPlan.withMeasured
-    // the final frame stays pinned (callers consume it); its ckpt id is
+    // the final frame stays pinned (callers consume it); its slot is
     // returned so loop-embedded callers (leidenLevels) can release it
     // once the derived labels are materialized
-    (cur, trace.toSeq, prevCkptId)
+    (cur, trace.toSeq, rot)
   }
 
   /** See [[bigStarLoop]]. Returns (_vid, component); throws if the
@@ -3480,18 +3310,12 @@ object GraphAnalytics {
     require(maxLevels >= 1 && roundsPerLevel >= 1,
       "maxLevels and roundsPerLevel must be >= 1")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     import spark.implicits._
-    val slots = collection.mutable.Map.empty[String, Option[Int]]
-    def rotate(slot: String, df: DataFrame): DataFrame = {
-      val (next, id) = rotateCheckpoint(df, slots.getOrElse(slot, None))
-      slots(slot) = id
-      next
-    }
+    val gR, mapR, commR, degR, outR = new graft.Rotation
     // u/v cast to long so the non-empty path's output schema matches
     // the typed empty-input early return below for ANY input edge
     // type (Int-typed edges used to make the two paths disagree)
-    var g = rotate("g", edges.toDF("a", "b").filter(col("a") =!= col("b"))
+    var g = gR(edges.toDF("a", "b").filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).cast("long").as("u"),
         greatest(col("a"), col("b")).cast("long").as("v"))
       .distinct().select(col("u"), col("v"), lit(1L).as("w")))
@@ -3499,12 +3323,11 @@ object GraphAnalytics {
     // is nothing to contract and modularity's aggregate row would carry
     // null sums (NPE on getLong). The empty partition is the answer.
     if (g.isEmpty) {
-      slots.values.foreach(_.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false))))
+      gR.release()
       return Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("level", "_vid", "community", "q_num", "q_den")
     }
-    var mapping = rotate("map",
+    var mapping = mapR(
       g.select(col("u").as("node")).union(g.select(col("v"))).distinct()
         .select(col("node").as("_vid"), col("node")))
     var out: Option[DataFrame] = None
@@ -3519,7 +3342,7 @@ object GraphAnalytics {
     // row-derived partition count.
     while (level < maxLevels && !stop) {
       level += 1
-      var comm = rotate("comm",
+      var comm = commR(
         g.select(col("u").as("x")).union(g.select(col("v"))).distinct()
           .select(col("x"), col("x").as("c")))
       // Level-invariant strengths + total weight, hoisted OUT of the
@@ -3529,7 +3352,7 @@ object GraphAnalytics {
       // level replaces all of it; the same scalar job reads m2 AND the
       // node count arming the law (capped leaf stats force SMJ
       // everywhere and AQE pays a materialization job per exchange).
-      val deg = rotate("deg", strengthFrame(g, comm.select("x")))
+      val deg = degR(strengthFrame(g, comm.select("x")))
       val degStats = deg.agg(sum(col("k")).as("m2"),
         count(lit(1)).as("n")).head()
       val m2v = degStats.getLong(0)
@@ -3550,7 +3373,7 @@ object GraphAnalytics {
       // Both inputs are checkpointed leaves here, so the in-call
       // persists are skipped (persistInputs = false).
       for (r <- 1 to roundsPerLevel) {
-        comm = rotate("comm",
+        comm = commR(
           louvainMoveWeighted(g, comm, persistInputs = false,
             pre = Some((deg, m2v)), bc = bc)
             .select(col("_vid").as("x"),
@@ -3567,7 +3390,7 @@ object GraphAnalytics {
           .join(comm.select(col("x").as("v"), col("c").as("cv")), "v")
           .filter(col("cu") === col("cv"))
           .select(col("u").as("a"), col("v").as("b"))
-        val (stars, ccTrace, ccId) = bigStarLoop(intra, maxRounds = 30, bc = bc)
+        val (stars, ccTrace, ccRot) = bigStarLoop(intra, maxRounds = 30, bc = bc)
         if (ccTrace.nonEmpty && ccTrace.last._2 != 0L)
           throw new IllegalStateException(
             "leidenLevels: refinement CC did not converge in 30 star " +
@@ -3579,11 +3402,10 @@ object GraphAnalytics {
           .unionByName(
             stars.select(col("u").as("x"), col("u").as("comp")))
           .groupBy("x").agg(min(col("comp")).as("comp"))
-        comm = rotate("comm", comm.select(col("x"))
+        comm = commR(comm.select(col("x"))
           .join(comp, Seq("x"), "left")
           .select(col("x"), coalesce(col("comp"), col("x")).as("c")))
-        ccId.foreach(i => sc.getPersistentRDDs.get(i)
-          .foreach(_.unpersist(blocking = false)))
+        ccRot.release()
       }
       // Annotate g with the level's FINAL labels ONCE; the modularity
       // readout (intra weights) and the contraction both derive from
@@ -3609,17 +3431,17 @@ object GraphAnalytics {
         // Rotate the mapping FIRST; the level's output rows are a
         // projection of the rotated frame (r14 — the mapping⋈comm
         // join used to run twice per level, once for each)
-        mapping = rotate("map", mapping
+        mapping = mapR(mapping
           .join(comm.select(col("x").as("node"), col("c")), "node")
           .select(col("_vid"), col("c").as("node")))
         val lvlRows = mapping
           .select(lit(level.toLong).as("level"), col("_vid"),
             col("node").as("community"), lit(qNum).as("q_num"),
             lit(qDen).as("q_den"))
-        out = Some(rotate("out",
+        out = Some(outR(
           out.map(_.unionByName(lvlRows)).getOrElse(lvlRows)))
         if (level < maxLevels) {
-          g = rotate("g", gAnno
+          g = gR(gAnno
             .select(least(col("cu"), col("cv")).as("u"),
               greatest(col("cu"), col("cv")).as("v"), col("w"))
             .groupBy("u", "v").agg(sum(col("w")).as("w")))
@@ -3628,8 +3450,7 @@ object GraphAnalytics {
       gAnno.unpersist(blocking = false)
       } // StaticPlan.withMeasured (per level)
     }
-    (slots.keySet - "out").foreach(k => slots(k).foreach(i =>
-      sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false))))
+    Seq(gR, mapR, commR, degR).foreach(_.release())
     out.get
   }
 
@@ -3683,18 +3504,12 @@ object GraphAnalytics {
       "maxLevels, roundsPerLevel and mergeSweeps must be >= 1")
     require(theta.forall(_ >= 1L), "theta must be >= 1 when set")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     import spark.implicits._
-    val slots = collection.mutable.Map.empty[String, Option[Int]]
-    def rotate(slot: String, df: DataFrame): DataFrame = {
-      val (next, id) = rotateCheckpoint(df, slots.getOrElse(slot, None))
-      slots(slot) = id
-      next
-    }
+    // every slot but `out`, whose frame the caller consumes
+    val gR, mapR, commR, degR, refR, seedR, outR = new graft.Rotation
     def release(): Unit =
-      (slots.keySet - "out").foreach(k => slots(k).foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false))))
-    var g = rotate("g", edges.toDF("a", "b").filter(col("a") =!= col("b"))
+      Seq(gR, mapR, commR, degR, refR, seedR).foreach(_.release())
+    var g = gR(edges.toDF("a", "b").filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).cast("long").as("u"),
         greatest(col("a"), col("b")).cast("long").as("v"))
       .distinct().select(col("u"), col("v"), lit(1L).as("w")))
@@ -3703,8 +3518,7 @@ object GraphAnalytics {
       return Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("level", "_vid", "community", "q_num", "q_den")
     }
-    var mapping = rotate("map",
-      g.select(col("u").as("node")).union(g.select(col("v"))).distinct()
+    var mapping = mapR(g.select(col("u").as("node")).union(g.select(col("v"))).distinct()
         .select(col("node").as("_vid"), col("node")))
     // The aggregate-seeded initial partition of the CURRENT level's
     // graph (None = singletons, level 1 only).
@@ -3738,9 +3552,9 @@ object GraphAnalytics {
       level += 1
       val verts = g.select(col("u").as("x")).union(g.select(col("v")))
         .distinct()
-      var comm = rotate("comm", seed.getOrElse(
+      var comm = commR(seed.getOrElse(
         verts.select(col("x"), col("x").as("c"))))
-      val deg = rotate("deg", strengthFrame(g, comm.select("x")))
+      val deg = degR(strengthFrame(g, comm.select("x")))
       // ONE scalar job per level reads m2 AND the node count; the
       // count arms static broadcast hints below (r15): rotated leaves
       // carry capped "unknown" stats, so Catalyst plans every join as
@@ -3767,8 +3581,7 @@ object GraphAnalytics {
       val m2v = degStats.getLong(0)
       graft.StaticPlan.withMeasured(spark, degStats.getLong(1)) { bc =>
       for (r <- 1 to roundsPerLevel) {
-        comm = rotate("comm",
-          louvainMoveWeighted(g, comm, persistInputs = false,
+        comm = commR(louvainMoveWeighted(g, comm, persistInputs = false,
             pre = Some((deg, m2v)), bc = bc)
             .select(col("_vid").as("x"),
               when(parityOf(col("_vid")) === lit((r % 2).toLong),
@@ -3783,7 +3596,7 @@ object GraphAnalytics {
       // every cloned subtree until the BigInt products ground the
       // driver for minutes (jstack: SizeInBytesOnlyStatsPlanVisitor
       // in ToomCook3 multiply). Since capCheckpointStats (wired into
-      // every rotateCheckpoint) caps the frozen leaf stats that fed
+      // every graft.Rotation) caps the frozen leaf stats that fed
       // that arithmetic, a plain persist suffices here — the sweep
       // trees bottom out at the capped rotation leaves, so the
       // products stay bounded, and persist avoids the extra
@@ -3812,7 +3625,7 @@ object GraphAnalytics {
           (lit(m2v) * coalesce(col("wown"), lit(0L)) >=
             col("k") * (col("volp") - col("k"))).as("well_v"),
           col("c").as("pc"), col("volp")))
-      var ref = rotate("ref", verts.select(col("x"), col("x").as("rc")))
+      var ref = refR(verts.select(col("x"), col("x").as("rc")))
       for (s <- 1 to mergeSweeps) {
         val rSize = ref.join(bc(deg), "x").groupBy(col("rc"))
           .agg(count(lit(1)).as("members"), sum(col("k")).as("volr"))
@@ -3918,7 +3731,7 @@ object GraphAnalytics {
                 col("u") * col("tot"))
               .groupBy("x").agg(min(col("d")).as("new_rc"))
         }
-        ref = rotate("ref", ref.join(bc(chosen), Seq("x"), "left")
+        ref = refR(ref.join(bc(chosen), Seq("x"), "left")
           .select(col("x"), coalesce(col("new_rc"), col("rc")).as("rc")))
         graft.CacheScope.unpersist(eR) // next sweep re-annotates
       }
@@ -3932,7 +3745,7 @@ object GraphAnalytics {
           "v")
         .filter(col("ru") === col("rv"))
         .select(col("u").as("a"), col("v").as("b"))
-      val (stars, ccTrace, ccId) = bigStarLoop(intraR, maxRounds = 30, bc = bc)
+      val (stars, ccTrace, ccRot) = bigStarLoop(intraR, maxRounds = 30, bc = bc)
       if (ccTrace.nonEmpty && ccTrace.last._2 != 0L)
         throw new IllegalStateException(
           "leidenFull: refinement CC did not converge in 30 star " +
@@ -3941,11 +3754,10 @@ object GraphAnalytics {
         .select(col("v").as("x"), col("u").as("comp"))
         .unionByName(stars.select(col("u").as("x"), col("u").as("comp")))
         .groupBy("x").agg(min(col("comp")).as("comp"))
-      ref = rotate("ref", ref.select(col("x"))
+      ref = refR(ref.select(col("x"))
         .join(bc(comp), Seq("x"), "left")
         .select(col("x"), coalesce(col("comp"), col("x")).as("rc")))
-      ccId.foreach(i => sc.getPersistentRDDs.get(i)
-        .foreach(_.unpersist(blocking = false)))
+      ccRot.release()
       // ---- level readout on P; aggregation on the refined labels ----
       // (reads the level's shared gAnno annotation — self-loops kept:
       // contracted levels carry intra weight on u == v rows — and
@@ -3968,11 +3780,10 @@ object GraphAnalytics {
           .select(lit(level.toLong).as("level"), col("_vid"),
             col("c").as("community"), lit(qNum).as("q_num"),
             lit(qDen).as("q_den"))
-        out = Some(rotate("out",
-          out.map(_.unionByName(lvlRows)).getOrElse(lvlRows)))
+        out = Some(outR(out.map(_.unionByName(lvlRows)).getOrElse(lvlRows)))
         if (level < maxLevels) {
           // next level: aggregate on REFINED labels, seed from P
-          mapping = rotate("map", mapping
+          mapping = mapR(mapping
             .join(bc(ref.select(col("x").as("node"), col("rc"))),
               "node")
             .select(col("_vid"), col("rc").as("node")))
@@ -3981,14 +3792,13 @@ object GraphAnalytics {
               "u")
             .join(bc(ref.select(col("x").as("v"), col("rc").as("rv"))),
               "v")
-          g = rotate("g", gAnnoR
+          g = gR(gAnnoR
             .select(least(col("ru"), col("rv")).as("u"),
               greatest(col("ru"), col("rv")).as("v"), col("w"))
             .groupBy("u", "v").agg(sum(col("w")).as("w")))
           // refined label rc IS a member vertex id; its P community
           // seeds the aggregated node (guarantee-3 seeding)
-          seed = Some(rotate("seed",
-            ref.select(col("rc")).distinct()
+          seed = Some(seedR(ref.select(col("rc")).distinct()
               .join(bc(p.select(col("x").as("rc"), col("c"))), "rc")
               .select(col("rc").as("x"), col("c"))))
         }
@@ -4170,15 +3980,12 @@ object GraphAnalytics {
       .transform(graft.CacheScope.persist(_))
     var dist = landmarks.toDF("l")
       .select(col("l"), col("l").as("v"), lit(0L).as("dist"))
-    var prevCkptId: Option[Int] = None
+    val rot = new graft.Rotation
     for (_ <- 1 to rounds) {
-      val relaxed = e.join(dist, dist("v") === e("s"))
+      dist = rot(e.join(dist, dist("v") === e("s"))
         .select(col("l"), col("d").as("v"), (col("dist") + 1L).as("dist"))
         .unionByName(dist.select(col("l"), col("v"), col("dist")))
-        .groupBy("l", "v").agg(min(col("dist")).as("dist"))
-      val (next, ckptId) = rotateCheckpoint(relaxed, prevCkptId)
-      prevCkptId = ckptId
-      dist = next
+        .groupBy("l", "v").agg(min(col("dist")).as("dist")))
     }
     dist
   }
@@ -4226,15 +4033,14 @@ object GraphAnalytics {
    *
    * Scale shape: per round ONE adjacency-sized count shuffle (n_vp) +
    * a k-row load aggregate (broadcast) + a max(struct) argmax — the
-   * louvainMove frame discipline; partition state rotates through
-   * localCheckpoint, O(1) pinned frames.
+   * louvainMove frame discipline; partition state rotates through a
+   * [[graft.Rotation]], O(1) pinned frames.
    */
   def balancedPartition(edges: DataFrame, k: Int, rounds: Int,
       capPermille: Int): DataFrame = {
     require(k >= 2 && rounds >= 1 && capPermille >= 1000,
       "k >= 2, rounds >= 1, cap >= 1000 permille")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     val und = edges.toDF("a", "b").filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"),
         greatest(col("a"), col("b")).as("v"))
@@ -4246,12 +4052,10 @@ object GraphAnalytics {
     // contiguous ids don't stripe)
     val hashPart = pmod(conv(substring(md5(col("x").cast("string")),
       1, 8), 16, 10).cast("long"), lit(k.toLong))
-    var prevId: Option[Int] = None
-    val (parts0, id0) = rotateCheckpoint(
+    val rot = new graft.Rotation
+    var parts = rot(
       und.select(col("u").as("x")).union(und.select(col("v"))).distinct()
-        .select(col("x"), hashPart.as("p")), None)
-    prevId = id0
-    var parts = parts0
+        .select(col("x"), hashPart.as("p")))
     val nVerts = parts.count() // once; loads are k-row frames after
     // Measured gate for the static-planning law ([[graft.StaticPlan]]):
     // the adjacency (2·edges) bounds every per-round frame
@@ -4277,17 +4081,12 @@ object GraphAnalytics {
         .agg(max(struct(col("nv"), (-col("p")).as("np"))).as("b"))
         .select(col("x"), col("b.nv").as("nv_best"),
           (-col("b.np")).as("p_best"))
-      val (next, ckptId) = rotateCheckpoint(
-        own.join(best, Seq("x"), "left")
-          .join(ownNv, Seq("x"), "left")
-          .select(col("x"),
-            when(parity === lit((r % 2).toLong) &&
-              col("nv_best") > coalesce(col("nv_own"), lit(0L)),
-              col("p_best")).otherwise(col("p_own")).as("p")), None)
-      prevId.foreach(i => sc.getPersistentRDDs.get(i)
-        .foreach(_.unpersist(blocking = false)))
-      prevId = ckptId
-      parts = next
+      parts = rot(own.join(best, Seq("x"), "left")
+        .join(ownNv, Seq("x"), "left")
+        .select(col("x"),
+          when(parity === lit((r % 2).toLong) &&
+            col("nv_best") > coalesce(col("nv_own"), lit(0L)),
+            col("p_best")).otherwise(col("p_own")).as("p")))
     }
     parts.select(col("x").as("_vid"), col("p").as("part"))
       .withColumn("part_init",
@@ -4356,22 +4155,19 @@ object GraphAnalytics {
    *
    * Scale shape: per round ONE combinable degree aggregate + two
    * semi-joins (the kCore peel shape) with the |V|/|E| scalars riding
-   * single aggregated rows; edge state rotates through localCheckpoint
-   * (O(1) pinned frames).
+   * single aggregated rows; edge state rotates through a
+   * [[graft.Rotation]] (O(1) pinned frames).
    */
   def densestSubgraph(edges: DataFrame, epsPermille: Int,
       rounds: Int): DataFrame = {
     require(epsPermille >= 0 && rounds >= 1, "eps >= 0, rounds >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    var prevCkptId: Option[Int] = None
-    val (e0, id0) = rotateCheckpoint(
-      edges.toDF("a", "b").filter(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("s"),
-          greatest(col("a"), col("b")).as("d"))
-        .distinct(), None)
-    prevCkptId = id0
-    var e = e0
+    val rot = new graft.Rotation
+    var e = rot(edges.toDF("a", "b").filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("s"),
+        greatest(col("a"), col("b")).as("d"))
+      .distinct())
     // two scalar jobs per round (edge count + distinct-vertex count) —
     // never a collected edge list
     def stats(f: DataFrame): (Long, Long) = (f.count(),
@@ -4399,8 +4195,7 @@ object GraphAnalytics {
         .join(keep.select(col("v").as("s")), Seq("s"), "left_semi")
         .join(keep.select(col("v").as("d")), Seq("d"), "left_semi")
         .select("s", "d")
-      val (next, ckptId) = rotateCheckpoint(peeled, prevCkptId)
-      prevCkptId = ckptId
+      val next = rot(peeled)
       graft.CacheScope.unpersist(deg)
       e = next
       val (ne, nvAfter) = stats(e)
@@ -4434,7 +4229,7 @@ object GraphAnalytics {
    * oracle.
    *
    * Scale shape: per round ONE combinable degree aggregate + two
-   * semi-joins; edge state rotates through localCheckpoint (O(1)
+   * semi-joins; edge state rotates through a [[graft.Rotation]] (O(1)
    * pinned frames across all maxK·roundsPerK rounds); dropped-vertex
    * frames are vertex-sized.
    */
@@ -4449,16 +4244,12 @@ object GraphAnalytics {
     def degs(f: DataFrame): DataFrame = f
       .select(explode(array(col("s"), col("d"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("deg"))
-    var prevCkptId: Option[Int] = None
+    val rot = new graft.Rotation
     // the canonical-edge count rides the first rotation and doubles as
     // the static-planning gate ([[graft.StaticPlan]])
-    val obs0 = org.apache.spark.sql.Observation()
-    val (e0, id0) = rotateCheckpoint(
-      e.observe(obs0, count(lit(1)).as("n")), prevCkptId)
-    prevCkptId = id0
+    val (e0, n0) = rot.observe(e, Seq(count(lit(1)).as("n")))
     e = e0
-    val nEdges = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+    val nEdges = n0.getLong(0)
     graft.StaticPlan.withMeasured(e.sparkSession, nEdges) { _ =>
     // level-end vertex frames are persisted AND materialized before the
     // next level's rotation releases the checkpoint blocks they derive
@@ -4485,9 +4276,7 @@ object GraphAnalytics {
             .join(keep.select(col("v").as("s")), Seq("s"), "left_semi")
             .join(keep.select(col("v").as("d")), Seq("d"), "left_semi")
             .select("s", "d")
-          val (next, ckptId) = rotateCheckpoint(peeled, prevCkptId)
-          prevCkptId = ckptId
-          e = next
+          e = rot(peeled)
         }
         graft.CacheScope.unpersist(dg)
       }

@@ -621,16 +621,16 @@ object Similarity {
    *
    * Scale shape per round: exactly [[knnRefine]]'s — expandCap bounds
    * the 2-hop fan-out at expandCap², joins are vertex-keyed, windows
-   * ride per-vertex frames ≤ k + cap²; the graph rotates through
-   * localCheckpoint (O(1) pinned frames) and the changed count is one
-   * anti-join over two k-bounded graphs per round.
+   * ride per-vertex frames ≤ k + cap²; the graph rotates through a
+   * [[graft.Rotation]] (O(1) pinned frames) and the changed count is
+   * one anti-join over two k-bounded graphs per round.
    */
   def knnDescent(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, numPlanes: Int, dim: Int, maxBucketSize: Int,
       expandCap: Int, maxRounds: Int, seed: Long = 42L): DataFrame = {
     require(expandCap >= 1 && maxRounds >= 1,
       "expandCap and maxRounds must be >= 1")
-    val rotate = graft.analytics.GraphAnalytics.rotateCheckpoint _
+    val rot = new graft.Rotation
     val lsh = knnGraph(emb, idCol, vecCol, k, numPlanes, dim,
       maxBucketSize, seed)
       .select(col(idCol).as("x"), col("nbr_id"), col("sim"))
@@ -642,8 +642,7 @@ object Similarity {
         col("sim")))
       .unionByName(ring.select(col("n").as("x"), col("x").as("nbr_id"),
         col("sim")))
-    var (g, gid) = rotate(topkGraph(pool0, k), None)
-    var prevId = gid
+    var g = rot(topkGraph(pool0, k))
     var r = 0
     var changed = -1L
     // Measured gate for the static-planning law ([[graft.StaticPlan]]):
@@ -677,19 +676,13 @@ object Similarity {
       // the changed-edge count rides the rotation job as a
       // CollectMetrics observation (the semiSyncLpa one-job-per-round
       // law) instead of a separate anti-join action
-      val obs = org.apache.spark.sql.Observation()
-      val (next, nid) = rotate(topkGraph(scored.unionByName(
-        und.select(col("x"), col("n").as("nbr_id"), col("sim"))), k)
+      val (next, n) = rot.observe(topkGraph(scored.unionByName(
+          und.select(col("x"), col("n").as("nbr_id"), col("sim"))), k)
         .join(g.select(col("x"), col("nbr_id"), lit(1).as("_old")),
-          Seq("x", "nbr_id"), "left")
-        .observe(obs, count(when(col("_old").isNull, lit(1))).as("n"))
-        .drop("_old"),
-        None)
-      changed = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration.Inf).getLong(0)
-      prevId.foreach(i => emb.sparkSession.sparkContext
-        .getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
-      prevId = nid
+          Seq("x", "nbr_id"), "left"),
+        Seq(count(when(col("_old").isNull, lit(1))).as("n")),
+        _.drop("_old"))
+      changed = n.getLong(0)
       g = next
       graft.CacheScope.unpersist(capped)
       graft.CacheScope.unpersist(und)
@@ -923,20 +916,15 @@ object Similarity {
     // reclustered k-means|| candidates, or any caller-trained seed.
     // Default keeps the committed first-nCells-by-id law.
     //
-    // Rounds ROTATE through localCheckpoint rather than persist (r16):
+    // Rounds ROTATE through a checkpoint slot rather than persist (r16):
     // persist() reuses execution but leaves the LOGICAL lineage live,
     // and each Lloyd round references the previous centroids ~3×
     // (assignment, fallback, counts) — with a nontrivial init plan
     // (the k-means|| draft DAG) the analyzed tree grew geometrically
     // and q_mog_kmeanspar_recall measured 34 s wall over 3.3 s of
     // actual job time, all of it driver-side Catalyst analysis. The
-    // checkpoint truncates lineage at an nCells-row leaf per round
-    // (and capCheckpointStats keeps the frozen stats sane).
-    val rotate = graft.analytics.GraphAnalytics.rotateCheckpoint _
-    var slot: Option[Int] = None
-    def roll(df: DataFrame): DataFrame = {
-      val (next, id) = rotate(df, slot); slot = id; next
-    }
+    // checkpoint truncates lineage at an nCells-row leaf per round.
+    val roll = new graft.Rotation
     var centroids = roll(init
       .map(_.select(col("cell").cast("long").as("cell"),
         col("cvec").cast("array<double>").as("cvec"),
@@ -1016,7 +1004,7 @@ object Similarity {
    * (≤ 1+ℓ·rounds rows) against the corpus + a min-aggregate (map-side
    * combinable) + one scalar φ row — never a corpus shuffle; the
    * final weighting is the same broadcast join + one candidate-sized
-   * count. Candidate frames rotate through localCheckpoint, O(1)
+   * count. Candidate frames rotate through a [[graft.Rotation]], O(1)
    * pinned.
    *
    * Returns (cand_id, round_added, weight).
@@ -1031,20 +1019,8 @@ object Similarity {
       .filter(col("id") === col("mid"))
       .select(col("id").as("cand_id"), col("v").as("cv"),
         lit(0L).as("round_added"))
-    var prevCkpt: Option[Int] = None
-    val sc = emb.sparkSession.sparkContext
-    def rotate(df: DataFrame): DataFrame = {
-      val before = sc.getPersistentRDDs.keySet
-      val next = df.localCheckpoint(true)
-      val id = (sc.getPersistentRDDs.keySet -- before).toList match {
-        case only :: Nil => Some(only); case _ => None
-      }
-      prevCkpt.foreach(i => sc.getPersistentRDDs.get(i)
-        .foreach(_.unpersist(blocking = false)))
-      prevCkpt = id
-      next
-    }
-    var cands = rotate(seed)
+    val rot = new graft.Rotation
+    var cands = rot(seed)
     val p72 = math.pow(2.0, 72) // exact power-of-two double
     for (r <- 1 to rounds) {
       // d²(x, C) = min over the broadcast candidate set — candidates
@@ -1061,7 +1037,7 @@ object Similarity {
         .filter(h * col("phi").cast("double") <
           lit(ell.toDouble) * col("d2") * lit(p72))
         .select(col("id"))
-      cands = rotate(cands.unionByName(pts.join(chosen, "id")
+      cands = rot(cands.unionByName(pts.join(chosen, "id")
         .select(col("id").as("cand_id"), col("v").as("cv"),
           lit(r.toLong).as("round_added"))))
     }
@@ -1494,7 +1470,8 @@ object Similarity {
    * broadcasts, per-row min-distance is a combinable aggregate over
    * corpus×|seeds| rows, and the argmax is a single-row
    * max(struct(dist, -id)) aggregate that rejoins by id in-plan (no
-   * driver collect). The seed frame rotates through localCheckpoint;
+   * driver collect). The seed frame rotates through a
+   * [[graft.Rotation]], so one checkpoint stays pinned;
    * already-selected ids are anti-joined out of the candidate frame
    * before the argmax — when k exceeds the number of distinct points
    * every remaining min-distance is 0 and without the anti-join the
@@ -1508,11 +1485,11 @@ object Similarity {
     val base = emb.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .transform(graft.CacheScope.persist(_)) // scanned every round
-    var seeds = base
+    val rot = new graft.Rotation
+    var seeds = rot(base
       .join(broadcast(base.agg(min(col("id")).as("id"))), Seq("id"))
       .select(lit(1).as("srk"), col("id"), col("v").as("svec"),
-        lit(0.0).as("dist"))
-      .localCheckpoint(true)
+        lit(0.0).as("dist")))
     for (r <- 2 to k) {
       val mind = base
         .join(seeds.select(col("id")), Seq("id"), "left_anti")
@@ -1526,7 +1503,7 @@ object Similarity {
       val newSeed = base.join(broadcast(mx), Seq("id"))
         .select(lit(r).as("srk"), col("id"), col("v").as("svec"),
           col("dist"))
-      seeds = seeds.unionByName(newSeed).localCheckpoint(true)
+      seeds = rot(seeds.unionByName(newSeed))
     }
     seeds.select(col("srk"), col("id").as(idCol), col("dist"))
   }
@@ -1830,7 +1807,7 @@ object Similarity {
   }
 
   /** The L-inf-normalized power loop over a (i, j, c) matrix frame —
-    * localCheckpoint rotation, NOT plain persist: the in-plan max
+    * checkpoint rotation, NOT plain persist: the in-plan max
     * scalar references the round's matvec twice, so a persist-rotated
     * loop TRIPLES the logical plan per round and planning OOMs by
     * iteration 5 (the eigenvectorCentrality/hits lesson, reproduced
@@ -1840,9 +1817,8 @@ object Similarity {
     import graft.functions.Portable.dyadic
     val spark = cov.sparkSession
     import spark.implicits._
-    val rotate = graft.analytics.GraphAnalytics.rotateCheckpoint _
-    var (v, vId) = rotate((1 to dim).map(i => (i, 1.0)).toDF("j", "v"),
-      None)
+    val rot = new graft.Rotation
+    var v = rot((1 to dim).map(i => (i, 1.0)).toDF("j", "v"))
     // Static gate for the static-planning law ([[graft.StaticPlan]]):
     // every loop frame is bounded by the dim×dim matrix — known
     // WITHOUT a job, the cheapest gate in the family.
@@ -1857,9 +1833,8 @@ object Similarity {
         .select(col("i").as("j"),
           when(col("m") > lit(0.0), dyadic(col("y") / col("m")))
             .otherwise(lit(0.0)).as("v"))
-      val (v2, id2) = rotate(next, vId)
+      v = rot(next)
       graft.CacheScope.unpersist(y)
-      v = v2; vId = id2
     }
     } // StaticPlan.withMeasured
     v
@@ -1986,7 +1961,7 @@ object Similarity {
    * ONE frontier⋈adjacency expand + one anti-join against the
    * visited set + one bounded scoring join; frontier/visited frames
    * are (queries x beam x degree)-sized, never corpus-sized, and
-   * rotate through localCheckpoint (O(1) pinned).
+   * rotate through a [[graft.Rotation]] (O(1) pinned).
    *
    * Recall, measured on the gate corpus (UNSTRUCTURED random 64-d
    * vectors — graph ANN's hard case): graph degree is the dominant
@@ -2224,7 +2199,7 @@ object Similarity {
       k: Int): DataFrame = {
     require(queryIds.nonEmpty, "queries required")
     require(beam >= 1 && rounds >= 1 && k >= 1, "beam/rounds/k >= 1")
-    val rotate = graft.analytics.GraphAnalytics.rotateCheckpoint _
+    val rot = new graft.Rotation
     val vecs = emb.select(col(idCol).cast("long").as("vid"),
       col(vecCol).cast("array<double>").as("vv"))
       .transform(graft.CacheScope.persist(_))
@@ -2267,8 +2242,7 @@ object Similarity {
     // cheap window over the CHECKPOINTED frame's newest rows, so each
     // round pays exactly ONE rotation job (frontier needs no second
     // checkpoint — its lineage bottoms out at visited's LogicalRDD)
-    var (visited, visId) = rotate(
-      score(entry).withColumn("r", lit(0)), None)
+    var visited = rot(score(entry).withColumn("r", lit(0)))
     for (r <- 1 to rounds) {
       val frontier = topBeam(
         visited.filter(col("r") === r - 1).drop("r"))
@@ -2277,10 +2251,8 @@ object Similarity {
         .select(col("qid"), col("an").as("v"))
         .distinct()
         .join(visited, Seq("qid", "v"), "left_anti")
-      val (v2, vId2) = rotate(
-        visited.unionByName(score(cand).withColumn("r", lit(r))),
-        visId)
-      visited = v2; visId = vId2
+      visited = rot(
+        visited.unionByName(score(cand).withColumn("r", lit(r))))
     }
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("simx").desc, col("v"))

@@ -104,22 +104,21 @@ object TextAnalysis {
   def bpeTrain(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, _, ckptId) = bpeTrainLoop(docs, textCol, nMerges)
-    ckptId.foreach(i => spark.sparkContext.getPersistentRDDs.get(i)
-      .foreach(_.unpersist(blocking = false)))
+    val (merges, _, vocabRot) = bpeTrainLoop(docs, textCol, nMerges)
+    vocabRot.release()
     merges.toDF("step", "pair", "cnt")
   }
 
   /** Shared BPE training loop: returns (merge list, final vocab frame
-    * (w space-joined symbols, f), the vocab's checkpoint-block id) —
+    * (w space-joined symbols, f), the vocab's slot) —
     * [[bpeTrain]] emits the merges and releases the vocab;
     * [[bpeEncodeCounts]] consumes the vocab (swept by the harness's
     * CacheScope.drain afterward, the house law for returned frames). */
   private def bpeTrainLoop(docs: DataFrame, textCol: String,
-      nMerges: Int): (Seq[(Long, String, Long)], DataFrame, Option[Int]) = {
+      nMerges: Int): (Seq[(Long, String, Long)], DataFrame, graft.Rotation) = {
     require(nMerges >= 1, "nMerges must be >= 1")
     val spark = docs.sparkSession
-    val rotate = graft.analytics.GraphAnalytics.rotateCheckpoint _
+    val rot = new graft.Rotation
     val init = docs.select(explode(tokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) >= 2) // 1-char words never pair
       .groupBy("tok").agg(count(lit(1)).as("f"))
@@ -128,11 +127,8 @@ object TextAnalysis {
     // the vocab count rides the init rotation and doubles as the
     // static-planning gate ([[graft.StaticPlan]]): every step's frame
     // (pairs, rewritten vocab) is vocab-bounded
-    val obs0 = org.apache.spark.sql.Observation()
-    var (vocab, prevId) = rotate(
-      init.observe(obs0, count(lit(1)).as("n")), None)
-    val nVocab = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+    var (vocab, n0) = rot.observe(init, Seq(count(lit(1)).as("n")))
+    val nVocab = n0.getLong(0)
     val merges = collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     var step = 0
     var exhausted = false
@@ -165,13 +161,11 @@ object TextAnalysis {
           // merge rewrites are injective on symbol sequences (see doc)
           // but the fold is kept as a defensive invariant
           .groupBy("w").agg(sum(col("f")).as("f"))
-        val (v2, id2) = rotate(next, prevId)
-        vocab = v2
-        prevId = id2
+        vocab = rot(next)
       }
     }
     } // StaticPlan.withMeasured
-    (merges.toSeq, vocab, prevId)
+    (merges.toSeq, vocab, rot)
   }
 
   /**
@@ -299,21 +293,19 @@ object TextAnalysis {
    * Scale shape (identical to [[bpeTrain]]): the corpus collapses
    * ONCE to the word-frequency table; each merge step touches only
    * vocab-sized frames (symbol counts, pair counts, one aggregated
-   * argmax row), with the vocab state rotated through localCheckpoint
-   * so a 10k-merge run pins O(1) frames.
+   * argmax row), with the vocab state rotated through a
+   * [[graft.Rotation]] so a 10k-merge run pins O(1) frames.
    */
   def wordpieceTrain(docs: DataFrame, textCol: String,
       nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, ckptId) = wordpieceTrainLoop(docs, textCol, nMerges)
-    ckptId.foreach(i => spark.sparkContext.getPersistentRDDs.get(i)
-      .foreach(_.unpersist(blocking = false)))
-    merges.toDF("step", "pair", "cnt", "score_x40")
+    wordpieceTrainLoop(docs, textCol, nMerges)
+      .toDF("step", "pair", "cnt", "score_x40")
   }
 
   private def wordpieceTrainLoop(docs: DataFrame, textCol: String,
-      nMerges: Int): (Seq[(Long, String, Long, Long)], Option[Int]) = {
+      nMerges: Int): Seq[(Long, String, Long, Long)] = {
     val init = docs.select(explode(tokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) >= 2)
       .groupBy("tok").agg(count(lit(1)).as("f"))
@@ -338,18 +330,16 @@ object TextAnalysis {
 
   /** The merge loop shared by the plain and BERT-annotated trainers:
     * the symbol algebra (pair counting, likelihood argmax, injective
-    * space-rewrite) never inspects the annotation. */
+    * space-rewrite) never inspects the annotation. Returns the merge
+    * list; the vocab's blocks are released on return. */
   private def wordpieceMergeLoop(init: DataFrame,
-      nMerges: Int): (Seq[(Long, String, Long, Long)], Option[Int]) = {
+      nMerges: Int): Seq[(Long, String, Long, Long)] = {
     require(nMerges >= 1, "nMerges must be >= 1")
-    val rotate = graft.analytics.GraphAnalytics.rotateCheckpoint _
+    val rot = new graft.Rotation
     // the vocab count rides the init rotation and doubles as the
     // static-planning gate ([[graft.StaticPlan]])
-    val obs0 = org.apache.spark.sql.Observation()
-    var (vocab, prevId) = rotate(
-      init.observe(obs0, count(lit(1)).as("n")), None)
-    val nVocab = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+    var (vocab, n0) = rot.observe(init, Seq(count(lit(1)).as("n")))
+    val nVocab = n0.getLong(0)
     val merges = collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
     var step = 0
     var exhausted = false
@@ -401,13 +391,12 @@ object TextAnalysis {
           .select(trim(replace(replace(padded, search, repl),
             lit("  "), lit(" "))).as("w"), col("f"))
           .groupBy("w").agg(sum(col("f")).as("f"))
-        val (v2, id2) = rotate(next, prevId)
-        vocab = v2
-        prevId = id2
+        vocab = rot(next)
       }
     }
     } // StaticPlan.withMeasured
-    (merges.toSeq, prevId)
+    rot.release()
+    merges.toSeq
   }
 
   /**
@@ -421,9 +410,7 @@ object TextAnalysis {
       nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, ckptId) = wordpieceTrainLoop(docs, textCol, nMerges)
-    ckptId.foreach(i => spark.sparkContext.getPersistentRDDs.get(i)
-      .foreach(_.unpersist(blocking = false)))
+    val merges = wordpieceTrainLoop(docs, textCol, nMerges)
     val chars = docs.select(explode(tokens(col(textCol))).as("tok"))
       .distinct()
       .select(explode(expr(
@@ -612,11 +599,8 @@ object TextAnalysis {
       nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, ckptId) =
-      wordpieceMergeLoop(wordpieceBertInit(docs, textCol), nMerges)
-    ckptId.foreach(i => spark.sparkContext.getPersistentRDDs.get(i)
-      .foreach(_.unpersist(blocking = false)))
-    merges.toDF("step", "pair", "cnt", "score_x40")
+    wordpieceMergeLoop(wordpieceBertInit(docs, textCol), nMerges)
+      .toDF("step", "pair", "cnt", "score_x40")
   }
 
   /**
@@ -631,10 +615,8 @@ object TextAnalysis {
       nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, ckptId) =
+    val merges =
       wordpieceMergeLoop(wordpieceBertInit(docs, textCol), nMerges)
-    ckptId.foreach(i => spark.sparkContext.getPersistentRDDs.get(i)
-      .foreach(_.unpersist(blocking = false)))
     val toksD = docs.select(explode(tokens(col(textCol))).as("tok"))
       .filter(!col("tok").contains("#"))
       .distinct()
@@ -1964,7 +1946,7 @@ object TextAnalysis {
     vocabSize + ((seedSize - vocabSize).max(0) * (nRounds - r)) / nRounds
 
   /** Shared unigram-LM trainer loop. Returns (word-frequency table,
-    * single-char set, final vocab frame, slots to release). Vocab per
+    * final vocab frame, frames to release). Vocab per
     * round = ALL single characters (coverage floor, usage-counted,
     * never pruned) ∪ top-`vocabSize` multi-char tokens by Viterbi
     * usage (cnt desc, tok asc — the q_bpe_merges tie-break law);
@@ -1978,16 +1960,16 @@ object TextAnalysis {
     * discipline) — a piece explode bounded by len × maxPieceLen, one
     * combinable usage aggregate, and a rank window over the BOUNDED
     * candidate vocabulary (≤ |chars| + corpus substring vocab; the
-    * zipfTable global-window law). The vocab rotates via
-    * localCheckpoint with O(1) pinned frames. */
+    * zipfTable global-window law). The vocab rotates through a
+    * [[graft.Rotation]] with O(1) pinned frames. */
   private def unigramTrainLoop(docs: DataFrame, textCol: String,
       maxPieceLen: Int, seedSize: Int, vocabSize: Int, nRounds: Int,
       lossPrune: Boolean = false)
-      : (DataFrame, DataFrame, Option[Int], Seq[DataFrame]) = {
+      : (DataFrame, DataFrame, Seq[DataFrame]) = {
     require(nRounds >= 1 && seedSize >= 1 && vocabSize >= 1,
       "nRounds, seedSize, vocabSize must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    val rotate = graft.analytics.GraphAnalytics.rotateCheckpoint _
+    val rot = new graft.Rotation
     val wf = docs.select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
       .transform(graft.CacheScope.persist(_)) // consumed every round
@@ -2009,11 +1991,8 @@ object TextAnalysis {
     // static-planning gate ([[graft.StaticPlan]]): every round's frame
     // is vocab- or word-table-sized, both bounded by the larger of the
     // two counts (wf is persisted; its count fill is paid anyway).
-    val obs0 = org.apache.spark.sql.Observation()
-    var (vocab, prevId) = rotate(
-      seed.observe(obs0, count(lit(1)).as("n")), None)
-    val nSeed = scala.concurrent.Await
-      .result(obs0.future, scala.concurrent.duration.Duration.Inf).getLong(0)
+    var (vocab, n0) = rot.observe(seed, Seq(count(lit(1)).as("n")))
+    val nSeed = n0.getLong(0)
     val nWords = wf.count()
     graft.StaticPlan.withMeasured(docs.sparkSession,
       math.max(nSeed, nWords) * maxPieceLen) { _ =>
@@ -2056,13 +2035,11 @@ object TextAnalysis {
       val next = chars.join(usage, Seq("tok"), "left")
         .select(col("tok"), coalesce(col("cnt"), lit(0L)).as("cnt"))
         .unionByName(kept)
-      val (v2, id2) = rotate(next, prevId)
-      vocab = v2
-      prevId = id2
+      vocab = rot(next)
       graft.CacheScope.unpersist(usage)
     }
     } // StaticPlan.withMeasured
-    (wf, vocab, prevId, Seq(subs, chars))
+    (wf, vocab, Seq(subs, chars))
   }
 
   /**
@@ -2075,7 +2052,7 @@ object TextAnalysis {
   def unigramTrain(docs: DataFrame, textCol: String, maxPieceLen: Int,
       seedSize: Int, vocabSize: Int, nRounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (wf, vocab, _, extras) = unigramTrainLoop(docs, textCol,
+    val (wf, vocab, extras) = unigramTrainLoop(docs, textCol,
       maxPieceLen, seedSize, vocabSize, nRounds)
     (extras :+ wf).foreach(graft.CacheScope.unpersist)
     vocab.withColumn("rnk", row_number().over(
@@ -2110,7 +2087,7 @@ object TextAnalysis {
       maxPieceLen: Int, seedSize: Int, vocabSize: Int,
       nRounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (wf, vocab, _, extras) = unigramTrainLoop(docs, textCol,
+    val (wf, vocab, extras) = unigramTrainLoop(docs, textCol,
       maxPieceLen, seedSize, vocabSize, nRounds, lossPrune = true)
     (extras :+ wf).foreach(graft.CacheScope.unpersist)
     vocab.withColumn("rnk", row_number().over(
@@ -2156,7 +2133,7 @@ object TextAnalysis {
       docs: DataFrame, idCol: String, textCol: String,
       maxPieceLen: Int, seedSize: Int, vocabSize: Int,
       nRounds: Int): DataFrame = {
-    val (_, vocab, _, extras) = unigramTrainLoop(train, trainTextCol,
+    val (_, vocab, extras) = unigramTrainLoop(train, trainTextCol,
       maxPieceLen, seedSize, vocabSize, nRounds)
     val words = docs.select(explode(tokens(col(textCol))).as("w"))
       .distinct()
@@ -2244,7 +2221,7 @@ object TextAnalysis {
   def unigramEncodeCounts(docs: DataFrame, idCol: String,
       textCol: String, maxPieceLen: Int, seedSize: Int, vocabSize: Int,
       nRounds: Int): DataFrame = {
-    val (wf, vocab, _, extras) = unigramTrainLoop(docs, textCol,
+    val (wf, vocab, extras) = unigramTrainLoop(docs, textCol,
       maxPieceLen, seedSize, vocabSize, nRounds)
     val segK = viterbiSegments(wf, vocab, maxPieceLen)
       .select(col("w"), col("k"))
@@ -2524,7 +2501,7 @@ object TextAnalysis {
       docs: DataFrame, idCol: String, textCol: String,
       maxPieceLen: Int, seedSize: Int, vocabSize: Int,
       nRounds: Int): DataFrame = {
-    val (_, vocab, _, extras) = unigramTrainLoop(train, trainTextCol,
+    val (_, vocab, extras) = unigramTrainLoop(train, trainTextCol,
       maxPieceLen, seedSize, vocabSize, nRounds)
     val words = docs.select(explode(tokens(col(textCol))).as("w"))
       .distinct()

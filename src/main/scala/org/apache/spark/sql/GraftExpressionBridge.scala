@@ -33,6 +33,15 @@ object GraftExpressionBridge {
   def leafBytes(df: DataFrame): BigInt =
     df.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
 
+  /** The RDD holding a localCheckpoint'd Dataset's blocks: the
+    * `LogicalRDD` leaf of its analyzed plan. */
+  def checkpointRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.analyzed match {
+      case lr: execution.LogicalRDD => lr.rdd
+      case p => throw new IllegalArgumentException(
+        s"not a checkpointed frame: ${p.nodeName}")
+    }
+
   /**
    * Cap a localCheckpoint'd Dataset's FROZEN origin statistics at
    * Long.MaxValue bytes/rows.

@@ -1,9 +1,10 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
 
-class ParSpec extends AnyFunSuite {
+class ParSpec extends SparkSpec {
+  import spark.implicits._
 
   test("two never returns while b still runs, even when a throws") {
     val bDone = new AtomicBoolean(false)
@@ -20,5 +21,22 @@ class ParSpec extends AnyFunSuite {
       Par.two(Thread.sleep(50), throw new IllegalArgumentException("b failed"))
     }
     assert(e.getMessage == "b failed")
+  }
+
+  test("concurrent rotation loops each pin exactly one checkpoint") {
+    val before = Pinned.checkpoints(spark)
+    def loop(seed: Int): (Rotation, Long) = {
+      val rot = new Rotation
+      var df = rot((1 to 50).map(i => (i, seed)).toDF("k", "v"))
+      for (r <- 1 to 8)
+        df = rot(df.groupBy("k").agg((max("v") + r).as("v")))
+      (rot, df.agg(sum("v")).head().getLong(0))
+    }
+    val ((ra, sa), (rb, sb)) = Par.two(loop(1), loop(2))
+    assert(sa == 50L * (1 + 36) && sb == 50L * (2 + 36))
+    assert((Pinned.checkpoints(spark) -- before).size == 2,
+      "each slot must pin exactly its last checkpoint")
+    ra.release(); rb.release()
+    assert((Pinned.checkpoints(spark) -- before).isEmpty)
   }
 }

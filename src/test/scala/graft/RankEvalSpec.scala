@@ -85,4 +85,16 @@ class RankEvalSpec extends SparkSpec {
       (4, 2L, 1.0)))
     CacheScope.drain(spark)
   }
+
+  test("kCenterSeeds releases every superseded seed checkpoint") {
+    val emb = (1 to 12).map(i => (i.toLong, Array(i * 1.0, (i % 3) * 2.0)))
+      .toDF("vec_id", "embedding")
+    val before = Pinned.checkpoints(spark)
+    val got = Similarity.kCenterSeeds(emb, "vec_id", "embedding", k = 6)
+      .collect()
+    assert(got.length == 6)
+    val pinned = Pinned.checkpoints(spark) -- before
+    assert(pinned.size <= 1, s"${pinned.size} seed checkpoints pinned")
+    CacheScope.drain(spark)
+  }
 }
