@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, GraftExpressionBridge, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -27,17 +27,23 @@ object CacheScope {
   private val frames =
     new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
 
-  /** Persist (MEMORY_AND_DISK) and register for the next drain. */
+  /** Persist (MEMORY_AND_DISK) and register for the next drain. The
+    * cached physical plan is built here, so inside an armed
+    * `StaticPlan.withMeasured` window it is built armed; the frame
+    * returned is bound to `ds`'s session either way. */
   def persist[T](ds: Dataset[T],
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
-    val p = ds.persist(level)
+    val p = GraftExpressionBridge.rebind(ds.sparkSession,
+      StaticPlan.armed(ds).persist(level))
     frames.add(p)
     p
   }
 
-  /** Eagerly release one superseded frame (iterative loops). */
+  /** Eagerly release one superseded frame (iterative loops); cached
+    * plans that read it are re-planned armed inside a window, as they
+    * were built. */
   def unpersist(ds: Dataset[_]): Unit = {
-    ds.unpersist(blocking = false)
+    StaticPlan.armed(ds).unpersist(blocking = false)
     frames.remove(ds)
   }
 
@@ -58,6 +64,6 @@ object CacheScope {
     drainRegistered()
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.valuesIterator
-      .foreach(_.unpersist(blocking = false))
+      .foreach(GraftExpressionBridge.dropBlocks)
   }
 }

@@ -18,7 +18,8 @@ package graft
  * scaffolding is thread-safe (CacheScope's registry is a concurrent
  * queue; a [[Rotation]] releases exactly its own checkpoint RDD, taken
  * from the checkpoint's plan leaf, whatever other threads checkpoint
- * meanwhile; StaticPlan serializes armed conf windows on a lock).
+ * meanwhile; a StaticPlan window arms only its own thread and never
+ * writes a session conf, so two armed branches overlap).
  */
 object Par {
   import scala.concurrent.{Await, ExecutionContext, Future}

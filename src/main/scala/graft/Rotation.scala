@@ -39,29 +39,37 @@ import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge,
 final class Rotation {
   private var held: Option[RDD[_]] = None
 
-  /** Checkpoint `df` eagerly, cap its frozen stats, release this
-    * slot's previous blocks; the checkpointed frame. */
-  def apply(df: DataFrame): DataFrame = {
-    val next = GraftExpressionBridge.capCheckpointStats(df.localCheckpoint(true))
+  /** Checkpoint `df` eagerly (armed inside a [[StaticPlan.withMeasured]]
+    * window), cap its frozen stats, release this slot's previous
+    * blocks; the checkpointed frame, bound to `df`'s session. */
+  def apply(df: DataFrame): DataFrame = keep(df, StaticPlan.armed(df))
+
+  /** [[apply]] to `out(df)`, plus the row of `metrics` over `df`: the
+    * metrics ride the checkpoint's own job (no extra job) and are
+    * awaited without a cap. `out` drops what only the metrics read.
+    * The observation attaches to the frame the checkpoint runs on. */
+  def observe(df: DataFrame, metrics: Seq[Column],
+      out: DataFrame => DataFrame = identity): (DataFrame, Row) = {
+    val obs = Observation()
+    val next = keep(df,
+      out(StaticPlan.armed(df).observe(obs, metrics.head, metrics.tail: _*)))
+    (next, scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration.Inf))
+  }
+
+  /** Checkpoint `run` (the caller's `df`, possibly rebound) and bind
+    * the result back to `df`'s session. */
+  private def keep(df: DataFrame, run: DataFrame): DataFrame = {
+    val next = GraftExpressionBridge.capCheckpointStats(GraftExpressionBridge
+      .rebind(df.sparkSession, run.localCheckpoint(true)))
     release()
     held = Some(GraftExpressionBridge.checkpointRdd(next))
     next
   }
 
-  /** [[apply]] to `out(df)`, plus the row of `metrics` over `df`: the
-    * metrics ride the checkpoint's own job (no extra job) and are
-    * awaited without a cap. `out` drops what only the metrics read. */
-  def observe(df: DataFrame, metrics: Seq[Column],
-      out: DataFrame => DataFrame = identity): (DataFrame, Row) = {
-    val obs = Observation()
-    val next = apply(out(df.observe(obs, metrics.head, metrics.tail: _*)))
-    (next, scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration.Inf))
-  }
-
   /** Free this slot's blocks; its last frame is unreadable after. */
   def release(): Unit = {
-    held.foreach(_.unpersist(blocking = false))
+    held.foreach(GraftExpressionBridge.dropBlocks)
     held = None
   }
 }

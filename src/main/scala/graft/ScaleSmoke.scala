@@ -38,7 +38,8 @@ object ScaleSmoke {
     CacheScope.drainRegistered()
     if (!label.contains("materialize")) // fixture rows pin THEIR blocks
       (sc.getPersistentRDDs.keySet -- before).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+        sc.getPersistentRDDs.get(id).foreach(
+          org.apache.spark.sql.GraftExpressionBridge.dropBlocks))
   }
 
   def main(args: Array[String]): Unit = {

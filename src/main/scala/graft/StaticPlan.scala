@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftExpressionBridge,
+  SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
 /**
@@ -12,28 +13,50 @@ import org.apache.spark.sql.functions.broadcast
  * session's own settings (AQE skew joins, runtime coalescing,
  * whole-stage codegen) keep working. Results are identical either
  * way: AQE, partition counts, hints and codegen never change
- * semantics. The law has two uses.
+ * semantics.
  *
- * 1. The loop conf window, [[withMeasured]]. A bounded-round operator
+ * One mechanism carries the law: a frame is rebound (its analyzed
+ * plan, `GraftExpressionBridge.rebind`) into a cached CHILD session of
+ * the caller's whose confs carry the armed dials, and it plans and
+ * runs there. Children are cloned once per (root session, override
+ * map) and re-cloned when the root's confs change. The caller's
+ * session is never written to, so a concurrent query on it plans
+ * under its own confs, and concurrent armed regions overlap. The law
+ * has two uses.
+ *
+ * 1. The loop window, [[withMeasured]]. A bounded-round operator
  *    measures its loop frames' ROW count; under [[SmallRows]] the
- *    loop body runs with (1) AQE off below [[AqeOffRows]] — every join
- *    side is statically broadcast-able, and each rotation's multi-
- *    exchange stage tree collapses into ONE job instead of one job
- *    per exchange; (2) shuffle partitions derived from the measured
- *    rows ([[RowsPerPartition]] each); (3) whole-stage codegen off at
- *    one partition's worth of rows, since round-varying literals make
+ *    window arms (1) AQE off below [[AqeOffRows]] — every join side is
+ *    statically broadcast-able, and each rotation's multi-exchange
+ *    stage tree collapses into ONE job instead of one job per
+ *    exchange; (2) shuffle partitions derived from the measured rows
+ *    ([[RowsPerPartition]] each); (3) whole-stage codegen off at one
+ *    partition's worth of rows, since round-varying literals make
  *    every rotation compile fresh classes; (4) a broadcast-hint
  *    function for the caller's vertex-sized join sides (rotated
  *    leaves carry capped "unknown" stats, so static planning would
- *    otherwise sort-merge everything). The window sets session confs,
- *    saved and restored on every exit path under a lock.
+ *    otherwise sort-merge everything). The dials become the calling
+ *    THREAD's armed scope for the body; a nested window merges its
+ *    dials over the outer ones (inner wins per key), and the previous
+ *    scope comes back on every exit path. Frames stay bound to the
+ *    caller's session inside the body: only the eager actions run
+ *    armed, through [[armed]] — `graft.Rotation` checkpoints,
+ *    `CacheScope.persist` (the cached physical plan is built at
+ *    persist time) and the loops' own scalar fetches. Each returns
+ *    caller-bound frames, so the operator's final action plans
+ *    unarmed. Work handed to another thread (a `Future`) carries no
+ *    scope: bind its frame with [[armed]] before spawning it.
+ *
+ *    An `Observation` must be attached AFTER the rebind: the metrics
+ *    are delivered to the session the action runs in, so one attached
+ *    to a caller-bound frame whose action runs in the child never
+ *    completes (and an uncapped await hangs).
  *
  * 2. The serve binding, [[bindSmall]]. A per-request operator (point
  *    reads, index lookups, scan pages, snapshot mutations) returns a
  *    frame whose leaf size estimate (file listings and local data: no
- *    job) is under [[SmallBytes]]; the frame is rebound into a child
- *    session of the caller's that runs interpreted. The caller's
- *    session is never touched.
+ *    job) is under [[SmallBytes]]; the frame is rebound into the
+ *    interpreted child and the caller gets the rebound frame.
  *
  * Why `spark.sql.codegen.factoryMode=NO_CODEGEN` and not only
  * `wholeStage=false`: Spark inlines long, double and string literals
@@ -63,8 +86,8 @@ object StaticPlan {
   val SmallRows = 500000L
 
   /** Diagnostic kill-switches (measurement instrumentation, guide §1):
-    * `SPARK_GRAFT_LAW_DISABLE=all|aqe|parts|codegen[,..]` turns
-    * individual dials of the armed law off so an A/B can attribute a
+    * `SPARK_GRAFT_LAW_DISABLE=all|aqe|parts|codegen|hints[,..]` drops
+    * individual dials from the armed law so an A/B can attribute a
     * regression to ONE dial. Unset in production and in the driver's
     * bench — default behavior is byte-identical to the law as shipped. */
   private val disabled: Set[String] = sys.env.get("SPARK_GRAFT_LAW_DISABLE")
@@ -74,21 +97,6 @@ object StaticPlan {
   private val AqeKey = "spark.sql.adaptive.enabled"
   private val ShufKey = "spark.sql.shuffle.partitions"
   private val CodegenKey = "spark.sql.codegen.wholeStage"
-
-  /** Armed wraps mutate SESSION-global SQL confs (r16 ADVICE): two
-    * concurrent armed operators on one session could interleave their
-    * save/restore and leak `adaptive.enabled=false` into the session
-    * permanently. The lock serializes armed regions — concurrent
-    * callers of wrapped operators block until the armed peer restores
-    * the confs, so the session state they save is always the true
-    * baseline. Reentrant, so nested wraps on one thread keep working
-    * (inner wrap saves the outer wrap's values, as before). NOTE the
-    * remaining documented contract: a concurrent UNWRAPPED query on
-    * the same session still plans under the armed confs — the law
-    * assumes the session runs one query at a time (the bench/Verify
-    * harness protocol); services wanting overlap should use separate
-    * SparkSessions. */
-  private val armedLock = new java.util.concurrent.locks.ReentrantLock()
 
   /** Rows per post-shuffle partition under the law. Static planning
     * loses AQE's runtime coalescing, so the engine derives the
@@ -109,19 +117,22 @@ object StaticPlan {
     * 500 k rows (6.4 MB), 44-62 % at 1.5 M. The rewrites bound it. */
   val SmallBytes = 2L << 20
 
-  private val FactoryModeKey = "spark.sql.codegen.factoryMode"
+  /** The serve binding's dials: interpreted execution. */
+  private val Interpreted = Map(CodegenKey -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
-  /** parent -> (parent confs at clone time, interpreted child), and
-    * child -> parent. Neither map keeps a session alive: the child is
-    * softly held, so a young GC does not discard it between requests,
-    * and once the caller drops its session both entries go with the
-    * child's soft reference. */
+  /** parent -> (parent confs at clone time, override map -> child),
+    * and child -> parent. Neither map keeps a session alive: children
+    * are softly held, so a young GC does not discard them between
+    * requests, and once the caller drops its session both entries go
+    * with the children's soft references. */
   private val children = new java.util.WeakHashMap[SparkSession,
-    (Map[String, String], java.lang.ref.SoftReference[SparkSession])]()
+    (Map[String, String],
+      Map[Map[String, String], java.lang.ref.SoftReference[SparkSession]])]()
   private val parents = new java.util.WeakHashMap[SparkSession,
     java.lang.ref.WeakReference[SparkSession]]()
 
-  /** The session `spark` was cloned from by [[bindSmall]], or `spark`
+  /** The session `spark` was cloned from by this law, or `spark`
     * itself. Catalog DDL must run there: each session keeps its own
     * relation cache, and a DROP issued from a child would leave the
     * caller's cached relation pointing at deleted files. */
@@ -129,18 +140,20 @@ object StaticPlan {
     Option(parents.get(spark)).flatMap(r => Option(r.get)).getOrElse(spark)
   }
 
-  /** The interpreted child of `parent`, re-cloned whenever the
-    * parent's confs changed since the clone (a `session.timeZone`
-    * change changes answers). */
-  private def childOf(parent: SparkSession): SparkSession = parents.synchronized {
+  /** The child of `parent` carrying `overrides`, re-cloned whenever
+    * the parent's confs changed since the clone (a `session.timeZone`
+    * change changes answers). The overrides are the only confs ever
+    * set, and only on a fresh clone. */
+  private def childOf(parent: SparkSession,
+      overrides: Map[String, String]): SparkSession = parents.synchronized {
     val confs = parent.conf.getAll
-    Option(children.get(parent)).collect {
-      case (seen, ref) if seen == confs => ref.get
-    }.flatMap(Option(_)).getOrElse {
+    val kids = Option(children.get(parent)).filter(_._1 == confs)
+      .map(_._2).getOrElse(Map.empty)
+    kids.get(overrides).flatMap(r => Option(r.get)).getOrElse {
       val child = GraftExpressionBridge.cloneSession(parent)
-      child.conf.set(CodegenKey, "false")
-      child.conf.set(FactoryModeKey, "NO_CODEGEN")
-      children.put(parent, (confs, new java.lang.ref.SoftReference(child)))
+      overrides.foreach { case (k, v) => child.conf.set(k, v) }
+      children.put(parent,
+        (confs, kids + (overrides -> new java.lang.ref.SoftReference(child))))
       parents.put(child, new java.lang.ref.WeakReference(parent))
       child
     }
@@ -154,7 +167,7 @@ object StaticPlan {
     val spark = df.sparkSession
     if (df.isStreaming || rootOf(spark) != spark ||
         GraftExpressionBridge.leafBytes(df) >= SmallBytes) df
-    else GraftExpressionBridge.rebind(childOf(spark), df)
+    else GraftExpressionBridge.rebind(childOf(spark, Interpreted), df)
   }
 
   /** Measured row bound under which AQE is disabled while armed —
@@ -185,10 +198,26 @@ object StaticPlan {
   val AqeOffRows: Long = sys.env.get("SPARK_GRAFT_LAW_AQE_ROWS")
     .map(_.toLong).getOrElse(2L * RowsPerPartition)
 
+  /** The calling thread's armed dials (empty: no window armed). */
+  private val scope = new ThreadLocal[Map[String, String]] {
+    override def initialValue(): Map[String, String] = Map.empty
+  }
+
+  /** `ds` rebound into the armed child of its root session when the
+    * calling thread runs an armed [[withMeasured]] window, else `ds`.
+    * Run a window's eager actions (and persists) on this frame. */
+  def armed[T](ds: Dataset[T]): Dataset[T] = {
+    val dials = scope.get
+    if (dials.isEmpty) ds
+    else GraftExpressionBridge.rebind(
+      childOf(rootOf(ds.sparkSession), dials), ds)
+  }
+
   /** Run `body` under the static-small law when `measuredRows` is
     * under the bound, else unchanged. The body receives the broadcast-
     * hint function to apply to its measured-small join sides (identity
-    * when the law is not armed). */
+    * when the law is not armed); its eager actions run armed through
+    * [[armed]]. */
   def withMeasured[T](spark: SparkSession, measuredRows: Long)
       (body: (DataFrame => DataFrame) => T): T = {
     if (sys.env.contains("SPARK_GRAFT_LAW_LOG")) {
@@ -200,24 +229,9 @@ object StaticPlan {
     }
     if (measuredRows > SmallRows || disabled("all")) body(identity)
     else {
-      armedLock.lock()
-      try withMeasuredLocked(spark, measuredRows)(body)
-      finally armedLock.unlock()
-    }
-  }
-
-  private def withMeasuredLocked[T](spark: SparkSession,
-      measuredRows: Long)(body: (DataFrame => DataFrame) => T): T = {
-    {
-      val aqePrev = spark.conf.getOption(AqeKey)
-      val shufPrev = spark.conf.get(ShufKey, "200")
-      val cgPrev = spark.conf.getOption(CodegenKey)
       val parts = math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
         (measuredRows + RowsPerPartition - 1) / RowsPerPartition))
-      if (measuredRows < AqeOffRows && !disabled("aqe"))
-        spark.conf.set(AqeKey, "false")
-      if (!disabled("parts")) spark.conf.set(ShufKey, parts.toString)
       // Whole-stage codegen compiles a fresh Janino class per DISTINCT
       // generated source; bounded-round loops embed round-varying
       // literals (round index, parity, level id), so every rotation
@@ -229,20 +243,15 @@ object StaticPlan {
       // (tens of thousands to 500 k rows of real expression work per
       // round) codegen's per-row speedup outweighs the compile, so it
       // stays on. At scale the law is unarmed and nothing changes.
-      if (measuredRows <= RowsPerPartition && !disabled("codegen"))
-        spark.conf.set(CodegenKey, "false")
+      val dials = Seq(
+        ("aqe", measuredRows < AqeOffRows, AqeKey -> "false"),
+        ("parts", true, ShufKey -> parts.toString),
+        ("codegen", measuredRows <= RowsPerPartition, CodegenKey -> "false"))
+        .collect { case (dial, on, kv) if on && !disabled(dial) => kv }
+      val outer = scope.get
+      scope.set(outer ++ dials)
       try body(if (disabled("hints")) identity else broadcast _)
-      finally {
-        aqePrev match {
-          case Some(v) => spark.conf.set(AqeKey, v)
-          case None => spark.conf.unset(AqeKey)
-        }
-        spark.conf.set(ShufKey, shufPrev)
-        cgPrev match {
-          case Some(v) => spark.conf.set(CodegenKey, v)
-          case None => spark.conf.unset(CodegenKey)
-        }
-      }
+      finally scope.set(outer)
     }
   }
 }

@@ -114,7 +114,7 @@ object GraphAnalytics {
         .transform(graft.CacheScope.persist(_))
       // Materialize the superstep, then release the superseded rank
       // frame — a 100-iteration run pins 1 vertex-sized frame, not 100.
-      next.count()
+      graft.StaticPlan.armed(next).count()
       prev.foreach(graft.CacheScope.unpersist)
       prev = Some(next)
       ranks = next
@@ -181,7 +181,7 @@ object GraphAnalytics {
         .select(col("v"),
           (lit(beta) + lit(alpha) * coalesce(col("ms"), lit(0.0))).as("r"))
         .transform(graft.CacheScope.persist(_))
-      next.count()
+      graft.StaticPlan.armed(next).count()
       prev.foreach(graft.CacheScope.unpersist)
       prev = Some(next)
       ranks = next
@@ -359,7 +359,8 @@ object GraphAnalytics {
           col("me.cv").as("cv"))
         .distinct() // both endpoints' components may pick the same edge
         .transform(graft.CacheScope.persist(_))
-      remaining = chosen.count() // the round's one observable job
+      // the round's one observable job
+      remaining = graft.StaticPlan.armed(chosen).count()
       if (remaining > 0L) {
         mst = mstRot(mst.union(chosen.select("u", "v", "w")))
         // merge the hooked components: min-label CC over the chosen
@@ -374,7 +375,7 @@ object GraphAnalytics {
     // successful round too — when the budget ran out mid-merge, probe
     // for surviving cross-component candidates before declaring done
     if (remaining != 0L) {
-      val leftover = e
+      val leftover = graft.StaticPlan.armed(e)
         .join(comp.select(col("x").as("u"), col("c").as("cu")), Seq("u"))
         .join(comp.select(col("x").as("v"), col("c").as("cv")), Seq("v"))
         .filter(col("cu") =!= col("cv")).limit(1).count()
@@ -430,7 +431,7 @@ object GraphAnalytics {
           (when(isSeed, lit(resetProb)).otherwise(lit(0.0)) +
             lit(1 - resetProb) * coalesce(col("ms"), lit(0.0))).as("r"))
         .transform(graft.CacheScope.persist(_))
-      next.count()
+      graft.StaticPlan.armed(next).count()
       prev.foreach(graft.CacheScope.unpersist)
       prev = Some(next)
       ranks = next
@@ -884,7 +885,7 @@ object GraphAnalytics {
           (lit(resetProb) + lit(1 - resetProb) *
             coalesce(col("ms"), lit(0.0))).as("r"))
         .transform(graft.CacheScope.persist(_))
-      next.count()
+      graft.StaticPlan.armed(next).count()
       prev.foreach(graft.CacheScope.unpersist)
       prev = Some(next)
       ranks = next
@@ -1029,7 +1030,7 @@ object GraphAnalytics {
         }
         // (c) backward mark from the color roots, inside each class
         var mark = markR(color.filter(col("v") === col("c")))
-        var nMark = mark.count()
+        var nMark = graft.StaticPlan.armed(mark).count()
         var growing = true
         var growRounds = 0L
         while (growing) {
@@ -1238,7 +1239,7 @@ object GraphAnalytics {
         .select(col("s"), col("d"),
           coalesce(col("common"), lit(0L)).as("common"))
         .transform(graft.CacheScope.persist(_)) // below-count + survivors
-      below = sup.filter(col("common") < k - 2).count()
+      below = graft.StaticPlan.armed(sup).filter(col("common") < k - 2).count()
       if (below != 0L) {
         peels += 1
         if (peels > rounds) throw new IllegalStateException(
@@ -1516,7 +1517,7 @@ object GraphAnalytics {
     while (below != 0L) {
       val degs = degrees(edges)
         .transform(graft.CacheScope.persist(_)) // below-count + keep set
-      below = degs.filter(col("deg") < k).count()
+      below = graft.StaticPlan.armed(degs).filter(col("deg") < k).count()
       if (below != 0L) {
         peels += 1
         if (peels > rounds) throw new IllegalStateException(
@@ -2860,7 +2861,9 @@ object GraphAnalytics {
       val rot = new graft.Rotation
       val next = rot(prop)
       harvest() // waits for nf(regs_{t-1}), then releases its blocks
-      pendingNf = Some((t.toLong, Future(nf(next)), rot))
+      // bound here: the Future's pool thread carries no armed scope
+      val armedNext = graft.StaticPlan.armed(next)
+      pendingNf = Some((t.toLong, Future(nf(armedNext)), rot))
       regs = next
     }
     harvest()
@@ -3419,7 +3422,7 @@ object GraphAnalytics {
         .agg(sum(col("k")).as("vol"))
       val intraW = gAnno.filter(col("cu") === col("cv"))
         .groupBy(col("cu").as("c")).agg(sum(col("w")).as("wc"))
-      val qNum = vol.join(intraW, Seq("c"), "left")
+      val qNum = graft.StaticPlan.armed(vol.join(intraW, Seq("c"), "left"))
         .na.fill(0L, Seq("wc"))
         .agg(sum(lit(2L) * lit(m2v) * col("wc") -
           col("vol") * col("vol")).as("q_num"))
@@ -3763,10 +3766,10 @@ object GraphAnalytics {
       // contracted levels carry intra weight on u == v rows — and
       // reuses phase 2's volP aggregation instead of recomputing it)
       val volPQ = volP.withColumnRenamed("volp", "vol")
-      val qNum = volPQ
+      val qNum = graft.StaticPlan.armed(volPQ
         .join(bc(gAnno.filter(col("cu") === col("cv"))
           .groupBy(col("cu").as("c")).agg(sum(col("w")).as("wc"))),
-          Seq("c"), "left")
+          Seq("c"), "left"))
         .na.fill(0L, Seq("wc"))
         .agg(sum(lit(2L) * lit(m2v) * col("wc") -
           col("vol") * col("vol")).as("q_num"))
@@ -3926,12 +3929,17 @@ object GraphAnalytics {
       // so the observed frame's (v, r) rows ARE the superstep result;
       // r16-opt: this replaces a second per-iteration job that re-ran
       // the vertex join for two scalars.
+      // The observation attaches after the rebind into the armed child,
+      // where the job runs (the [[graft.StaticPlan]] observation rule);
+      // `next`, the next round's `ranks`, stays bound there: only the
+      // loop's scalars leave the window.
       val obs = org.apache.spark.sql.Observation()
-      val next = vs.join(bc(msgs), col("v") === col("mv"), "left")
-        .select(col("v"),
-          (lit(resetProb) + lit(1 - resetProb) *
-            coalesce(col("ms"), lit(0.0))).as("r"))
-        .join(bc(ranks.select(col("v"), col("r").as("r0"))), Seq("v"))
+      val next = graft.StaticPlan.armed(
+          vs.join(bc(msgs), col("v") === col("mv"), "left")
+            .select(col("v"),
+              (lit(resetProb) + lit(1 - resetProb) *
+                coalesce(col("ms"), lit(0.0))).as("r"))
+            .join(bc(ranks.select(col("v"), col("r").as("r0"))), Seq("v")))
         .observe(obs,
           sum(dyadic(abs(col("r") - col("r0")))).as("l1"),
           max(dyadic(abs(col("r") - col("r0")))).as("mx"))
@@ -4170,9 +4178,11 @@ object GraphAnalytics {
       .distinct())
     // two scalar jobs per round (edge count + distinct-vertex count) —
     // never a collected edge list
-    def stats(f: DataFrame): (Long, Long) = (f.count(),
-      f.select(explode(array(col("s"), col("d"))).as("v"))
+    def stats(f: DataFrame): (Long, Long) = {
+      val armed = graft.StaticPlan.armed(f)
+      (armed.count(), armed.select(explode(array(col("s"), col("d"))).as("v"))
         .distinct().count())
+    }
     val out = collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     val (ne0, nv0) = stats(e)
     out += ((0L, nv0, ne0))
@@ -4184,7 +4194,7 @@ object GraphAnalytics {
       val deg = e.select(explode(array(col("s"), col("d"))).as("v"))
         .groupBy("v").agg(count(lit(1)).as("deg"))
         .transform(graft.CacheScope.persist(_))
-      val tot = deg.agg(sum(col("deg")).as("m2"),
+      val tot = graft.StaticPlan.armed(deg).agg(sum(col("deg")).as("m2"),
         count(lit(1)).as("nv")).head() // one aggregated scalar row
       val (m2, nv) = (tot.getLong(0), tot.getLong(1))
       // keep v iff deg·nv·1000 > m2·(1000+eps)
@@ -4255,7 +4265,7 @@ object GraphAnalytics {
     // next level's rotation releases the checkpoint blocks they derive
     // from — a lazy reference would fault on the released block
     var survivors = verts(e).transform(graft.CacheScope.persist(_))
-    survivors.count()
+    graft.StaticPlan.armed(survivors).count()
     val dropped = collection.mutable.ArrayBuffer.empty[DataFrame]
     for (k <- 1 to maxK) {
       // convergence-guarded peel per level (the r11 label-family law;
@@ -4264,7 +4274,7 @@ object GraphAnalytics {
       var below = -1L
       while (below != 0L) {
         val dg = degs(e).transform(graft.CacheScope.persist(_))
-        below = dg.filter(col("deg") < k).count()
+        below = graft.StaticPlan.armed(dg).filter(col("deg") < k).count()
         if (below != 0L) {
           // (released at the bottom of this round)
           peels += 1
@@ -4281,11 +4291,11 @@ object GraphAnalytics {
         graft.CacheScope.unpersist(dg)
       }
       val surv = verts(e).transform(graft.CacheScope.persist(_))
-      surv.count()
+      graft.StaticPlan.armed(surv).count()
       val drop = survivors.join(surv, Seq("v"), "left_anti")
         .select(col("v").as("_vid"), lit(k - 1L).as("coreness"))
         .transform(graft.CacheScope.persist(_))
-      drop.count()
+      graft.StaticPlan.armed(drop).count()
       dropped += drop
       survivors = surv
     }

@@ -290,7 +290,7 @@ object Similarity {
         .select(col("sub"), col("cell"),
           coalesce(col("mvec"), col("cvec")).as("cvec"))
         .transform(graft.CacheScope.persist(_))
-      next.count()
+      graft.StaticPlan.armed(next).count()
       graft.CacheScope.unpersist(assigned)
       graft.CacheScope.unpersist(centroids)
       centroids = next

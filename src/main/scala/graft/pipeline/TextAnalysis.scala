@@ -142,7 +142,7 @@ object TextAnalysis {
             "i -> concat(element_at(l, i), ' ', element_at(l, i + 1)))"))
           .as("pair"))
         .groupBy("pair").agg(sum(col("f")).as("cnt"))
-      val best = pairs
+      val best = graft.StaticPlan.armed(pairs)
         .agg(min(struct((-col("cnt")).as("nc"), col("pair").as("p")))
           .as("b"))
         .select(col("b.p").as("pair"), (-col("b.nc")).as("cnt"))
@@ -362,7 +362,7 @@ object TextAnalysis {
       // DuckDB oracle's BIGINT product errors loudly on overflow —
       // the engines must agree, not diverge); the integral divide is
       // floor for positives on both engines
-      val best = pairs
+      val best = graft.StaticPlan.armed(pairs)
         .select(col("pair"), col("cnt"),
           split(col("pair"), " ").getItem(0).as("sa"),
           split(col("pair"), " ").getItem(1).as("sb"))

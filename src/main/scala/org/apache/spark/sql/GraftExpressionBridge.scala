@@ -20,12 +20,19 @@ object GraftExpressionBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
-  /** `df`'s analyzed plan as a frame of `session`: the frame plans and
+  /** `ds`'s analyzed plan as a Dataset of `session`: it plans and
     * runs under `session`'s confs. Already-analyzed plans are not
-    * analyzed again. */
-  def rebind(session: SparkSession, df: DataFrame): DataFrame =
-    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
-      df.queryExecution.analyzed)
+    * analyzed again; a Dataset of `session` is returned as it is. */
+  def rebind[T](session: SparkSession, ds: Dataset[T]): Dataset[T] =
+    if (ds.sparkSession eq session) ds
+    else new classic.Dataset[T](session.asInstanceOf[classic.SparkSession],
+      ds.queryExecution.analyzed, ds.encoder)
+
+  /** Drop `rdd`'s cached blocks: what `RDD.unpersist` does after it
+    * warns that a locally checkpointed RDD cannot be recomputed. The
+    * callers release checkpoints on purpose, so the warning is noise. */
+  def dropBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** Summed size estimate of the leaves of `df`'s analyzed plan, from
     * file listings and local data only: no Spark job runs. A leaf

@@ -78,6 +78,42 @@ class RotationSpec extends SparkSpec {
     rot.release()
   }
 
+  test("released checkpoints log no lineage WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    // RDD subclasses log under their own class names, so listen on the
+    // package; the session's ERROR root level would hide a WARN. The
+    // session starts first: starting one resets the logging config.
+    spark.sparkContext
+    val name = "org.apache.spark.rdd"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("rotation-warns", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = new LoggerConfig(name, Level.WARN, false)
+    logger.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.addLogger(name, logger)
+    ctx.updateLoggers()
+    try {
+      val rot = new Rotation
+      var df = rot(frame)
+      for (r <- 1 to 5) df = rot(df.select(col("k"), (col("v") + r).as("v")))
+      rot.release()
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(warns.isEmpty,
+      s"released checkpoints warned: ${warns.asScala.mkString("; ")}")
+  }
+
   test("checkpoints and block ids stay behind Rotation") {
     val root = new java.io.File("src/main/scala/graft")
     val dirs = Seq("analytics", "pipeline").map(new java.io.File(root, _))
