@@ -50,11 +50,8 @@ final class Rotation {
     * The observation attaches to the frame the checkpoint runs on. */
   def observe(df: DataFrame, metrics: Seq[Column],
       out: DataFrame => DataFrame = identity): (DataFrame, Row) = {
-    val obs = Observation()
-    val next = keep(df,
-      out(StaticPlan.armed(df).observe(obs, metrics.head, metrics.tail: _*)))
-    (next, scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration.Inf))
+    val (run, row) = Rotation.observed(df, metrics)
+    (keep(df, out(run)), row())
   }
 
   /** Checkpoint `run` (the caller's `df`, possibly rebound) and bind
@@ -71,5 +68,17 @@ final class Rotation {
   def release(): Unit = {
     held.foreach(GraftExpressionBridge.dropBlocks)
     held = None
+  }
+}
+
+object Rotation {
+  /** `df` rebound armed ([[StaticPlan.armed]]) with `metrics` attached
+    * after the rebind, so they complete in the session the action runs
+    * in; and their row, awaited without a cap once an action ran. */
+  def observed(df: DataFrame, metrics: Seq[Column]): (DataFrame, () => Row) = {
+    val obs = Observation()
+    (StaticPlan.armed(df).observe(obs, metrics.head, metrics.tail: _*),
+      () => scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration.Inf))
   }
 }

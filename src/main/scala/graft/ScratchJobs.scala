@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.sql.{GraftExpressionBridge, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
 
 /**
  * Job-floor probe (not part of the driver contract): runs one
@@ -11,6 +13,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
  * q_leiden_full's 25 s wall was 663 AQE exchange-materialization jobs
  * whose duration sum ≈ wall (job COUNT, not repeated work), which a
  * per-query timer cannot distinguish from slow operators.
+ *
+ * AQE exchange jobs (the final stage is a shuffle map stage) are
+ * counted apart from call-site jobs: their number varies from run to
+ * run, so only call-site counts compare exactly between builds.
  *
  * Usage: SPARK_GRAFT_PROBE=q_leiden_full sbt "runMain graft.ScratchJobs"
  */
@@ -29,43 +35,41 @@ object ScratchJobs {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    @volatile var jobs = 0
-    val t = collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    val starts = collection.mutable.Map.empty[Int, Long]
     // r17: attribute each job to its submission call site so the
-    // per-operator job budget is readable (guide §1.5)
-    val sites = collection.mutable.Map.empty[Int, String]
+    // per-operator job budget is readable (guide §1.5). Job id ->
+    // (start, site), written on the listener thread, read on this one.
+    val started = new ConcurrentHashMap[Int, (Long, String)]
+    val t = new ConcurrentLinkedQueue[(Int, Double)]
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        starts(j.jobId) = System.nanoTime(); jobs += 1
-        sites(j.jobId) =
-          if (j.stageInfos.nonEmpty) j.stageInfos.maxBy(_.stageId).name
-          else "?"
-      }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val s = starts.getOrElse(j.jobId, System.nanoTime())
-        t += ((j.jobId, s, System.nanoTime()))
-      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.put(j.jobId, (System.nanoTime(), j.stageInfos
+          .maxByOption(_.stageId).fold("?") { s =>
+            (if (GraftExpressionBridge.isMapStage(s)) "[aqe] " else "") + s.name }))
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        t.add((j.jobId, Option(started.get(j.jobId))
+          .fold(0.0)(s => (System.nanoTime() - s._1) / 1e9)))
     })
+    def site(id: Int): String = Option(started.get(id)).fold("?")(_._2)
     for (q <- qname.split(",").map(_.trim).filter(_.nonEmpty)) {
       def run(): Long = SparkEntry.queries(q)(spark, sfDir).count()
       CacheScope.drain(spark)
       run() // warm
       CacheScope.drain(spark)
-      Thread.sleep(500)
-      jobs = 0; t.clear()
+      GraftExpressionBridge.drainListeners(spark.sparkContext)
+      started.clear(); t.clear()
       val t0 = System.nanoTime()
       val n = run()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      val durs = t.map { case (id, s, e) => (id, (e - s) / 1e9) }
-        .sortBy(-_._2)
-      println(f"SCRATCH $q jobs=$jobs wall=$wall%.1f rows=$n " +
+      GraftExpressionBridge.drainListeners(spark.sparkContext)
+      val durs = t.asScala.toSeq.sortBy(-_._2)
+      val nAqe = durs.count { case (id, _) => site(id).startsWith("[aqe]") }
+      println(f"SCRATCH $q jobs=${durs.size} site_jobs=${durs.size - nAqe} " +
+        f"aqe_jobs=$nAqe wall=$wall%.1f rows=$n " +
         f"jobsum=${durs.map(_._2).sum}%.1f")
       println("SCRATCH top15: " + durs.take(15).map { case (id, d) =>
         f"j$id=$d%.2f" }.mkString(" "))
       // per-call-site rollup: job count + summed seconds, heaviest first
-      val bySite = durs.groupBy { case (id, _) => sites.getOrElse(id, "?") }
+      val bySite = durs.groupBy { case (id, _) => site(id) }
         .map { case (s, ds) => (s, ds.size, ds.map(_._2).sum) }
         .toSeq.sortBy(-_._3)
       bySite.take(12).foreach { case (s, n, d) =>

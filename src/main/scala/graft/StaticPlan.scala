@@ -217,18 +217,12 @@ object StaticPlan {
     * under the bound, else unchanged. The body receives the broadcast-
     * hint function to apply to its measured-small join sides (identity
     * when the law is not armed); its eager actions run armed through
-    * [[armed]]. */
+    * [[armed]]. With `SPARK_GRAFT_LAW_LOG` set, each window prints the
+    * dials it actually set (after the kill-switches) to stderr. */
   def withMeasured[T](spark: SparkSession, measuredRows: Long)
       (body: (DataFrame => DataFrame) => T): T = {
-    if (sys.env.contains("SPARK_GRAFT_LAW_LOG")) {
-      val caller = Thread.currentThread.getStackTrace
-        .drop(2).find(f => !f.getClassName.startsWith("graft.StaticPlan"))
-        .map(f => s"${f.getClassName.split('.').last}.${f.getMethodName}:${f.getLineNumber}")
-        .getOrElse("?")
-      System.err.println(s"[law] rows=$measuredRows armed=${measuredRows <= SmallRows} at $caller")
-    }
-    if (measuredRows > SmallRows || disabled("all")) body(identity)
-    else {
+    val small = measuredRows <= SmallRows && !disabled("all")
+    val dials = if (!small) Seq.empty else {
       val parts = math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
         (measuredRows + RowsPerPartition - 1) / RowsPerPartition))
@@ -243,15 +237,24 @@ object StaticPlan {
       // (tens of thousands to 500 k rows of real expression work per
       // round) codegen's per-row speedup outweighs the compile, so it
       // stays on. At scale the law is unarmed and nothing changes.
-      val dials = Seq(
+      Seq(
         ("aqe", measuredRows < AqeOffRows, AqeKey -> "false"),
         ("parts", true, ShufKey -> parts.toString),
         ("codegen", measuredRows <= RowsPerPartition, CodegenKey -> "false"))
-        .collect { case (dial, on, kv) if on && !disabled(dial) => kv }
-      val outer = scope.get
-      scope.set(outer ++ dials)
-      try body(if (disabled("hints")) identity else broadcast _)
-      finally scope.set(outer)
+        .collect { case (dial, on, kv) if on && !disabled(dial) => (dial, kv) }
     }
+    val hints = small && !disabled("hints")
+    if (sys.env.contains("SPARK_GRAFT_LAW_LOG")) {
+      val caller = Thread.currentThread.getStackTrace
+        .drop(2).filter(f => !f.getClassName.startsWith("graft.StaticPlan")).take(2)
+        .map(f => s"${f.getClassName.split('.').last}.${f.getMethodName}:${f.getLineNumber}")
+        .mkString(" < ")
+      val set = dials.map { case (d, (_, v)) => s"$d=$v" } ++ Option.when(hints)("hints")
+      System.err.println(s"[law] rows=$measuredRows armed=${set.nonEmpty} dials=${set.mkString(",")} at $caller")
+    }
+    val outer = scope.get
+    scope.set(outer ++ dials.map(_._2))
+    try body(if (hints) broadcast _ else identity)
+    finally scope.set(outer)
   }
 }

@@ -2,7 +2,7 @@ package graft.analytics
 
 import graft.model.GraphStore
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -64,21 +64,86 @@ object GraphAnalytics {
       .select((col("out_deg") + col("in_deg")).as("deg"))
       .groupBy("deg").agg(count(lit(1)).as("n_vertices"))
 
-  /** Static PageRank, DataFrame formulation of GraphX's staticPageRank
-    * recurrence: r0 = 1.0; r_i = reset + (1-reset) * Σ_in r_{i-1}/outdeg;
-    * final ranks normalized to sum to |V|. Unrolled fixed iterations keep
-    * the whole computation one Catalyst plan: the edge and vertex scans
-    * are identical across iterations, so their shuffle exchanges are
-    * planned once and reused (ReusedExchange), and each iteration is a
-    * partial-aggregated sum shuffle of vertex-sized data — no GraphX
-    * RDD materialization, no Pregel overhead. AQE converts the
-    * rank-side joins to broadcast when the vertex set fits. */
-  def pageRank(store: GraphStore, edgeTypes: Seq[String], iters: Int,
-      resetProb: Double = 0.15): DataFrame = {
-    val edges = edgeTypes.map { et =>
+  /** The (s, d) arcs of `edgeTypes`, one union. */
+  private def arcs(store: GraphStore, edgeTypes: Seq[String]): DataFrame =
+    edgeTypes.map { et =>
       store.edge(et).select(col(GraphStore.SRC).as("s"),
         col(GraphStore.DST).as("d"))
     }.reduce(_ unionByName _)
+
+  /** The vertex set (v) of an (s, d) arc frame, persisted. */
+  private def vertexSet(edges: DataFrame): DataFrame =
+    edges.select(col("s").as("v"))
+      .union(edges.select(col("d")))
+      .distinct()
+      .transform(graft.CacheScope.persist(_))
+
+  /** One superstep's messages (mv, ms): each arc (s, d) of `edges`
+    * sends `msg` over its sender's rank row (v, r) of `ranks`, hinted
+    * through `bc`; each receiver sums its dyadic-floored messages. */
+  private def messages(edges: DataFrame, ranks: DataFrame,
+      bc: DataFrame => DataFrame, msg: Column): DataFrame =
+    edges.join(bc(ranks), col("s") === col("v"))
+      .groupBy(col("d").as("mv"))
+      .agg(sum(graft.functions.Portable.dyadic(msg)).as("ms"))
+
+  /**
+   * The PageRank family's power-iteration kernel (GraphX's Pregel
+   * shape, parameterised by message and update): from r = `init` on
+   * every vertex of `verts`, `iters` supersteps r(v) <- update(Σ_in
+   * [[messages]] of `msg`; 0.0 without in-arcs), in one
+   * [[graft.StaticPlan.withMeasured]] window gated on `edges`' rows.
+   * The last ranks (v, r) come back persisted, caller-bound.
+   *
+   * Dyadic law: each message is floored to the 2^-30 grid BEFORE the
+   * sum, so the aggregate is exact (order-independent) and every
+   * superstep is bit-reproducible across partitionings and engines:
+   * the oracle replays the identical recurrence (Portable.dyadic).
+   *
+   * Each round is persisted, counted armed, and the superseded frame
+   * released ([[advance]]): a round reads the previous ranks from the
+   * cache, not their history, and a 100-iteration run pins one rank
+   * frame beside `edges` and `verts`, not 100. Persist, not a
+   * [[graft.Rotation]] checkpoint: a round reads the previous ranks
+   * once, so an unpersist's recompile never expands a plan (the
+   * [[hits]] lesson does not apply), and a final plan may scan the
+   * cached ranks twice ([[normalized]]).
+   */
+  private def powerIterate(edges: DataFrame, verts: DataFrame,
+      init: Column, iters: Int, msg: Column)
+      (update: Column => Column): DataFrame = {
+    // Measured gate for the static-planning law ([[graft.StaticPlan]])
+    val nEdges = edges.count()
+    graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
+      (1 to iters).foldLeft(verts.select(col("v"), init.as("r"))) {
+        (ranks, i) => advance(Option.when(i > 1)(ranks),
+          verts.join(bc(messages(edges, ranks, bc, msg)),
+              col("v") === col("mv"), "left")
+            .select(col("v"), update(coalesce(col("ms"), lit(0.0))).as("r")))
+      }
+    }
+  }
+
+  /** `next` persisted and counted armed, then `prev` released: one
+    * [[powerIterate]] round; the persisted `next`. */
+  private def advance(prev: Option[DataFrame], next: DataFrame): DataFrame = {
+    val ranks = graft.CacheScope.persist(next)
+    graft.StaticPlan.armed(ranks).count()
+    prev.foreach(graft.CacheScope.unpersist)
+    ranks
+  }
+
+  /** Static PageRank, DataFrame formulation of GraphX's staticPageRank
+    * recurrence: r0 = 1.0; r_i = reset + (1-reset) * Σ_in r_{i-1}/outdeg;
+    * final ranks normalized to sum to |V|. The supersteps run on
+    * [[powerIterate]]: each is one edge⋈rank join plus one
+    * partial-aggregated sum shuffle of vertex-sized data over the
+    * persisted loop invariants, materialized per round, so the
+    * normalization plans over one cached rank frame, never the
+    * iteration chain. */
+  def pageRank(store: GraphStore, edgeTypes: Seq[String], iters: Int,
+      resetProb: Double = 0.15): DataFrame = {
+    val edges = arcs(store, edgeTypes)
     val outDeg = edges.groupBy("s").agg(count(lit(1)).as("deg"))
     // Loop invariants PERSIST (the GraphX pattern: edge state cached
     // across supersteps). Without it the 10x amplification smoke showed
@@ -87,43 +152,15 @@ object GraphAnalytics {
     // iteration's lineage instead of reading them once.
     val weighted = edges.join(outDeg, "s") // (s, d, deg)
       .transform(graft.CacheScope.persist(_))
-    val verts = edges.select(col("s").as("v"))
-      .union(edges.select(col("d")))
-      .distinct()
-      .transform(graft.CacheScope.persist(_))
-    var ranks = verts.select(col("v"), lit(1.0).as("r"))
-    var prev: Option[DataFrame] = None
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = weighted.count()
-    graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
-    for (_ <- 1 to iters) {
-      // dyadic-floor each message BEFORE the sum: the aggregation is
-      // then exact (order-independent), so the superstep is bit-
-      // reproducible across partitionings and engines — the oracle
-      // replays the identical recurrence (Portable.dyadic scaladoc)
-      val msgs = weighted.join(bc(ranks), col("s") === col("v"))
-        .groupBy(col("d").as("mv"))
-        .agg(sum(graft.functions.Portable.dyadic(
-          col("r") / col("deg"))).as("ms"))
-      val next = verts.join(bc(msgs), col("v") === col("mv"), "left")
-        .select(col("v"),
-          (lit(resetProb) + lit(1 - resetProb) *
-            coalesce(col("ms"), lit(0.0))).as("r"))
-        // vertex-sized; truncates the growing iteration lineage so each
-        // superstep reads the previous ranks, not the whole history
-        .transform(graft.CacheScope.persist(_))
-      // Materialize the superstep, then release the superseded rank
-      // frame — a 100-iteration run pins 1 vertex-sized frame, not 100.
-      graft.StaticPlan.armed(next).count()
-      prev.foreach(graft.CacheScope.unpersist)
-      prev = Some(next)
-      ranks = next
-    }
-    } // StaticPlan.withMeasured
+    normalized(powerIterate(weighted, vertexSet(edges), lit(1.0), iters,
+      col("r") / col("deg"))(c => lit(resetProb) + lit(1 - resetProb) * c))
+  }
+
+  /** Final ranks (v, r) rescaled to sum to |V|, as (_vid, rank). */
+  private def normalized(ranks: DataFrame): DataFrame = {
     // The final ranks (already persisted) feed BOTH the normalization
     // scalar and the output rows — without the persist the crossJoin
-    // would re-execute the whole iteration chain a second time
-    // (verified via explain: 331-node plan collapses to half).
+    // would re-execute the whole iteration chain a second time.
     // dyadic-floor the summands of the normalization total too — same
     // order-independence requirement as the superstep sums
     val rq = graft.functions.Portable.dyadic(col("r"))
@@ -145,13 +182,10 @@ object GraphAnalytics {
    * conservative alpha (default 0.05) and a fixed iteration budget,
    * the same contract as [[pageRank]].
    *
-   * Same determinism law as [[pageRank]]: messages floored to the
-   * dyadic 2^-30 grid BEFORE the sum, so each superstep's aggregate is
-   * exact (order-independent) and `beta + alpha * ms` is a fixed
-   * two-op IEEE chain on identical inputs — the oracle replays the
-   * recurrence bit-identically. Same scale shape: one edge-frame join
-   * + one groupBy-sum per superstep on the persisted loop invariants
-   * (edge frame, vertex frame), O(1) pinned rank frames.
+   * Runs on [[powerIterate]] (its dyadic law, one edge-frame join +
+   * one groupBy-sum per superstep, O(1) pinned rank frames); `beta +
+   * alpha * ms` is a fixed two-op IEEE chain on identical inputs, so
+   * the oracle replays the recurrence bit-identically.
    */
   def katzCentrality(rawEdges: DataFrame, iters: Int,
       alpha: Double = 0.05, beta: Double = 1.0): DataFrame = {
@@ -161,32 +195,10 @@ object GraphAnalytics {
     // distinct arc), matching the oracle's DISTINCT projection
     val edges = rawEdges.toDF("s", "d").distinct()
       .transform(graft.CacheScope.persist(_))
-    val verts = edges.select(col("s").as("v"))
-      .union(edges.select(col("d")))
-      .distinct()
-      .transform(graft.CacheScope.persist(_))
-    var ranks = verts.select(col("v"), lit(beta).as("r"))
-    var prev: Option[DataFrame] = None
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = edges.count()
-    graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
-    for (_ <- 1 to iters) {
-      // walk mass flows s -> d undiluted (no degree divide: Katz counts
-      // walks, PageRank spreads probability) — dyadic-floor each
-      // message so the sum is exact in any order on any engine
-      val msgs = edges.join(bc(ranks), col("s") === col("v"))
-        .groupBy(col("d").as("mv"))
-        .agg(sum(graft.functions.Portable.dyadic(col("r"))).as("ms"))
-      val next = verts.join(bc(msgs), col("v") === col("mv"), "left")
-        .select(col("v"),
-          (lit(beta) + lit(alpha) * coalesce(col("ms"), lit(0.0))).as("r"))
-        .transform(graft.CacheScope.persist(_))
-      graft.StaticPlan.armed(next).count()
-      prev.foreach(graft.CacheScope.unpersist)
-      prev = Some(next)
-      ranks = next
-    }
-    } // StaticPlan.withMeasured
+    // walk mass flows s -> d undiluted (no degree divide: Katz counts
+    // walks, PageRank spreads probability)
+    val ranks = powerIterate(edges, vertexSet(edges), lit(beta), iters,
+      col("r"))(c => lit(beta) + lit(alpha) * c)
     ranks.select(col("v").as("_vid"),
       graft.functions.Portable.quant(col("r"), 6).as("katz"))
   }
@@ -212,10 +224,7 @@ object GraphAnalytics {
     require(iters >= 1, "iters must be >= 1")
     val edges = rawEdges.toDF("s", "d").distinct()
       .transform(graft.CacheScope.persist(_))
-    val verts = edges.select(col("s").as("v"))
-      .union(edges.select(col("d")))
-      .distinct()
-      .transform(graft.CacheScope.persist(_))
+    val verts = vertexSet(edges)
     // checkpoint rotation, NOT plain persist: the in-plan L1 scalar
     // references the round's message frame a second time, so a
     // persist-rotated loop TRIPLES the logical plan per round and
@@ -226,9 +235,7 @@ object GraphAnalytics {
     val nEdges = edges.count()
     graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
     for (_ <- 1 to iters) {
-      val raw = edges.join(bc(x), col("s") === col("v"))
-        .groupBy(col("d").as("mv"))
-        .agg(sum(dyadic(col("r"))).as("ms"))
+      val raw = messages(edges, x, bc, col("r"))
         .transform(graft.CacheScope.persist(_))
       val tot = raw.agg(sum(col("ms")).as("mt")) // exact on-grid sum
       // zero-mass guard (degenerate-input law): on a DAG the message
@@ -403,40 +410,16 @@ object GraphAnalytics {
    */
   def personalizedPageRank(store: GraphStore, edgeTypes: Seq[String],
       seeds: Seq[Long], iters: Int, resetProb: Double = 0.15): DataFrame = {
-    val edges = edgeTypes.map { et =>
-      store.edge(et).select(col(GraphStore.SRC).as("s"),
-        col(GraphStore.DST).as("d"))
-    }.reduce(_ unionByName _)
+    val edges = arcs(store, edgeTypes)
     val outDeg = edges.groupBy("s").agg(count(lit(1)).as("deg"))
     val weighted = edges.join(outDeg, "s")
       .transform(graft.CacheScope.persist(_))
-    val verts = edges.select(col("s").as("v"))
-      .union(edges.select(col("d")))
-      .distinct()
-      .transform(graft.CacheScope.persist(_))
     val isSeed = col("v").isin(seeds: _*)
-    var ranks = verts.select(col("v"),
-      when(isSeed, lit(1.0)).otherwise(lit(0.0)).as("r"))
-    var prev: Option[DataFrame] = None
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = weighted.count()
-    graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
-    for (_ <- 1 to iters) {
-      val msgs = weighted.join(bc(ranks), col("s") === col("v"))
-        .groupBy(col("d").as("mv"))
-        .agg(sum(graft.functions.Portable.dyadic(
-          col("r") / col("deg"))).as("ms"))
-      val next = verts.join(bc(msgs), col("v") === col("mv"), "left")
-        .select(col("v"),
-          (when(isSeed, lit(resetProb)).otherwise(lit(0.0)) +
-            lit(1 - resetProb) * coalesce(col("ms"), lit(0.0))).as("r"))
-        .transform(graft.CacheScope.persist(_))
-      graft.StaticPlan.armed(next).count()
-      prev.foreach(graft.CacheScope.unpersist)
-      prev = Some(next)
-      ranks = next
-    }
-    } // StaticPlan.withMeasured
+    val ranks = powerIterate(weighted, vertexSet(edges),
+      when(isSeed, lit(1.0)).otherwise(lit(0.0)), iters,
+      col("r") / col("deg"))(c =>
+      when(isSeed, lit(resetProb)).otherwise(lit(0.0)) +
+        lit(1 - resetProb) * c)
     ranks.select(col("v").as("_vid"),
       graft.functions.Portable.quant(
         graft.functions.Portable.dyadic(col("r")), 6).as("rank"))
@@ -485,10 +468,7 @@ object GraphAnalytics {
   def hits(store: GraphStore, edgeTypes: Seq[String], iters: Int)
       : DataFrame = {
     import graft.functions.Portable.dyadic
-    val edges0 = edgeTypes.map { et =>
-      store.edge(et).select(col(GraphStore.SRC).as("s"),
-        col(GraphStore.DST).as("d"))
-    }.reduce(_ unionByName _)
+    val edges0 = arcs(store, edgeTypes)
     val edgesBySrc = edges0.repartition(col("s"))
       .transform(graft.CacheScope.persist(_))
     val edgesByDst = edges0.repartition(col("d"))
@@ -867,36 +847,9 @@ object GraphAnalytics {
     val wsum = e.groupBy(col("s")).agg(sum(col("w")).as("ws"))
     val weighted = e.join(wsum, Seq("s"))
       .transform(graft.CacheScope.persist(_))
-    val verts = e.select(col("s").as("v"))
-      .union(e.select(col("d")))
-      .distinct()
-      .transform(graft.CacheScope.persist(_))
-    var ranks = verts.select(col("v"), lit(1.0).as("r"))
-    var prev: Option[DataFrame] = None
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = weighted.count()
-    graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
-    for (_ <- 1 to iters) {
-      val msgs = weighted.join(bc(ranks), col("s") === col("v"))
-        .groupBy(col("d").as("mv"))
-        .agg(sum(dyadic(col("r") * col("w") / col("ws"))).as("ms"))
-      val next = verts.join(bc(msgs), col("v") === col("mv"), "left")
-        .select(col("v"),
-          (lit(resetProb) + lit(1 - resetProb) *
-            coalesce(col("ms"), lit(0.0))).as("r"))
-        .transform(graft.CacheScope.persist(_))
-      graft.StaticPlan.armed(next).count()
-      prev.foreach(graft.CacheScope.unpersist)
-      prev = Some(next)
-      ranks = next
-    }
-    } // StaticPlan.withMeasured
-    val rq = dyadic(col("r"))
-    val totals = ranks.agg(sum(rq).as("sr"), count(lit(1)).as("nv"))
-    ranks.crossJoin(broadcast(totals))
-      .select(col("v").as("_vid"),
-        graft.functions.Portable.quant(
-          rq / col("sr") * col("nv"), 6).as("rank"))
+    normalized(powerIterate(weighted, vertexSet(e), lit(1.0), iters,
+      col("r") * col("w") / col("ws"))(c =>
+      lit(resetProb) + lit(1 - resetProb) * c))
   }
 
   /** Connected components (undirected reachability); label = min vid in
@@ -2276,10 +2229,7 @@ object GraphAnalytics {
       : (DataFrame, Seq[(Long, Long, Long)]) = {
     require(colorRounds >= 1 && maxSweeps >= 1,
       "colorRounds and maxSweeps must be >= 1")
-    val dirEdges = edgeTypes.map { et =>
-      store.edge(et).select(col(GraphStore.SRC).as("s"),
-        col(GraphStore.DST).as("d"))
-    }.reduce(_ unionByName _)
+    val dirEdges = arcs(store, edgeTypes)
     // self-loops dropped — a self-voter is inert for LPA, but a
     // self-LOOP deadlocks priority coloring (a vertex can never beat
     // its own priority), and the coloring's vertex set must equal the
@@ -2375,10 +2325,7 @@ object GraphAnalytics {
       edgeTypes: Seq[String], maxIters: Int)
       : (DataFrame, Seq[(Long, Long)]) = {
     require(maxIters >= 1, "maxIters must be >= 1")
-    val dirEdges = edgeTypes.map { et =>
-      store.edge(et).select(col(GraphStore.SRC).as("s"),
-        col(GraphStore.DST).as("d"))
-    }.reduce(_ unionByName _)
+    val dirEdges = arcs(store, edgeTypes)
     // undirected adjacency, parallel edges collapsed (a neighbor votes
     // once per adjacency, the standard LPA formulation)
     val e = dirEdges.select(col("s"), col("d"))
@@ -3909,9 +3856,7 @@ object GraphAnalytics {
     val deg = e.groupBy(col("s")).agg(count(lit(1)).as("ws"))
     val weighted = e.join(deg, Seq("s"))
       .transform(graft.CacheScope.persist(_))
-    val vs = e.select(col("s").as("v")).union(e.select(col("d")))
-      .distinct()
-      .transform(graft.CacheScope.persist(_))
+    val vs = vertexSet(e)
     var ranks = vs.select(col("v"), lit(1.0).as("r"))
       .transform(graft.CacheScope.persist(_))
     val out = collection.mutable.ArrayBuffer.empty[(Long, Double, Double)]
@@ -3919,38 +3864,27 @@ object GraphAnalytics {
     val nEdges = weighted.count()
     graft.StaticPlan.withMeasured(spark, nEdges) { bc =>
     for (i <- 1 to iters) {
-      val msgs = weighted.join(bc(ranks), col("s") === col("v"))
-        .groupBy(col("d").as("mv"))
-        .agg(sum(dyadic(col("r") / col("ws"))).as("ms"))
+      val msgs = messages(weighted, ranks, bc, col("r") / col("ws"))
+      val delta = dyadic(abs(col("r") - col("r0")))
       // The residual scalars ride the superstep's own materialization
       // job as a CollectMetrics observation (the semiSyncLpa law) —
       // the inner join against the previous ranks keeps every vertex
       // (both frames carry the identical vertex set by construction),
       // so the observed frame's (v, r) rows ARE the superstep result;
       // r16-opt: this replaces a second per-iteration job that re-ran
-      // the vertex join for two scalars.
-      // The observation attaches after the rebind into the armed child,
-      // where the job runs (the [[graft.StaticPlan]] observation rule);
-      // `next`, the next round's `ranks`, stays bound there: only the
-      // loop's scalars leave the window.
-      val obs = org.apache.spark.sql.Observation()
-      val next = graft.StaticPlan.armed(
-          vs.join(bc(msgs), col("v") === col("mv"), "left")
-            .select(col("v"),
-              (lit(resetProb) + lit(1 - resetProb) *
-                coalesce(col("ms"), lit(0.0))).as("r"))
-            .join(bc(ranks.select(col("v"), col("r").as("r0"))), Seq("v")))
-        .observe(obs,
-          sum(dyadic(abs(col("r") - col("r0")))).as("l1"),
-          max(dyadic(abs(col("r") - col("r0")))).as("mx"))
-        .select(col("v"), col("r"))
-        .transform(graft.CacheScope.persist(_))
-      next.count()
-      val res = scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration.Inf)
+      // the vertex join for two scalars. Persisted, not checkpointed:
+      // a round's two joins on the cached ranks share one broadcast;
+      // two scans of a checkpoint broadcast twice, one job more.
+      val (observed, residuals) = graft.Rotation.observed(
+        vs.join(bc(msgs), col("v") === col("mv"), "left")
+          .select(col("v"),
+            (lit(resetProb) + lit(1 - resetProb) *
+              coalesce(col("ms"), lit(0.0))).as("r"))
+          .join(bc(ranks.select(col("v"), col("r").as("r0"))), Seq("v")),
+        Seq(sum(delta).as("l1"), max(delta).as("mx")))
+      ranks = advance(Some(ranks), observed.select(col("v"), col("r")))
+      val res = residuals()
       out += ((i.toLong, res.getDouble(0), res.getDouble(1)))
-      graft.CacheScope.unpersist(ranks)
-      ranks = next
     }
     } // StaticPlan.withMeasured
     import spark.implicits._

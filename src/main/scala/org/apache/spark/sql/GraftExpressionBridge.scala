@@ -34,6 +34,15 @@ object GraftExpressionBridge {
   def dropBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
+  /** Wait until the (`private[spark]`) listener bus delivered every
+    * queued event, so a listener's counts are complete. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** A shuffle map stage: the final stage of an AQE exchange job. */
+  def isMapStage(stage: org.apache.spark.scheduler.StageInfo): Boolean =
+    stage.shuffleDepId.isDefined
+
   /** Summed size estimate of the leaves of `df`'s analyzed plan, from
     * file listings and local data only: no Spark job runs. A leaf
     * without an estimate reports the unknown default (Long.MaxValue). */

@@ -6,13 +6,15 @@ import graft.model.GraphStore
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 
 /** Spark job budgets of armed bounded-round operators on a small
   * in-memory graph, construction and final collect separately. Every
   * eager action inside a `StaticPlan.withMeasured` window must run in
   * the armed child session: one that escapes plans under the caller's
   * AQE, which adds at least one stage-materialization job, so these
-  * exact counts fail on it. */
+  * exact counts fail on it. Also the persisted frames a power iteration
+  * leaves pinned. */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -57,11 +59,45 @@ class JobBudgetSpec extends SparkSpec {
     }
   }
 
+  private def store: GraphStore = GraphStore(Map.empty, Map("e" ->
+    edges.select($"s".as(GraphStore.SRC), $"d".as(GraphStore.DST))),
+    Map("e" -> 1))
+
+  /** Persisted RDDs that building `build` leaves pinned, from a drained
+    * cache. */
+  private def pinnedBy(build: => DataFrame): Int = {
+    CacheScope.drain(spark)
+    try {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      build
+      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    } finally CacheScope.drain(spark)
+  }
+
   test("pageRank (3 iterations) job budget") {
-    val store = GraphStore(Map.empty, Map("e" -> edges.select(
-      $"s".as(GraphStore.SRC), $"d".as(GraphStore.DST))), Map("e" -> 1))
     assert(jobsOf(GraphAnalytics.pageRank(store, Seq("e"), iters = 3)) ==
       ((17, 3)))
+  }
+
+  test("personalizedPageRank (3 iterations) job budget") {
+    assert(jobsOf(GraphAnalytics.personalizedPageRank(store, Seq("e"),
+      Seq(0L, 145L), iters = 3)) == ((17, 1)))
+  }
+
+  test("weightedPageRank (unit weights, 3 iterations) job budget") {
+    assert(jobsOf(GraphAnalytics.weightedPageRank(
+      edges.withColumn("w", lit(1.0)), iters = 3)) == ((19, 3)))
+  }
+
+  test("pageRankConvergence (3 iterations) job budget") {
+    assert(jobsOf(GraphAnalytics.pageRankConvergence(edges, iters = 3)) ==
+      ((20, 0)))
+  }
+
+  test("power iteration pins its loop invariants and one rank frame") {
+    // edge frame, vertex frame and the last ranks: 3, not 2 + iters
+    assert(pinnedBy(GraphAnalytics.pageRank(store, Seq("e"), iters = 6)) == 3)
+    assert(pinnedBy(GraphAnalytics.katzCentrality(edges, iters = 6)) == 3)
   }
 
   test("katzCentrality job budget") {
