@@ -105,6 +105,48 @@ class JobBudgetSpec extends SparkSpec {
       ((18, 1)))
   }
 
+  test("labelPropagation (3 iterations) job budget") {
+    assert(jobsOf(GraphAnalytics.labelPropagation(store, Seq("e"),
+      iters = 3)) == ((13, 1)))
+  }
+
+  test("shortestPathsTrace job budget") {
+    assert(jobsOf(GraphAnalytics.shortestPathsTrace(
+      edges.withColumn("w", lit(1.0)), Seq(0L, 290L), maxIters = 6)) ==
+      ((16, 0)))
+  }
+
+  test("earliestArrivalTrace job budget") {
+    assert(jobsOf(GraphAnalytics.earliestArrivalTrace(
+      edges.withColumn("t", $"d" % 3), Seq(0L, 290L), maxRounds = 6)) ==
+      ((13, 0)))
+  }
+
+  test("labelPropagationStable (semi-synchronous) job budget") {
+    assert(jobsOf(GraphAnalytics.labelPropagationStable(store, Seq("e"),
+      colorRounds = 150, maxSweeps = 1)) == ((604, 1)))
+  }
+
+  test("kCore job budget") {
+    assert(jobsOf(GraphAnalytics.kCore(store, Seq("e"), k = 3,
+      rounds = 10)) == ((8, 2)))
+  }
+
+  test("ccBigStar job budget") {
+    assert(jobsOf(GraphAnalytics.ccBigStar(edges, rounds = 10)) ==
+      ((22, 2)))
+  }
+
+  test("hits (3 iterations) job budget") {
+    assert(jobsOf(GraphAnalytics.hits(store, Seq("e"), iters = 3)) ==
+      ((30, 1)))
+  }
+
+  test("leidenFull job budget") {
+    assert(jobsOf(GraphAnalytics.leidenFull(edges, maxLevels = 2,
+      roundsPerLevel = 2)) == ((184, 1)))
+  }
+
   test("stronglyConnectedComponents job budget") {
     assert(jobsOf(GraphAnalytics.stronglyConnectedComponents(edges, "s",
       "d", maxPeels = 10)) == ((96, 1)))
