@@ -28,8 +28,8 @@ object CacheScope {
     new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
 
   /** Persist (MEMORY_AND_DISK) and register for the next drain. The
-    * cached physical plan is built here, so inside an armed
-    * `StaticPlan.withMeasured` window it is built armed; the frame
+    * cached physical plan is built here, so inside an armed law window
+    * (`Rounds.gate`, `StaticPlan.withMeasured`) it is built armed; the frame
     * returned is bound to `ds`'s session either way. */
   def persist[T](ds: Dataset[T],
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {

@@ -39,9 +39,10 @@ import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge,
 final class Rotation {
   private var held: Option[RDD[_]] = None
 
-  /** Checkpoint `df` eagerly (armed inside a [[StaticPlan.withMeasured]]
-    * window), cap its frozen stats, release this slot's previous
-    * blocks; the checkpointed frame, bound to `df`'s session. */
+  /** Checkpoint `df` eagerly (armed inside a law window: [[Rounds.gate]]
+    * or [[StaticPlan.withMeasured]]), cap its frozen stats, release this
+    * slot's previous blocks; the checkpointed frame, bound to `df`'s
+    * session. */
   def apply(df: DataFrame): DataFrame = keep(df, StaticPlan.armed(df))
 
   /** [[apply]] to `out(df)`, plus the row of `metrics` over `df`: the

@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions.broadcast
  * under its own confs, and concurrent armed regions overlap. The law
  * has two uses.
  *
- * 1. The loop window, [[withMeasured]]. A bounded-round operator
- *    measures its loop frames' ROW count; under [[SmallRows]] the
+ * 1. The loop window: [[graft.Rounds.gate]] in a bounded-round
+ *    operator, [[withMeasured]] in the PageRank family's kernel. The
+ *    operator measures its loop frames' ROW count; under [[SmallRows]] the
  *    window arms (1) AQE off below [[AqeOffRows]] — every join side is
  *    statically broadcast-able, and each rotation's multi-exchange
  *    stage tree collapses into ONE job instead of one job per
@@ -217,10 +218,26 @@ object StaticPlan {
     * under the bound, else unchanged. The body receives the broadcast-
     * hint function to apply to its measured-small join sides (identity
     * when the law is not armed); its eager actions run armed through
-    * [[armed]]. With `SPARK_GRAFT_LAW_LOG` set, each window prints the
-    * dials it actually set (after the kill-switches) to stderr. */
+    * [[armed]]. Bounded-round loops open their window through
+    * [[graft.Rounds]]. */
   def withMeasured[T](spark: SparkSession, measuredRows: Long)
-      (body: (DataFrame => DataFrame) => T): T = {
+      (body: (DataFrame => DataFrame) => T): T =
+    scoped(body(arm(spark, measuredRows)))
+
+  /** `body` with the calling thread's armed scope restored after it on
+    * every exit path: an [[arm]] inside the body lasts until then. */
+  private[graft] def scoped[T](body: => T): T = {
+    val outer = scope.get
+    try body finally scope.set(outer)
+  }
+
+  /** Merge the law's dials for `measuredRows` over the calling thread's
+    * armed scope (inner wins per key) until the enclosing [[scoped]]
+    * block exits; the broadcast-hint function. With
+    * `SPARK_GRAFT_LAW_LOG` set, prints the dials it actually set (after
+    * the kill-switches) to stderr. */
+  private[graft] def arm(spark: SparkSession,
+      measuredRows: Long): DataFrame => DataFrame = {
     val small = measuredRows <= SmallRows && !disabled("all")
     val dials = if (!small) Seq.empty else {
       val parts = math.max(1L, math.min(
@@ -246,15 +263,14 @@ object StaticPlan {
     val hints = small && !disabled("hints")
     if (sys.env.contains("SPARK_GRAFT_LAW_LOG")) {
       val caller = Thread.currentThread.getStackTrace
-        .drop(2).filter(f => !f.getClassName.startsWith("graft.StaticPlan")).take(2)
+        .drop(2).filter(f => !f.getClassName.startsWith("graft.StaticPlan") &&
+          !f.getClassName.startsWith("graft.Rounds")).take(2)
         .map(f => s"${f.getClassName.split('.').last}.${f.getMethodName}:${f.getLineNumber}")
         .mkString(" < ")
       val set = dials.map { case (d, (_, v)) => s"$d=$v" } ++ Option.when(hints)("hints")
       System.err.println(s"[law] rows=$measuredRows armed=${set.nonEmpty} dials=${set.mkString(",")} at $caller")
     }
-    val outer = scope.get
-    scope.set(outer ++ dials.map(_._2))
-    try body(if (hints) broadcast _ else identity)
-    finally scope.set(outer)
+    scope.set(scope.get ++ dials.map(_._2))
+    if (hints) broadcast _ else identity
   }
 }

@@ -225,34 +225,33 @@ object GraphAnalytics {
     val edges = rawEdges.toDF("s", "d").distinct()
       .transform(graft.CacheScope.persist(_))
     val verts = vertexSet(edges)
-    // checkpoint rotation, NOT plain persist: the in-plan L1 scalar
-    // references the round's message frame a second time, so a
-    // persist-rotated loop TRIPLES the logical plan per round and
-    // planning OOMs by iteration 5 (reproduced here in the r13 bench)
-    val rot = new graft.Rotation
-    var x = rot(verts.select(col("v"), lit(1.0).as("r")))
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = edges.count()
-    graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
-    for (_ <- 1 to iters) {
-      val raw = messages(edges, x, bc, col("r"))
-        .transform(graft.CacheScope.persist(_))
-      val tot = raw.agg(sum(col("ms")).as("mt")) // exact on-grid sum
-      // zero-mass guard (degenerate-input law): on a DAG the message
-      // mass can drain to nothing — define the result as all-zero
-      // scores instead of a NULL/NaN-poisoning division
-      val next = verts.join(bc(raw), col("v") === col("mv"), "left")
-        .crossJoin(broadcast(tot))
-        .select(col("v"),
-          when(col("mt") > lit(0.0),
-            dyadic(coalesce(col("ms"), lit(0.0)) / col("mt")))
-            .otherwise(lit(0.0)).as("r"))
-      x = rot(next)
-      graft.CacheScope.unpersist(raw)
+    graft.Rounds("eigenvectorCentrality", verts.sparkSession) { rs =>
+      // checkpoint rotation, NOT plain persist: the in-plan L1 scalar
+      // references the round's message frame a second time, so a
+      // persist-rotated loop TRIPLES the logical plan per round and
+      // planning OOMs by iteration 5 (reproduced here in the r13 bench)
+      val rot = rs.slot(kept = true)
+      var x = rot(verts.select(col("v"), lit(1.0).as("r")))
+      val bc = rs.gate(edges.count())
+      rs.times(iters) { _ =>
+        val raw = messages(edges, x, bc, col("r"))
+          .transform(graft.CacheScope.persist(_))
+        val tot = raw.agg(sum(col("ms")).as("mt")) // exact on-grid sum
+        // zero-mass guard (degenerate-input law): on a DAG the message
+        // mass can drain to nothing — define the result as all-zero
+        // scores instead of a NULL/NaN-poisoning division
+        val next = verts.join(bc(raw), col("v") === col("mv"), "left")
+          .crossJoin(broadcast(tot))
+          .select(col("v"),
+            when(col("mt") > lit(0.0),
+              dyadic(coalesce(col("ms"), lit(0.0)) / col("mt")))
+              .otherwise(lit(0.0)).as("r"))
+        x = rot(next)
+        graft.CacheScope.unpersist(raw)
+      }
+      x.select(col("v").as("_vid"),
+        graft.functions.Portable.quant(col("r"), 6).as("score"))
     }
-    } // StaticPlan.withMeasured
-    x.select(col("v").as("_vid"),
-      graft.functions.Portable.quant(col("r"), 6).as("score"))
   }
 
   /**
@@ -340,60 +339,59 @@ object GraphAnalytics {
     val verts = e.select(col("u").as("x")).union(e.select(col("v")))
       .distinct()
       .transform(graft.CacheScope.persist(_))
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = e.count()
-    graft.StaticPlan.withMeasured(e.sparkSession, nEdges) { bc =>
-    val compRot, mstRot = new graft.Rotation
-    var comp = compRot(verts.select(col("x"), col("x").as("c")))
-    var mst = mstRot(e.limit(0).select("u", "v", "w"))
-    var round = 0
-    var remaining = -1L
-    while (round < maxRounds && remaining != 0L) {
-      round += 1
-      val lab = e
-        .join(comp.select(col("x").as("u"), col("c").as("cu")), Seq("u"))
-        .join(comp.select(col("x").as("v"), col("c").as("cv")), Seq("v"))
-        .filter(col("cu") =!= col("cv"))
-      // min outgoing edge per component under the (w, u, v) total
-      // order; cu/cv ride along (determined by u/v, never ordered on)
-      val ed = struct(col("w"), col("u"), col("v"), col("cu"), col("cv"))
-      val byComp = lab.select(col("cu").as("cc"), ed.as("ed"))
-        .union(lab.select(col("cv").as("cc"), ed.as("ed")))
-        .groupBy("cc").agg(min(col("ed")).as("me"))
-      val chosen = byComp
-        .select(col("me.u").as("u"), col("me.v").as("v"),
-          col("me.w").as("w"), col("me.cu").as("cu"),
-          col("me.cv").as("cv"))
-        .distinct() // both endpoints' components may pick the same edge
-        .transform(graft.CacheScope.persist(_))
-      // the round's one observable job
-      remaining = graft.StaticPlan.armed(chosen).count()
-      if (remaining > 0L) {
-        mst = mstRot(mst.union(chosen.select("u", "v", "w")))
-        // merge the hooked components: min-label CC over the chosen
-        // component graph (component-count-sized, halves per round)
-        val cl = ccBigStar(chosen.select(col("cu"), col("cv")), 16)
-        comp = compRot(comp.join(cl, col("c") === col("_vid"), "left")
-          .select(col("x"), coalesce(col("component"), col("c")).as("c")))
+    graft.Rounds("boruvkaMst", e.sparkSession) { rs =>
+      rs.gate(e.count())
+      val compRot = rs.slot()
+      val mstRot = rs.slot(kept = true)
+      var comp = compRot(verts.select(col("x"), col("x").as("c")))
+      var mst = mstRot(e.limit(0).select("u", "v", "w"))
+      val trace = rs.loop(maxRounds) { _ =>
+        val lab = e
+          .join(comp.select(col("x").as("u"), col("c").as("cu")), Seq("u"))
+          .join(comp.select(col("x").as("v"), col("c").as("cv")), Seq("v"))
+          .filter(col("cu") =!= col("cv"))
+        // min outgoing edge per component under the (w, u, v) total
+        // order; cu/cv ride along (determined by u/v, never ordered on)
+        val ed = struct(col("w"), col("u"), col("v"), col("cu"), col("cv"))
+        val byComp = lab.select(col("cu").as("cc"), ed.as("ed"))
+          .union(lab.select(col("cv").as("cc"), ed.as("ed")))
+          .groupBy("cc").agg(min(col("ed")).as("me"))
+        val chosen = byComp
+          .select(col("me.u").as("u"), col("me.v").as("v"),
+            col("me.w").as("w"), col("me.cu").as("cu"),
+            col("me.cv").as("cv"))
+          .distinct() // both endpoints' components may pick the same edge
+          .transform(graft.CacheScope.persist(_))
+        // the round's one observable job
+        val remaining = graft.StaticPlan.armed(chosen).count()
+        if (remaining > 0L) {
+          mst = mstRot(mst.union(chosen.select("u", "v", "w")))
+          // merge the hooked components: min-label CC over the chosen
+          // component graph (component-count-sized, halves per round)
+          val cl = ccBigStar(chosen.select(col("cu"), col("cv")), 16)
+          comp = compRot(comp.join(cl, col("c") === col("_vid"), "left")
+            .select(col("x"), coalesce(col("component"), col("c")).as("c")))
+        }
+        graft.CacheScope.unpersist(chosen)
+        remaining
       }
-      graft.CacheScope.unpersist(chosen)
+      // the change count is the CHOSEN edges, which is positive on a
+      // final successful round too — when the budget ran out mid-merge,
+      // probe for surviving cross-component candidates before
+      // declaring done
+      if (trace.last._2 != 0L) {
+        val leftover = graft.StaticPlan.armed(e)
+          .join(comp.select(col("x").as("u"), col("c").as("cu")), Seq("u"))
+          .join(comp.select(col("x").as("v"), col("c").as("cv")), Seq("v"))
+          .filter(col("cu") =!= col("cv")).limit(1).count()
+        if (leftover > 0L)
+          throw new IllegalStateException(
+            s"boruvkaMst: components still unmerged after $maxRounds " +
+              "rounds — raise the budget; a partial forest is a wrong " +
+              "answer")
+      }
+      mst
     }
-    // `remaining` counts CHOSEN edges, which is positive on a final
-    // successful round too — when the budget ran out mid-merge, probe
-    // for surviving cross-component candidates before declaring done
-    if (remaining != 0L) {
-      val leftover = graft.StaticPlan.armed(e)
-        .join(comp.select(col("x").as("u"), col("c").as("cu")), Seq("u"))
-        .join(comp.select(col("x").as("v"), col("c").as("cv")), Seq("v"))
-        .filter(col("cu") =!= col("cv")).limit(1).count()
-      if (leftover > 0L)
-        throw new IllegalStateException(
-          s"boruvkaMst: components still unmerged after $maxRounds " +
-            "rounds — raise the budget; a partial forest is a wrong " +
-            "answer")
-    }
-    mst
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -478,59 +476,58 @@ object GraphAnalytics {
       .distinct()
       .transform(graft.CacheScope.persist(_))
     var scores = verts.select(col("v"), lit(1.0).as("a"), lit(1.0).as("h"))
-    // Measured gate for the static-planning law ([[graft.StaticPlan]]):
-    // the edge frame bounds every per-round frame; the count's fill is
-    // paid anyway at round 1.
-    val nEdges = edgesBySrc.count()
-    graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
-    val rot = new graft.Rotation
-    for (_ <- 1 to iters) {
-      // The L1 totals ride in-plan as broadcast one-row scalars
-      // (crossJoin(broadcast(agg)), cf. PageRank's normalization):
-      // totals are exact on-grid sums, so the value is engine- and
-      // order-independent. In-plan scalars USED to be banned here —
-      // each reference multiplied the upstream subtree 3x per
-      // half-step and planning OOMed at 5 iterations — but the
-      // per-round localCheckpoint now bottoms every subtree out at a
-      // LogicalRDD, so within-round duplication is a constant factor.
-      // Net effect: ONE Spark job per round (the eager checkpoint),
-      // not three (cache-fill + two scalar fetches); the persisted
-      // aRaw/auth/hRaw fill as the job's shared stages.
-      val aRaw = edgesBySrc.join(scores, col("s") === col("v"))
-        .groupBy(col("d").as("av")).agg(sum(dyadic(col("h"))).as("ar"))
-        .transform(graft.CacheScope.persist(_))
-      val atDF = aRaw.agg(sum(col("ar")).as("at"))
-      val auth = verts.join(aRaw, col("v") === col("av"), "left")
-        .crossJoin(broadcast(atDF))
-        .select(col("v"),
-          dyadic(coalesce(col("ar"), lit(0.0)) / col("at")).as("a"))
-        .transform(graft.CacheScope.persist(_)) // feeds hRaw + next
-      val hRaw = edgesByDst.join(auth.select(col("v").as("dv"), col("a")),
-          col("d") === col("dv"))
-        .groupBy(col("s").as("hv")).agg(sum(dyadic(col("a"))).as("hr"))
-        .transform(graft.CacheScope.persist(_))
-      val htDF = hRaw.agg(sum(col("hr")).as("ht"))
-      val round = auth.join(hRaw, col("v") === col("hv"), "left")
-        .crossJoin(broadcast(htDF))
-        .select(col("v"), col("a"),
-          dyadic(coalesce(col("hr"), lit(0.0)) / col("ht")).as("h"))
-      // Lineage break (scaladoc): materialized rows behind an opaque
-      // scan, so releasing this round's scaffolding can't recompile it.
-      // Eager, so the scaffolding unpersists below see no live readers.
-      val next = rot(round)
-      // Release order matters for the recompile rule: auth first (only
-      // hRaw's cached plan references it; that expansion is one small
-      // already-aggregated subtree), then the rest — nothing cached
-      // references aRaw or hRaw anymore.
-      graft.CacheScope.unpersist(auth)
-      graft.CacheScope.unpersist(hRaw)
-      graft.CacheScope.unpersist(aRaw)
-      scores = next
+    graft.Rounds("hits", verts.sparkSession) { rs =>
+      // the edge frame bounds every per-round frame; the count's fill
+      // is paid anyway at round 1
+      rs.gate(edgesBySrc.count())
+      val rot = rs.slot(kept = true)
+      rs.times(iters) { _ =>
+        // The L1 totals ride in-plan as broadcast one-row scalars
+        // (crossJoin(broadcast(agg)), cf. PageRank's normalization):
+        // totals are exact on-grid sums, so the value is engine- and
+        // order-independent. In-plan scalars USED to be banned here —
+        // each reference multiplied the upstream subtree 3x per
+        // half-step and planning OOMed at 5 iterations — but the
+        // per-round localCheckpoint now bottoms every subtree out at a
+        // LogicalRDD, so within-round duplication is a constant factor.
+        // Net effect: ONE Spark job per round (the eager checkpoint),
+        // not three (cache-fill + two scalar fetches); the persisted
+        // aRaw/auth/hRaw fill as the job's shared stages.
+        val aRaw = edgesBySrc.join(scores, col("s") === col("v"))
+          .groupBy(col("d").as("av")).agg(sum(dyadic(col("h"))).as("ar"))
+          .transform(graft.CacheScope.persist(_))
+        val atDF = aRaw.agg(sum(col("ar")).as("at"))
+        val auth = verts.join(aRaw, col("v") === col("av"), "left")
+          .crossJoin(broadcast(atDF))
+          .select(col("v"),
+            dyadic(coalesce(col("ar"), lit(0.0)) / col("at")).as("a"))
+          .transform(graft.CacheScope.persist(_)) // feeds hRaw + next
+        val hRaw = edgesByDst.join(auth.select(col("v").as("dv"), col("a")),
+            col("d") === col("dv"))
+          .groupBy(col("s").as("hv")).agg(sum(dyadic(col("a"))).as("hr"))
+          .transform(graft.CacheScope.persist(_))
+        val htDF = hRaw.agg(sum(col("hr")).as("ht"))
+        val round = auth.join(hRaw, col("v") === col("hv"), "left")
+          .crossJoin(broadcast(htDF))
+          .select(col("v"), col("a"),
+            dyadic(coalesce(col("hr"), lit(0.0)) / col("ht")).as("h"))
+        // Lineage break (scaladoc): materialized rows behind an opaque
+        // scan, so releasing this round's scaffolding can't recompile it.
+        // Eager, so the scaffolding unpersists below see no live readers.
+        val next = rot(round)
+        // Release order matters for the recompile rule: auth first (only
+        // hRaw's cached plan references it; that expansion is one small
+        // already-aggregated subtree), then the rest — nothing cached
+        // references aRaw or hRaw anymore.
+        graft.CacheScope.unpersist(auth)
+        graft.CacheScope.unpersist(hRaw)
+        graft.CacheScope.unpersist(aRaw)
+        scores = next
+      }
+      scores.select(col("v").as("_vid"),
+        graft.functions.Portable.quant(col("a"), 6).as("auth"),
+        graft.functions.Portable.quant(col("h"), 6).as("hub"))
     }
-    scores.select(col("v").as("_vid"),
-      graft.functions.Portable.quant(col("a"), 6).as("auth"),
-      graft.functions.Portable.quant(col("h"), 6).as("hub"))
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -910,111 +907,107 @@ object GraphAnalytics {
     require(maxPeels >= 1, "maxPeels must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    val workR, vertsR, tmpR, doneR, colorR, markR = new graft.Rotation
-    val rawEdges = edges.select(col(srcCol).cast("long").as("s"),
-      col(dstCol).cast("long").as("d"))
-    var work = workR(rawEdges.filter(col("s") =!= col("d")).distinct())
-    // Vertex set from the RAW edges, before the self-loop filter: a
-    // vertex whose only arcs are self-loops must still be emitted as
-    // its own singleton SCC (the trim step retires it in round 1).
-    var verts = vertsR(
-      rawEdges.select(col("s").as("v")).union(rawEdges.select(col("d")))
-        .distinct())
-    var done = Seq.empty[(Long, Long)].toDF("v", "component")
-    var nLeft = verts.count()
-    // Measured gate for the static-planning law ([[graft.StaticPlan]]):
-    // both the vertex and the working-edge frame must be small (a
-    // dense graph can exceed the bound on edges alone)
-    val nWork = work.count()
-    graft.StaticPlan.withMeasured(spark, math.max(nLeft, nWork)) { bc =>
-    var peel = 0
-    while (nLeft > 0) {
-      peel += 1
-      if (peel > maxPeels) throw new IllegalStateException(
-        s"SCC: $nLeft vertices unresolved after $maxPeels peel rounds " +
-          "— raise maxPeels; partial SCC labels are never emitted")
-      // (a) trim: no out-arc or no in-arc => singleton SCC
-      var trimming = true
-      while (trimming && nLeft > 0) {
-        val keep = work.select(col("s").as("v")).distinct()
-          .join(work.select(col("d").as("v")).distinct(),
-            Seq("v"), "left_semi")
-        // the trimmed count rides the rotation job as a CollectMetrics
-        // observation (the semiSyncLpa one-job-per-round law)
-        val (trimmed, nT) = tmpR.observe(
-          verts.join(keep, Seq("v"), "left_anti"), Seq(count(lit(1)).as("n")))
-        val nTrim = nT.getLong(0)
-        if (nTrim == 0L) trimming = false
-        else {
-          done = doneR(done.unionByName(
-            trimmed.select(col("v"), col("v").as("component"))))
-          verts = vertsR(verts.join(trimmed, Seq("v"), "left_anti"))
-          work = workR(work
-            .join(trimmed.select(col("v").as("s")), Seq("s"), "left_anti")
-            .join(trimmed.select(col("v").as("d")), Seq("d"), "left_anti"))
-          nLeft -= nTrim
-        }
-      }
-      if (nLeft > 0) {
-        // (b) forward min-color propagation to fixpoint
-        var color = colorR(verts.select(col("v"), col("v").as("c")))
-        var propChanged = -1L
-        var prop = 0L
-        while (propChanged != 0L) {
-          prop += 1
-          if (prop > nLeft + 1) throw new IllegalStateException(
-            "SCC: color propagation exceeded the vertex-count bound — " +
-              "monotone-fixpoint invariant violated")
-          // the changed count rides the rotation job via CollectMetrics
-          // — the min-combine's v-set equals color's v-set, so the
-          // left join is total and the flag count matches the old
-          // separate inner-join-and-count job exactly
-          val (upd, nP) = colorR.observe(
-            work.join(bc(color.select(col("v").as("s"), col("c"))), "s")
-              .select(col("d").as("v"), col("c"))
-              .unionByName(color.select(col("v"), col("c")))
-              .groupBy("v").agg(min(col("c")).as("c"))
-              .join(color.select(col("v"), col("c").as("c0")),
-                Seq("v"), "left"),
-            Seq(count(when(col("c") =!= col("c0"), lit(1))).as("n")),
-            _.select(col("v"), col("c")))
-          propChanged = nP.getLong(0)
-          color = upd
-        }
-        // (c) backward mark from the color roots, inside each class
-        var mark = markR(color.filter(col("v") === col("c")))
-        var nMark = graft.StaticPlan.armed(mark).count()
-        var growing = true
-        var growRounds = 0L
-        while (growing) {
-          growRounds += 1
-          if (growRounds > nLeft + 1) throw new IllegalStateException(
-            "SCC: backward mark exceeded the vertex-count bound — " +
-              "monotone-fixpoint invariant violated")
-          val (grown, nG) = markR.observe(
-            work.join(bc(mark.select(col("v").as("d"), col("c"))), "d")
-              .select(col("s").as("v"), col("c"))
-              .join(color, Seq("v", "c"), "left_semi")
-              .unionByName(mark.select(col("v"), col("c")))
-              .distinct(),
-            Seq(count(lit(1)).as("n")))
-          val nGrown = nG.getLong(0)
-          mark = grown
-          if (nGrown == nMark) growing = false else nMark = nGrown
-        }
-        done = doneR(done.unionByName(
-          mark.select(col("v"), col("c").as("component"))))
-        verts = vertsR(verts.join(mark, Seq("v"), "left_anti"))
+    graft.Rounds("stronglyConnectedComponents", spark) { rs =>
+      val workR, vertsR, tmpR, colorR, markR = rs.slot()
+      val doneR = rs.slot(kept = true)
+      val rawEdges = edges.select(col(srcCol).cast("long").as("s"),
+        col(dstCol).cast("long").as("d"))
+      var work = workR(rawEdges.filter(col("s") =!= col("d")).distinct())
+      // Vertex set from the RAW edges, before the self-loop filter: a
+      // vertex whose only arcs are self-loops must still be emitted as
+      // its own singleton SCC (the trim step retires it in round 1).
+      var verts = vertsR(
+        rawEdges.select(col("s").as("v")).union(rawEdges.select(col("d")))
+          .distinct())
+      var done = Seq.empty[(Long, Long)].toDF("v", "component")
+      var nLeft = verts.count()
+      // both the vertex and the working-edge frame must be small (a
+      // dense graph can exceed the bound on edges alone)
+      val bc = rs.gate(math.max(nLeft, work.count()))
+      // retire a resolved vertex set from the working graph
+      def retire(gone: DataFrame): Unit = {
+        verts = vertsR(verts.join(gone, Seq("v"), "left_anti"))
         work = workR(work
-          .join(mark.select(col("v").as("s")), Seq("s"), "left_anti")
-          .join(mark.select(col("v").as("d")), Seq("d"), "left_anti"))
-        nLeft -= nMark
+          .join(gone.select(col("v").as("s")), Seq("s"), "left_anti")
+          .join(gone.select(col("v").as("d")), Seq("d"), "left_anti"))
       }
+      if (nLeft > 0L) {
+        val peels = rs.loop(maxPeels, "peel") { _ =>
+          // (a) trim: no out-arc or no in-arc => singleton SCC
+          rs.loop(Long.MaxValue, "trim") { _ =>
+            val keep = work.select(col("s").as("v")).distinct()
+              .join(work.select(col("d").as("v")).distinct(),
+                Seq("v"), "left_semi")
+            // the trimmed count rides the rotation job as a
+            // CollectMetrics observation (the semiSyncLpa
+            // one-job-per-round law)
+            val (trimmed, nT) = tmpR.observe(
+              verts.join(keep, Seq("v"), "left_anti"),
+              Seq(count(lit(1)).as("n")))
+            val nTrim = nT.getLong(0)
+            if (nTrim != 0L) {
+              done = doneR(done.unionByName(
+                trimmed.select(col("v"), col("v").as("component"))))
+              retire(trimmed)
+              nLeft -= nTrim
+            }
+            math.min(nTrim, nLeft)
+          }
+          if (nLeft > 0) {
+            // (b) forward min-color propagation to fixpoint
+            var color = colorR(verts.select(col("v"), col("v").as("c")))
+            val prop = rs.loop(nLeft + 1, "color") { _ =>
+              // the changed count rides the rotation job via
+              // CollectMetrics — the min-combine's v-set equals color's
+              // v-set, so the left join is total and the flag count
+              // matches the old separate inner-join-and-count job
+              val (upd, nP) = colorR.observe(
+                work.join(bc(color.select(col("v").as("s"), col("c"))), "s")
+                  .select(col("d").as("v"), col("c"))
+                  .unionByName(color.select(col("v"), col("c")))
+                  .groupBy("v").agg(min(col("c")).as("c"))
+                  .join(color.select(col("v"), col("c").as("c0")),
+                    Seq("v"), "left"),
+                Seq(count(when(col("c") =!= col("c0"), lit(1))).as("n")),
+                _.select(col("v"), col("c")))
+              color = upd
+              nP.getLong(0)
+            }
+            if (prop.last._2 != 0L) throw new IllegalStateException(
+              "SCC: color propagation exceeded the vertex-count bound — " +
+                "monotone-fixpoint invariant violated")
+            // (c) backward mark from the color roots, inside each class
+            var mark = markR(color.filter(col("v") === col("c")))
+            var nMark = graft.StaticPlan.armed(mark).count()
+            val grow = rs.loop(nLeft + 1, "mark") { _ =>
+              val (grown, nG) = markR.observe(
+                work.join(bc(mark.select(col("v").as("d"), col("c"))), "d")
+                  .select(col("s").as("v"), col("c"))
+                  .join(color, Seq("v", "c"), "left_semi")
+                  .unionByName(mark.select(col("v"), col("c")))
+                  .distinct(),
+                Seq(count(lit(1)).as("n")))
+              mark = grown
+              val added = nG.getLong(0) - nMark
+              nMark = nG.getLong(0)
+              added
+            }
+            if (grow.last._2 != 0L) throw new IllegalStateException(
+              "SCC: backward mark exceeded the vertex-count bound — " +
+                "monotone-fixpoint invariant violated")
+            done = doneR(done.unionByName(
+              mark.select(col("v"), col("c").as("component"))))
+            retire(mark)
+            nLeft -= nMark
+          }
+          nLeft
+        }
+        if (peels.last._2 != 0L) throw new IllegalStateException(
+          s"SCC: $nLeft vertices unresolved after $maxPeels peel rounds " +
+            "— raise maxPeels; partial SCC labels are never emitted")
+      }
+      done.select(col("v").as("_vid"), col("component"))
     }
-    } // StaticPlan.withMeasured
-    // release every working slot; only the returned frame stays pinned
-    Seq(workR, vertsR, tmpR, colorR, markR).foreach(_.release())
-    done.select(col("v").as("_vid"), col("component"))
   }
 
   /**
@@ -1172,41 +1165,40 @@ object GraphAnalytics {
     require(k >= 3, "k-truss needs k >= 3")
     require(rounds >= 1, "rounds must be >= 1")
     var edges = simpleEdges(store, edgeTypes)
-    // convergence-guarded peel (the r11 label-family law; see kCore):
-    // run to the no-edge-below-support fixpoint or throw — a truncated
-    // peel returns a superset of the k-truss with no signal
-    // wedgeCounts references the survivor frame several times: a
-    // checkpoint rotation per round keeps the plan AND the pinned
-    // blocks O(1) in peel depth (the kCore note)
-    val rot = new graft.Rotation
-    // the canonical-edge count rides the first rotation and doubles as
-    // the static-planning gate ([[graft.StaticPlan]])
-    val (e0, n0) = rot.observe(edges, Seq(count(lit(1)).as("n")))
-    edges = e0
-    val nEdges = n0.getLong(0)
-    graft.StaticPlan.withMeasured(edges.sparkSession, nEdges) { _ =>
-    var peels = 0
-    var below = -1L
-    while (below != 0L) {
-      val sup = edges.join(wedgeCounts(edges), Seq("s", "d"), "left")
-        .select(col("s"), col("d"),
-          coalesce(col("common"), lit(0L)).as("common"))
-        .transform(graft.CacheScope.persist(_)) // below-count + survivors
-      below = graft.StaticPlan.armed(sup).filter(col("common") < k - 2).count()
-      if (below != 0L) {
-        peels += 1
-        if (peels > rounds) throw new IllegalStateException(
-          s"kTruss: peel not converged within $rounds rounds " +
-            s"($below edges still below support ${k - 2}) — raise the " +
-            "budget; a truncated peel returns a superset of the k-truss")
-        edges = rot(sup.filter(col("common") >= k - 2).select("s", "d"))
+    graft.Rounds("kTruss", edges.sparkSession) { rs =>
+      // wedgeCounts references the survivor frame several times: a
+      // checkpoint rotation per round keeps the plan AND the pinned
+      // blocks O(1) in peel depth (the kCore note)
+      val rot = rs.slot(kept = true)
+      // the canonical-edge count rides the first rotation and doubles
+      // as the static-planning gate
+      val (e0, n0) = rot.observe(edges, Seq(count(lit(1)).as("n")))
+      edges = e0
+      rs.gate(n0.getLong(0))
+      // convergence-guarded peel (the r11 label-family law; see kCore):
+      // run to the no-edge-below-support fixpoint or throw — a
+      // truncated peel returns a superset of the k-truss with no signal
+      rs.loop(rounds + 1L) { peel =>
+        val sup = edges.join(wedgeCounts(edges), Seq("s", "d"), "left")
+          .select(col("s"), col("d"),
+            coalesce(col("common"), lit(0L)).as("common"))
+          .transform(graft.CacheScope.persist(_)) // below-count + survivors
+        val below = graft.StaticPlan.armed(sup)
+          .filter(col("common") < k - 2).count()
+        if (below != 0L) {
+          if (peel > rounds) throw new IllegalStateException(
+            s"kTruss: peel not converged within $rounds rounds " +
+              s"($below edges still below support ${k - 2}) — raise the " +
+              "budget; a truncated peel returns a superset of the k-truss")
+          edges = rot(sup.filter(col("common") >= k - 2).select("s", "d"))
+        }
+        graft.CacheScope.unpersist(sup)
+        below
       }
-      graft.CacheScope.unpersist(sup)
+      edges.join(wedgeCounts(edges), Seq("s", "d"), "left")
+        .select(col("s").as("a"), col("d").as("b"),
+          coalesce(col("common"), lit(0L)).as("support"))
     }
-    edges.join(wedgeCounts(edges), Seq("s", "d"), "left")
-      .select(col("s").as("a"), col("d").as("b"),
-        coalesce(col("common"), lit(0L)).as("support"))
-    } // StaticPlan.withMeasured
   }
 
   /** Canonical simple undirected edge set (self-loops dropped,
@@ -1448,46 +1440,45 @@ object GraphAnalytics {
     def degrees(e: DataFrame): DataFrame = e
       .select(explode(array(col("s"), col("d"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("deg"))
-    // convergence-guarded peel (the r11 label-family law): the peel
-    // runs to its FIXPOINT (no vertex below k) or throws — a fixed
-    // round budget that stops early returns a SUPERSET of the k-core
-    // with no signal. `rounds` bounds the peel count; fixpoint rounds
-    // in the oracle's fixed unroll are no-ops, so generous budgets are
-    // free on both sides.
-    // each round references the survivor frame ~3x (degrees + both
-    // semi-joins): a checkpoint rotation bottoms the plan out per
-    // round — persist alone lets the analyzed plan grow 3^rounds (the
-    // HITS law; OOM'd in plan STRINGIFICATION at depth 11 on a path spec)
-    val rot = new graft.Rotation
-    // the canonical-edge count rides the first rotation and doubles as
-    // the static-planning gate ([[graft.StaticPlan]])
-    val (e0, n0) = rot.observe(edges, Seq(count(lit(1)).as("n")))
-    edges = e0
-    val nEdges = n0.getLong(0)
-    graft.StaticPlan.withMeasured(edges.sparkSession, nEdges) { _ =>
-    var peels = 0
-    var below = -1L
-    while (below != 0L) {
-      val degs = degrees(edges)
-        .transform(graft.CacheScope.persist(_)) // below-count + keep set
-      below = graft.StaticPlan.armed(degs).filter(col("deg") < k).count()
-      if (below != 0L) {
-        peels += 1
-        if (peels > rounds) throw new IllegalStateException(
-          s"kCore: peel not converged within $rounds rounds " +
-            s"($below vertices still below k=$k) — raise the budget; " +
-            "a truncated peel returns a superset of the k-core")
-        val keep = degs.filter(col("deg") >= k).select(col("v"))
-        edges = rot(edges
-          .join(keep.select(col("v").as("s")), Seq("s"), "left_semi")
-          .join(keep.select(col("v").as("d")), Seq("d"), "left_semi")
-          .select("s", "d"))
+    graft.Rounds("kCore", edges.sparkSession) { rs =>
+      // each round references the survivor frame ~3x (degrees + both
+      // semi-joins): a checkpoint rotation bottoms the plan out per
+      // round — persist alone lets the analyzed plan grow 3^rounds (the
+      // HITS law; OOM'd in plan STRINGIFICATION at depth 11 on a path
+      // spec)
+      val rot = rs.slot(kept = true)
+      // the canonical-edge count rides the first rotation and doubles
+      // as the static-planning gate
+      val (e0, n0) = rot.observe(edges, Seq(count(lit(1)).as("n")))
+      edges = e0
+      rs.gate(n0.getLong(0))
+      // convergence-guarded peel (the r11 label-family law): the peel
+      // runs to its FIXPOINT (no vertex below k) or throws — a fixed
+      // round budget that stops early returns a SUPERSET of the k-core
+      // with no signal. `rounds` bounds the peel count; fixpoint rounds
+      // in the oracle's fixed unroll are no-ops, so generous budgets
+      // are free on both sides.
+      rs.loop(rounds + 1L) { peel =>
+        val degs = degrees(edges)
+          .transform(graft.CacheScope.persist(_)) // below-count + keep set
+        val below = graft.StaticPlan.armed(degs).filter(col("deg") < k).count()
+        if (below != 0L) {
+          if (peel > rounds) throw new IllegalStateException(
+            s"kCore: peel not converged within $rounds rounds " +
+              s"($below vertices still below k=$k) — raise the budget; " +
+              "a truncated peel returns a superset of the k-core")
+          val keep = degs.filter(col("deg") >= k).select(col("v"))
+          edges = rot(edges
+            .join(keep.select(col("v").as("s")), Seq("s"), "left_semi")
+            .join(keep.select(col("v").as("d")), Seq("d"), "left_semi")
+            .select("s", "d"))
+        }
+        graft.CacheScope.unpersist(degs)
+        below
       }
-      graft.CacheScope.unpersist(degs)
+      degrees(edges).filter(col("deg") >= k)
+        .select(col("v").as("_vid"), col("deg"))
     }
-    degrees(edges).filter(col("deg") >= k)
-      .select(col("v").as("_vid"), col("deg"))
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -1657,52 +1648,51 @@ object GraphAnalytics {
     val arcs = undirAdj(simpleEdges(store, edgeTypes))
       .transform(graft.CacheScope.persist(_)) // re-filtered every round
     val verts = arcs.select(col("v")).distinct()
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nArcs = arcs.count()
-    graft.StaticPlan.withMeasured(arcs.sparkSession, nArcs) { bc =>
-    val rot = new graft.Rotation
-    var state = verts.select(col("v"), lit(0).as("st"),
-      lit(0).as("round"))
-    for (r <- 1 to rounds) {
-      val undec = state.filter(col("st") === 0).select(col("v"))
-        .transform(graft.CacheScope.persist(_)) // feeds 3 consumers
-      val live = arcs.join(undec, Seq("v"), "left_semi")
-        .join(undec.select(col("v").as("n")), Seq("n"), "left_semi")
-        .transform(graft.CacheScope.persist(_)) // min-agg + removal
-      val minNbr = live.groupBy(col("v"))
-        .agg(min(md5(concat_ws("#", lit(r), col("n")))).as("mn"))
-      val mis = undec.join(minNbr, Seq("v"), "left")
-        .filter(col("mn").isNull ||
-          md5(concat_ws("#", lit(r), col("v"))) < col("mn"))
-        .select(col("v"))
-        .transform(graft.CacheScope.persist(_)) // marks + removal probe
-      val removed = live.join(mis.select(col("v").as("n")), Seq("n"),
-          "left_semi")
-        .select(col("v")).distinct()
-      val round_ = state
-        .join(mis.withColumn("m", lit(1)), Seq("v"), "left")
-        .join(removed.withColumn("rm", lit(1)), Seq("v"), "left")
-        .select(col("v"),
-          when(col("st") =!= 0, col("st"))
-            .when(col("m") === 1, lit(1))
-            .when(col("rm") === 1, lit(2))
-            .otherwise(lit(0)).as("st"),
-          when(col("st") =!= 0, col("round"))
-            .when(col("m") === 1 || col("rm") === 1, lit(r))
-            .otherwise(lit(0)).as("round"))
-      // Lineage break per round (the HITS law, see hits() scaladoc):
-      // round r's plan embeds round r-1's ~6 times (undec, live x2,
-      // mis, removed, state), and the analyzer's self-join
-      // deduplication CLONES those subtrees — 6^r nodes by round 3
-      // even with every input cached (caches substitute after
-      // analysis). The checkpoint rotation bottoms the state out at
-      // an opaque scan, keeping pinned state O(1) for the run.
-      val next = rot(round_)
-      Seq(undec, live, mis).foreach(graft.CacheScope.unpersist)
-      state = next
+    graft.Rounds("lubyMIS", arcs.sparkSession) { rs =>
+      rs.gate(arcs.count())
+      val rot = rs.slot(kept = true)
+      var state = verts.select(col("v"), lit(0).as("st"),
+        lit(0).as("round"))
+      rs.times(rounds) { r =>
+        val undec = state.filter(col("st") === 0).select(col("v"))
+          .transform(graft.CacheScope.persist(_)) // feeds 3 consumers
+        val live = arcs.join(undec, Seq("v"), "left_semi")
+          .join(undec.select(col("v").as("n")), Seq("n"), "left_semi")
+          .transform(graft.CacheScope.persist(_)) // min-agg + removal
+        val minNbr = live.groupBy(col("v"))
+          .agg(min(md5(concat_ws("#", lit(r), col("n")))).as("mn"))
+        val mis = undec.join(minNbr, Seq("v"), "left")
+          .filter(col("mn").isNull ||
+            md5(concat_ws("#", lit(r), col("v"))) < col("mn"))
+          .select(col("v"))
+          .transform(graft.CacheScope.persist(_)) // marks + removal probe
+        val removed = live.join(mis.select(col("v").as("n")), Seq("n"),
+            "left_semi")
+          .select(col("v")).distinct()
+        val round_ = state
+          .join(mis.withColumn("m", lit(1)), Seq("v"), "left")
+          .join(removed.withColumn("rm", lit(1)), Seq("v"), "left")
+          .select(col("v"),
+            when(col("st") =!= 0, col("st"))
+              .when(col("m") === 1, lit(1))
+              .when(col("rm") === 1, lit(2))
+              .otherwise(lit(0)).as("st"),
+            when(col("st") =!= 0, col("round"))
+              .when(col("m") === 1 || col("rm") === 1, lit(r))
+              .otherwise(lit(0)).as("round"))
+        // Lineage break per round (the HITS law, see hits() scaladoc):
+        // round r's plan embeds round r-1's ~6 times (undec, live x2,
+        // mis, removed, state), and the analyzer's self-join
+        // deduplication CLONES those subtrees — 6^r nodes by round 3
+        // even with every input cached (caches substitute after
+        // analysis). The checkpoint rotation bottoms the state out at
+        // an opaque scan, keeping pinned state O(1) for the run.
+        val next = rot(round_)
+        Seq(undec, live, mis).foreach(graft.CacheScope.unpersist)
+        state = next
+      }
+      state.select(col("v").as(GraphStore.VID), col("st"), col("round"))
     }
-    state.select(col("v").as(GraphStore.VID), col("st"), col("round"))
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -1736,49 +1726,45 @@ object GraphAnalytics {
       .transform(graft.CacheScope.persist(_)) // re-filtered every round
     val prio = (c: org.apache.spark.sql.Column) =>
       md5(concat_ws("#", lit("c"), c))
-    // Measured gate for the static-planning law ([[graft.StaticPlan]]):
-    // the arc frame bounds every per-round frame; the count's fill is
-    // paid anyway at round 1's semi-joins.
-    val nArcs = arcs.count()
-    graft.StaticPlan.withMeasured(arcs.sparkSession, nArcs) { bc =>
-    val rot = new graft.Rotation
-    var state = arcs.select(col("v")).distinct()
-      .select(col("v"), lit(-1).as("color"))
-    var r = 1
-    var fullyColored = false
-    while (r <= rounds && !fullyColored) {
-      // NOT persisted (r13): both consumers re-filter the already-
-      // checkpointed `state` — a cached-frame scan — and the persist's
-      // 32 block writes per round cost more than the recompute at any
-      // scale (state is always a materialized leaf here)
-      val undec = state.filter(col("color") === -1).select(col("v"))
-      val minNbr = arcs.join(undec, Seq("v"), "left_semi")
-        .join(undec.select(col("v").as("n")), Seq("n"), "left_semi")
-        .groupBy(col("v")).agg(min(prio(col("n"))).as("mn"))
-      val winners = undec.join(minNbr, Seq("v"), "left")
-        .filter(col("mn").isNull || prio(col("v")) < col("mn"))
-        .select(col("v"))
-      val round_ = state
-        .join(winners.withColumn("w", lit(1)), Seq("v"), "left")
-        .select(col("v"),
-          when(col("color") =!= -1, col("color"))
-            .when(col("w") === 1, lit(r - 1))
-            .otherwise(lit(-1)).as("color"))
-      // checkpoint rotation per round — the lubyMIS/hits law (the
-      // analyzer's self-join dedup clones the per-round subtrees
-      // exponentially otherwise). The remaining-uncolored count rides
-      // the checkpoint job (the semiSyncLpaLoop law) — early exit once
-      // fully colored is bit-identical to running the full budget (a
-      // winner needs an uncolored vertex), and the round IS its one
-      // checkpoint job.
-      val (next, n) = rot.observe(round_,
-        Seq(count(when(col("color") === -1, lit(1))).as("n")))
-      state = next
-      fullyColored = n.getLong(0) == 0L
-      r += 1
+    graft.Rounds("priorityColoring", arcs.sparkSession) { rs =>
+      // the arc frame bounds every per-round frame; the count's fill is
+      // paid anyway at round 1's semi-joins
+      rs.gate(arcs.count())
+      val rot = rs.slot(kept = true)
+      var state = arcs.select(col("v")).distinct()
+        .select(col("v"), lit(-1).as("color"))
+      rs.loop(rounds) { r =>
+        // NOT persisted (r13): both consumers re-filter the already-
+        // checkpointed `state` — a cached-frame scan — and the persist's
+        // 32 block writes per round cost more than the recompute at any
+        // scale (state is always a materialized leaf here)
+        val undec = state.filter(col("color") === -1).select(col("v"))
+        val minNbr = arcs.join(undec, Seq("v"), "left_semi")
+          .join(undec.select(col("v").as("n")), Seq("n"), "left_semi")
+          .groupBy(col("v")).agg(min(prio(col("n"))).as("mn"))
+        val winners = undec.join(minNbr, Seq("v"), "left")
+          .filter(col("mn").isNull || prio(col("v")) < col("mn"))
+          .select(col("v"))
+        val round_ = state
+          .join(winners.withColumn("w", lit(1)), Seq("v"), "left")
+          .select(col("v"),
+            when(col("color") =!= -1, col("color"))
+              .when(col("w") === 1, lit(r - 1))
+              .otherwise(lit(-1)).as("color"))
+        // checkpoint rotation per round — the lubyMIS/hits law (the
+        // analyzer's self-join dedup clones the per-round subtrees
+        // exponentially otherwise). The remaining-uncolored count rides
+        // the checkpoint job (the semiSyncLpaLoop law) — early exit once
+        // fully colored is bit-identical to running the full budget (a
+        // winner needs an uncolored vertex), and the round IS its one
+        // checkpoint job.
+        val (next, n) = rot.observe(round_,
+          Seq(count(when(col("color") === -1, lit(1))).as("n")))
+        state = next
+        n.getLong(0)
+      }
+      state.select(col("v").as(GraphStore.VID), col("color"))
     }
-    state.select(col("v").as(GraphStore.VID), col("color"))
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -1847,74 +1833,75 @@ object GraphAnalytics {
   private def localMinMatchingLoop(ep: DataFrame, rounds: Int,
       what: String): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val liveR, matchedR = new graft.Rotation
-    // The matched output accumulates through its OWN checkpoint
-    // rotation (the boruvkaMst mst-slot shape) instead of a buffer of
-    // persisted per-round frames (r16-opt): the old shape left each
-    // round's `win` cache entry dependent on `vmin`, whose per-round
-    // unpersist drops the dependent's built data — the final union
-    // then recomputed early rounds through ALREADY-RELEASED live
-    // checkpoints (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND under static
-    // planning, latent before). A checkpointed accumulator is a leaf:
-    // nothing recomputes at output time.
-    var matched = ep.limit(0).select(col("s"), col("d"),
-      lit(0).as("round"))
-    // convergence-guarded (the r11 label-family law): "maximal" is a
-    // CLAIM — a fixed budget that stops with live edges left returns a
-    // non-maximal matching indistinguishable from a maximal one. Run
-    // until the live frame empties (every round matches >= 1 edge —
-    // the globally-minimum live edge always wins) or throw.
-    var r = 0
-    // Materialize the input edge frame ONCE (r16-opt): round 1 used to
-    // reference the raw `ep` plan 4 times (vmin, win, and both
-    // accumulator/removal rotations), re-running the caller's
-    // edge-derivation aggregation per reference; the checkpoint is one
-    // pass, its count rides the job AND doubles as the static-planning
-    // gate ([[graft.StaticPlan]]). The big-input pass itself runs
-    // BEFORE the law arms, so it keeps the session's AQE plan.
-    val (live1, n0) = liveR.observe(ep, Seq(count(lit(1)).as("n")))
-    var live = live1
-    var nLive = n0.getLong(0)
-    // per-round live counts ride the rotation job as a CollectMetrics
-    // observation (the semiSyncLpa one-job-per-round law) instead of a
-    // separate count job
-    graft.StaticPlan.withMeasured(ep.sparkSession, nLive) { bc =>
-    while (nLive > 0L) {
-      r += 1
-      if (r > rounds) throw new IllegalStateException(
-        s"$what: $nLive live edges remain after $rounds " +
-          "rounds — raise the budget; a truncated run is not maximal")
-      val inc = live.select(col("s").as("v"), col("p"))
-        .unionByName(live.select(col("d").as("v"), col("p")))
-      val vmin = inc.groupBy(col("v")).agg(min(col("p")).as("mn"))
-        .transform(graft.CacheScope.persist(_)) // joined at both ends
-      val win = live
-        .join(vmin.select(col("v").as("s"), col("mn").as("mns")),
-          Seq("s"))
-        .join(vmin.select(col("v").as("d"), col("mn").as("mnd")),
-          Seq("d"))
-        .filter(col("p") === col("mns") && col("p") === col("mnd"))
-        .select(col("s"), col("d"), lit(r).as("round"))
-        .transform(graft.CacheScope.persist(_)) // accumulator + removal
-      matched = matchedR(matched.unionByName(win))
-      val mv = win.select(col("s").as("v"))
-        .unionByName(win.select(col("d").as("v")))
-      val next0 = live
-        .join(mv.select(col("v").as("s")), Seq("s"), "left_anti")
-        .join(mv.select(col("v").as("d")), Seq("d"), "left_anti")
-        .select(col("s"), col("d"), col("p"))
-      // lineage break per round (lubyMIS law): the live frame feeds
-      // 5 consumers next round; checkpoint + release superseded blocks
-      val (next, n) = liveR.observe(next0, Seq(count(lit(1)).as("n")))
-      graft.CacheScope.unpersist(vmin)
-      graft.CacheScope.unpersist(win)
-      live = next
-      nLive = n.getLong(0)
+    graft.Rounds(what, ep.sparkSession) { rs =>
+      val liveR = rs.slot()
+      // The matched output accumulates through its OWN checkpoint
+      // rotation (the boruvkaMst mst-slot shape) instead of a buffer of
+      // persisted per-round frames (r16-opt): the old shape left each
+      // round's `win` cache entry dependent on `vmin`, whose per-round
+      // unpersist drops the dependent's built data — the final union
+      // then recomputed early rounds through ALREADY-RELEASED live
+      // checkpoints (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND under static
+      // planning, latent before). A checkpointed accumulator is a leaf:
+      // nothing recomputes at output time.
+      val matchedR = rs.slot(kept = true)
+      var matched = ep.limit(0).select(col("s"), col("d"),
+        lit(0).as("round"))
+      // Materialize the input edge frame ONCE (r16-opt): round 1 used
+      // to reference the raw `ep` plan 4 times (vmin, win, and both
+      // accumulator/removal rotations), re-running the caller's
+      // edge-derivation aggregation per reference; the checkpoint is
+      // one pass, its count rides the job AND doubles as the
+      // static-planning gate. The big-input pass itself runs BEFORE
+      // the law arms, so it keeps the session's AQE plan.
+      val (live1, n0) = liveR.observe(ep, Seq(count(lit(1)).as("n")))
+      var live = live1
+      rs.gate(n0.getLong(0))
+      // convergence-guarded (the r11 label-family law): "maximal" is a
+      // CLAIM — a fixed budget that stops with live edges left returns
+      // a non-maximal matching indistinguishable from a maximal one.
+      // Run until the live frame empties (every round matches >= 1
+      // edge — the globally-minimum live edge always wins) or throw.
+      // Edge-free input runs no round: the empty accumulator IS the
+      // maximal matching.
+      if (n0.getLong(0) > 0L) {
+        val trace = rs.loop(rounds) { r =>
+          val inc = live.select(col("s").as("v"), col("p"))
+            .unionByName(live.select(col("d").as("v"), col("p")))
+          val vmin = inc.groupBy(col("v")).agg(min(col("p")).as("mn"))
+            .transform(graft.CacheScope.persist(_)) // joined at both ends
+          val win = live
+            .join(vmin.select(col("v").as("s"), col("mn").as("mns")),
+              Seq("s"))
+            .join(vmin.select(col("v").as("d"), col("mn").as("mnd")),
+              Seq("d"))
+            .filter(col("p") === col("mns") && col("p") === col("mnd"))
+            .select(col("s"), col("d"), lit(r).as("round"))
+            .transform(graft.CacheScope.persist(_)) // accumulator + removal
+          matched = matchedR(matched.unionByName(win))
+          val mv = win.select(col("s").as("v"))
+            .unionByName(win.select(col("d").as("v")))
+          val next0 = live
+            .join(mv.select(col("v").as("s")), Seq("s"), "left_anti")
+            .join(mv.select(col("v").as("d")), Seq("d"), "left_anti")
+            .select(col("s"), col("d"), col("p"))
+          // lineage break per round (lubyMIS law): the live frame feeds
+          // 5 consumers next round; checkpoint + release superseded
+          // blocks. The live count rides the rotation job as a
+          // CollectMetrics observation (the semiSyncLpa
+          // one-job-per-round law) instead of a separate count job
+          val (next, n) = liveR.observe(next0, Seq(count(lit(1)).as("n")))
+          graft.CacheScope.unpersist(vmin)
+          graft.CacheScope.unpersist(win)
+          live = next
+          n.getLong(0)
+        }
+        if (trace.last._2 != 0L) throw new IllegalStateException(
+          s"$what: ${trace.last._2} live edges remain after $rounds " +
+            "rounds — raise the budget; a truncated run is not maximal")
+      }
+      matched.select(col("s").as("v"), col("d").as("mate"), col("round"))
     }
-    // Edge-free input: the while loop never runs and the empty
-    // accumulator IS the maximal matching.
-    matched.select(col("s").as("v"), col("d").as("mate"), col("round"))
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -2264,61 +2251,55 @@ object GraphAnalytics {
     val eByColor = e.join(colors.withColumnRenamed("v", "s"), Seq("s"))
       .select(col("s"), col("d"), col("color"))
       .transform(graft.CacheScope.persist(_))
-    // Measured gate for the static-planning law ([[graft.StaticPlan]],
-    // the generalized leiden AQE-off-when-measured-small law): the
-    // edge frame is the loop's largest, so its count bounds every
-    // frame a class step builds. One job over the persisted frame —
-    // the fill is paid anyway at the first class step.
-    val nEdges = eByColor.count()
-    graft.StaticPlan.withMeasured(e.sparkSession, nEdges) { bc =>
-    // init from the coloring's vertex set — identical to e's source
-    // set by the invariant above, and already materialized (saves the
-    // distinct-over-edges shuffle the r12 code paid here)
-    val rot = new graft.Rotation
-    var labels = rot(colors.select(col("v")).withColumn("label", col("v")))
-    val trace = collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var sweep = 0L
-    var sweepChanged = -1L
-    while (sweep < maxSweeps && sweepChanged != 0L) {
-      sweep += 1
-      sweepChanged = 0L
-      for (c <- present) {
-        // votes/argmax restricted to the class-c sources: only they
-        // can change this step, so voting anyone else is waste
-        val active = eByColor.filter(col("color") === c)
-        val votes = active.join(bc(labels), active("d") === labels("v"))
-          .groupBy(col("s"), col("label"))
-          .agg(count(lit(1)).as("n"))
-        // argmax by (n desc, label asc) as a combinable min-struct
-        // aggregate — same tie-break law as the sync loop's window,
-        // without the window's sort stage (labels are vertex ids,
-        // so -label orders ties ascending under min)
-        val best = votes
-          .groupBy(col("s"))
-          .agg(min(struct((-col("n")).as("nn"), col("label"))).as("m"))
-          .select(col("s").as("v"), col("m.label").as("blabel"))
-        // ONE job per step, total: the changed count rides the
-        // checkpoint job itself (an eager checkpoint executes through
-        // the SQL action path, so the metric fires with the
-        // materialization). r12 paid a full-vertex anti-join job per
-        // step; the first r13 cut made it a cached scan; this removes
-        // the second job entirely — the class step IS its checkpoint
-        // job now.
-        val (next, n) = rot.observe(
-          labels.join(best, Seq("v"), "left")
-            .select(col("v"),
-              coalesce(col("blabel"), col("label")).as("label"),
-              (col("blabel").isNotNull &&
-                col("blabel") =!= col("label")).as("chg")),
-          Seq(count(when(col("chg"), lit(1))).as("n")))
-        val changed = n.getLong(0)
-        labels = next.select(col("v"), col("label"))
-        sweepChanged += changed
-        trace += ((sweep, c.toLong, changed))
-      }
+    graft.Rounds("labelPropagationStable", e.sparkSession) { rs =>
+      // the edge frame is the loop's largest, so its count bounds every
+      // frame a class step builds. One job over the persisted frame —
+      // the fill is paid anyway at the first class step.
+      val bc = rs.gate(eByColor.count())
+      // init from the coloring's vertex set — identical to e's source
+      // set by the invariant above, and already materialized (saves the
+      // distinct-over-edges shuffle the r12 code paid here)
+      val rot = rs.slot(kept = true)
+      var labels = rot(colors.select(col("v")).withColumn("label", col("v")))
+      // one sweep is a class step per present color; it changed the sum
+      // of its steps' changes
+      val sweeps = rs.track(maxSweeps, "sweep") { _ =>
+        present.map { c =>
+          // votes/argmax restricted to the class-c sources: only they
+          // can change this step, so voting anyone else is waste
+          val active = eByColor.filter(col("color") === c)
+          val votes = active.join(bc(labels), active("d") === labels("v"))
+            .groupBy(col("s"), col("label"))
+            .agg(count(lit(1)).as("n"))
+          // argmax by (n desc, label asc) as a combinable min-struct
+          // aggregate — same tie-break law as the sync loop's window,
+          // without the window's sort stage (labels are vertex ids,
+          // so -label orders ties ascending under min)
+          val best = votes
+            .groupBy(col("s"))
+            .agg(min(struct((-col("n")).as("nn"), col("label"))).as("m"))
+            .select(col("s").as("v"), col("m.label").as("blabel"))
+          // ONE job per step, total: the changed count rides the
+          // checkpoint job itself (an eager checkpoint executes through
+          // the SQL action path, so the metric fires with the
+          // materialization). r12 paid a full-vertex anti-join job per
+          // step; the first r13 cut made it a cached scan; this removes
+          // the second job entirely — the class step IS its checkpoint
+          // job now.
+          val (next, n) = rot.observe(
+            labels.join(best, Seq("v"), "left")
+              .select(col("v"),
+                coalesce(col("blabel"), col("label")).as("label"),
+                (col("blabel").isNotNull &&
+                  col("blabel") =!= col("label")).as("chg")),
+            Seq(count(when(col("chg"), lit(1))).as("n")))
+          labels = next.select(col("v"), col("label"))
+          (c.toLong, n.getLong(0))
+        }
+      }(_.map(_._2).sum)
+      (labels, for ((sweep, steps) <- sweeps; (c, changed) <- steps)
+        yield (sweep, c, changed))
     }
-    (labels, trace.toSeq)
-    } // StaticPlan.withMeasured
   }
 
   private def labelPropagationLoop(store: GraphStore,
@@ -2332,40 +2313,34 @@ object GraphAnalytics {
       .unionByName(dirEdges.select(col("d").as("s"), col("s").as("d")))
       .distinct()
       .transform(graft.CacheScope.persist(_))
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = e.count()
-    graft.StaticPlan.withMeasured(e.sparkSession, nEdges) { bc =>
-    val rot = new graft.Rotation
-    var labels = rot(e.select(col("s").as("v")).distinct()
-      .withColumn("label", col("v")))
-    val trace = collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var round = 0L
-    var changed = -1L
-    while (round < maxIters && changed != 0L) {
-      round += 1
-      val votes = e.join(bc(labels), e("d") === labels("v"))
-        .groupBy(col("s"), col("label"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("s"))
-        .orderBy(col("n").desc, col("label"))
-      // lineage break per round (the bigStarLoop law): the round
-      // references `labels` twice (votes + the change flag); changed
-      // rides the checkpoint job as a CollectMetrics observation
-      val (next, n) = rot.observe(
-        votes.withColumn("_rk", row_number().over(w))
-          .filter(col("_rk") === 1)
-          .select(col("s").as("v"), col("label"))
-          .join(labels.select(col("v"), col("label").as("_prev")),
-            Seq("v"), "left"),
-        Seq(count(when(col("_prev").isNull ||
-          col("label") =!= col("_prev"), lit(1))).as("n")),
-        _.select(col("v"), col("label")))
-      changed = n.getLong(0)
-      labels = next
-      trace += ((round, changed))
+    graft.Rounds("labelPropagation", e.sparkSession) { rs =>
+      val bc = rs.gate(e.count())
+      val rot = rs.slot(kept = true)
+      var labels = rot(e.select(col("s").as("v")).distinct()
+        .withColumn("label", col("v")))
+      val trace = rs.loop(maxIters) { _ =>
+        val votes = e.join(bc(labels), e("d") === labels("v"))
+          .groupBy(col("s"), col("label"))
+          .agg(count(lit(1)).as("n"))
+        val w = Window.partitionBy(col("s"))
+          .orderBy(col("n").desc, col("label"))
+        // lineage break per round (the bigStarLoop law): the round
+        // references `labels` twice (votes + the change flag); changed
+        // rides the checkpoint job as a CollectMetrics observation
+        val (next, n) = rot.observe(
+          votes.withColumn("_rk", row_number().over(w))
+            .filter(col("_rk") === 1)
+            .select(col("s").as("v"), col("label"))
+            .join(labels.select(col("v"), col("label").as("_prev")),
+              Seq("v"), "left"),
+          Seq(count(when(col("_prev").isNull ||
+            col("label") =!= col("_prev"), lit(1))).as("n")),
+          _.select(col("v"), col("label")))
+        labels = next
+        n.getLong(0)
+      }
+      (labels, trace)
     }
-    (labels, trace.toSeq)
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -2413,40 +2388,34 @@ object GraphAnalytics {
     val e = edges.toDF("s", "d", "w")
       .transform(graft.CacheScope.persist(_))
     var dist = seeds.toDF("v").withColumn("dist", lit(0.0))
-    val rot = new graft.Rotation
-    val trace = collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var round = 0L
-    var changed = -1L
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = e.count()
-    graft.StaticPlan.withMeasured(spark, nEdges) { _ =>
-    while (round < maxIters && changed != 0L) {
-      round += 1
-      // lineage break per round: the round references `dist` three
-      // times (relax, union, change diff) — persist alone grows the
-      // analyzed plan ~3^rounds (the kCore stringification lesson).
-      // min-combine never worsens a distance, so "changed" is exactly
-      // the (v, dist) pairs absent from the previous frame (new vertex
-      // or strictly smaller double — bit-identical folds, see scaladoc)
-      // — computed as a flag INSIDE the checkpoint job and read via
-      // CollectMetrics (the semiSyncLpaLoop one-job-per-round law),
-      // not as a separate anti-join job.
-      val (relaxed, n) = rot.observe(
-        e.join(dist, e("s") === dist("v"))
-          .select(col("d").as("v"), (col("dist") + col("w")).as("dist"))
-          .unionByName(dist)
-          .groupBy("v").agg(min(col("dist")).as("dist"))
-          .join(dist.select(col("v"), col("dist").as("_prev")),
-            Seq("v"), "left"),
-        Seq(count(when(col("_prev").isNull ||
-          col("dist") =!= col("_prev"), lit(1))).as("n")),
-        _.select(col("v"), col("dist")))
-      changed = n.getLong(0)
-      dist = relaxed
-      trace += ((round, changed))
+    graft.Rounds("shortestPaths", spark) { rs =>
+      rs.gate(e.count())
+      val rot = rs.slot(kept = true)
+      val trace = rs.loop(maxIters) { _ =>
+        // lineage break per round: the round references `dist` three
+        // times (relax, union, change diff) — persist alone grows the
+        // analyzed plan ~3^rounds (the kCore stringification lesson).
+        // min-combine never worsens a distance, so "changed" is exactly
+        // the (v, dist) pairs absent from the previous frame (new vertex
+        // or strictly smaller double — bit-identical folds, see
+        // scaladoc) — computed as a flag INSIDE the checkpoint job and
+        // read via CollectMetrics (the semiSyncLpaLoop one-job-per-round
+        // law), not as a separate anti-join job.
+        val (relaxed, n) = rot.observe(
+          e.join(dist, e("s") === dist("v"))
+            .select(col("d").as("v"), (col("dist") + col("w")).as("dist"))
+            .unionByName(dist)
+            .groupBy("v").agg(min(col("dist")).as("dist"))
+            .join(dist.select(col("v"), col("dist").as("_prev")),
+              Seq("v"), "left"),
+          Seq(count(when(col("_prev").isNull ||
+            col("dist") =!= col("_prev"), lit(1))).as("n")),
+          _.select(col("v"), col("dist")))
+        dist = relaxed
+        n.getLong(0)
+      }
+      (dist, trace)
     }
-    (dist, trace.toSeq)
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -2497,36 +2466,30 @@ object GraphAnalytics {
       .transform(graft.CacheScope.persist(_))
     var arr = seeds.map(s => (s, s)).toDF("seed", "vid")
       .withColumn("arr_us", lit(0L))
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = e.count()
-    val rot = new graft.Rotation
-    val trace = collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var round = 0L
-    var changed = -1L
-    graft.StaticPlan.withMeasured(spark, nEdges) { _ =>
-    while (round < maxRounds && changed != 0L) {
-      round += 1
-      // lineage break per round (3 references to `arr`: relax, union,
-      // change diff); changed = appeared-or-improved (seed, vid)
-      // arrivals, flagged inside the checkpoint job and read via
-      // CollectMetrics (the shortestPathsLoop law)
-      val (relaxed, n) = rot.observe(
-        e.join(arr, e("s") === arr("vid") && e("t") >= col("arr_us"))
-          .select(col("seed"), col("d").as("vid"),
-            col("t").as("arr_us"))
-          .unionByName(arr)
-          .groupBy("seed", "vid").agg(min(col("arr_us")).as("arr_us"))
-          .join(arr.select(col("seed"), col("vid"),
-            col("arr_us").as("_prev")), Seq("seed", "vid"), "left"),
-        Seq(count(when(col("_prev").isNull ||
-          col("arr_us") =!= col("_prev"), lit(1))).as("n")),
-        _.select(col("seed"), col("vid"), col("arr_us")))
-      changed = n.getLong(0)
-      arr = relaxed
-      trace += ((round, changed))
+    graft.Rounds("earliestArrival", spark) { rs =>
+      rs.gate(e.count())
+      val rot = rs.slot(kept = true)
+      val trace = rs.loop(maxRounds) { _ =>
+        // lineage break per round (3 references to `arr`: relax, union,
+        // change diff); changed = appeared-or-improved (seed, vid)
+        // arrivals, flagged inside the checkpoint job and read via
+        // CollectMetrics (the shortestPathsLoop law)
+        val (relaxed, n) = rot.observe(
+          e.join(arr, e("s") === arr("vid") && e("t") >= col("arr_us"))
+            .select(col("seed"), col("d").as("vid"),
+              col("t").as("arr_us"))
+            .unionByName(arr)
+            .groupBy("seed", "vid").agg(min(col("arr_us")).as("arr_us"))
+            .join(arr.select(col("seed"), col("vid"),
+              col("arr_us").as("_prev")), Seq("seed", "vid"), "left"),
+          Seq(count(when(col("_prev").isNull ||
+            col("arr_us") =!= col("_prev"), lit(1))).as("n")),
+          _.select(col("seed"), col("vid"), col("arr_us")))
+        arr = relaxed
+        n.getLong(0)
+      }
+      (arr, trace)
     }
-    (arr, trace.toSeq)
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -2724,20 +2687,21 @@ object GraphAnalytics {
       .head()
     val gateRows = math.max(scalars.getLong(0),
       scalars.getLong(1) << b)
-    graft.StaticPlan.withMeasured(e.sparkSession, gateRows) { _ =>
-    val rot = new graft.Rotation
-    for (_ <- 1 to rounds) {
-      val prop = e.join(regs, regs("v") === e("d"))
-        .select(e("s").as("v"), col("reg"), col("max_rho"))
-        .unionByName(regs.select(col("v"), col("reg"), col("max_rho")))
-        .groupBy("v", "reg").agg(max(col("max_rho")).as("max_rho"))
-      // lineage break per round (each round embeds `regs` twice — the
-      // HITS law)
-      regs = rot(prop)
+    graft.Rounds("hyperBall", e.sparkSession) { rs =>
+      rs.gate(gateRows)
+      val rot = rs.slot(kept = true)
+      rs.times(rounds) { _ =>
+        val prop = e.join(regs, regs("v") === e("d"))
+          .select(e("s").as("v"), col("reg"), col("max_rho"))
+          .unionByName(regs.select(col("v"), col("reg"), col("max_rho")))
+          .groupBy("v", "reg").agg(max(col("max_rho")).as("max_rho"))
+        // lineage break per round (each round embeds `regs` twice — the
+        // HITS law)
+        regs = rot(prop)
+      }
+      graft.operators.Stats.hllEstimateBy(regs, Seq("v"), b)
+        .select(col("v"), col("n_regs"), col("est").as("est_ball"))
     }
-    graft.operators.Stats.hllEstimateBy(regs, Seq("v"), b)
-      .select(col("v"), col("n_regs"), col("est").as("est_ball"))
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -2788,33 +2752,34 @@ object GraphAnalytics {
     // register frames instead of one (still O(1); checkpoint blocks
     // are unrecoverable, so releasing under a running reader would
     // fail the job, not recompute). Each round gets its own slot.
-    graft.StaticPlan.withMeasured(e.sparkSession, gateRows) { _ =>
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    var pendingNf: Option[(Long, Future[Long], graft.Rotation)] = None
-    def harvest(): Unit = pendingNf.foreach { case (t, f, rot) =>
-      totals += ((t, Await.result(f, Duration.Inf)))
-      rot.release()
-      pendingNf = None
+    graft.Rounds("neighborhoodFunction", e.sparkSession) { rs =>
+      rs.gate(gateRows)
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      var pendingNf: Option[(Long, Future[Long], graft.Rotation)] = None
+      def harvest(): Unit = pendingNf.foreach { case (t, f, rot) =>
+        totals += ((t, Await.result(f, Duration.Inf)))
+        rot.release()
+        pendingNf = None
+      }
+      rs.times(rounds) { t =>
+        val prop = e.join(regs, regs("v") === e("d"))
+          .select(e("s").as("v"), col("reg"), col("max_rho"))
+          .unionByName(regs.select(col("v"), col("reg"), col("max_rho")))
+          .groupBy("v", "reg").agg(max(col("max_rho")).as("max_rho"))
+        // lineage break per round (the HITS law); release of the
+        // superseded round is deferred to harvest() (see above)
+        val rot = rs.slot()
+        val next = rot(prop)
+        harvest() // waits for nf(regs_{t-1}), then releases its blocks
+        // bound here: the Future's pool thread carries no armed scope
+        val armedNext = graft.StaticPlan.armed(next)
+        pendingNf = Some((t.toLong, Future(nf(armedNext)), rot))
+        regs = next
+      }
+      harvest()
     }
-    for (t <- 1 to rounds) {
-      val prop = e.join(regs, regs("v") === e("d"))
-        .select(e("s").as("v"), col("reg"), col("max_rho"))
-        .unionByName(regs.select(col("v"), col("reg"), col("max_rho")))
-        .groupBy("v", "reg").agg(max(col("max_rho")).as("max_rho"))
-      // lineage break per round (the HITS law); release of the
-      // superseded round is deferred to harvest() (see above)
-      val rot = new graft.Rotation
-      val next = rot(prop)
-      harvest() // waits for nf(regs_{t-1}), then releases its blocks
-      // bound here: the Future's pool thread carries no armed scope
-      val armedNext = graft.StaticPlan.armed(next)
-      pendingNf = Some((t.toLong, Future(nf(armedNext)), rot))
-      regs = next
-    }
-    harvest()
-    } // StaticPlan.withMeasured
     graft.CacheScope.unpersist(e)
     val last = totals.last._2
     val effT = totals.find(_._2 * 10L >= 9L * last).map(_._1).getOrElse(-1L)
@@ -2858,70 +2823,67 @@ object GraphAnalytics {
       bc: DataFrame => DataFrame = identity)
       : (DataFrame, Seq[(Long, Long)], graft.Rotation) = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val rot = new graft.Rotation
-    // materialize the canonical edge frame once: round 1 references it
-    // ~6 times through adj/mins/ls and would otherwise re-run the
-    // scan+distinct per reference; its size is observed off the same
-    // job (the symmetric-diff arithmetic below needs |cur| per round)
-    val (cur0, n0) = rot.observe(
-      edges.toDF("a", "b").filter(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("u"),
-          greatest(col("a"), col("b")).as("v"))
-        .distinct(),
-      Seq(count(lit(1)).as("n")))
-    var cur = cur0
-    var curCount = n0.getLong(0)
-    val trace = collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var round = 0L
-    var changed = -1L
-    // The observed initial edge count doubles as the static-planning
-    // gate ([[graft.StaticPlan]]); the law's hint composes with the
-    // caller's (a double broadcast hint is idempotent).
-    graft.StaticPlan.withMeasured(edges.sparkSession, curCount) { lawBc =>
-    val hint: DataFrame => DataFrame = df => lawBc(bc(df))
-    while (round < maxRounds && changed != 0L) {
-      round += 1
-      // large-star over both orientations
-      val adj = cur.select(col("u").as("c"), col("v").as("n"))
-        .unionByName(cur.select(col("v").as("c"), col("u").as("n")))
-      val mins = adj.groupBy("c").agg(min(col("n")).as("mn"))
-        .select(col("c"), least(col("c"), col("mn")).as("m"))
-      val ls = adj.join(hint(mins), "c").filter(col("n") > col("c"))
-        .select(least(col("n"), col("m")).as("u"),
-          greatest(col("n"), col("m")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // small-star on edges oriented n < c (u < v always holds here)
-      val adj2 = ls.select(col("v").as("c"), col("u").as("n"))
-      val mins2 = adj2.groupBy("c").agg(min(col("n")).as("m"))
-      val ss = adj2.join(hint(mins2), "c")
-        .select(col("m").as("u"), col("n").as("v"))
-        .filter(col("u") =!= col("v"))
-        .unionByName(mins2.select(col("m").as("u"), col("c").as("v")))
-        .distinct()
-      // Lineage break per round (the HITS law): one round references
-      // `cur` ~6 times through adj/mins/ls/adj2/mins2 and the analyzer
-      // CLONES the subtree per reference — exponential plan growth by
-      // round 4 without a checkpoint bottom-out. The fixpoint diff
-      // |curΔnext| = |cur| + |next| − 2·|cur∩next| rides the SAME job:
-      // both star frames are distinct sets, so the intersection is a
-      // left-join match count and |cur| is the previous round's
-      // observed |next| — one job per round, total.
-      val (next, row) = rot.observe(
-        ss.join(cur.select(col("u"), col("v"), lit(1).as("_old")),
-          Seq("u", "v"), "left"),
-        Seq(count(lit(1)).as("n"), count(col("_old")).as("inter")),
-        _.select(col("u"), col("v")))
-      val nextCount = row.getLong(0)
-      changed = curCount + nextCount - 2L * row.getLong(1)
-      curCount = nextCount
-      cur = next
-      trace += ((round, changed))
+    graft.Rounds("ccBigStar", edges.sparkSession) { rs =>
+      // the final frame stays pinned (callers consume it); its slot is
+      // returned so loop-embedded callers (leidenLevels) can release it
+      // once the derived labels are materialized
+      val rot = rs.slot(kept = true)
+      // materialize the canonical edge frame once: round 1 references it
+      // ~6 times through adj/mins/ls and would otherwise re-run the
+      // scan+distinct per reference; its size is observed off the same
+      // job (the symmetric-diff arithmetic below needs |cur| per round)
+      val (cur0, n0) = rot.observe(
+        edges.toDF("a", "b").filter(col("a") =!= col("b"))
+          .select(least(col("a"), col("b")).as("u"),
+            greatest(col("a"), col("b")).as("v"))
+          .distinct(),
+        Seq(count(lit(1)).as("n")))
+      var cur = cur0
+      var curCount = n0.getLong(0)
+      // The observed initial edge count doubles as the static-planning
+      // gate ([[graft.StaticPlan]]); the law's hint composes with the
+      // caller's (a double broadcast hint is idempotent).
+      val lawBc = rs.gate(curCount)
+      val hint: DataFrame => DataFrame = df => lawBc(bc(df))
+      val trace = rs.loop(maxRounds) { _ =>
+        // large-star over both orientations
+        val adj = cur.select(col("u").as("c"), col("v").as("n"))
+          .unionByName(cur.select(col("v").as("c"), col("u").as("n")))
+        val mins = adj.groupBy("c").agg(min(col("n")).as("mn"))
+          .select(col("c"), least(col("c"), col("mn")).as("m"))
+        val ls = adj.join(hint(mins), "c").filter(col("n") > col("c"))
+          .select(least(col("n"), col("m")).as("u"),
+            greatest(col("n"), col("m")).as("v"))
+          .filter(col("u") =!= col("v")).distinct()
+        // small-star on edges oriented n < c (u < v always holds here)
+        val adj2 = ls.select(col("v").as("c"), col("u").as("n"))
+        val mins2 = adj2.groupBy("c").agg(min(col("n")).as("m"))
+        val ss = adj2.join(hint(mins2), "c")
+          .select(col("m").as("u"), col("n").as("v"))
+          .filter(col("u") =!= col("v"))
+          .unionByName(mins2.select(col("m").as("u"), col("c").as("v")))
+          .distinct()
+        // Lineage break per round (the HITS law): one round references
+        // `cur` ~6 times through adj/mins/ls/adj2/mins2 and the analyzer
+        // CLONES the subtree per reference — exponential plan growth by
+        // round 4 without a checkpoint bottom-out. The fixpoint diff
+        // |curΔnext| = |cur| + |next| − 2·|cur∩next| rides the SAME job:
+        // both star frames are distinct sets, so the intersection is a
+        // left-join match count and |cur| is the previous round's
+        // observed |next| — one job per round, total.
+        val (next, row) = rot.observe(
+          ss.join(cur.select(col("u"), col("v"), lit(1).as("_old")),
+            Seq("u", "v"), "left"),
+          Seq(count(lit(1)).as("n"), count(col("_old")).as("inter")),
+          _.select(col("u"), col("v")))
+        val nextCount = row.getLong(0)
+        val changed = curCount + nextCount - 2L * row.getLong(1)
+        curCount = nextCount
+        cur = next
+        changed
+      }
+      (cur, trace, rot)
     }
-    } // StaticPlan.withMeasured
-    // the final frame stays pinned (callers consume it); its slot is
-    // returned so loop-embedded callers (leidenLevels) can release it
-    // once the derived labels are materialized
-    (cur, trace.toSeq, rot)
   }
 
   /** See [[bigStarLoop]]. Returns (_vid, component); throws if the
@@ -3261,147 +3223,145 @@ object GraphAnalytics {
       "maxLevels and roundsPerLevel must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    val gR, mapR, commR, degR, outR = new graft.Rotation
-    // u/v cast to long so the non-empty path's output schema matches
-    // the typed empty-input early return below for ANY input edge
-    // type (Int-typed edges used to make the two paths disagree)
-    var g = gR(edges.toDF("a", "b").filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).cast("long").as("u"),
-        greatest(col("a"), col("b")).cast("long").as("v"))
-      .distinct().select(col("u"), col("v"), lit(1L).as("w")))
-    // Empty canonicalized graph (no edges, or self-loops only): there
-    // is nothing to contract and modularity's aggregate row would carry
-    // null sums (NPE on getLong). The empty partition is the answer.
-    if (g.isEmpty) {
-      gR.release()
-      return Seq.empty[(Long, Long, Long, Long, Long)]
+    graft.Rounds(if (refine) "leidenLevels" else "louvainLevels", spark) { rs =>
+      val gR, mapR, commR, degR = rs.slot()
+      val outR = rs.slot(kept = true)
+      // u/v cast to long so the non-empty path's output schema matches
+      // the typed empty-input early return below for ANY input edge
+      // type (Int-typed edges used to make the two paths disagree)
+      var g = gR(edges.toDF("a", "b").filter(col("a") =!= col("b"))
+        .select(least(col("a"), col("b")).cast("long").as("u"),
+          greatest(col("a"), col("b")).cast("long").as("v"))
+        .distinct().select(col("u"), col("v"), lit(1L).as("w")))
+      // Empty canonicalized graph (no edges, or self-loops only): there
+      // is nothing to contract and modularity's aggregate row would carry
+      // null sums (NPE on getLong). The empty partition is the answer.
+      if (g.isEmpty) Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("level", "_vid", "community", "q_num", "q_den")
-    }
-    var mapping = mapR(
-      g.select(col("u").as("node")).union(g.select(col("v"))).distinct()
-        .select(col("node").as("_vid"), col("node")))
-    var out: Option[DataFrame] = None
-    var prevQ: Option[Long] = None
-    var level = 0
-    var stop = false
-    // AQE-off-when-measured-small — the job-floor law, now the shared
-    // [[graft.StaticPlan]] helper (r16-opt): same measured 500 k bound
-    // arming per LEVEL, same restore-on-every-exit-path, plus the
-    // helper's codegen-off (round-varying literals defeat the Janino
-    // cache, so every tiny rotation job paid a compile) and measured-
-    // row-derived partition count.
-    while (level < maxLevels && !stop) {
-      level += 1
-      var comm = commR(
-        g.select(col("u").as("x")).union(g.select(col("v"))).distinct()
-          .select(col("x"), col("x").as("c")))
-      // Level-invariant strengths + total weight, hoisted OUT of the
-      // per-round move (r14: deg/m2 were rebuilt — 2 joins + 3 aggs +
-      // a broadcast — inside every one of the 12 move rounds of a
-      // 3-level run). One checkpoint rotation + one scalar job per
-      // level replaces all of it; the same scalar job reads m2 AND the
-      // node count arming the law (capped leaf stats force SMJ
-      // everywhere and AQE pays a materialization job per exchange).
-      val deg = degR(strengthFrame(g, comm.select("x")))
-      val degStats = deg.agg(sum(col("k")).as("m2"),
-        count(lit(1)).as("n")).head()
-      val m2v = degStats.getLong(0)
-      graft.StaticPlan.withMeasured(spark, degStats.getLong(1)) { bc =>
-      // parity alternation (see scaladoc): only one round's vertex
-      // half applies its move; the other half keeps its community.
-      // Parity = md5 window of the id, NOT id mod 2: contracted
-      // levels inherit elected community ids whose low bit is
-      // structurally correlated (an all-even level made id-parity
-      // rounds alternately no-op and fully synchronous)
-      val par = pmod(conv(substring(md5(col("_vid").cast("string")),
-        1, 8), 16, 10).cast("long"), lit(2L))
-      // One rotation per round. NOTE (r12 measured): fusing round
-      // pairs into one plan per rotation (compose moveRound twice,
-      // rotate once) was tried and measured 2.6x WORSE at sf0.1
-      // (36.0 s vs 13.8 s) — the fused mid-state's ~5 references
-      // rehydrate through the cache for more than the saved job floor.
-      // Both inputs are checkpointed leaves here, so the in-call
-      // persists are skipped (persistInputs = false).
-      for (r <- 1 to roundsPerLevel) {
-        comm = commR(
-          louvainMoveWeighted(g, comm, persistInputs = false,
-            pre = Some((deg, m2v)), bc = bc)
-            .select(col("_vid").as("x"),
-              when(par === lit((r % 2).toLong),
-                col("new_c")).otherwise(col("old_c")).as("c")))
-      }
-      if (refine) {
-        // Leiden refinement: CC over the intra-community subgraph.
-        // Components never span communities, so min-vertex-id labels
-        // are globally consistent; vertices with no intra-community
-        // neighbor fall back to their own id (singleton component).
-        val intra = g.filter(col("u") =!= col("v"))
-          .join(comm.select(col("x").as("u"), col("c").as("cu")), "u")
-          .join(comm.select(col("x").as("v"), col("c").as("cv")), "v")
-          .filter(col("cu") === col("cv"))
-          .select(col("u").as("a"), col("v").as("b"))
-        val (stars, ccTrace, ccRot) = bigStarLoop(intra, maxRounds = 30, bc = bc)
-        if (ccTrace.nonEmpty && ccTrace.last._2 != 0L)
-          throw new IllegalStateException(
-            "leidenLevels: refinement CC did not converge in 30 star " +
-              s"rounds (last changed ${ccTrace.last._2}) — raise the " +
-              "budget; unrefined labels would void the connectivity " +
-              "guarantee")
-        val comp = stars
-          .select(col("v").as("x"), col("u").as("comp"))
-          .unionByName(
-            stars.select(col("u").as("x"), col("u").as("comp")))
-          .groupBy("x").agg(min(col("comp")).as("comp"))
-        comm = commR(comm.select(col("x"))
-          .join(comp, Seq("x"), "left")
-          .select(col("x"), coalesce(col("comp"), col("x")).as("c")))
-        ccRot.release()
-      }
-      // Annotate g with the level's FINAL labels ONCE; the modularity
-      // readout (intra weights) and the contraction both derive from
-      // this same community-keyed double join (r14 — they used to each
-      // re-join g against comm). deg/m2v are reused from the hoist:
-      // q_den = m2², q_num = Σ_c (2·m2·w_c − vol_c²), all exact.
-      val gAnno = graft.CacheScope.persist(g
-        .join(comm.select(col("x").as("u"), col("c").as("cu")), "u")
-        .join(comm.select(col("x").as("v"), col("c").as("cv")), "v"))
-      val vol = comm.join(deg, "x").groupBy(col("c"))
-        .agg(sum(col("k")).as("vol"))
-      val intraW = gAnno.filter(col("cu") === col("cv"))
-        .groupBy(col("cu").as("c")).agg(sum(col("w")).as("wc"))
-      val qNum = graft.StaticPlan.armed(vol.join(intraW, Seq("c"), "left"))
-        .na.fill(0L, Seq("wc"))
-        .agg(sum(lit(2L) * lit(m2v) * col("wc") -
-          col("vol") * col("vol")).as("q_num"))
-        .head().getLong(0) // one aggregated scalar row per level
-      val qDen = m2v * m2v
-      if (prevQ.exists(_ >= qNum)) stop = true
       else {
-        prevQ = Some(qNum)
-        // Rotate the mapping FIRST; the level's output rows are a
-        // projection of the rotated frame (r14 — the mapping⋈comm
-        // join used to run twice per level, once for each)
-        mapping = mapR(mapping
-          .join(comm.select(col("x").as("node"), col("c")), "node")
-          .select(col("_vid"), col("c").as("node")))
-        val lvlRows = mapping
-          .select(lit(level.toLong).as("level"), col("_vid"),
-            col("node").as("community"), lit(qNum).as("q_num"),
-            lit(qDen).as("q_den"))
-        out = Some(outR(
-          out.map(_.unionByName(lvlRows)).getOrElse(lvlRows)))
-        if (level < maxLevels) {
-          g = gR(gAnno
-            .select(least(col("cu"), col("cv")).as("u"),
-              greatest(col("cu"), col("cv")).as("v"), col("w"))
-            .groupBy("u", "v").agg(sum(col("w")).as("w")))
+        var mapping = mapR(
+          g.select(col("u").as("node")).union(g.select(col("v"))).distinct()
+            .select(col("node").as("_vid"), col("node")))
+        var out: Option[DataFrame] = None
+        var prevQ: Option[Long] = None
+        // AQE-off-when-measured-small — the job-floor law, now the shared
+        // [[graft.StaticPlan]] helper (r16-opt): same measured 500 k bound
+        // arming per LEVEL, same restore-on-every-exit-path, plus the
+        // helper's codegen-off (round-varying literals defeat the Janino
+        // cache, so every tiny rotation job paid a compile) and measured-
+        // row-derived partition count.
+        rs.loop(maxLevels, "level") { level =>
+          var comm = commR(
+            g.select(col("u").as("x")).union(g.select(col("v"))).distinct()
+              .select(col("x"), col("x").as("c")))
+          // Level-invariant strengths + total weight, hoisted OUT of the
+          // per-round move (r14: deg/m2 were rebuilt — 2 joins + 3 aggs +
+          // a broadcast — inside every one of the 12 move rounds of a
+          // 3-level run). One checkpoint rotation + one scalar job per
+          // level replaces all of it; the same scalar job reads m2 AND the
+          // node count arming the law (capped leaf stats force SMJ
+          // everywhere and AQE pays a materialization job per exchange).
+          val deg = degR(strengthFrame(g, comm.select("x")))
+          val degStats = deg.agg(sum(col("k")).as("m2"),
+            count(lit(1)).as("n")).head()
+          val m2v = degStats.getLong(0)
+          val bc = rs.gate(degStats.getLong(1))
+          // parity alternation (see scaladoc): only one round's vertex
+          // half applies its move; the other half keeps its community.
+          // Parity = md5 window of the id, NOT id mod 2: contracted
+          // levels inherit elected community ids whose low bit is
+          // structurally correlated (an all-even level made id-parity
+          // rounds alternately no-op and fully synchronous)
+          val par = pmod(conv(substring(md5(col("_vid").cast("string")),
+            1, 8), 16, 10).cast("long"), lit(2L))
+          // One rotation per round. NOTE (r12 measured): fusing round
+          // pairs into one plan per rotation (compose moveRound twice,
+          // rotate once) was tried and measured 2.6x WORSE at sf0.1
+          // (36.0 s vs 13.8 s) — the fused mid-state's ~5 references
+          // rehydrate through the cache for more than the saved job floor.
+          // Both inputs are checkpointed leaves here, so the in-call
+          // persists are skipped (persistInputs = false).
+          rs.times(roundsPerLevel) { r =>
+            comm = commR(
+              louvainMoveWeighted(g, comm, persistInputs = false,
+                pre = Some((deg, m2v)), bc = bc)
+                .select(col("_vid").as("x"),
+                  when(par === lit((r % 2).toLong),
+                    col("new_c")).otherwise(col("old_c")).as("c")))
+          }
+          if (refine) {
+            // Leiden refinement: CC over the intra-community subgraph.
+            // Components never span communities, so min-vertex-id labels
+            // are globally consistent; vertices with no intra-community
+            // neighbor fall back to their own id (singleton component).
+            val intra = g.filter(col("u") =!= col("v"))
+              .join(comm.select(col("x").as("u"), col("c").as("cu")), "u")
+              .join(comm.select(col("x").as("v"), col("c").as("cv")), "v")
+              .filter(col("cu") === col("cv"))
+              .select(col("u").as("a"), col("v").as("b"))
+            val (stars, ccTrace, ccRot) = bigStarLoop(intra, maxRounds = 30, bc = bc)
+            if (ccTrace.nonEmpty && ccTrace.last._2 != 0L)
+              throw new IllegalStateException(
+                "leidenLevels: refinement CC did not converge in 30 star " +
+                  s"rounds (last changed ${ccTrace.last._2}) — raise the " +
+                  "budget; unrefined labels would void the connectivity " +
+                  "guarantee")
+            val comp = stars
+              .select(col("v").as("x"), col("u").as("comp"))
+              .unionByName(
+                stars.select(col("u").as("x"), col("u").as("comp")))
+              .groupBy("x").agg(min(col("comp")).as("comp"))
+            comm = commR(comm.select(col("x"))
+              .join(comp, Seq("x"), "left")
+              .select(col("x"), coalesce(col("comp"), col("x")).as("c")))
+            ccRot.release()
+          }
+          // Annotate g with the level's FINAL labels ONCE; the modularity
+          // readout (intra weights) and the contraction both derive from
+          // this same community-keyed double join (r14 — they used to each
+          // re-join g against comm). deg/m2v are reused from the hoist:
+          // q_den = m2², q_num = Σ_c (2·m2·w_c − vol_c²), all exact.
+          val gAnno = graft.CacheScope.persist(g
+            .join(comm.select(col("x").as("u"), col("c").as("cu")), "u")
+            .join(comm.select(col("x").as("v"), col("c").as("cv")), "v"))
+          val vol = comm.join(deg, "x").groupBy(col("c"))
+            .agg(sum(col("k")).as("vol"))
+          val intraW = gAnno.filter(col("cu") === col("cv"))
+            .groupBy(col("cu").as("c")).agg(sum(col("w")).as("wc"))
+          val qNum = graft.StaticPlan.armed(vol.join(intraW, Seq("c"), "left"))
+            .na.fill(0L, Seq("wc"))
+            .agg(sum(lit(2L) * lit(m2v) * col("wc") -
+              col("vol") * col("vol")).as("q_num"))
+            .head().getLong(0) // one aggregated scalar row per level
+          val qDen = m2v * m2v
+          val improved = !prevQ.exists(_ >= qNum)
+          if (improved) {
+            prevQ = Some(qNum)
+            // Rotate the mapping FIRST; the level's output rows are a
+            // projection of the rotated frame (r14 — the mapping⋈comm
+            // join used to run twice per level, once for each)
+            mapping = mapR(mapping
+              .join(comm.select(col("x").as("node"), col("c")), "node")
+              .select(col("_vid"), col("c").as("node")))
+            val lvlRows = mapping
+              .select(lit(level.toLong).as("level"), col("_vid"),
+                col("node").as("community"), lit(qNum).as("q_num"),
+                lit(qDen).as("q_den"))
+            out = Some(outR(
+              out.map(_.unionByName(lvlRows)).getOrElse(lvlRows)))
+            if (level < maxLevels) {
+              g = gR(gAnno
+                .select(least(col("cu"), col("cv")).as("u"),
+                  greatest(col("cu"), col("cv")).as("v"), col("w"))
+                .groupBy("u", "v").agg(sum(col("w")).as("w")))
+            }
+          }
+          gAnno.unpersist(blocking = false)
+          if (improved) 1L else 0L
         }
+        out.get
       }
-      gAnno.unpersist(blocking = false)
-      } // StaticPlan.withMeasured (per level)
     }
-    Seq(gR, mapR, commR, degR).foreach(_.release())
-    out.get
   }
 
   /**
@@ -3455,311 +3415,307 @@ object GraphAnalytics {
     require(theta.forall(_ >= 1L), "theta must be >= 1 when set")
     val spark = edges.sparkSession
     import spark.implicits._
-    // every slot but `out`, whose frame the caller consumes
-    val gR, mapR, commR, degR, refR, seedR, outR = new graft.Rotation
-    def release(): Unit =
-      Seq(gR, mapR, commR, degR, refR, seedR).foreach(_.release())
-    var g = gR(edges.toDF("a", "b").filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).cast("long").as("u"),
-        greatest(col("a"), col("b")).cast("long").as("v"))
-      .distinct().select(col("u"), col("v"), lit(1L).as("w")))
-    if (g.isEmpty) {
-      release()
-      return Seq.empty[(Long, Long, Long, Long, Long)]
+    graft.Rounds("leidenFull", spark) { rs =>
+      val gR, mapR, commR, degR, refR, seedR = rs.slot()
+      // the caller consumes `out`'s frame
+      val outR = rs.slot(kept = true)
+      var g = gR(edges.toDF("a", "b").filter(col("a") =!= col("b"))
+        .select(least(col("a"), col("b")).cast("long").as("u"),
+          greatest(col("a"), col("b")).cast("long").as("v"))
+        .distinct().select(col("u"), col("v"), lit(1L).as("w")))
+      if (g.isEmpty) Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("level", "_vid", "community", "q_num", "q_den")
-    }
-    var mapping = mapR(g.select(col("u").as("node")).union(g.select(col("v"))).distinct()
-        .select(col("node").as("_vid"), col("node")))
-    // The aggregate-seeded initial partition of the CURRENT level's
-    // graph (None = singletons, level 1 only).
-    var seed: Option[DataFrame] = None
-    var out: Option[DataFrame] = None
-    var prevQ: Option[Long] = None
-    var level = 0
-    var stop = false
-    val parityOf = (c: org.apache.spark.sql.Column) =>
-      pmod(conv(substring(
-        md5(c.cast("string")), 1, 8), 16, 10).cast("long"), lit(2L))
-    // AQE-off-when-measured-small (r16, the job-floor cut the r15
-    // probe demanded): AQE's value is runtime re-planning of UNKNOWN-
-    // sized exchanges, and its cost here is one materialization JOB
-    // per exchange — the probe showed q_leiden_full's wall ≈ the sum
-    // of ~489 tiny sequential jobs. This loop's frames are MEASURED:
-    // when a level's vertex count is under the same 500 k bound that
-    // arms the broadcast hints, every join side is statically known
-    // broadcast-able, AQE has nothing left to discover, and static
-    // planning collapses each multi-exchange stage tree into one job.
-    // A 100 TB level-1 graph exceeds the bound and KEEPS AQE (skew
-    // joins, runtime coalescing — the cases AQE exists for). Results
-    // are identical either way — AQE never changes semantics. The
-    // prior value is restored on every exit path (the conf is session
-    // state; leaking "false" would strip AQE from unrelated queries).
-    // (The law now lives in the shared [[graft.StaticPlan]] helper —
-    // r16-opt — which adds codegen-off for the round-varying-literal
-    // compile floor and a measured-row-derived partition count; the
-    // arming bound and restore discipline are unchanged.)
-    while (level < maxLevels && !stop) {
-      level += 1
-      val verts = g.select(col("u").as("x")).union(g.select(col("v")))
-        .distinct()
-      var comm = commR(seed.getOrElse(
-        verts.select(col("x"), col("x").as("c"))))
-      val deg = degR(strengthFrame(g, comm.select("x")))
-      // ONE scalar job per level reads m2 AND the node count; the
-      // count arms static broadcast hints below (r15): rotated leaves
-      // carry capped "unknown" stats, so Catalyst plans every join as
-      // SMJ and AQE only discovers the tiny sides AFTER materializing
-      // each exchange as its own job — the measured floor was 663
-      // jobs/25 s for 3 levels of (vertex+community)-sized frames.
-      // The ENGINE knows the bound AQE can't see: when the level's
-      // vertex frame is measured small (contracted levels always are;
-      // a 100 TB level-1 graph exceeds the bound and keeps the
-      // shuffle plans), hint the vertex/community-sized join sides
-      // broadcast and the exchanges never exist. Results unchanged —
-      // hints only pick the physical join.
-      // Why a ROW bound is safe here (r15 ADVICE): every hinted side
-      // is one of the narrow fixed-shape frames this loop builds —
-      // (x,c)/(x,rc) pairs, (x,k) strengths, (c,volp)/(rc,volr,
-      // members,well) stats — 2-5 primitive long/bool columns, ≤ ~48
-      // bytes per unsafe row, so 500 k rows ≤ ~24 MB serialized:
-      // inside Spark's 8 GB broadcast-build limit by 300× and a
-      // rounding error against executor memory. The bound is NOT
-      // applied to arbitrary user frames; a wide-row frame never
-      // enters this family.
-      val degStats = deg.agg(sum(col("k")).as("m2"),
-        count(lit(1)).as("n")).head()
-      val m2v = degStats.getLong(0)
-      graft.StaticPlan.withMeasured(spark, degStats.getLong(1)) { bc =>
-      for (r <- 1 to roundsPerLevel) {
-        comm = commR(louvainMoveWeighted(g, comm, persistInputs = false,
-            pre = Some((deg, m2v)), bc = bc)
-            .select(col("_vid").as("x"),
-              when(parityOf(col("_vid")) === lit((r % 2).toLong),
-                col("new_c")).otherwise(col("old_c")).as("c")))
-      }
-      val p = comm // the level's unrefined partition P
-      // ---- phase 2: θ-sampled refinement inside each P-community ----
-      // intra-P non-self edges, annotated once and PERSISTED. This
-      // frame originally had to be checkpointed: each sweep embeds it
-      // ~6 times into a tree that itself nests, and with a live join
-      // lineage Catalyst's sizeInBytes estimation multiplied down
-      // every cloned subtree until the BigInt products ground the
-      // driver for minutes (jstack: SizeInBytesOnlyStatsPlanVisitor
-      // in ToomCook3 multiply). Since capCheckpointStats (wired into
-      // every graft.Rotation) caps the frozen leaf stats that fed
-      // that arithmetic, a plain persist suffices here — the sweep
-      // trees bottom out at the capped rotation leaves, so the
-      // products stay bounded, and persist avoids the extra
-      // materialization job a checkpoint would pay.
-      // r15 fusion: ONE community-annotated pass over g per level
-      // feeds BOTH the refinement's intra-P edge set AND the level
-      // readout's modularity numerator (gAnno replaces the separate
-      // gAnnoP the readout used to build from two more joins).
-      val gAnno = graft.CacheScope.persist(g
-        .join(bc(p.select(col("x").as("u"), col("c").as("cu"))), "u")
-        .join(bc(p.select(col("x").as("v"), col("c").as("cv"))), "v"))
-      val intraP = graft.CacheScope.persist(gAnno
-        .filter(col("u") =!= col("v"))
-        .filter(col("cu") === col("cv"))
-        .select(col("u"), col("v"), col("w"), col("cu").as("pc")))
-      val volP = p.join(deg, "x").groupBy(col("c"))
-        .agg(sum(col("k")).as("volp"))
-      // vertex well-connectedness: m2·w(v, C∖v) ≥ k_v·(vol_C − k_v)
-      val wvOwn = intraP.select(col("u").as("x"), col("w"))
-        .unionByName(intraP.select(col("v").as("x"), col("w")))
-        .groupBy("x").agg(sum(col("w")).as("wown"))
-      val wellV = graft.CacheScope.persist(p
-        .join(bc(deg), "x").join(bc(volP), "c")
-        .join(bc(wvOwn), Seq("x"), "left")
-        .select(col("x"),
-          (lit(m2v) * coalesce(col("wown"), lit(0L)) >=
-            col("k") * (col("volp") - col("k"))).as("well_v"),
-          col("c").as("pc"), col("volp")))
-      var ref = refR(verts.select(col("x"), col("x").as("rc")))
-      for (s <- 1 to mergeSweeps) {
-        val rSize = ref.join(bc(deg), "x").groupBy(col("rc"))
-          .agg(count(lit(1)).as("members"), sum(col("k")).as("volr"))
-        // cut(D, C∖D): intra-P edges whose endpoints sit in different
-        // refined communities contribute w to BOTH sides.
-        // r15 fusion: eR is embedded ~4× into the sweep plan (two
-        // unionByName clones each in cutR and wxD) — persist it so
-        // the intraP⋈ref⋈ref annotation runs once per sweep, not 4×.
-        val eR = graft.CacheScope.persist(intraP
-          .join(bc(ref.select(col("x").as("u"), col("rc").as("ru"))),
-            "u")
-          .join(bc(ref.select(col("x").as("v"), col("rc").as("rv"))),
-            "v"))
-        val cutR = eR.filter(col("ru") =!= col("rv"))
-          .select(col("ru").as("rc"), col("w"))
-          .unionByName(eR.filter(col("ru") =!= col("rv"))
-            .select(col("rv").as("rc"), col("w")))
-          .groupBy("rc").agg(sum(col("w")).as("cutr"))
-        // refined-community well-connectedness; the community label is
-        // a vertex id whose P-community is shared by all members
-        val wellR = rSize
-          .join(bc(wellV.select(col("x").as("rc"), col("volp"))), "rc")
-          .join(bc(cutR), Seq("rc"), "left")
-          .select(col("rc"), col("members"), col("volr"),
-            (lit(m2v) * coalesce(col("cutr"), lit(0L)) >=
-              col("volr") * (col("volp") - col("volr"))).as("well_r"))
-        // movers: still-singleton, well-connected, parity-gated
-        val movers = ref.join(bc(rSize), "rc")
-          .filter(col("rc") === col("x") && col("members") === 1L)
-          .join(bc(wellV.filter(col("well_v"))), "x")
-          .filter(parityOf(col("x")) === lit((s % 2).toLong))
-          .select(col("x"))
-        // positive-gain, well-connected adjacent targets; uniform
-        // θ→∞ draw = argmin md5(x:D)
-        val wxD = eR.filter(col("ru") =!= col("rv"))
-          .select(col("u").as("x"), col("rv").as("d"), col("w"))
-          .unionByName(eR.filter(col("ru") =!= col("rv"))
-            .select(col("v").as("x"), col("ru").as("d"), col("w")))
-          .groupBy("x", "d").agg(sum(col("w")).as("wxd"))
-        val cands = bc(movers).join(wxD, "x")
-          .join(bc(deg), "x")
-          .join(bc(wellR.select(col("rc").as("d"), col("volr"),
-            col("well_r"))), "d")
-          .filter(col("well_r") &&
-            lit(m2v) * col("wxd") - col("k") * col("volr") > lit(0L))
-        val chosen = theta match {
-          case None => cands
-            .groupBy("x")
-            .agg(min(struct(
-              md5(concat(col("x").cast("string"), lit(":"),
-                col("d").cast("string"))).as("coin"),
-              col("d").as("d"))).as("b"))
-            .select(col("x"), col("b.d").as("new_rc"))
-          case Some(t) =>
-            // finite-θ merge draw (Traag et al. 2019 eq. 4,
-            // Pr[D] ∝ exp(ΔQ/θ)) on the exact integer grid. Softmax
-            // is shift-invariant, so the dyadic realization anchors
-            // at the per-vertex MAX gain: e = (gmax − gain) div θ,
-            // weight = 2^(20 − min(20, e)) — the best candidate
-            // weighs 2^20 and every θ of gain deficit halves the
-            // weight (an absolute 2^(gain div θ) law measured DEAD
-            // on the gate fixture: gains cluster in a ±30 band
-            // ~1900, so any θ either capped every weight or zeroed
-            // every exponent — see PLANS.md r15 probe). The draw is
-            // a seeded md5 inverse-CDF over the (d asc) candidate
-            // order: u = md5('u:'level':'x':'sweep) on the 2^20
-            // grid, target = first d with cum·2^20 > u·tot. The
-            // LEVEL is part of the seed (r15 verdict Missing #4):
-            // without it the same (x, sweep) pair re-drew the same u
-            // at every level, so draws were not independent across
-            // levels as the paper's process implies. θ → ∞
-            // degenerates to gain-blind uniform (every weight 2^20);
-            // the θ→∞ GATE keeps its own argmin-md5 law — both are
-            // uniform draws, they just seed differently. Oracle
-            // replays this draw integer-for-integer.
-            // Quantization bound vs the continuous law (r15 verdict
-            // Missing #4): with δ = gmax − gain, the dyadic weight
-            // 2^(−floor(δ/θ)) stands in for the continuous 2^(−δ/θ)
-            // (base e vs 2 is a reparameterization: θ_here = θ_paper
-            // /ln 2). The floor keeps each weight within a factor of
-            // 2 of the continuous value, so every candidate's draw
-            // probability is within [1/2, 2]× its continuous-law
-            // probability; the 20-octave cutoff additionally zeroes
-            // candidates with δ ≥ 20θ, truncating relative tail mass
-            // ≤ fanout·2^-20 (< 1e-6 per unit fanout).
-            val wOrd = Window.partitionBy(col("x")).orderBy(col("d"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            val wAll = Window.partitionBy(col("x"))
-            cands
-              .withColumn("gain",
-                lit(m2v) * col("wxd") - col("k") * col("volr"))
-              .withColumn("gmax", max(col("gain")).over(wAll))
-              .withColumn("wgt", expr(
-                s"shiftleft(CAST(1 AS BIGINT), 20 - " +
-                  s"CAST(least(20L, (gmax - gain) div ${t}L) AS INT))"))
-              .withColumn("cum", sum(col("wgt")).over(wOrd))
-              .withColumn("tot", sum(col("wgt")).over(wAll))
-              .withColumn("u", pmod(conv(substring(md5(concat(
-                lit(s"u:$level:"), col("x").cast("string"),
-                lit(s":$s"))),
-                1, 8), 16, 10).cast("long"), lit(1048576L)))
-              .filter(col("cum") * lit(1048576L) >
-                col("u") * col("tot"))
-              .groupBy("x").agg(min(col("d")).as("new_rc"))
-        }
-        ref = refR(ref.join(bc(chosen), Seq("x"), "left")
-          .select(col("x"), coalesce(col("new_rc"), col("rc")).as("rc")))
-        graft.CacheScope.unpersist(eR) // next sweep re-annotates
-      }
-      // connectivity split: synchronous merges could in principle chase
-      // a vanished owner; CC over intra-refined edges restores
-      // guarantee 1 unconditionally (min-member labels)
-      val intraR = intraP
-        .join(bc(ref.select(col("x").as("u"), col("rc").as("ru"))),
-          "u")
-        .join(bc(ref.select(col("x").as("v"), col("rc").as("rv"))),
-          "v")
-        .filter(col("ru") === col("rv"))
-        .select(col("u").as("a"), col("v").as("b"))
-      val (stars, ccTrace, ccRot) = bigStarLoop(intraR, maxRounds = 30, bc = bc)
-      if (ccTrace.nonEmpty && ccTrace.last._2 != 0L)
-        throw new IllegalStateException(
-          "leidenFull: refinement CC did not converge in 30 star " +
-            s"rounds (last changed ${ccTrace.last._2})")
-      val comp = stars
-        .select(col("v").as("x"), col("u").as("comp"))
-        .unionByName(stars.select(col("u").as("x"), col("u").as("comp")))
-        .groupBy("x").agg(min(col("comp")).as("comp"))
-      ref = refR(ref.select(col("x"))
-        .join(bc(comp), Seq("x"), "left")
-        .select(col("x"), coalesce(col("comp"), col("x")).as("rc")))
-      ccRot.release()
-      // ---- level readout on P; aggregation on the refined labels ----
-      // (reads the level's shared gAnno annotation — self-loops kept:
-      // contracted levels carry intra weight on u == v rows — and
-      // reuses phase 2's volP aggregation instead of recomputing it)
-      val volPQ = volP.withColumnRenamed("volp", "vol")
-      val qNum = graft.StaticPlan.armed(volPQ
-        .join(bc(gAnno.filter(col("cu") === col("cv"))
-          .groupBy(col("cu").as("c")).agg(sum(col("w")).as("wc"))),
-          Seq("c"), "left"))
-        .na.fill(0L, Seq("wc"))
-        .agg(sum(lit(2L) * lit(m2v) * col("wc") -
-          col("vol") * col("vol")).as("q_num"))
-        .head().getLong(0)
-      val qDen = m2v * m2v
-      if (prevQ.exists(_ >= qNum)) stop = true
       else {
-        prevQ = Some(qNum)
-        val lvlRows = mapping
-          .join(bc(p.select(col("x").as("node"), col("c"))), "node")
-          .select(lit(level.toLong).as("level"), col("_vid"),
-            col("c").as("community"), lit(qNum).as("q_num"),
-            lit(qDen).as("q_den"))
-        out = Some(outR(out.map(_.unionByName(lvlRows)).getOrElse(lvlRows)))
-        if (level < maxLevels) {
-          // next level: aggregate on REFINED labels, seed from P
-          mapping = mapR(mapping
-            .join(bc(ref.select(col("x").as("node"), col("rc"))),
-              "node")
-            .select(col("_vid"), col("rc").as("node")))
-          val gAnnoR = g
+        var mapping = mapR(g.select(col("u").as("node")).union(g.select(col("v"))).distinct()
+            .select(col("node").as("_vid"), col("node")))
+        // The aggregate-seeded initial partition of the CURRENT level's
+        // graph (None = singletons, level 1 only).
+        var seed: Option[DataFrame] = None
+        var out: Option[DataFrame] = None
+        var prevQ: Option[Long] = None
+        val parityOf = (c: org.apache.spark.sql.Column) =>
+          pmod(conv(substring(
+            md5(c.cast("string")), 1, 8), 16, 10).cast("long"), lit(2L))
+        // AQE-off-when-measured-small (r16, the job-floor cut the r15
+        // probe demanded): AQE's value is runtime re-planning of UNKNOWN-
+        // sized exchanges, and its cost here is one materialization JOB
+        // per exchange — the probe showed q_leiden_full's wall ≈ the sum
+        // of ~489 tiny sequential jobs. This loop's frames are MEASURED:
+        // when a level's vertex count is under the same 500 k bound that
+        // arms the broadcast hints, every join side is statically known
+        // broadcast-able, AQE has nothing left to discover, and static
+        // planning collapses each multi-exchange stage tree into one job.
+        // A 100 TB level-1 graph exceeds the bound and KEEPS AQE (skew
+        // joins, runtime coalescing — the cases AQE exists for). Results
+        // are identical either way — AQE never changes semantics. The
+        // prior value is restored on every exit path (the conf is session
+        // state; leaking "false" would strip AQE from unrelated queries).
+        // (The law now lives in the shared [[graft.StaticPlan]] helper —
+        // r16-opt — which adds codegen-off for the round-varying-literal
+        // compile floor and a measured-row-derived partition count; the
+        // arming bound and restore discipline are unchanged.)
+        rs.loop(maxLevels, "level") { level =>
+          val verts = g.select(col("u").as("x")).union(g.select(col("v")))
+            .distinct()
+          var comm = commR(seed.getOrElse(
+            verts.select(col("x"), col("x").as("c"))))
+          val deg = degR(strengthFrame(g, comm.select("x")))
+          // ONE scalar job per level reads m2 AND the node count; the
+          // count arms static broadcast hints below (r15): rotated leaves
+          // carry capped "unknown" stats, so Catalyst plans every join as
+          // SMJ and AQE only discovers the tiny sides AFTER materializing
+          // each exchange as its own job — the measured floor was 663
+          // jobs/25 s for 3 levels of (vertex+community)-sized frames.
+          // The ENGINE knows the bound AQE can't see: when the level's
+          // vertex frame is measured small (contracted levels always are;
+          // a 100 TB level-1 graph exceeds the bound and keeps the
+          // shuffle plans), hint the vertex/community-sized join sides
+          // broadcast and the exchanges never exist. Results unchanged —
+          // hints only pick the physical join.
+          // Why a ROW bound is safe here (r15 ADVICE): every hinted side
+          // is one of the narrow fixed-shape frames this loop builds —
+          // (x,c)/(x,rc) pairs, (x,k) strengths, (c,volp)/(rc,volr,
+          // members,well) stats — 2-5 primitive long/bool columns, ≤ ~48
+          // bytes per unsafe row, so 500 k rows ≤ ~24 MB serialized:
+          // inside Spark's 8 GB broadcast-build limit by 300× and a
+          // rounding error against executor memory. The bound is NOT
+          // applied to arbitrary user frames; a wide-row frame never
+          // enters this family.
+          val degStats = deg.agg(sum(col("k")).as("m2"),
+            count(lit(1)).as("n")).head()
+          val m2v = degStats.getLong(0)
+          val bc = rs.gate(degStats.getLong(1))
+          rs.times(roundsPerLevel) { r =>
+            comm = commR(louvainMoveWeighted(g, comm, persistInputs = false,
+                pre = Some((deg, m2v)), bc = bc)
+                .select(col("_vid").as("x"),
+                  when(parityOf(col("_vid")) === lit((r % 2).toLong),
+                    col("new_c")).otherwise(col("old_c")).as("c")))
+          }
+          val p = comm // the level's unrefined partition P
+          // ---- phase 2: θ-sampled refinement inside each P-community ----
+          // intra-P non-self edges, annotated once and PERSISTED. This
+          // frame originally had to be checkpointed: each sweep embeds it
+          // ~6 times into a tree that itself nests, and with a live join
+          // lineage Catalyst's sizeInBytes estimation multiplied down
+          // every cloned subtree until the BigInt products ground the
+          // driver for minutes (jstack: SizeInBytesOnlyStatsPlanVisitor
+          // in ToomCook3 multiply). Since capCheckpointStats (wired into
+          // every graft.Rotation) caps the frozen leaf stats that fed
+          // that arithmetic, a plain persist suffices here — the sweep
+          // trees bottom out at the capped rotation leaves, so the
+          // products stay bounded, and persist avoids the extra
+          // materialization job a checkpoint would pay.
+          // r15 fusion: ONE community-annotated pass over g per level
+          // feeds BOTH the refinement's intra-P edge set AND the level
+          // readout's modularity numerator (gAnno replaces the separate
+          // gAnnoP the readout used to build from two more joins).
+          val gAnno = graft.CacheScope.persist(g
+            .join(bc(p.select(col("x").as("u"), col("c").as("cu"))), "u")
+            .join(bc(p.select(col("x").as("v"), col("c").as("cv"))), "v"))
+          val intraP = graft.CacheScope.persist(gAnno
+            .filter(col("u") =!= col("v"))
+            .filter(col("cu") === col("cv"))
+            .select(col("u"), col("v"), col("w"), col("cu").as("pc")))
+          val volP = p.join(deg, "x").groupBy(col("c"))
+            .agg(sum(col("k")).as("volp"))
+          // vertex well-connectedness: m2·w(v, C∖v) ≥ k_v·(vol_C − k_v)
+          val wvOwn = intraP.select(col("u").as("x"), col("w"))
+            .unionByName(intraP.select(col("v").as("x"), col("w")))
+            .groupBy("x").agg(sum(col("w")).as("wown"))
+          val wellV = graft.CacheScope.persist(p
+            .join(bc(deg), "x").join(bc(volP), "c")
+            .join(bc(wvOwn), Seq("x"), "left")
+            .select(col("x"),
+              (lit(m2v) * coalesce(col("wown"), lit(0L)) >=
+                col("k") * (col("volp") - col("k"))).as("well_v"),
+              col("c").as("pc"), col("volp")))
+          var ref = refR(verts.select(col("x"), col("x").as("rc")))
+          rs.times(mergeSweeps, "sweep") { s =>
+            val rSize = ref.join(bc(deg), "x").groupBy(col("rc"))
+              .agg(count(lit(1)).as("members"), sum(col("k")).as("volr"))
+            // cut(D, C∖D): intra-P edges whose endpoints sit in different
+            // refined communities contribute w to BOTH sides.
+            // r15 fusion: eR is embedded ~4× into the sweep plan (two
+            // unionByName clones each in cutR and wxD) — persist it so
+            // the intraP⋈ref⋈ref annotation runs once per sweep, not 4×.
+            val eR = graft.CacheScope.persist(intraP
+              .join(bc(ref.select(col("x").as("u"), col("rc").as("ru"))),
+                "u")
+              .join(bc(ref.select(col("x").as("v"), col("rc").as("rv"))),
+                "v"))
+            val cutR = eR.filter(col("ru") =!= col("rv"))
+              .select(col("ru").as("rc"), col("w"))
+              .unionByName(eR.filter(col("ru") =!= col("rv"))
+                .select(col("rv").as("rc"), col("w")))
+              .groupBy("rc").agg(sum(col("w")).as("cutr"))
+            // refined-community well-connectedness; the community label is
+            // a vertex id whose P-community is shared by all members
+            val wellR = rSize
+              .join(bc(wellV.select(col("x").as("rc"), col("volp"))), "rc")
+              .join(bc(cutR), Seq("rc"), "left")
+              .select(col("rc"), col("members"), col("volr"),
+                (lit(m2v) * coalesce(col("cutr"), lit(0L)) >=
+                  col("volr") * (col("volp") - col("volr"))).as("well_r"))
+            // movers: still-singleton, well-connected, parity-gated
+            val movers = ref.join(bc(rSize), "rc")
+              .filter(col("rc") === col("x") && col("members") === 1L)
+              .join(bc(wellV.filter(col("well_v"))), "x")
+              .filter(parityOf(col("x")) === lit((s % 2).toLong))
+              .select(col("x"))
+            // positive-gain, well-connected adjacent targets; uniform
+            // θ→∞ draw = argmin md5(x:D)
+            val wxD = eR.filter(col("ru") =!= col("rv"))
+              .select(col("u").as("x"), col("rv").as("d"), col("w"))
+              .unionByName(eR.filter(col("ru") =!= col("rv"))
+                .select(col("v").as("x"), col("ru").as("d"), col("w")))
+              .groupBy("x", "d").agg(sum(col("w")).as("wxd"))
+            val cands = bc(movers).join(wxD, "x")
+              .join(bc(deg), "x")
+              .join(bc(wellR.select(col("rc").as("d"), col("volr"),
+                col("well_r"))), "d")
+              .filter(col("well_r") &&
+                lit(m2v) * col("wxd") - col("k") * col("volr") > lit(0L))
+            val chosen = theta match {
+              case None => cands
+                .groupBy("x")
+                .agg(min(struct(
+                  md5(concat(col("x").cast("string"), lit(":"),
+                    col("d").cast("string"))).as("coin"),
+                  col("d").as("d"))).as("b"))
+                .select(col("x"), col("b.d").as("new_rc"))
+              case Some(t) =>
+                // finite-θ merge draw (Traag et al. 2019 eq. 4,
+                // Pr[D] ∝ exp(ΔQ/θ)) on the exact integer grid. Softmax
+                // is shift-invariant, so the dyadic realization anchors
+                // at the per-vertex MAX gain: e = (gmax − gain) div θ,
+                // weight = 2^(20 − min(20, e)) — the best candidate
+                // weighs 2^20 and every θ of gain deficit halves the
+                // weight (an absolute 2^(gain div θ) law measured DEAD
+                // on the gate fixture: gains cluster in a ±30 band
+                // ~1900, so any θ either capped every weight or zeroed
+                // every exponent — see PLANS.md r15 probe). The draw is
+                // a seeded md5 inverse-CDF over the (d asc) candidate
+                // order: u = md5('u:'level':'x':'sweep) on the 2^20
+                // grid, target = first d with cum·2^20 > u·tot. The
+                // LEVEL is part of the seed (r15 verdict Missing #4):
+                // without it the same (x, sweep) pair re-drew the same u
+                // at every level, so draws were not independent across
+                // levels as the paper's process implies. θ → ∞
+                // degenerates to gain-blind uniform (every weight 2^20);
+                // the θ→∞ GATE keeps its own argmin-md5 law — both are
+                // uniform draws, they just seed differently. Oracle
+                // replays this draw integer-for-integer.
+                // Quantization bound vs the continuous law (r15 verdict
+                // Missing #4): with δ = gmax − gain, the dyadic weight
+                // 2^(−floor(δ/θ)) stands in for the continuous 2^(−δ/θ)
+                // (base e vs 2 is a reparameterization: θ_here = θ_paper
+                // /ln 2). The floor keeps each weight within a factor of
+                // 2 of the continuous value, so every candidate's draw
+                // probability is within [1/2, 2]× its continuous-law
+                // probability; the 20-octave cutoff additionally zeroes
+                // candidates with δ ≥ 20θ, truncating relative tail mass
+                // ≤ fanout·2^-20 (< 1e-6 per unit fanout).
+                val wOrd = Window.partitionBy(col("x")).orderBy(col("d"))
+                  .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+                val wAll = Window.partitionBy(col("x"))
+                cands
+                  .withColumn("gain",
+                    lit(m2v) * col("wxd") - col("k") * col("volr"))
+                  .withColumn("gmax", max(col("gain")).over(wAll))
+                  .withColumn("wgt", expr(
+                    s"shiftleft(CAST(1 AS BIGINT), 20 - " +
+                      s"CAST(least(20L, (gmax - gain) div ${t}L) AS INT))"))
+                  .withColumn("cum", sum(col("wgt")).over(wOrd))
+                  .withColumn("tot", sum(col("wgt")).over(wAll))
+                  .withColumn("u", pmod(conv(substring(md5(concat(
+                    lit(s"u:$level:"), col("x").cast("string"),
+                    lit(s":$s"))),
+                    1, 8), 16, 10).cast("long"), lit(1048576L)))
+                  .filter(col("cum") * lit(1048576L) >
+                    col("u") * col("tot"))
+                  .groupBy("x").agg(min(col("d")).as("new_rc"))
+            }
+            ref = refR(ref.join(bc(chosen), Seq("x"), "left")
+              .select(col("x"), coalesce(col("new_rc"), col("rc")).as("rc")))
+            graft.CacheScope.unpersist(eR) // next sweep re-annotates
+          }
+          // connectivity split: synchronous merges could in principle chase
+          // a vanished owner; CC over intra-refined edges restores
+          // guarantee 1 unconditionally (min-member labels)
+          val intraR = intraP
             .join(bc(ref.select(col("x").as("u"), col("rc").as("ru"))),
               "u")
             .join(bc(ref.select(col("x").as("v"), col("rc").as("rv"))),
               "v")
-          g = gR(gAnnoR
-            .select(least(col("ru"), col("rv")).as("u"),
-              greatest(col("ru"), col("rv")).as("v"), col("w"))
-            .groupBy("u", "v").agg(sum(col("w")).as("w")))
-          // refined label rc IS a member vertex id; its P community
-          // seeds the aggregated node (guarantee-3 seeding)
-          seed = Some(seedR(ref.select(col("rc")).distinct()
-              .join(bc(p.select(col("x").as("rc"), col("c"))), "rc")
-              .select(col("rc").as("x"), col("c"))))
+            .filter(col("ru") === col("rv"))
+            .select(col("u").as("a"), col("v").as("b"))
+          val (stars, ccTrace, ccRot) = bigStarLoop(intraR, maxRounds = 30, bc = bc)
+          if (ccTrace.nonEmpty && ccTrace.last._2 != 0L)
+            throw new IllegalStateException(
+              "leidenFull: refinement CC did not converge in 30 star " +
+                s"rounds (last changed ${ccTrace.last._2})")
+          val comp = stars
+            .select(col("v").as("x"), col("u").as("comp"))
+            .unionByName(stars.select(col("u").as("x"), col("u").as("comp")))
+            .groupBy("x").agg(min(col("comp")).as("comp"))
+          ref = refR(ref.select(col("x"))
+            .join(bc(comp), Seq("x"), "left")
+            .select(col("x"), coalesce(col("comp"), col("x")).as("rc")))
+          ccRot.release()
+          // ---- level readout on P; aggregation on the refined labels ----
+          // (reads the level's shared gAnno annotation — self-loops kept:
+          // contracted levels carry intra weight on u == v rows — and
+          // reuses phase 2's volP aggregation instead of recomputing it)
+          val volPQ = volP.withColumnRenamed("volp", "vol")
+          val qNum = graft.StaticPlan.armed(volPQ
+            .join(bc(gAnno.filter(col("cu") === col("cv"))
+              .groupBy(col("cu").as("c")).agg(sum(col("w")).as("wc"))),
+              Seq("c"), "left"))
+            .na.fill(0L, Seq("wc"))
+            .agg(sum(lit(2L) * lit(m2v) * col("wc") -
+              col("vol") * col("vol")).as("q_num"))
+            .head().getLong(0)
+          val qDen = m2v * m2v
+          val improved = !prevQ.exists(_ >= qNum)
+          if (improved) {
+            prevQ = Some(qNum)
+            val lvlRows = mapping
+              .join(bc(p.select(col("x").as("node"), col("c"))), "node")
+              .select(lit(level.toLong).as("level"), col("_vid"),
+                col("c").as("community"), lit(qNum).as("q_num"),
+                lit(qDen).as("q_den"))
+            out = Some(outR(out.map(_.unionByName(lvlRows)).getOrElse(lvlRows)))
+            if (level < maxLevels) {
+              // next level: aggregate on REFINED labels, seed from P
+              mapping = mapR(mapping
+                .join(bc(ref.select(col("x").as("node"), col("rc"))),
+                  "node")
+                .select(col("_vid"), col("rc").as("node")))
+              val gAnnoR = g
+                .join(bc(ref.select(col("x").as("u"), col("rc").as("ru"))),
+                  "u")
+                .join(bc(ref.select(col("x").as("v"), col("rc").as("rv"))),
+                  "v")
+              g = gR(gAnnoR
+                .select(least(col("ru"), col("rv")).as("u"),
+                  greatest(col("ru"), col("rv")).as("v"), col("w"))
+                .groupBy("u", "v").agg(sum(col("w")).as("w")))
+              // refined label rc IS a member vertex id; its P community
+              // seeds the aggregated node (guarantee-3 seeding)
+              seed = Some(seedR(ref.select(col("rc")).distinct()
+                  .join(bc(p.select(col("x").as("rc"), col("c"))), "rc")
+                  .select(col("rc").as("x"), col("c"))))
+            }
+          }
+          intraP.unpersist(blocking = false)
+          wellV.unpersist(blocking = false)
+          gAnno.unpersist(blocking = false)
+          if (improved) 1L else 0L
         }
+        out.get
       }
-      intraP.unpersist(blocking = false)
-      wellV.unpersist(blocking = false)
-      gAnno.unpersist(blocking = false)
-      } // StaticPlan.withMeasured (per level)
     }
-    release()
-    out.get
   }
 
   /**
@@ -3863,30 +3819,30 @@ object GraphAnalytics {
     // Measured gate for the static-planning law ([[graft.StaticPlan]])
     val nEdges = weighted.count()
     graft.StaticPlan.withMeasured(spark, nEdges) { bc =>
-    for (i <- 1 to iters) {
-      val msgs = messages(weighted, ranks, bc, col("r") / col("ws"))
-      val delta = dyadic(abs(col("r") - col("r0")))
-      // The residual scalars ride the superstep's own materialization
-      // job as a CollectMetrics observation (the semiSyncLpa law) —
-      // the inner join against the previous ranks keeps every vertex
-      // (both frames carry the identical vertex set by construction),
-      // so the observed frame's (v, r) rows ARE the superstep result;
-      // r16-opt: this replaces a second per-iteration job that re-ran
-      // the vertex join for two scalars. Persisted, not checkpointed:
-      // a round's two joins on the cached ranks share one broadcast;
-      // two scans of a checkpoint broadcast twice, one job more.
-      val (observed, residuals) = graft.Rotation.observed(
-        vs.join(bc(msgs), col("v") === col("mv"), "left")
-          .select(col("v"),
-            (lit(resetProb) + lit(1 - resetProb) *
-              coalesce(col("ms"), lit(0.0))).as("r"))
-          .join(bc(ranks.select(col("v"), col("r").as("r0"))), Seq("v")),
-        Seq(sum(delta).as("l1"), max(delta).as("mx")))
-      ranks = advance(Some(ranks), observed.select(col("v"), col("r")))
-      val res = residuals()
-      out += ((i.toLong, res.getDouble(0), res.getDouble(1)))
+      for (i <- 1 to iters) {
+        val msgs = messages(weighted, ranks, bc, col("r") / col("ws"))
+        val delta = dyadic(abs(col("r") - col("r0")))
+        // The residual scalars ride the superstep's own materialization
+        // job as a CollectMetrics observation (the semiSyncLpa law) —
+        // the inner join against the previous ranks keeps every vertex
+        // (both frames carry the identical vertex set by construction),
+        // so the observed frame's (v, r) rows ARE the superstep result;
+        // r16-opt: this replaces a second per-iteration job that re-ran
+        // the vertex join for two scalars. Persisted, not checkpointed:
+        // a round's two joins on the cached ranks share one broadcast;
+        // two scans of a checkpoint broadcast twice, one job more.
+        val (observed, residuals) = graft.Rotation.observed(
+          vs.join(bc(msgs), col("v") === col("mv"), "left")
+            .select(col("v"),
+              (lit(resetProb) + lit(1 - resetProb) *
+                coalesce(col("ms"), lit(0.0))).as("r"))
+            .join(bc(ranks.select(col("v"), col("r").as("r0"))), Seq("v")),
+          Seq(sum(delta).as("l1"), max(delta).as("mx")))
+        ranks = advance(Some(ranks), observed.select(col("v"), col("r")))
+        val res = residuals()
+        out += ((i.toLong, res.getDouble(0), res.getDouble(1)))
+      }
     }
-    } // StaticPlan.withMeasured
     import spark.implicits._
     val df = out.toSeq.toDF("iter", "l1_residual", "max_delta")
     df.select(col("iter"), quant(col("l1_residual"), 6).as("l1_residual"),
@@ -3994,48 +3950,46 @@ object GraphAnalytics {
     // contiguous ids don't stripe)
     val hashPart = pmod(conv(substring(md5(col("x").cast("string")),
       1, 8), 16, 10).cast("long"), lit(k.toLong))
-    val rot = new graft.Rotation
-    var parts = rot(
-      und.select(col("u").as("x")).union(und.select(col("v"))).distinct()
-        .select(col("x"), hashPart.as("p")))
-    val nVerts = parts.count() // once; loads are k-row frames after
-    // Measured gate for the static-planning law ([[graft.StaticPlan]]):
-    // the adjacency (2·edges) bounds every per-round frame
-    val nUnd = und.count()
-    val parity = pmod(conv(substring(md5(col("x").cast("string")),
-      9, 8), 16, 10).cast("long"), lit(2L))
-    graft.StaticPlan.withMeasured(spark,
-      math.max(nVerts, 2L * nUnd)) { _ =>
-    for (r <- 1 to rounds) {
-      val load = parts.groupBy(col("p")).agg(count(lit(1)).as("load"))
-      val nvp = adj.join(parts.select(col("x").as("n"), col("p")), "n")
-        .groupBy(col("x"), col("p")).agg(count(lit(1)).as("nv"))
-      val own = parts.select(col("x"), col("p").as("p_own"))
-      val ownNv = nvp.toDF("x", "p_own", "nv")
-        .join(own, Seq("x", "p_own"))
-        .select(col("x"), col("nv").as("nv_own"))
-      val best = nvp.join(own, "x")
-        .filter(col("p") =!= col("p_own"))
-        .join(broadcast(load), "p")
-        // soft cap on the TARGET partition, previous round's loads
-        .filter(col("load") * k * 1000L <= lit(capPermille) * nVerts)
-        .groupBy(col("x"))
-        .agg(max(struct(col("nv"), (-col("p")).as("np"))).as("b"))
-        .select(col("x"), col("b.nv").as("nv_best"),
-          (-col("b.np")).as("p_best"))
-      parts = rot(own.join(best, Seq("x"), "left")
-        .join(ownNv, Seq("x"), "left")
-        .select(col("x"),
-          when(parity === lit((r % 2).toLong) &&
-            col("nv_best") > coalesce(col("nv_own"), lit(0L)),
-            col("p_best")).otherwise(col("p_own")).as("p")))
+    graft.Rounds("balancedPartition", spark) { rs =>
+      val rot = rs.slot(kept = true)
+      var parts = rot(
+        und.select(col("u").as("x")).union(und.select(col("v"))).distinct()
+          .select(col("x"), hashPart.as("p")))
+      val nVerts = parts.count() // once; loads are k-row frames after
+      val parity = pmod(conv(substring(md5(col("x").cast("string")),
+        9, 8), 16, 10).cast("long"), lit(2L))
+      // the adjacency (2·edges) bounds every per-round frame
+      rs.gate(math.max(nVerts, 2L * und.count()))
+      rs.times(rounds) { r =>
+        val load = parts.groupBy(col("p")).agg(count(lit(1)).as("load"))
+        val nvp = adj.join(parts.select(col("x").as("n"), col("p")), "n")
+          .groupBy(col("x"), col("p")).agg(count(lit(1)).as("nv"))
+        val own = parts.select(col("x"), col("p").as("p_own"))
+        val ownNv = nvp.toDF("x", "p_own", "nv")
+          .join(own, Seq("x", "p_own"))
+          .select(col("x"), col("nv").as("nv_own"))
+        val best = nvp.join(own, "x")
+          .filter(col("p") =!= col("p_own"))
+          .join(broadcast(load), "p")
+          // soft cap on the TARGET partition, previous round's loads
+          .filter(col("load") * k * 1000L <= lit(capPermille) * nVerts)
+          .groupBy(col("x"))
+          .agg(max(struct(col("nv"), (-col("p")).as("np"))).as("b"))
+          .select(col("x"), col("b.nv").as("nv_best"),
+            (-col("b.np")).as("p_best"))
+        parts = rot(own.join(best, Seq("x"), "left")
+          .join(ownNv, Seq("x"), "left")
+          .select(col("x"),
+            when(parity === lit((r % 2).toLong) &&
+              col("nv_best") > coalesce(col("nv_own"), lit(0L)),
+              col("p_best")).otherwise(col("p_own")).as("p")))
+      }
+      parts.select(col("x").as("_vid"), col("p").as("part"))
+        .withColumn("part_init",
+          pmod(conv(substring(md5(col("_vid").cast("string")), 1, 8),
+            16, 10).cast("long"), lit(k.toLong)))
+        .select(col("_vid"), col("part_init"), col("part"))
     }
-    parts.select(col("x").as("_vid"), col("p").as("part"))
-      .withColumn("part_init",
-        pmod(conv(substring(md5(col("_vid").cast("string")), 1, 8),
-          16, 10).cast("long"), lit(k.toLong)))
-      .select(col("_vid"), col("part_init"), col("part"))
-    } // StaticPlan.withMeasured
   }
 
   /**
@@ -4105,58 +4059,52 @@ object GraphAnalytics {
     require(epsPermille >= 0 && rounds >= 1, "eps >= 0, rounds >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    val rot = new graft.Rotation
-    var e = rot(edges.toDF("a", "b").filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("s"),
-        greatest(col("a"), col("b")).as("d"))
-      .distinct())
-    // two scalar jobs per round (edge count + distinct-vertex count) —
-    // never a collected edge list
-    def stats(f: DataFrame): (Long, Long) = {
-      val armed = graft.StaticPlan.armed(f)
-      (armed.count(), armed.select(explode(array(col("s"), col("d"))).as("v"))
-        .distinct().count())
+    graft.Rounds("densestSubgraph", spark) { rs =>
+      val rot = rs.slot()
+      var e = rot(edges.toDF("a", "b").filter(col("a") =!= col("b"))
+        .select(least(col("a"), col("b")).as("s"),
+          greatest(col("a"), col("b")).as("d"))
+        .distinct())
+      // two scalar jobs per round (edge count + distinct-vertex count) —
+      // never a collected edge list
+      def stats(f: DataFrame): (Long, Long) = {
+        val armed = graft.StaticPlan.armed(f)
+        (armed.count(), armed.select(explode(array(col("s"), col("d"))).as("v"))
+          .distinct().count())
+      }
+      val (ne0, nv0) = stats(e)
+      // the initial edge count doubles as the static-planning gate
+      rs.gate(ne0)
+      // (|E|, |V|) after each round, until no edge is left
+      val peeled = if (ne0 == 0L) Nil else rs.track(rounds) { _ =>
+        val deg = e.select(explode(array(col("s"), col("d"))).as("v"))
+          .groupBy("v").agg(count(lit(1)).as("deg"))
+          .transform(graft.CacheScope.persist(_))
+        val tot = graft.StaticPlan.armed(deg).agg(sum(col("deg")).as("m2"),
+          count(lit(1)).as("nv")).head() // one aggregated scalar row
+        val (m2, nv) = (tot.getLong(0), tot.getLong(1))
+        // keep v iff deg·nv·1000 > m2·(1000+eps)
+        val keep = deg.filter(
+          col("deg") * nv * 1000L > m2 * (1000L + epsPermille))
+          .select(col("v"))
+        val next = rot(e
+          .join(keep.select(col("v").as("s")), Seq("s"), "left_semi")
+          .join(keep.select(col("v").as("d")), Seq("d"), "left_semi")
+          .select("s", "d"))
+        graft.CacheScope.unpersist(deg)
+        e = next
+        stats(e)
+      }(_._1)
+      val rows = ((0L, (ne0, nv0)) +: peeled).map { case (rr, (ne, nv)) =>
+        (rr, nv, ne, if (nv == 0) 0L else ne * 1000L / nv)
+      }
+      val bestD = rows.map(_._4).max
+      val bestR = rows.find(_._4 == bestD).get._1
+      rows.map { case (rr, nv, ne, d) =>
+        (rr, nv, ne, d, if (rr == bestR) 1L else 0L)
+      }.toDF("round", "n_vertices", "n_edges", "density_permille",
+        "is_best")
     }
-    val out = collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val (ne0, nv0) = stats(e)
-    out += ((0L, nv0, ne0))
-    var r = 1
-    var live = ne0 > 0
-    // the initial edge count doubles as the static-planning gate
-    graft.StaticPlan.withMeasured(spark, ne0) { _ =>
-    while (r <= rounds && live) {
-      val deg = e.select(explode(array(col("s"), col("d"))).as("v"))
-        .groupBy("v").agg(count(lit(1)).as("deg"))
-        .transform(graft.CacheScope.persist(_))
-      val tot = graft.StaticPlan.armed(deg).agg(sum(col("deg")).as("m2"),
-        count(lit(1)).as("nv")).head() // one aggregated scalar row
-      val (m2, nv) = (tot.getLong(0), tot.getLong(1))
-      // keep v iff deg·nv·1000 > m2·(1000+eps)
-      val keep = deg.filter(
-        col("deg") * nv * 1000L > m2 * (1000L + epsPermille))
-        .select(col("v"))
-      val peeled = e
-        .join(keep.select(col("v").as("s")), Seq("s"), "left_semi")
-        .join(keep.select(col("v").as("d")), Seq("d"), "left_semi")
-        .select("s", "d")
-      val next = rot(peeled)
-      graft.CacheScope.unpersist(deg)
-      e = next
-      val (ne, nvAfter) = stats(e)
-      out += ((r.toLong, nvAfter, ne))
-      live = ne > 0
-      r += 1
-    }
-    } // StaticPlan.withMeasured
-    val rows = out.toSeq.map { case (rr, nv, ne) =>
-      (rr, nv, ne, if (nv == 0) 0L else ne * 1000L / nv)
-    }
-    val bestD = rows.map(_._4).max
-    val bestR = rows.find(_._4 == bestD).get._1
-    rows.map { case (rr, nv, ne, d) =>
-      (rr, nv, ne, d, if (rr == bestR) 1L else 0L)
-    }.toDF("round", "n_vertices", "n_edges", "density_permille",
-      "is_best")
   }
 
   /**
@@ -4188,54 +4136,50 @@ object GraphAnalytics {
     def degs(f: DataFrame): DataFrame = f
       .select(explode(array(col("s"), col("d"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("deg"))
-    val rot = new graft.Rotation
-    // the canonical-edge count rides the first rotation and doubles as
-    // the static-planning gate ([[graft.StaticPlan]])
-    val (e0, n0) = rot.observe(e, Seq(count(lit(1)).as("n")))
-    e = e0
-    val nEdges = n0.getLong(0)
-    graft.StaticPlan.withMeasured(e.sparkSession, nEdges) { _ =>
-    // level-end vertex frames are persisted AND materialized before the
-    // next level's rotation releases the checkpoint blocks they derive
-    // from — a lazy reference would fault on the released block
-    var survivors = verts(e).transform(graft.CacheScope.persist(_))
-    graft.StaticPlan.armed(survivors).count()
-    val dropped = collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (k <- 1 to maxK) {
-      // convergence-guarded peel per level (the r11 label-family law;
-      // see kCore): an unconverged level k silently inflates coreness
-      var peels = 0
-      var below = -1L
-      while (below != 0L) {
-        val dg = degs(e).transform(graft.CacheScope.persist(_))
-        below = graft.StaticPlan.armed(dg).filter(col("deg") < k).count()
-        if (below != 0L) {
-          // (released at the bottom of this round)
-          peels += 1
-          if (peels > roundsPerK) throw new IllegalStateException(
-            s"coreness: level k=$k not converged within $roundsPerK " +
-              s"rounds ($below vertices still below) — raise the budget")
-          val keep = dg.filter(col("deg") >= k).select(col("v"))
-          val peeled = e
-            .join(keep.select(col("v").as("s")), Seq("s"), "left_semi")
-            .join(keep.select(col("v").as("d")), Seq("d"), "left_semi")
-            .select("s", "d")
-          e = rot(peeled)
+    graft.Rounds("coreness", e.sparkSession) { rs =>
+      val rot = rs.slot(kept = true)
+      // the canonical-edge count rides the first rotation and doubles
+      // as the static-planning gate
+      val (e0, n0) = rot.observe(e, Seq(count(lit(1)).as("n")))
+      e = e0
+      rs.gate(n0.getLong(0))
+      // level-end vertex frames are persisted AND materialized before
+      // the next level's rotation releases the checkpoint blocks they
+      // derive from — a lazy reference would fault on the released block
+      var survivors = verts(e).transform(graft.CacheScope.persist(_))
+      graft.StaticPlan.armed(survivors).count()
+      val dropped = collection.mutable.ArrayBuffer.empty[DataFrame]
+      rs.times(maxK, "k") { k =>
+        // convergence-guarded peel per level (the r11 label-family law;
+        // see kCore): an unconverged level k silently inflates coreness
+        rs.loop(roundsPerK + 1L) { peel =>
+          val dg = degs(e).transform(graft.CacheScope.persist(_))
+          val below = graft.StaticPlan.armed(dg).filter(col("deg") < k).count()
+          if (below != 0L) {
+            if (peel > roundsPerK) throw new IllegalStateException(
+              s"coreness: level k=$k not converged within $roundsPerK " +
+                s"rounds ($below vertices still below) — raise the budget")
+            val keep = dg.filter(col("deg") >= k).select(col("v"))
+            e = rot(e
+              .join(keep.select(col("v").as("s")), Seq("s"), "left_semi")
+              .join(keep.select(col("v").as("d")), Seq("d"), "left_semi")
+              .select("s", "d"))
+          }
+          graft.CacheScope.unpersist(dg)
+          below
         }
-        graft.CacheScope.unpersist(dg)
+        val surv = verts(e).transform(graft.CacheScope.persist(_))
+        graft.StaticPlan.armed(surv).count()
+        val drop = survivors.join(surv, Seq("v"), "left_anti")
+          .select(col("v").as("_vid"), lit(k - 1L).as("coreness"))
+          .transform(graft.CacheScope.persist(_))
+        graft.StaticPlan.armed(drop).count()
+        dropped += drop
+        survivors = surv
       }
-      val surv = verts(e).transform(graft.CacheScope.persist(_))
-      graft.StaticPlan.armed(surv).count()
-      val drop = survivors.join(surv, Seq("v"), "left_anti")
-        .select(col("v").as("_vid"), lit(k - 1L).as("coreness"))
-        .transform(graft.CacheScope.persist(_))
-      graft.StaticPlan.armed(drop).count()
-      dropped += drop
-      survivors = surv
+      (dropped :+ survivors.select(col("v").as("_vid"),
+        lit(maxK.toLong).as("coreness")))
+        .reduce(_ unionByName _)
     }
-    (dropped :+ survivors.select(col("v").as("_vid"),
-      lit(maxK.toLong).as("coreness")))
-      .reduce(_ unionByName _)
-    } // StaticPlan.withMeasured
   }
 }

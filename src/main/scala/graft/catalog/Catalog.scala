@@ -76,21 +76,4 @@ object CatalogReader {
       case (df, _) => df
     }
   }
-
-  /** Edge reads resolve the same way (TTL + fixed widths). */
-  def readEdge(store: GraphStore, space: SpaceDef, edge: String,
-      now: Column = current_timestamp()): DataFrame = {
-    val df0 = store.edge(edge)
-    val edgeDef = space.edges(edge)
-    val afterTtl = edgeDef.ttl match {
-      case Some(TtlDef(c, d)) => graft.operators.Ttl.visible(df0, c, d, now)
-      case None => df0
-    }
-    edgeDef.fields.foldLeft(afterTtl) {
-      case (df, FieldDef(n, _, _, Some(w))) =>
-        df.withColumn(n,
-          graft.functions.FixedString.fixedString(col(n), w))
-      case (df, _) => df
-    }
-  }
 }

@@ -386,29 +386,18 @@ object Dedup {
       .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard_ppm")
   }
 
-  /**
-   * Exact-Jaccard verification of candidate pairs — the second stage of
-   * the standard MinHash dedup pipeline (LSH proposes, exact similarity
-   * disposes). Each (id_a, id_b) candidate joins the two documents'
-   * distinct shingle sets; jaccard = |A∩B| / (|A|+|B|−|A∩B|). The
-   * shingle-set frame is corpus-sized and consumed by both joins, so it
-   * persists; the candidate side is near-dup-sized and AQE broadcasts it.
-   */
-  def verifyJaccard(df: DataFrame, idCol: String, textCol: String,
-      n: Int, pairs: DataFrame): DataFrame =
-    verifyJaccardFrom(
-      shingleSets(shingles(df, idCol, textCol, n))
-        .transform(graft.CacheScope.persist(_)),
-      pairs)
-
   /** Per-document distinct shingle array + size from a (id, shingle)
     * frame. */
   def shingleSets(sh: DataFrame): DataFrame =
     sh.groupBy("id").agg(collect_set(col("shingle")).as("shs"),
       count(lit(1)).as("sz"))
 
-  /** Verification core over a precomputed (persisted) set frame — the
-    * set frame joins the pair frame on both sides. */
+  /** Exact-Jaccard verification of candidate pairs — the second stage
+    * of the standard MinHash dedup pipeline (LSH proposes, exact
+    * similarity disposes): each (id_a, id_b) candidate joins the two
+    * documents' distinct shingle sets from a precomputed (persisted)
+    * [[shingleSets]] frame, which joins the pair frame on both sides;
+    * jaccard = |A∩B| / (|A|+|B|−|A∩B|). */
   def verifyJaccardFrom(sets: DataFrame, pairs: DataFrame): DataFrame =
     pairs
       .join(sets.select(col("id").as("id_a"), col("shs").as("sha"),

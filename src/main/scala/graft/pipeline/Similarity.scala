@@ -264,39 +264,38 @@ object Similarity {
       .transform(graft.CacheScope.persist(_))
     val w = Window.partitionBy(col("id"), col("sub"))
       .orderBy(col("d2").asc, col("cell"))
-    // Measured gate for the static-planning law ([[graft.StaticPlan]]):
-    // every round's frame is bounded by the exploded subvector table
-    // (n·m rows); the count's fill is paid anyway at round 1.
-    val nSv = sv.count()
-    graft.StaticPlan.withMeasured(emb.sparkSession, nSv) { _ =>
-    for (_ <- 1 to iters) {
-      val assigned = sv.join(broadcast(centroids), Seq("sub"))
-        .withColumn("d2", l2sq(col("v"), col("cvec")))
-        .withColumn("crk", row_number().over(w))
-        .filter(col("crk") === 1)
-        .select(col("id"), col("sub"), col("v"), col("cell"))
-        .transform(graft.CacheScope.persist(_))
-      val means = assigned
-        .select(col("sub"), col("cell"),
-          posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("sub", "cell", "pos")
-        .agg((sum(dyadic(col("x"))) / count(lit(1))).as("a"))
-        .groupBy("sub", "cell")
-        .agg(transform(
-          sort_array(collect_list(struct(col("pos"), col("a")))),
-          e => e.getField("a")).as("mvec"))
-      val next = centroids.select("sub", "cell", "cvec")
-        .join(means, Seq("sub", "cell"), "left")
-        .select(col("sub"), col("cell"),
-          coalesce(col("mvec"), col("cvec")).as("cvec"))
-        .transform(graft.CacheScope.persist(_))
-      graft.StaticPlan.armed(next).count()
-      graft.CacheScope.unpersist(assigned)
-      graft.CacheScope.unpersist(centroids)
-      centroids = next
+    graft.Rounds("pqTrain", emb.sparkSession) { rs =>
+      // every round's frame is bounded by the exploded subvector table
+      // (n·m rows); the count's fill is paid anyway at round 1
+      rs.gate(sv.count())
+      rs.times(iters) { _ =>
+        val assigned = sv.join(broadcast(centroids), Seq("sub"))
+          .withColumn("d2", l2sq(col("v"), col("cvec")))
+          .withColumn("crk", row_number().over(w))
+          .filter(col("crk") === 1)
+          .select(col("id"), col("sub"), col("v"), col("cell"))
+          .transform(graft.CacheScope.persist(_))
+        val means = assigned
+          .select(col("sub"), col("cell"),
+            posexplode(col("v")).as(Seq("pos", "x")))
+          .groupBy("sub", "cell", "pos")
+          .agg((sum(dyadic(col("x"))) / count(lit(1))).as("a"))
+          .groupBy("sub", "cell")
+          .agg(transform(
+            sort_array(collect_list(struct(col("pos"), col("a")))),
+            e => e.getField("a")).as("mvec"))
+        val next = centroids.select("sub", "cell", "cvec")
+          .join(means, Seq("sub", "cell"), "left")
+          .select(col("sub"), col("cell"),
+            coalesce(col("mvec"), col("cvec")).as("cvec"))
+          .transform(graft.CacheScope.persist(_))
+        graft.StaticPlan.armed(next).count()
+        graft.CacheScope.unpersist(assigned)
+        graft.CacheScope.unpersist(centroids)
+        centroids = next
+      }
+      centroids
     }
-    } // StaticPlan.withMeasured
-    centroids
   }
 
   /** Encode every vector against trained codebooks: one broadcast join
@@ -630,65 +629,60 @@ object Similarity {
       expandCap: Int, maxRounds: Int, seed: Long = 42L): DataFrame = {
     require(expandCap >= 1 && maxRounds >= 1,
       "expandCap and maxRounds must be >= 1")
-    val rot = new graft.Rotation
-    val lsh = knnGraph(emb, idCol, vecCol, k, numPlanes, dim,
-      maxBucketSize, seed)
-      .select(col(idCol).as("x"), col("nbr_id"), col("sim"))
-    val ring = ringEdges(emb, idCol, vecCol)
-    val pool0 = lsh
-      .unionByName(lsh.select(col("nbr_id").as("x"),
-        col("x").as("nbr_id"), col("sim")))
-      .unionByName(ring.select(col("x"), col("n").as("nbr_id"),
-        col("sim")))
-      .unionByName(ring.select(col("n").as("x"), col("x").as("nbr_id"),
-        col("sim")))
-    var g = rot(topkGraph(pool0, k))
-    var r = 0
-    var changed = -1L
-    // Measured gate for the static-planning law ([[graft.StaticPlan]]):
-    // loop frames are bounded by the capped 2-hop expansion,
-    // n·expandCap² rows at worst (the scaladoc's bound).
-    val nEmb = emb.count()
-    graft.StaticPlan.withMeasured(emb.sparkSession,
-      nEmb * expandCap * expandCap) { _ =>
-    while (r < maxRounds && changed != 0L) {
-      r += 1
-      val und = g.select(col("x"), col("nbr_id").as("n"), col("sim"))
-        .unionByName(g.select(col("nbr_id").as("x"), col("x").as("n"),
+    graft.Rounds("knnDescent", emb.sparkSession) { rs =>
+      val rot = rs.slot(kept = true)
+      val lsh = knnGraph(emb, idCol, vecCol, k, numPlanes, dim,
+        maxBucketSize, seed)
+        .select(col(idCol).as("x"), col("nbr_id"), col("sim"))
+      val ring = ringEdges(emb, idCol, vecCol)
+      val pool0 = lsh
+        .unionByName(lsh.select(col("nbr_id").as("x"),
+          col("x").as("nbr_id"), col("sim")))
+        .unionByName(ring.select(col("x"), col("n").as("nbr_id"),
           col("sim")))
-        .groupBy("x", "n").agg(max(col("sim")).as("sim"))
-        .transform(graft.CacheScope.persist(_)) // cap + pool union
-      val wCap = Window.partitionBy(col("x"))
-        .orderBy(col("sim").desc, col("n"))
-      val capped = und.withColumn("crk", row_number().over(wCap))
-        .filter(col("crk") <= expandCap).select(col("x"), col("n"))
-        .transform(graft.CacheScope.persist(_)) // both 2-hop sides
-      val scored = capped
-        .join(capped.select(col("x").as("n"), col("n").as("n2")), "n")
-        .filter(col("x") =!= col("n2"))
-        .select(col("x"), col("n2")).distinct()
-        .join(emb.select(col(idCol).as("x"), col(vecCol).as("xv")), "x")
-        .join(emb.select(col(idCol).as("n2"), col(vecCol).as("nv")),
-          "n2")
-        .select(col("x"), col("n2").as("nbr_id"),
-          graft.functions.Portable.quant(cosine(col("xv"), col("nv")),
-            6).as("sim"))
-      // the changed-edge count rides the rotation job as a
-      // CollectMetrics observation (the semiSyncLpa one-job-per-round
-      // law) instead of a separate anti-join action
-      val (next, n) = rot.observe(topkGraph(scored.unionByName(
-          und.select(col("x"), col("n").as("nbr_id"), col("sim"))), k)
-        .join(g.select(col("x"), col("nbr_id"), lit(1).as("_old")),
-          Seq("x", "nbr_id"), "left"),
-        Seq(count(when(col("_old").isNull, lit(1))).as("n")),
-        _.drop("_old"))
-      changed = n.getLong(0)
-      g = next
-      graft.CacheScope.unpersist(capped)
-      graft.CacheScope.unpersist(und)
+        .unionByName(ring.select(col("n").as("x"), col("x").as("nbr_id"),
+          col("sim")))
+      var g = rot(topkGraph(pool0, k))
+      // loop frames are bounded by the capped 2-hop expansion,
+      // n·expandCap² rows at worst (the scaladoc's bound)
+      rs.gate(emb.count() * expandCap * expandCap)
+      rs.loop(maxRounds) { _ =>
+        val und = g.select(col("x"), col("nbr_id").as("n"), col("sim"))
+          .unionByName(g.select(col("nbr_id").as("x"), col("x").as("n"),
+            col("sim")))
+          .groupBy("x", "n").agg(max(col("sim")).as("sim"))
+          .transform(graft.CacheScope.persist(_)) // cap + pool union
+        val wCap = Window.partitionBy(col("x"))
+          .orderBy(col("sim").desc, col("n"))
+        val capped = und.withColumn("crk", row_number().over(wCap))
+          .filter(col("crk") <= expandCap).select(col("x"), col("n"))
+          .transform(graft.CacheScope.persist(_)) // both 2-hop sides
+        val scored = capped
+          .join(capped.select(col("x").as("n"), col("n").as("n2")), "n")
+          .filter(col("x") =!= col("n2"))
+          .select(col("x"), col("n2")).distinct()
+          .join(emb.select(col(idCol).as("x"), col(vecCol).as("xv")), "x")
+          .join(emb.select(col(idCol).as("n2"), col(vecCol).as("nv")),
+            "n2")
+          .select(col("x"), col("n2").as("nbr_id"),
+            graft.functions.Portable.quant(cosine(col("xv"), col("nv")),
+              6).as("sim"))
+        // the changed-edge count rides the rotation job as a
+        // CollectMetrics observation (the semiSyncLpa one-job-per-round
+        // law) instead of a separate anti-join action
+        val (next, n) = rot.observe(topkGraph(scored.unionByName(
+            und.select(col("x"), col("n").as("nbr_id"), col("sim"))), k)
+          .join(g.select(col("x"), col("nbr_id"), lit(1).as("_old")),
+            Seq("x", "nbr_id"), "left"),
+          Seq(count(when(col("_old").isNull, lit(1))).as("n")),
+          _.drop("_old"))
+        g = next
+        graft.CacheScope.unpersist(capped)
+        graft.CacheScope.unpersist(und)
+        n.getLong(0)
+      }
+      g.select(col("x").as(idCol), col("nbr_id"), col("rk"), col("sim"))
     }
-    } // StaticPlan.withMeasured
-    g.select(col("x").as(idCol), col("nbr_id"), col("rk"), col("sim"))
   }
 
   /**
@@ -924,58 +918,58 @@ object Similarity {
     // and q_mog_kmeanspar_recall measured 34 s wall over 3.3 s of
     // actual job time, all of it driver-side Catalyst analysis. The
     // checkpoint truncates lineage at an nCells-row leaf per round.
-    val roll = new graft.Rotation
-    var centroids = roll(init
-      .map(_.select(col("cell").cast("long").as("cell"),
-        col("cvec").cast("array<double>").as("cvec"),
-        lit(0L).as("n")))
-      .getOrElse(emb.filter(col(idCol) < nCells)
-        .select(col(idCol).as("cell"),
-          col(vecCol).cast("array<double>").as("cvec"),
-          lit(0L).as("n"))))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("csim").desc, col("cell"))
-    // Measured gate for the static-planning law ([[graft.StaticPlan]]):
-    // the per-round mean update explodes n·dim narrow rows, so the
-    // gate (and the derived partition count) uses rows × dims — one
-    // scalar job over the corpus.
-    val gateRow = emb.agg(count(lit(1)).as("n"),
-      max(size(col(vecCol))).as("d")).head()
-    val gateRows = gateRow.getLong(0) *
-      math.max(1L, if (gateRow.isNullAt(1)) 1L else gateRow.getInt(1).toLong)
-    graft.StaticPlan.withMeasured(emb.sparkSession, gateRows) { _ =>
-    for (_ <- 1 to iters) {
-      val assigned = emb.join(broadcast(centroids.select("cell", "cvec")))
-        .withColumn("csim", cosine(col(vecCol), col("cvec")))
-        .withColumn("crk", row_number().over(w)).filter(col("crk") === 1)
-        .select(col(idCol).as("id"), col(vecCol).as("v"), col("cell"))
-        .transform(graft.CacheScope.persist(_))
-      val means = assigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-        // order-independent mean (Portable.dyadic): avg()'s float sum
-        // depends on partial-aggregation order, and the k-means
-        // recurrence feeds it back through the next assignment round —
-        // dyadic summands make each round bit-reproducible
-        .groupBy("cell", "pos")
-        .agg((sum(graft.functions.Portable.dyadic(
-          col("x").cast("double"))) / count(lit(1))).as("a"))
-        .groupBy("cell")
-        .agg(transform(
-          sort_array(collect_list(struct(col("pos"), col("a")))),
-          e => e.getField("a")).as("mvec"))
-      val counts = assigned.groupBy("cell").agg(count(lit(1)).as("cnt"))
-      // the rotation materializes this round (nCells rows); then
-      // RELEASE the round's corpus-sized assignment — a long training
-      // run pins O(1) frames, not O(iterations)
-      centroids = roll(centroids.select("cell", "cvec")
-        .join(means, Seq("cell"), "left")
-        .join(counts, Seq("cell"), "left")
-        .select(col("cell"), coalesce(col("mvec"), col("cvec")).as("cvec"),
-          coalesce(col("cnt"), lit(0L)).as("n")))
-      graft.CacheScope.unpersist(assigned)
+    graft.Rounds("ivfTrain", emb.sparkSession) { rs =>
+      val roll = rs.slot(kept = true)
+      var centroids = roll(init
+        .map(_.select(col("cell").cast("long").as("cell"),
+          col("cvec").cast("array<double>").as("cvec"),
+          lit(0L).as("n")))
+        .getOrElse(emb.filter(col(idCol) < nCells)
+          .select(col(idCol).as("cell"),
+            col(vecCol).cast("array<double>").as("cvec"),
+            lit(0L).as("n"))))
+      val w = Window.partitionBy(col(idCol))
+        .orderBy(col("csim").desc, col("cell"))
+      // the per-round mean update explodes n·dim narrow rows, so the
+      // gate (and the derived partition count) uses rows × dims — one
+      // scalar job over the corpus.
+      val gateRow = emb.agg(count(lit(1)).as("n"),
+        max(size(col(vecCol))).as("d")).head()
+      val gateRows = gateRow.getLong(0) *
+        math.max(1L, if (gateRow.isNullAt(1)) 1L else gateRow.getInt(1).toLong)
+      rs.gate(gateRows)
+      rs.times(iters) { _ =>
+        val assigned = emb.join(broadcast(centroids.select("cell", "cvec")))
+          .withColumn("csim", cosine(col(vecCol), col("cvec")))
+          .withColumn("crk", row_number().over(w)).filter(col("crk") === 1)
+          .select(col(idCol).as("id"), col(vecCol).as("v"), col("cell"))
+          .transform(graft.CacheScope.persist(_))
+        val means = assigned
+          .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
+          // order-independent mean (Portable.dyadic): avg()'s float sum
+          // depends on partial-aggregation order, and the k-means
+          // recurrence feeds it back through the next assignment round —
+          // dyadic summands make each round bit-reproducible
+          .groupBy("cell", "pos")
+          .agg((sum(graft.functions.Portable.dyadic(
+            col("x").cast("double"))) / count(lit(1))).as("a"))
+          .groupBy("cell")
+          .agg(transform(
+            sort_array(collect_list(struct(col("pos"), col("a")))),
+            e => e.getField("a")).as("mvec"))
+        val counts = assigned.groupBy("cell").agg(count(lit(1)).as("cnt"))
+        // the rotation materializes this round (nCells rows); then
+        // RELEASE the round's corpus-sized assignment — a long training
+        // run pins O(1) frames, not O(iterations)
+        centroids = roll(centroids.select("cell", "cvec")
+          .join(means, Seq("cell"), "left")
+          .join(counts, Seq("cell"), "left")
+          .select(col("cell"), coalesce(col("mvec"), col("cvec")).as("cvec"),
+            coalesce(col("cnt"), lit(0L)).as("n")))
+        graft.CacheScope.unpersist(assigned)
+      }
+      centroids
     }
-    } // StaticPlan.withMeasured
-    centroids
   }
 
   /**
@@ -1817,27 +1811,27 @@ object Similarity {
     import graft.functions.Portable.dyadic
     val spark = cov.sparkSession
     import spark.implicits._
-    val rot = new graft.Rotation
-    var v = rot((1 to dim).map(i => (i, 1.0)).toDF("j", "v"))
-    // Static gate for the static-planning law ([[graft.StaticPlan]]):
-    // every loop frame is bounded by the dim×dim matrix — known
-    // WITHOUT a job, the cheapest gate in the family.
-    graft.StaticPlan.withMeasured(spark, dim.toLong * dim) { bc =>
-    for (_ <- 1 to iters) {
-      val y = cov.join(bc(v), Seq("j"))
-        .groupBy(col("i"))
-        .agg(sum(dyadic(col("c") * col("v"))).as("y"))
-        .transform(graft.CacheScope.persist(_))
-      val m = y.agg(max(abs(col("y"))).as("m"))
-      val next = y.crossJoin(broadcast(m))
-        .select(col("i").as("j"),
-          when(col("m") > lit(0.0), dyadic(col("y") / col("m")))
-            .otherwise(lit(0.0)).as("v"))
-      v = rot(next)
-      graft.CacheScope.unpersist(y)
+    graft.Rounds("pcaPower", spark) { rs =>
+      val rot = rs.slot(kept = true)
+      var v = rot((1 to dim).map(i => (i, 1.0)).toDF("j", "v"))
+      // every loop frame is bounded by the dim×dim matrix — known
+      // WITHOUT a job, the cheapest gate in the family
+      val bc = rs.gate(dim.toLong * dim)
+      rs.times(iters) { _ =>
+        val y = cov.join(bc(v), Seq("j"))
+          .groupBy(col("i"))
+          .agg(sum(dyadic(col("c") * col("v"))).as("y"))
+          .transform(graft.CacheScope.persist(_))
+        val m = y.agg(max(abs(col("y"))).as("m"))
+        val next = y.crossJoin(broadcast(m))
+          .select(col("i").as("j"),
+            when(col("m") > lit(0.0), dyadic(col("y") / col("m")))
+              .otherwise(lit(0.0)).as("v"))
+        v = rot(next)
+        graft.CacheScope.unpersist(y)
+      }
+      v
     }
-    } // StaticPlan.withMeasured
-    v
   }
 
   /**
@@ -2199,69 +2193,68 @@ object Similarity {
       k: Int): DataFrame = {
     require(queryIds.nonEmpty, "queries required")
     require(beam >= 1 && rounds >= 1 && k >= 1, "beam/rounds/k >= 1")
-    val rot = new graft.Rotation
-    val vecs = emb.select(col(idCol).cast("long").as("vid"),
-      col(vecCol).cast("array<double>").as("vv"))
-      .transform(graft.CacheScope.persist(_))
-    val qvecs = vecs.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("qid"), col("vv").as("qv"))
-      .transform(graft.CacheScope.persist(_))
-    val adj = knnEdges.toDF("av", "an")
-      .select(col("av").cast("long"), col("an").cast("long"))
-      .distinct()
-      .transform(graft.CacheScope.persist(_))
-    // NOTE (r17, measured): explicit broadcast hints on the query-
-    // bounded sides of these joins (cands here, frontier/visited in
-    // the loop) were tried per guide §3.1 and REVERTED — min-of-4 A/B
-    // read the beam family consistently WORSE with hints (mogrr
-    // 13.7 → 15.5 s, gaiv 2.55 → 3.04, gaivr 2.85 → 3.43 across 2
-    // JVMs each): with AQE on, runtime planning already broadcasts
-    // the genuinely smaller side per round (often `cand`, not the
-    // round-growing `visited`), and a static hint overrides that
-    // per-round choice with a fixed one. Same lesson as r16's hits
-    // hint revert.
-    def score(cands: DataFrame): DataFrame = cands
-      .join(vecs, col("v") === col("vid"))
-      .join(broadcast(qvecs), Seq("qid"))
-      .select(col("qid"), col("v"),
-        floor(cosine(col("qv"), col("vv")) * lit(1000000.0) + lit(0.5))
-          .cast("long").as("simx"))
-    def topBeam(scored: DataFrame): DataFrame = {
+    graft.Rounds("graphAnnBeam", emb.sparkSession) { rs =>
+      val rot = rs.slot(kept = true)
+      val vecs = emb.select(col(idCol).cast("long").as("vid"),
+        col(vecCol).cast("array<double>").as("vv"))
+        .transform(graft.CacheScope.persist(_))
+      val qvecs = vecs.filter(col("vid").isin(queryIds: _*))
+        .select(col("vid").as("qid"), col("vv").as("qv"))
+        .transform(graft.CacheScope.persist(_))
+      val adj = knnEdges.toDF("av", "an")
+        .select(col("av").cast("long"), col("an").cast("long"))
+        .distinct()
+        .transform(graft.CacheScope.persist(_))
+      // NOTE (r17, measured): explicit broadcast hints on the query-
+      // bounded sides of these joins (cands here, frontier/visited in
+      // the loop) were tried per guide §3.1 and REVERTED — min-of-4 A/B
+      // read the beam family consistently WORSE with hints (mogrr
+      // 13.7 → 15.5 s, gaiv 2.55 → 3.04, gaivr 2.85 → 3.43 across 2
+      // JVMs each): with AQE on, runtime planning already broadcasts
+      // the genuinely smaller side per round (often `cand`, not the
+      // round-growing `visited`), and a static hint overrides that
+      // per-round choice with a fixed one. Same lesson as r16's hits
+      // hint revert.
+      def score(cands: DataFrame): DataFrame = cands
+        .join(vecs, col("v") === col("vid"))
+        .join(broadcast(qvecs), Seq("qid"))
+        .select(col("qid"), col("v"),
+          floor(cosine(col("qv"), col("vv")) * lit(1000000.0) + lit(0.5))
+            .cast("long").as("simx"))
+      def topBeam(scored: DataFrame): DataFrame = {
+        val w = Window.partitionBy(col("qid"))
+          .orderBy(col("simx").desc, col("v"))
+        scored.withColumn("rk", row_number().over(w))
+          .filter(col("rk") <= beam).drop("rk")
+      }
+      val entry = mkEntry(qvecs)
+      // the adjacency is the loop's largest frame (visited/frontier are
+      // query-bounded); the count's fill is paid anyway at round 1
+      rs.gate(adj.count())
+      // visited carries the round tag: the next round's frontier is a
+      // cheap window over the CHECKPOINTED frame's newest rows, so each
+      // round pays exactly ONE rotation job (frontier needs no second
+      // checkpoint — its lineage bottoms out at visited's LogicalRDD)
+      var visited = rot(score(entry).withColumn("r", lit(0)))
+      rs.times(rounds) { r =>
+        val frontier = topBeam(
+          visited.filter(col("r") === r - 1).drop("r"))
+        val cand = frontier
+          .join(adj, col("v") === col("av"))
+          .select(col("qid"), col("an").as("v"))
+          .distinct()
+          .join(visited, Seq("qid", "v"), "left_anti")
+        visited = rot(
+          visited.unionByName(score(cand).withColumn("r", lit(r))))
+      }
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("simx").desc, col("v"))
-      scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= beam).drop("rk")
+      visited.filter(col("v") =!= col("qid"))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= k)
+        .select(col("qid").as("query_id"), col("v").as("cand_id"),
+          col("simx"), col("rk").cast("long").as("rk"))
     }
-    val entry = mkEntry(qvecs)
-    // Measured gate for the static-planning law ([[graft.StaticPlan]]):
-    // the adjacency is the loop's largest frame (visited/frontier are
-    // query-bounded); the count's fill is paid anyway at round 1.
-    val nAdj = adj.count()
-    graft.StaticPlan.withMeasured(emb.sparkSession, nAdj) { _ =>
-    // visited carries the round tag: the next round's frontier is a
-    // cheap window over the CHECKPOINTED frame's newest rows, so each
-    // round pays exactly ONE rotation job (frontier needs no second
-    // checkpoint — its lineage bottoms out at visited's LogicalRDD)
-    var visited = rot(score(entry).withColumn("r", lit(0)))
-    for (r <- 1 to rounds) {
-      val frontier = topBeam(
-        visited.filter(col("r") === r - 1).drop("r"))
-      val cand = frontier
-        .join(adj, col("v") === col("av"))
-        .select(col("qid"), col("an").as("v"))
-        .distinct()
-        .join(visited, Seq("qid", "v"), "left_anti")
-      visited = rot(
-        visited.unionByName(score(cand).withColumn("r", lit(r))))
-    }
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("simx").desc, col("v"))
-    visited.filter(col("v") =!= col("qid"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid").as("query_id"), col("v").as("cand_id"),
-        col("simx"), col("rk").cast("long").as("rk"))
-    } // StaticPlan.withMeasured
   }
 
   def quantizeInt8(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {

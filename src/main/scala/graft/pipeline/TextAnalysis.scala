@@ -118,54 +118,51 @@ object TextAnalysis {
       nMerges: Int): (Seq[(Long, String, Long)], DataFrame, graft.Rotation) = {
     require(nMerges >= 1, "nMerges must be >= 1")
     val spark = docs.sparkSession
-    val rot = new graft.Rotation
     val init = docs.select(explode(tokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) >= 2) // 1-char words never pair
       .groupBy("tok").agg(count(lit(1)).as("f"))
       .select(trim(regexp_replace(col("tok"), "(.)", "$1 ")).as("w"),
         col("f"))
-    // the vocab count rides the init rotation and doubles as the
-    // static-planning gate ([[graft.StaticPlan]]): every step's frame
-    // (pairs, rewritten vocab) is vocab-bounded
-    var (vocab, n0) = rot.observe(init, Seq(count(lit(1)).as("n")))
-    val nVocab = n0.getLong(0)
-    val merges = collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    var step = 0
-    var exhausted = false
-    graft.StaticPlan.withMeasured(spark, nVocab) { _ =>
-    while (step < nMerges && !exhausted) {
-      step += 1
-      val pairs = vocab.select(col("f"), split(col("w"), " ").as("l"))
-        .filter(size(col("l")) >= 2)
-        .select(col("f"), explode(expr(
-          "transform(sequence(1, size(l) - 1), " +
-            "i -> concat(element_at(l, i), ' ', element_at(l, i + 1)))"))
-          .as("pair"))
-        .groupBy("pair").agg(sum(col("f")).as("cnt"))
-      val best = graft.StaticPlan.armed(pairs)
-        .agg(min(struct((-col("cnt")).as("nc"), col("pair").as("p")))
-          .as("b"))
-        .select(col("b.p").as("pair"), (-col("b.nc")).as("cnt"))
-        .head() // one aggregated scalar row per step (house law)
-      if (best.isNullAt(0)) exhausted = true
-      else {
-        val pair = best.getString(0)
-        merges += ((step.toLong, pair, best.getLong(1)))
-        val search = lit(" " + pair.replace(" ", "  ") + " ")
-        val repl = lit(" " + pair.replace(" ", "") + " ")
-        val padded = concat(lit(" "),
-          replace(col("w"), lit(" "), lit("  ")), lit(" "))
-        val next = vocab
-          .select(trim(replace(replace(padded, search, repl),
-            lit("  "), lit(" "))).as("w"), col("f"))
-          // merge rewrites are injective on symbol sequences (see doc)
-          // but the fold is kept as a defensive invariant
-          .groupBy("w").agg(sum(col("f")).as("f"))
-        vocab = rot(next)
-      }
+    graft.Rounds("bpeTrain", spark) { rs =>
+      // the vocab's slot is returned to the caller
+      val rot = rs.slot(kept = true)
+      // the vocab count rides the init rotation and doubles as the
+      // static-planning gate ([[graft.StaticPlan]]): every step's frame
+      // (pairs, rewritten vocab) is vocab-bounded
+      var (vocab, n0) = rot.observe(init, Seq(count(lit(1)).as("n")))
+      rs.gate(n0.getLong(0))
+      val merges = rs.track(nMerges) { step =>
+        val pairs = vocab.select(col("f"), split(col("w"), " ").as("l"))
+          .filter(size(col("l")) >= 2)
+          .select(col("f"), explode(expr(
+            "transform(sequence(1, size(l) - 1), " +
+              "i -> concat(element_at(l, i), ' ', element_at(l, i + 1)))"))
+            .as("pair"))
+          .groupBy("pair").agg(sum(col("f")).as("cnt"))
+        val best = graft.StaticPlan.armed(pairs)
+          .agg(min(struct((-col("cnt")).as("nc"), col("pair").as("p")))
+            .as("b"))
+          .select(col("b.p").as("pair"), (-col("b.nc")).as("cnt"))
+          .head() // one aggregated scalar row per step (house law)
+        if (best.isNullAt(0)) None
+        else {
+          val pair = best.getString(0)
+          val search = lit(" " + pair.replace(" ", "  ") + " ")
+          val repl = lit(" " + pair.replace(" ", "") + " ")
+          val padded = concat(lit(" "),
+            replace(col("w"), lit(" "), lit("  ")), lit(" "))
+          val next = vocab
+            .select(trim(replace(replace(padded, search, repl),
+              lit("  "), lit(" "))).as("w"), col("f"))
+            // merge rewrites are injective on symbol sequences (see doc)
+            // but the fold is kept as a defensive invariant
+            .groupBy("w").agg(sum(col("f")).as("f"))
+          vocab = rot(next)
+          Some((step.toLong, pair, best.getLong(1)))
+        }
+      }(_.size.toLong)
+      (merges.flatMap(_._2), vocab, rot)
     }
-    } // StaticPlan.withMeasured
-    (merges.toSeq, vocab, rot)
   }
 
   /**
@@ -335,68 +332,62 @@ object TextAnalysis {
   private def wordpieceMergeLoop(init: DataFrame,
       nMerges: Int): Seq[(Long, String, Long, Long)] = {
     require(nMerges >= 1, "nMerges must be >= 1")
-    val rot = new graft.Rotation
-    // the vocab count rides the init rotation and doubles as the
-    // static-planning gate ([[graft.StaticPlan]])
-    var (vocab, n0) = rot.observe(init, Seq(count(lit(1)).as("n")))
-    val nVocab = n0.getLong(0)
-    val merges = collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
-    var step = 0
-    var exhausted = false
-    graft.StaticPlan.withMeasured(init.sparkSession, nVocab) { _ =>
-    while (step < nMerges && !exhausted) {
-      step += 1
-      val syms = vocab
-        .select(col("f"), explode(split(col("w"), " ")).as("sym"))
-        .groupBy("sym").agg(sum(col("f")).as("c"))
-      val pairs = vocab.select(col("f"), split(col("w"), " ").as("l"))
-        .filter(size(col("l")) >= 2)
-        .select(col("f"), explode(expr(
-          "transform(sequence(1, size(l) - 1), " +
-            "i -> concat(element_at(l, i), ' ', element_at(l, i + 1)))"))
-          .as("pair"))
-        .groupBy("pair").agg(sum(col("f")).as("cnt"))
-      // likelihood score on the exact decimal grid: cnt*2^40 stays
-      // below 10^38 (decimal38-exact); ca*cb is computed in decimal
-      // too so it can never wrap silently in non-ANSI LongType (the
-      // DuckDB oracle's BIGINT product errors loudly on overflow —
-      // the engines must agree, not diverge); the integral divide is
-      // floor for positives on both engines
-      val best = graft.StaticPlan.armed(pairs)
-        .select(col("pair"), col("cnt"),
-          split(col("pair"), " ").getItem(0).as("sa"),
-          split(col("pair"), " ").getItem(1).as("sb"))
-        .join(broadcast(syms.select(col("sym").as("sa"),
-          col("c").as("ca"))), Seq("sa"))
-        .join(broadcast(syms.select(col("sym").as("sb"),
-          col("c").as("cb"))), Seq("sb"))
-        .select(col("pair"), col("cnt"), expr(
-          "(cast(cnt as decimal(38,0)) * 1099511627776) div " +
-            "(cast(ca as decimal(38,0)) * cb)")
-          .as("key"))
-        .agg(min(struct((-col("key")).as("nk"), col("pair").as("p"),
-          col("cnt").as("c"))).as("b"))
-        .select(col("b.p").as("pair"), col("b.c").as("cnt"),
-          (-col("b.nk")).as("key"))
-        .head() // one aggregated scalar row per step (house law)
-      if (best.isNullAt(0)) exhausted = true
-      else {
-        val pair = best.getString(0)
-        merges += ((step.toLong, pair, best.getLong(1), best.getLong(2)))
-        val search = lit(" " + pair.replace(" ", "  ") + " ")
-        val repl = lit(" " + pair.replace(" ", "") + " ")
-        val padded = concat(lit(" "),
-          replace(col("w"), lit(" "), lit("  ")), lit(" "))
-        val next = vocab
-          .select(trim(replace(replace(padded, search, repl),
-            lit("  "), lit(" "))).as("w"), col("f"))
-          .groupBy("w").agg(sum(col("f")).as("f"))
-        vocab = rot(next)
-      }
+    graft.Rounds("wordpieceTrain", init.sparkSession) { rs =>
+      val rot = rs.slot()
+      // the vocab count rides the init rotation and doubles as the
+      // static-planning gate ([[graft.StaticPlan]])
+      var (vocab, n0) = rot.observe(init, Seq(count(lit(1)).as("n")))
+      rs.gate(n0.getLong(0))
+      rs.track(nMerges) { step =>
+        val syms = vocab
+          .select(col("f"), explode(split(col("w"), " ")).as("sym"))
+          .groupBy("sym").agg(sum(col("f")).as("c"))
+        val pairs = vocab.select(col("f"), split(col("w"), " ").as("l"))
+          .filter(size(col("l")) >= 2)
+          .select(col("f"), explode(expr(
+            "transform(sequence(1, size(l) - 1), " +
+              "i -> concat(element_at(l, i), ' ', element_at(l, i + 1)))"))
+            .as("pair"))
+          .groupBy("pair").agg(sum(col("f")).as("cnt"))
+        // likelihood score on the exact decimal grid: cnt*2^40 stays
+        // below 10^38 (decimal38-exact); ca*cb is computed in decimal
+        // too so it can never wrap silently in non-ANSI LongType (the
+        // DuckDB oracle's BIGINT product errors loudly on overflow —
+        // the engines must agree, not diverge); the integral divide is
+        // floor for positives on both engines
+        val best = graft.StaticPlan.armed(pairs)
+          .select(col("pair"), col("cnt"),
+            split(col("pair"), " ").getItem(0).as("sa"),
+            split(col("pair"), " ").getItem(1).as("sb"))
+          .join(broadcast(syms.select(col("sym").as("sa"),
+            col("c").as("ca"))), Seq("sa"))
+          .join(broadcast(syms.select(col("sym").as("sb"),
+            col("c").as("cb"))), Seq("sb"))
+          .select(col("pair"), col("cnt"), expr(
+            "(cast(cnt as decimal(38,0)) * 1099511627776) div " +
+              "(cast(ca as decimal(38,0)) * cb)")
+            .as("key"))
+          .agg(min(struct((-col("key")).as("nk"), col("pair").as("p"),
+            col("cnt").as("c"))).as("b"))
+          .select(col("b.p").as("pair"), col("b.c").as("cnt"),
+            (-col("b.nk")).as("key"))
+          .head() // one aggregated scalar row per step (house law)
+        if (best.isNullAt(0)) None
+        else {
+          val pair = best.getString(0)
+          val search = lit(" " + pair.replace(" ", "  ") + " ")
+          val repl = lit(" " + pair.replace(" ", "") + " ")
+          val padded = concat(lit(" "),
+            replace(col("w"), lit(" "), lit("  ")), lit(" "))
+          val next = vocab
+            .select(trim(replace(replace(padded, search, repl),
+              lit("  "), lit(" "))).as("w"), col("f"))
+            .groupBy("w").agg(sum(col("f")).as("f"))
+          vocab = rot(next)
+          Some((step.toLong, pair, best.getLong(1), best.getLong(2)))
+        }
+      }(_.size.toLong).flatMap(_._2)
     }
-    } // StaticPlan.withMeasured
-    rot.release()
-    merges.toSeq
   }
 
   /**
@@ -1969,7 +1960,6 @@ object TextAnalysis {
     require(nRounds >= 1 && seedSize >= 1 && vocabSize >= 1,
       "nRounds, seedSize, vocabSize must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    val rot = new graft.Rotation
     val wf = docs.select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
       .transform(graft.CacheScope.persist(_)) // consumed every round
@@ -1987,59 +1977,58 @@ object TextAnalysis {
         .withColumn("rk", row_number().over(
           Window.orderBy(col("cnt").desc, col("tok"))))
         .filter(col("rk") <= seedSize).drop("rk"))
-    // the seed-vocab count rides the init rotation and doubles as the
-    // static-planning gate ([[graft.StaticPlan]]): every round's frame
-    // is vocab- or word-table-sized, both bounded by the larger of the
-    // two counts (wf is persisted; its count fill is paid anyway).
-    var (vocab, n0) = rot.observe(seed, Seq(count(lit(1)).as("n")))
-    val nSeed = n0.getLong(0)
-    val nWords = wf.count()
-    graft.StaticPlan.withMeasured(docs.sparkSession,
-      math.max(nSeed, nWords) * maxPieceLen) { _ =>
-    for (r <- 1 to nRounds) {
-      val usage = viterbiSegments(wf, vocab, maxPieceLen)
-        .select(explode(split(col("path"), " ")).as("tok"), col("f"))
-        .groupBy("tok").agg(sum(col("f")).as("cnt"))
-        .transform(graft.CacheScope.persist(_)) // singles + multi branches
-      val multiUsed = usage.filter(length(col("tok")) >= 2)
-      val kept =
-        if (!lossPrune)
-          // top-η by raw Viterbi usage (cnt desc, tok asc)
-          multiUsed
-            .withColumn("rk", row_number().over(
-              Window.orderBy(col("cnt").desc, col("tok"))))
-            .filter(col("rk") <= vocabSize).drop("rk")
-        else {
-          // Likelihood-loss prune (Kudo 2018 §3.2, hard-EM integer
-          // form): loss(t) = usage(t) × (kRepl(t) − 1), where kRepl
-          // is the Viterbi piece count of t's OWN string re-segmented
-          // under the current vocab WITHOUT t (the full-span self
-          // piece excluded — the single-char coverage floor
-          // guarantees kRepl is finite). Usage-count pruning keeps
-          // frequent-but-redundant pieces that are cheap to re-derive
-          // from other kept pieces; loss pruning drops exactly those.
-          // The repl DP runs over the VOCAB-sized used-token table —
-          // the corpus never re-enters.
-          val repl = viterbiCore(
-            multiUsed.select(col("tok").as("w"), col("cnt").as("f")),
-            vocab, maxPieceLen, excludeSelf = true)
-            .select(col("w").as("tok"), col("k").as("krepl"))
-          multiUsed.join(repl, Seq("tok"))
-            .withColumn("loss", col("cnt") * (col("krepl") - 1L))
-            .withColumn("rk", row_number().over(Window.orderBy(
-              col("loss").desc, col("cnt").desc, col("tok"))))
-            .filter(col("rk") <= unigramKeepSize(seedSize, vocabSize,
-              nRounds, r))
-            .select(col("tok"), col("cnt"))
-        }
-      val next = chars.join(usage, Seq("tok"), "left")
-        .select(col("tok"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-        .unionByName(kept)
-      vocab = rot(next)
-      graft.CacheScope.unpersist(usage)
+    graft.Rounds("unigramTrain", docs.sparkSession) { rs =>
+      val rot = rs.slot(kept = true)
+      // the seed-vocab count rides the init rotation and doubles as the
+      // static-planning gate ([[graft.StaticPlan]]): every round's frame
+      // is vocab- or word-table-sized, both bounded by the larger of the
+      // two counts (wf is persisted; its count fill is paid anyway).
+      var (vocab, n0) = rot.observe(seed, Seq(count(lit(1)).as("n")))
+      rs.gate(math.max(n0.getLong(0), wf.count()) * maxPieceLen)
+      rs.times(nRounds) { r =>
+        val usage = viterbiSegments(wf, vocab, maxPieceLen)
+          .select(explode(split(col("path"), " ")).as("tok"), col("f"))
+          .groupBy("tok").agg(sum(col("f")).as("cnt"))
+          .transform(graft.CacheScope.persist(_)) // singles + multi branches
+        val multiUsed = usage.filter(length(col("tok")) >= 2)
+        val kept =
+          if (!lossPrune)
+            // top-η by raw Viterbi usage (cnt desc, tok asc)
+            multiUsed
+              .withColumn("rk", row_number().over(
+                Window.orderBy(col("cnt").desc, col("tok"))))
+              .filter(col("rk") <= vocabSize).drop("rk")
+          else {
+            // Likelihood-loss prune (Kudo 2018 §3.2, hard-EM integer
+            // form): loss(t) = usage(t) × (kRepl(t) − 1), where kRepl
+            // is the Viterbi piece count of t's OWN string re-segmented
+            // under the current vocab WITHOUT t (the full-span self
+            // piece excluded — the single-char coverage floor
+            // guarantees kRepl is finite). Usage-count pruning keeps
+            // frequent-but-redundant pieces that are cheap to re-derive
+            // from other kept pieces; loss pruning drops exactly those.
+            // The repl DP runs over the VOCAB-sized used-token table —
+            // the corpus never re-enters.
+            val repl = viterbiCore(
+              multiUsed.select(col("tok").as("w"), col("cnt").as("f")),
+              vocab, maxPieceLen, excludeSelf = true)
+              .select(col("w").as("tok"), col("k").as("krepl"))
+            multiUsed.join(repl, Seq("tok"))
+              .withColumn("loss", col("cnt") * (col("krepl") - 1L))
+              .withColumn("rk", row_number().over(Window.orderBy(
+                col("loss").desc, col("cnt").desc, col("tok"))))
+              .filter(col("rk") <= unigramKeepSize(seedSize, vocabSize,
+                nRounds, r))
+              .select(col("tok"), col("cnt"))
+          }
+        val next = chars.join(usage, Seq("tok"), "left")
+          .select(col("tok"), coalesce(col("cnt"), lit(0L)).as("cnt"))
+          .unionByName(kept)
+        vocab = rot(next)
+        graft.CacheScope.unpersist(usage)
+      }
+      (wf, vocab, Seq(subs, chars))
     }
-    } // StaticPlan.withMeasured
-    (wf, vocab, Seq(subs, chars))
   }
 
   /**

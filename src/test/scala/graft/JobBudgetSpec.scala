@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions.lit
 
 /** Spark job budgets of armed bounded-round operators on a small
   * in-memory graph, construction and final collect separately. Every
-  * eager action inside a `StaticPlan.withMeasured` window must run in
+  * eager action inside a law window (`Rounds.gate`,
+  * `StaticPlan.withMeasured`) must run in
   * the armed child session: one that escapes plans under the caller's
   * AQE, which adds at least one stage-materialization job, so these
   * exact counts fail on it. Also the persisted frames a power iteration

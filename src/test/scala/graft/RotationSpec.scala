@@ -114,18 +114,46 @@ class RotationSpec extends SparkSpec {
       s"released checkpoints warned: ${warns.asScala.mkString("; ")}")
   }
 
-  test("checkpoints and block ids stay behind Rotation") {
+  /** (file, line number, enclosing member def, line) of every operator
+    * source line under graft/{analytics,pipeline}. */
+  private def operatorLines: Seq[(String, Int, String, String)] = {
     val root = new java.io.File("src/main/scala/graft")
     val dirs = Seq("analytics", "pipeline").map(new java.io.File(root, _))
     assert(dirs.forall(_.isDirectory), s"sources not found under $root")
-    val offenders = for {
+    val member = """^  (?:private )?def (\w+)""".r.unanchored
+    for {
       d <- dirs
-      f <- d.listFiles().toSeq if f.getName.endsWith(".scala")
-      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala
-        .zipWithIndex
-      if line.contains("localCheckpoint(") || line.contains("getPersistentRDDs")
-    } yield s"${f.getName}:${i + 1}"
+      f <- d.listFiles().toSeq.sortBy(_.getName) if f.getName.endsWith(".scala")
+      lines = java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
+      defs = lines.scanLeft("") {
+        case (_, member(name)) => name
+        case (cur, _) => cur
+      }.tail
+      ((line, owner), i) <- lines.zip(defs).zipWithIndex
+    } yield (f.getName, i + 1, owner, line)
+  }
+
+  test("checkpoints and block ids stay behind Rotation") {
+    val offenders = operatorLines.collect {
+      case (f, n, _, line) if line.contains("localCheckpoint(") ||
+        line.contains("getPersistentRDDs") => s"$f:$n"
+    }
     assert(offenders.isEmpty,
       s"materialization outside graft.Rotation: ${offenders.mkString(", ")}")
+  }
+
+  test("law windows and round-loop slots stay behind Rounds") {
+    // the PageRank family's persist-rotated kernel keeps its own window;
+    // three fixed-round loops run unwindowed on bare slots
+    val windowed = Set("powerIterate", "pageRankConvergence")
+    val bare = Set("landmarkDistances", "kmeansParallelInit", "kCenterSeeds")
+    val offenders = operatorLines.collect {
+      case (f, n, owner, line) if !line.trim.startsWith("//") &&
+        (line.contains("StaticPlan.withMeasured(") && !windowed(owner) ||
+          line.contains("new graft.Rotation") && !bare(owner)) =>
+        s"$f:$n ($owner)"
+    }
+    assert(offenders.isEmpty,
+      s"hand-rolled round loop scaffold outside graft.Rounds: ${offenders.mkString(", ")}")
   }
 }
