@@ -20,7 +20,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge,
  * into the leaf; size-only estimation multiplies child sizes across
  * joins, so rotated leaves compound the products exponentially in
  * rounds. Every rotation therefore caps them at Long.MaxValue
- * ([[org.apache.spark.sql.GraftExpressionBridge.capCheckpointStats]]).
+ * ([[org.apache.spark.sql.GraftExpressionBridge.checkpointLeaf]]).
  *
  * The checkpoint's blocks belong to the RDD inside that leaf, which
  * `Dataset.unpersist` cannot reach. The slot takes the RDD from the
@@ -36,30 +36,36 @@ import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge,
  * loss; a fault-tolerant cluster run would swap in
  * `checkpoint(eager = true)` with a checkpoint dir here.
  */
-final class Rotation {
+final class Rotation(keyed: Boolean = false) {
   private var held: Option[RDD[_]] = None
 
-  /** Checkpoint `df` eagerly (armed inside a law window: [[Rounds.gate]]
-    * or [[StaticPlan.withMeasured]]), cap its frozen stats, release this
-    * slot's previous blocks; the checkpointed frame, bound to `df`'s
-    * session. */
+  /** Checkpoint `df` eagerly (armed inside a law window,
+    * [[Rounds.gate]]), cap its frozen stats, release this slot's
+    * previous blocks; the checkpointed frame, bound to `df`'s session. */
   def apply(df: DataFrame): DataFrame = keep(df, StaticPlan.armed(df))
 
   /** [[apply]] to `out(df)`, plus the row of `metrics` over `df`: the
     * metrics ride the checkpoint's own job (no extra job) and are
     * awaited without a cap. `out` drops what only the metrics read.
-    * The observation attaches to the frame the checkpoint runs on. */
+    * The observation attaches AFTER the armed rebind, so it completes
+    * in the session the checkpoint runs in. */
   def observe(df: DataFrame, metrics: Seq[Column],
       out: DataFrame => DataFrame = identity): (DataFrame, Row) = {
-    val (run, row) = Rotation.observed(df, metrics)
-    (keep(df, out(run)), row())
+    val obs = Observation()
+    val run = StaticPlan.armed(df).observe(obs, metrics.head, metrics.tail: _*)
+    (keep(df, out(run)), scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration.Inf))
   }
 
   /** Checkpoint `run` (the caller's `df`, possibly rebound) and bind
-    * the result back to `df`'s session. */
+    * the result back to `df`'s session. A `keyed` slot's leaf keeps an
+    * adaptive `run`'s hash partitioning, for a co-partitioned join next
+    * round; not by default, since a cache over one reference to such a
+    * leaf misses the plan's other references (kCore recomputed one). */
   private def keep(df: DataFrame, run: DataFrame): DataFrame = {
-    val next = GraftExpressionBridge.capCheckpointStats(GraftExpressionBridge
-      .rebind(df.sparkSession, run.localCheckpoint(true)))
+    val next = GraftExpressionBridge.checkpointLeaf(GraftExpressionBridge
+      .rebind(df.sparkSession, run.localCheckpoint(true)),
+      Option.when(keyed)(run))
     release()
     held = Some(GraftExpressionBridge.checkpointRdd(next))
     next
@@ -69,17 +75,5 @@ final class Rotation {
   def release(): Unit = {
     held.foreach(GraftExpressionBridge.dropBlocks)
     held = None
-  }
-}
-
-object Rotation {
-  /** `df` rebound armed ([[StaticPlan.armed]]) with `metrics` attached
-    * after the rebind, so they complete in the session the action runs
-    * in; and their row, awaited without a cap once an action ran. */
-  def observed(df: DataFrame, metrics: Seq[Column]): (DataFrame, () => Row) = {
-    val obs = Observation()
-    (StaticPlan.armed(df).observe(obs, metrics.head, metrics.tail: _*),
-      () => scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration.Inf))
   }
 }

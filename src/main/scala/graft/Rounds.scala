@@ -33,9 +33,10 @@ final class Rounds private (name: String, spark: SparkSession) {
   private var label = name
 
   /** A [[Rotation]] slot released when the operator exits; with
-    * `kept`, only when it throws (its frame is part of the result). */
-  def slot(kept: Boolean = false): Rotation = {
-    val rot = new Rotation
+    * `kept`, only when it throws (its frame is part of the result).
+    * `keyed`: see [[Rotation]]. */
+  def slot(kept: Boolean = false, keyed: Boolean = false): Rotation = {
+    val rot = new Rotation(keyed)
     slots += ((rot, kept))
     rot
   }

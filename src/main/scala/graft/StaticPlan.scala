@@ -24,27 +24,30 @@ import org.apache.spark.sql.functions.broadcast
  * under its own confs, and concurrent armed regions overlap. The law
  * has two uses.
  *
- * 1. The loop window: [[graft.Rounds.gate]] in a bounded-round
- *    operator, [[withMeasured]] in the PageRank family's kernel. The
- *    operator measures its loop frames' ROW count; under [[SmallRows]] the
- *    window arms (1) AQE off below [[AqeOffRows]] — every join side is
- *    statically broadcast-able, and each rotation's multi-exchange
- *    stage tree collapses into ONE job instead of one job per
- *    exchange; (2) shuffle partitions derived from the measured rows
- *    ([[RowsPerPartition]] each); (3) whole-stage codegen off at one
- *    partition's worth of rows, since round-varying literals make
- *    every rotation compile fresh classes; (4) a broadcast-hint
- *    function for the caller's vertex-sized join sides (rotated
- *    leaves carry capped "unknown" stats, so static planning would
- *    otherwise sort-merge everything). The dials become the calling
- *    THREAD's armed scope for the body; a nested window merges its
- *    dials over the outer ones (inner wins per key), and the previous
- *    scope comes back on every exit path. Frames stay bound to the
- *    caller's session inside the body: only the eager actions run
- *    armed, through [[armed]] — `graft.Rotation` checkpoints,
- *    `CacheScope.persist` (the cached physical plan is built at
- *    persist time) and the loops' own scalar fetches. Each returns
- *    caller-bound frames, so the operator's final action plans
+ * 1. The loop window, [[graft.Rounds.gate]] in a bounded-round
+ *    operator. The operator measures its loop frames' ROW count; under
+ *    [[SmallRows]] the window arms two bands of dials.
+ *
+ *    - The hinted band, every armed window: shuffle partitions derived
+ *      from the measured rows ([[RowsPerPartition]] each), and a
+ *      broadcast-hint function for the caller's vertex-sized join
+ *      sides (rotated leaves carry capped "unknown" stats, so static
+ *      planning would otherwise sort-merge everything).
+ *    - The static-and-interpreted band, below [[AqeOffRows]]: AQE off
+ *      (each rotation's multi-exchange stage tree runs as ONE job, not
+ *      one job per exchange) and the serve binding's interpreted dials
+ *      (whole-stage codegen off plus `factoryMode=NO_CODEGEN`): a
+ *      loop's round-varying literals and many distinct plans compile
+ *      fresh classes that a round of this size never earns back.
+ *
+ *    The dials become the calling THREAD's armed scope for the body;
+ *    a nested window merges its dials over the outer ones (inner wins
+ *    per key), and the previous scope comes back on every exit path.
+ *    Frames stay bound to the caller's session inside the body: only
+ *    the eager actions run armed, through [[armed]] — `graft.Rotation`
+ *    checkpoints, `CacheScope.persist` (the cached physical plan is
+ *    built at persist time) and the loops' own scalar fetches. Each
+ *    returns caller-bound frames, so the operator's final action plans
  *    unarmed. Work handed to another thread (a `Future`) carries no
  *    scope: bind its frame with [[armed]] before spawning it.
  *
@@ -67,10 +70,13 @@ import org.apache.spark.sql.functions.broadcast
  * generated (one Janino compile each) unless the factory mode selects
  * their interpreted versions. Under [[SmallBytes]] interpreted
  * evaluation costs less than the compiles it avoids; a serve_mixed
- * cycle of 17 requests went from about 105 compiles to none.
- * `factoryMode` is an internal conf: ServePathSpec
- * asserts zero compiles, so a Spark version that stops honouring it
- * fails there.
+ * cycle of 17 requests went from about 105 compiles to none. The
+ * loop window's static band sets the same two dials: a batch of
+ * iterative operators cycles through more distinct classes than
+ * Spark's JVM-wide 100-entry codegen cache holds, so whole-stage
+ * codegen alone left every warm call recompiling. `factoryMode` is an
+ * internal conf: ServePathSpec asserts zero compiles, so a Spark
+ * version that stops honouring it fails there.
  *
  * Why a ROW bound is safe for the loop window (r15 ADVICE
  * adjudication, kept from the leiden law): every hinted side in these
@@ -118,7 +124,8 @@ object StaticPlan {
     * 500 k rows (6.4 MB), 44-62 % at 1.5 M. The rewrites bound it. */
   val SmallBytes = 2L << 20
 
-  /** The serve binding's dials: interpreted execution. */
+  /** Interpreted execution: the serve binding's dials, and the loop
+    * window's below [[AqeOffRows]]. */
   private val Interpreted = Map(CodegenKey -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
@@ -205,8 +212,8 @@ object StaticPlan {
   }
 
   /** `ds` rebound into the armed child of its root session when the
-    * calling thread runs an armed [[withMeasured]] window, else `ds`.
-    * Run a window's eager actions (and persists) on this frame. */
+    * calling thread runs an armed [[graft.Rounds.gate]] window, else
+    * `ds`. Run a window's eager actions (and persists) on this frame. */
   def armed[T](ds: Dataset[T]): Dataset[T] = {
     val dials = scope.get
     if (dials.isEmpty) ds
@@ -214,15 +221,10 @@ object StaticPlan {
       childOf(rootOf(ds.sparkSession), dials), ds)
   }
 
-  /** Run `body` under the static-small law when `measuredRows` is
-    * under the bound, else unchanged. The body receives the broadcast-
-    * hint function to apply to its measured-small join sides (identity
-    * when the law is not armed); its eager actions run armed through
-    * [[armed]]. Bounded-round loops open their window through
-    * [[graft.Rounds]]. */
-  def withMeasured[T](spark: SparkSession, measuredRows: Long)
-      (body: (DataFrame => DataFrame) => T): T =
-    scoped(body(arm(spark, measuredRows)))
+  /** The shuffle partition count a frame of `spark` plans with on the
+    * calling thread: the armed window's, else the session's. */
+  def partitions(spark: SparkSession): Int =
+    scope.get.getOrElse(ShufKey, spark.conf.get(ShufKey)).toInt
 
   /** `body` with the calling thread's armed scope restored after it on
     * every exit path: an [[arm]] inside the body lasts until then. */
@@ -243,22 +245,17 @@ object StaticPlan {
       val parts = math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
         (measuredRows + RowsPerPartition - 1) / RowsPerPartition))
-      // Whole-stage codegen compiles a fresh Janino class per DISTINCT
-      // generated source; bounded-round loops embed round-varying
-      // literals (round index, parity, level id), so every rotation
-      // job pays a compile that dwarfs the microseconds of data it
-      // runs on — WHEN the frame is tiny. The dial is row-derived like
-      // the partition count: at ≤ one partition's worth of rows the
-      // compile dominates and interpreted execution wins (measured:
-      // leiden_full job-time sum 17.9 → 12.3 s); in the mid band
-      // (tens of thousands to 500 k rows of real expression work per
-      // round) codegen's per-row speedup outweighs the compile, so it
-      // stays on. At scale the law is unarmed and nothing changes.
+      // The static band: below two partitions' worth of rows AQE has
+      // nothing to re-plan, and a round's Janino compiles (loops embed
+      // round-varying literals and cycle through more plans than the
+      // codegen cache holds) dwarf its rows. Above it AQE and codegen's
+      // per-row speedup stay on; at scale the law is unarmed.
+      val static = measuredRows < AqeOffRows
       Seq(
-        ("aqe", measuredRows < AqeOffRows, AqeKey -> "false"),
-        ("parts", true, ShufKey -> parts.toString),
-        ("codegen", measuredRows <= RowsPerPartition, CodegenKey -> "false"))
-        .collect { case (dial, on, kv) if on && !disabled(dial) => (dial, kv) }
+        ("aqe", static, Map(AqeKey -> "false")),
+        ("parts", true, Map(ShufKey -> parts.toString)),
+        ("codegen", static, Interpreted))
+        .collect { case (dial, true, kv) if !disabled(dial) => (dial, kv) }
     }
     val hints = small && !disabled("hints")
     if (sys.env.contains("SPARK_GRAFT_LAW_LOG")) {
@@ -267,10 +264,11 @@ object StaticPlan {
           !f.getClassName.startsWith("graft.Rounds")).take(2)
         .map(f => s"${f.getClassName.split('.').last}.${f.getMethodName}:${f.getLineNumber}")
         .mkString(" < ")
-      val set = dials.map { case (d, (_, v)) => s"$d=$v" } ++ Option.when(hints)("hints")
+      val set = dials.map { case (d, kv) => s"$d=${kv.values.mkString("/")}" } ++
+        Option.when(hints)("hints")
       System.err.println(s"[law] rows=$measuredRows armed=${set.nonEmpty} dials=${set.mkString(",")} at $caller")
     }
-    scope.set(scope.get ++ dials.map(_._2))
+    scope.set(scope.get ++ dials.flatMap(_._2))
     if (hints) broadcast _ else identity
   }
 }

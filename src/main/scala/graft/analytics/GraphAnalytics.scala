@@ -71,67 +71,73 @@ object GraphAnalytics {
         col(GraphStore.DST).as("d"))
     }.reduce(_ unionByName _)
 
-  /** The vertex set (v) of an (s, d) arc frame, persisted. */
-  private def vertexSet(edges: DataFrame): DataFrame =
-    edges.select(col("s").as("v"))
-      .union(edges.select(col("d")))
-      .distinct()
-      .transform(graft.CacheScope.persist(_))
+  /** The persisted loop invariants of a co-partitioned superstep
+    * (Pregelix: vertex state stays partitioned like the edges, only
+    * messages move): `weigh` over `edges` hashed by `s`, and its vertex
+    * set (v) hashed by `v`, into the window's partition count, explicit
+    * so that AQE coalesces neither. Rank frames projected from the
+    * vertex set, and their rotations, keep its partitioning. */
+  private def coPartitioned(edges: DataFrame,
+      weigh: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val n = graft.StaticPlan.partitions(edges.sparkSession)
+    val e = graft.CacheScope.persist(weigh(edges.repartition(n, col("s"))))
+    val vs = e.select(col("s").as("v")).union(e.select(col("d")))
+      .repartition(n, col("v")).distinct()
+    (e, graft.CacheScope.persist(vs))
+  }
+
+  /** The out-degree of each arc's sender, over arcs partitioned by `s`. */
+  private def outDegree: Column = count(lit(1)).over(Window.partitionBy("s"))
 
   /** One superstep's messages (mv, ms): each arc (s, d) of `edges`
-    * sends `msg` over its sender's rank row (v, r) of `ranks`, hinted
-    * through `bc`; each receiver sums its dyadic-floored messages. */
+    * sends `msg` over its sender's rank row (v, r) of `ranks`; each
+    * receiver sums its dyadic-floored messages. Over
+    * [[coPartitioned]] frames the join needs no exchange: the sum's
+    * shuffle of the messages is the superstep's only one. */
   private def messages(edges: DataFrame, ranks: DataFrame,
-      bc: DataFrame => DataFrame, msg: Column): DataFrame =
-    edges.join(bc(ranks), col("s") === col("v"))
+      msg: Column): DataFrame =
+    edges.join(ranks.hint("shuffle_hash"), col("s") === col("v"))
       .groupBy(col("d").as("mv"))
       .agg(sum(graft.functions.Portable.dyadic(msg)).as("ms"))
+
+  /** The next ranks (v, r) of every vertex of `vs`: `update` of its
+    * summed [[messages]] (0.0 without in-arcs), partitioned as `vs`. */
+  private def superstep(edges: DataFrame, vs: DataFrame, ranks: DataFrame,
+      msg: Column)(update: Column => Column): DataFrame =
+    vs.join(messages(edges, ranks, msg).hint("shuffle_hash"),
+        col("v") === col("mv"), "left")
+      .select(col("v"), update(coalesce(col("ms"), lit(0.0))).as("r"))
 
   /**
    * The PageRank family's power-iteration kernel (GraphX's Pregel
    * shape, parameterised by message and update): from r = `init` on
-   * every vertex of `verts`, `iters` supersteps r(v) <- update(Σ_in
-   * [[messages]] of `msg`; 0.0 without in-arcs), in one
-   * [[graft.StaticPlan.withMeasured]] window gated on `edges`' rows.
-   * The last ranks (v, r) come back persisted, caller-bound.
+   * every vertex, `iters` [[superstep]]s r(v) <- update(Σ_in
+   * [[messages]] of `msg`) over the [[coPartitioned]] `weigh`ed
+   * `edges`, in one [[graft.Rounds]] loop gated on `rows` (the caller's
+   * count of the weighed frame's rows). The last ranks (v, r) come
+   * back checkpointed in the loop's kept slot, caller-bound.
    *
    * Dyadic law: each message is floored to the 2^-30 grid BEFORE the
    * sum, so the aggregate is exact (order-independent) and every
    * superstep is bit-reproducible across partitionings and engines:
    * the oracle replays the identical recurrence (Portable.dyadic).
    *
-   * Each round is persisted, counted armed, and the superseded frame
-   * released ([[advance]]): a round reads the previous ranks from the
-   * cache, not their history, and a 100-iteration run pins one rank
-   * frame beside `edges` and `verts`, not 100. Persist, not a
-   * [[graft.Rotation]] checkpoint: a round reads the previous ranks
-   * once, so an unpersist's recompile never expands a plan (the
-   * [[hits]] lesson does not apply), and a final plan may scan the
-   * cached ranks twice ([[normalized]]).
+   * A round is one checkpoint ([[graft.Rotation]]) with one exchange,
+   * the messages' shuffle, and no broadcast: the edges (the large
+   * side) are shuffled once per run, not once per round, and a
+   * 100-iteration run pins the two invariants and one rank frame.
    */
-  private def powerIterate(edges: DataFrame, verts: DataFrame,
-      init: Column, iters: Int, msg: Column)
-      (update: Column => Column): DataFrame = {
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = edges.count()
-    graft.StaticPlan.withMeasured(verts.sparkSession, nEdges) { bc =>
-      (1 to iters).foldLeft(verts.select(col("v"), init.as("r"))) {
-        (ranks, i) => advance(Option.when(i > 1)(ranks),
-          verts.join(bc(messages(edges, ranks, bc, msg)),
-              col("v") === col("mv"), "left")
-            .select(col("v"), update(coalesce(col("ms"), lit(0.0))).as("r")))
-      }
+  private def powerIterate(edges: DataFrame, rows: Long,
+      weigh: DataFrame => DataFrame, init: Column, iters: Int, msg: Column)
+      (update: Column => Column): DataFrame =
+    graft.Rounds("powerIterate", edges.sparkSession) { rs =>
+      rs.gate(rows)
+      val (e, vs) = coPartitioned(edges, weigh)
+      val rot = rs.slot(kept = true, keyed = true)
+      var ranks = vs.select(col("v"), init.as("r"))
+      rs.times(iters) { _ => ranks = rot(superstep(e, vs, ranks, msg)(update)) }
+      ranks
     }
-  }
-
-  /** `next` persisted and counted armed, then `prev` released: one
-    * [[powerIterate]] round; the persisted `next`. */
-  private def advance(prev: Option[DataFrame], next: DataFrame): DataFrame = {
-    val ranks = graft.CacheScope.persist(next)
-    graft.StaticPlan.armed(ranks).count()
-    prev.foreach(graft.CacheScope.unpersist)
-    ranks
-  }
 
   /** Static PageRank, DataFrame formulation of GraphX's staticPageRank
     * recurrence: r0 = 1.0; r_i = reset + (1-reset) * Σ_in r_{i-1}/outdeg;
@@ -139,28 +145,22 @@ object GraphAnalytics {
     * [[powerIterate]]: each is one edge⋈rank join plus one
     * partial-aggregated sum shuffle of vertex-sized data over the
     * persisted loop invariants, materialized per round, so the
-    * normalization plans over one cached rank frame, never the
-    * iteration chain. */
+    * normalization plans over one rank frame, never the iteration
+    * chain. The gate counts the arcs: the weighed frame has one row
+    * per arc, and the arc count needs no join. */
   def pageRank(store: GraphStore, edgeTypes: Seq[String], iters: Int,
       resetProb: Double = 0.15): DataFrame = {
     val edges = arcs(store, edgeTypes)
-    val outDeg = edges.groupBy("s").agg(count(lit(1)).as("deg"))
-    // Loop invariants PERSIST (the GraphX pattern: edge state cached
-    // across supersteps). Without it the 10x amplification smoke showed
-    // ~150x cost for 10x edges: the unrolled plan re-derived the
-    // edge⋈outdeg join and the distinct-vertex frame inside every
-    // iteration's lineage instead of reading them once.
-    val weighted = edges.join(outDeg, "s") // (s, d, deg)
-      .transform(graft.CacheScope.persist(_))
-    normalized(powerIterate(weighted, vertexSet(edges), lit(1.0), iters,
+    normalized(powerIterate(edges, edges.count(),
+      _.withColumn("deg", outDegree), lit(1.0), iters,
       col("r") / col("deg"))(c => lit(resetProb) + lit(1 - resetProb) * c))
   }
 
   /** Final ranks (v, r) rescaled to sum to |V|, as (_vid, rank). */
   private def normalized(ranks: DataFrame): DataFrame = {
-    // The final ranks (already persisted) feed BOTH the normalization
-    // scalar and the output rows — without the persist the crossJoin
-    // would re-execute the whole iteration chain a second time.
+    // The final ranks (already materialized) feed BOTH the
+    // normalization scalar and the output rows — unmaterialized, the
+    // crossJoin would re-execute the whole iteration chain a second time.
     // dyadic-floor the summands of the normalization total too — same
     // order-independence requirement as the superstep sums
     val rq = graft.functions.Portable.dyadic(col("r"))
@@ -193,12 +193,11 @@ object GraphAnalytics {
     require(alpha > 0.0 && alpha < 1.0, "alpha must be in (0, 1)")
     // simple directed graph: parallel edges collapse (one walk per
     // distinct arc), matching the oracle's DISTINCT projection
-    val edges = rawEdges.toDF("s", "d").distinct()
-      .transform(graft.CacheScope.persist(_))
+    val edges = rawEdges.toDF("s", "d")
     // walk mass flows s -> d undiluted (no degree divide: Katz counts
     // walks, PageRank spreads probability)
-    val ranks = powerIterate(edges, vertexSet(edges), lit(beta), iters,
-      col("r"))(c => lit(beta) + lit(alpha) * c)
+    val ranks = powerIterate(edges, edges.distinct().count(), _.distinct(),
+      lit(beta), iters, col("r"))(c => lit(beta) + lit(alpha) * c)
     ranks.select(col("v").as("_vid"),
       graft.functions.Portable.quant(col("r"), 6).as("katz"))
   }
@@ -215,32 +214,32 @@ object GraphAnalytics {
    * Determinism law ([[hits]]): messages AND the normalized quotient
    * ride the dyadic 2^-30 grid, the L1 total is an exact on-grid sum,
    * so every round is bit-reproducible and the oracle replays it.
-   * Scale shape: one edge join + one groupBy-sum + a broadcast
-   * scalar-total attach per round on persisted loop invariants; O(1)
-   * pinned frames.
+   * Scale shape: [[powerIterate]]'s co-partitioned superstep plus a
+   * broadcast scalar-total attach per round on persisted loop
+   * invariants; O(1) pinned frames.
    */
   def eigenvectorCentrality(rawEdges: DataFrame, iters: Int): DataFrame = {
     import graft.functions.Portable.dyadic
     require(iters >= 1, "iters must be >= 1")
-    val edges = rawEdges.toDF("s", "d").distinct()
-      .transform(graft.CacheScope.persist(_))
-    val verts = vertexSet(edges)
-    graft.Rounds("eigenvectorCentrality", verts.sparkSession) { rs =>
+    val edges = rawEdges.toDF("s", "d")
+    graft.Rounds("eigenvectorCentrality", edges.sparkSession) { rs =>
+      rs.gate(edges.distinct().count())
+      val (e, verts) = coPartitioned(edges, _.distinct())
       // checkpoint rotation, NOT plain persist: the in-plan L1 scalar
       // references the round's message frame a second time, so a
       // persist-rotated loop TRIPLES the logical plan per round and
       // planning OOMs by iteration 5 (reproduced here in the r13 bench)
       val rot = rs.slot(kept = true)
-      var x = rot(verts.select(col("v"), lit(1.0).as("r")))
-      val bc = rs.gate(edges.count())
+      var x = verts.select(col("v"), lit(1.0).as("r"))
       rs.times(iters) { _ =>
-        val raw = messages(edges, x, bc, col("r"))
+        val raw = messages(e, x, col("r"))
           .transform(graft.CacheScope.persist(_))
         val tot = raw.agg(sum(col("ms")).as("mt")) // exact on-grid sum
         // zero-mass guard (degenerate-input law): on a DAG the message
         // mass can drain to nothing — define the result as all-zero
         // scores instead of a NULL/NaN-poisoning division
-        val next = verts.join(bc(raw), col("v") === col("mv"), "left")
+        val next = verts.join(raw.hint("shuffle_hash"),
+            col("v") === col("mv"), "left")
           .crossJoin(broadcast(tot))
           .select(col("v"),
             when(col("mt") > lit(0.0),
@@ -409,11 +408,9 @@ object GraphAnalytics {
   def personalizedPageRank(store: GraphStore, edgeTypes: Seq[String],
       seeds: Seq[Long], iters: Int, resetProb: Double = 0.15): DataFrame = {
     val edges = arcs(store, edgeTypes)
-    val outDeg = edges.groupBy("s").agg(count(lit(1)).as("deg"))
-    val weighted = edges.join(outDeg, "s")
-      .transform(graft.CacheScope.persist(_))
     val isSeed = col("v").isin(seeds: _*)
-    val ranks = powerIterate(weighted, vertexSet(edges),
+    val ranks = powerIterate(edges, edges.count(),
+      _.withColumn("deg", outDegree),
       when(isSeed, lit(1.0)).otherwise(lit(0.0)), iters,
       col("r") / col("deg"))(c =>
       when(isSeed, lit(resetProb)).otherwise(lit(0.0)) +
@@ -839,13 +836,11 @@ object GraphAnalytics {
       resetProb: Double = 0.15): DataFrame = {
     import graft.functions.Portable.dyadic
     val e = edges.select(col("s"), col("d"), dyadic(col("w")).as("w"))
-      .groupBy(col("s"), col("d")).agg(sum(col("w")).as("w"))
-      .transform(graft.CacheScope.persist(_))
-    val wsum = e.groupBy(col("s")).agg(sum(col("w")).as("ws"))
-    val weighted = e.join(wsum, Seq("s"))
-      .transform(graft.CacheScope.persist(_))
-    normalized(powerIterate(weighted, vertexSet(e), lit(1.0), iters,
-      col("r") * col("w") / col("ws"))(c =>
+    val weigh = (arcs: DataFrame) =>
+      arcs.groupBy(col("s"), col("d")).agg(sum(col("w")).as("w"))
+        .withColumn("ws", sum(col("w")).over(Window.partitionBy("s")))
+    normalized(powerIterate(e, e.select("s", "d").distinct().count(), weigh,
+      lit(1.0), iters, col("r") * col("w") / col("ws"))(c =>
       lit(resetProb) + lit(1 - resetProb) * c))
   }
 
@@ -3500,7 +3495,7 @@ object GraphAnalytics {
           // lineage Catalyst's sizeInBytes estimation multiplied down
           // every cloned subtree until the BigInt products ground the
           // driver for minutes (jstack: SizeInBytesOnlyStatsPlanVisitor
-          // in ToomCook3 multiply). Since capCheckpointStats (wired into
+          // in ToomCook3 multiply). Since checkpointLeaf (wired into
           // every graft.Rotation) caps the frozen leaf stats that fed
           // that arithmetic, a plain persist suffices here — the sweep
           // trees bottom out at the capped rotation leaves, so the
@@ -3807,46 +3802,37 @@ object GraphAnalytics {
     import graft.functions.Portable.{dyadic, quant}
     require(iters >= 1, "iters must be >= 1")
     val spark = edges.sparkSession
-    val e = edges.toDF("s", "d").distinct()
-      .transform(graft.CacheScope.persist(_))
-    val deg = e.groupBy(col("s")).agg(count(lit(1)).as("ws"))
-    val weighted = e.join(deg, Seq("s"))
-      .transform(graft.CacheScope.persist(_))
-    val vs = vertexSet(e)
-    var ranks = vs.select(col("v"), lit(1.0).as("r"))
-      .transform(graft.CacheScope.persist(_))
-    val out = collection.mutable.ArrayBuffer.empty[(Long, Double, Double)]
-    // Measured gate for the static-planning law ([[graft.StaticPlan]])
-    val nEdges = weighted.count()
-    graft.StaticPlan.withMeasured(spark, nEdges) { bc =>
-      for (i <- 1 to iters) {
-        val msgs = messages(weighted, ranks, bc, col("r") / col("ws"))
-        val delta = dyadic(abs(col("r") - col("r0")))
-        // The residual scalars ride the superstep's own materialization
-        // job as a CollectMetrics observation (the semiSyncLpa law) —
-        // the inner join against the previous ranks keeps every vertex
-        // (both frames carry the identical vertex set by construction),
-        // so the observed frame's (v, r) rows ARE the superstep result;
-        // r16-opt: this replaces a second per-iteration job that re-ran
-        // the vertex join for two scalars. Persisted, not checkpointed:
-        // a round's two joins on the cached ranks share one broadcast;
-        // two scans of a checkpoint broadcast twice, one job more.
-        val (observed, residuals) = graft.Rotation.observed(
-          vs.join(bc(msgs), col("v") === col("mv"), "left")
-            .select(col("v"),
-              (lit(resetProb) + lit(1 - resetProb) *
-                coalesce(col("ms"), lit(0.0))).as("r"))
-            .join(bc(ranks.select(col("v"), col("r").as("r0"))), Seq("v")),
-          Seq(sum(delta).as("l1"), max(delta).as("mx")))
-        ranks = advance(Some(ranks), observed.select(col("v"), col("r")))
-        val res = residuals()
-        out += ((i.toLong, res.getDouble(0), res.getDouble(1)))
-      }
+    val e = edges.toDF("s", "d")
+    val delta = dyadic(abs(col("r") - col("r0")))
+    val trace = graft.Rounds("pageRankConvergence", spark) { rs =>
+      rs.gate(e.distinct().count())
+      val (weighted, vs) = coPartitioned(e,
+        _.distinct().withColumn("ws", outDegree))
+      val rot = rs.slot(keyed = true)
+      var ranks = vs.select(col("v"), lit(1.0).as("r"))
+      rs.track(iters) { _ =>
+        // The residual scalars ride the superstep's own checkpoint job
+        // as a CollectMetrics observation (the semiSyncLpa law): the
+        // inner join against the previous ranks keeps every vertex
+        // (both frames carry the identical vertex set by construction,
+        // partitioned alike, so it needs no exchange either), and the
+        // observed frame's (v, r) rows ARE the superstep result.
+        val (next, res) = rot.observe(
+          superstep(weighted, vs, ranks, col("r") / col("ws"))(c =>
+            lit(resetProb) + lit(1 - resetProb) * c)
+            .join(ranks.select(col("v"), col("r").as("r0"))
+              .hint("shuffle_hash"), Seq("v")),
+          Seq(sum(delta).as("l1"), max(delta).as("mx")),
+          _.select(col("v"), col("r")))
+        ranks = next
+        (res.getDouble(0), res.getDouble(1))
+      }(_ => 1L)
     }
     import spark.implicits._
-    val df = out.toSeq.toDF("iter", "l1_residual", "max_delta")
-    df.select(col("iter"), quant(col("l1_residual"), 6).as("l1_residual"),
-      quant(col("max_delta"), 6).as("max_delta"))
+    trace.map { case (i, (l1, mx)) => (i, l1, mx) }
+      .toDF("iter", "l1_residual", "max_delta")
+      .select(col("iter"), quant(col("l1_residual"), 6).as("l1_residual"),
+        quant(col("max_delta"), 6).as("max_delta"))
   }
 
   /**

@@ -59,10 +59,11 @@ object GraftExpressionBridge {
     }
 
   /**
-   * Cap a localCheckpoint'd Dataset's FROZEN origin statistics at
-   * Long.MaxValue bytes/rows.
+   * `df`, a localCheckpoint of `run`, with its `LogicalRDD` leaf's
+   * FROZEN origin statistics capped at Long.MaxValue bytes/rows
+   * (first) and, when `run` is given, its partitioning known (second).
    *
-   * Why this exists: `Dataset.localCheckpoint` deliberately snapshots
+   * First: `Dataset.localCheckpoint` deliberately snapshots
    * the origin plan's estimated `Statistics` into the resulting
    * `LogicalRDD` (`originStats`). Size-only estimation multiplies
    * child sizes across joins, so a checkpoint-rotated iterative loop
@@ -77,24 +78,40 @@ object GraftExpressionBridge {
    * (broadcast decisions unaffected) while making the compounding
    * harmless — a leaf is never worse than "unknown", which is exactly
    * the default a stats-free LogicalRDD would report.
+   *
+   * Second: the leaf reports the hash partitioning of `run`'s FINAL plan
+   * when that hashes into the RDD's partition count: an adaptive plan
+   * reports none before it runs, so the checkpoint froze none, and a
+   * co-partitioned join on it would re-shuffle it every round.
    */
-  def capCheckpointStats(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.ExpressionSet
-    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+  def checkpointLeaf(df: DataFrame, run: Option[DataFrame]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,
+      AttributeSet, ExpressionSet}
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+      UnknownPartitioning}
     val cap = BigInt(Long.MaxValue)
     df.queryExecution.analyzed match {
       case lr: execution.LogicalRDD =>
         val st = lr.computeStats()
-        if (st.sizeInBytes <= cap && st.rowCount.forall(_ <= cap)) df
+        val adopted = run.map(_.queryExecution.executedPlan) match {
+          case Some(a: execution.adaptive.AdaptiveSparkPlanExec)
+              if lr.outputPartitioning.isInstanceOf[UnknownPartitioning] =>
+            val ids = AttributeMap(a.executedPlan.output.zip(lr.output))
+            Some(a.executedPlan.outputPartitioning).collect {
+              case h: HashPartitioning => h.copy(expressions = h.expressions
+                .map(_.transform { case x: Attribute => ids.getOrElse(x, x) }))
+            }.filter(h => h.numPartitions == lr.rdd.getNumPartitions &&
+              h.references.subsetOf(AttributeSet(lr.output)))
+          case _ => None
+        }
+        if (st.sizeInBytes <= cap && st.rowCount.forall(_ <= cap) &&
+            adopted.isEmpty) df
         else {
           val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-          val capped = Statistics(
-            sizeInBytes = st.sizeInBytes.min(cap),
-            rowCount = st.rowCount.map(_.min(cap)),
-            attributeStats = st.attributeStats,
-            isRuntime = st.isRuntime)
+          val capped = st.copy(sizeInBytes = st.sizeInBytes.min(cap),
+            rowCount = st.rowCount.map(_.min(cap)))
           classic.Dataset.ofRows(session,
-            lr.copy(lr.output, lr.rdd, lr.outputPartitioning,
+            lr.copy(lr.output, lr.rdd, adopted.getOrElse(lr.outputPartitioning),
               lr.outputOrdering, lr.isStreaming, lr.stream)(
               session, Some(capped),
               Some(ExpressionSet(lr.constraints))))

@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions.lit
 
 /** Spark job budgets of armed bounded-round operators on a small
   * in-memory graph, construction and final collect separately. Every
-  * eager action inside a law window (`Rounds.gate`,
-  * `StaticPlan.withMeasured`) must run in
+  * eager action inside a law window (`Rounds.gate`) must run in
   * the armed child session: one that escapes plans under the caller's
   * AQE, which adds at least one stage-materialization job, so these
   * exact counts fail on it. Also the persisted frames a power iteration
@@ -19,19 +18,7 @@ import org.apache.spark.sql.functions.lit
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Two 145-vertex complete digraphs (two SCCs, 41 760 arcs) joined
-    * one way, plus a 6-vertex directed tail: over 32 768 rows, so the
-    * armed loops plan two shuffle partitions (with one, a count needs
-    * no exchange and an escaped action would cost no extra job). */
-  private def edges: DataFrame = {
-    val k = spark.range(145).toDF("a")
-    val clique = k.crossJoin(k.withColumnRenamed("a", "b"))
-      .filter($"a" =!= $"b")
-    clique.select($"a".as("s"), $"b".as("d"))
-      .union(clique.select(($"a" + 145).as("s"), ($"b" + 145).as("d")))
-      .union(Seq((0L, 145L), (144L, 290L), (290L, 291L), (291L, 292L),
-        (292L, 293L), (293L, 294L), (294L, 295L)).toDF("s", "d"))
-  }
+  private def edges: DataFrame = Cliques.edges(spark)
 
   /** (jobs while building the frame, jobs of its final collect). */
   private def jobsOf(build: => DataFrame): (Int, Int) = {
@@ -60,9 +47,7 @@ class JobBudgetSpec extends SparkSpec {
     }
   }
 
-  private def store: GraphStore = GraphStore(Map.empty, Map("e" ->
-    edges.select($"s".as(GraphStore.SRC), $"d".as(GraphStore.DST))),
-    Map("e" -> 1))
+  private def store: GraphStore = Cliques.store(edges)
 
   /** Persisted RDDs that building `build` leaves pinned, from a drained
     * cache. */
@@ -77,22 +62,22 @@ class JobBudgetSpec extends SparkSpec {
 
   test("pageRank (3 iterations) job budget") {
     assert(jobsOf(GraphAnalytics.pageRank(store, Seq("e"), iters = 3)) ==
-      ((17, 3)))
+      ((7, 3)))
   }
 
   test("personalizedPageRank (3 iterations) job budget") {
     assert(jobsOf(GraphAnalytics.personalizedPageRank(store, Seq("e"),
-      Seq(0L, 145L), iters = 3)) == ((17, 1)))
+      Seq(0L, 145L), iters = 3)) == ((7, 1)))
   }
 
   test("weightedPageRank (unit weights, 3 iterations) job budget") {
     assert(jobsOf(GraphAnalytics.weightedPageRank(
-      edges.withColumn("w", lit(1.0)), iters = 3)) == ((19, 3)))
+      edges.withColumn("w", lit(1.0)), iters = 3)) == ((8, 3)))
   }
 
   test("pageRankConvergence (3 iterations) job budget") {
     assert(jobsOf(GraphAnalytics.pageRankConvergence(edges, iters = 3)) ==
-      ((20, 0)))
+      ((8, 0)))
   }
 
   test("power iteration pins its loop invariants and one rank frame") {
@@ -103,7 +88,7 @@ class JobBudgetSpec extends SparkSpec {
 
   test("katzCentrality job budget") {
     assert(jobsOf(GraphAnalytics.katzCentrality(edges, iters = 4)) ==
-      ((18, 1)))
+      ((9, 1)))
   }
 
   test("labelPropagation (3 iterations) job budget") {

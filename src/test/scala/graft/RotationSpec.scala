@@ -143,13 +143,11 @@ class RotationSpec extends SparkSpec {
   }
 
   test("law windows and round-loop slots stay behind Rounds") {
-    // the PageRank family's persist-rotated kernel keeps its own window;
     // three fixed-round loops run unwindowed on bare slots
-    val windowed = Set("powerIterate", "pageRankConvergence")
     val bare = Set("landmarkDistances", "kmeansParallelInit", "kCenterSeeds")
     val offenders = operatorLines.collect {
       case (f, n, owner, line) if !line.trim.startsWith("//") &&
-        (line.contains("StaticPlan.withMeasured(") && !windowed(owner) ||
+        (line.contains("StaticPlan.withMeasured(") ||
           line.contains("new graft.Rotation") && !bare(owner)) =>
         s"$f:$n ($owner)"
     }

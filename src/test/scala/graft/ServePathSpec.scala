@@ -1,5 +1,6 @@
 package graft
 
+import graft.analytics.GraphAnalytics
 import graft.expr.FilterExpr.{Cmp, Lit, Prop}
 import graft.model.GraphStore
 import graft.operators.{GetNeighbors, GetProps, Lookup, Scan}
@@ -70,6 +71,23 @@ class ServePathSpec extends SparkSpec {
       // the same analyzed plan, run with the caller's codegen settings
       assert(rows == sorted(GraftExpressionBridge.rebind(spark, df)))
     }
+  }
+
+  test("an armed 3-round pageRank compiles nothing inside its rounds") {
+    val store = Cliques.store(Cliques.edges(spark))
+    // evict the JVM-wide codegen cache (100 entries): 150 stages, each
+    // its own class
+    (1 to 150).map(i => spark.range(1).select((col("id") + lit(i * 7919L)).as("x")))
+      .reduce(_ union _).collect()
+    // one round compiles the gate count and the few classes Spark
+    // generates even interpreted, once per schema: the cache scans'
+    // column accessors and the partial aggregate's row joiner
+    GraphAnalytics.pageRank(store, Seq("e"), iters = 1)
+    val before = compiles
+    try GraphAnalytics.pageRank(store, Seq("e"), iters = 3)
+    finally CacheScope.drain(spark)
+    assert(compiles == before,
+      s"the rounds compiled ${compiles - before} classes")
   }
 
   test("a frame over the bound stays on the caller's session") {

@@ -4,8 +4,8 @@ import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.{DataFrame, GraftExpressionBridge}
 import org.apache.spark.sql.functions._
 
-/** The loop window of the small-input law ([[StaticPlan.withMeasured]])
-  * arms a child session for its own thread and never writes a conf of
+/** The loop window of the small-input law ([[Rounds.gate]]) arms a
+  * child session for its own thread and never writes a conf of
   * the caller's session: the caller's confs stay as they were DURING
   * the body, concurrent windows overlap with their own dials, nested
   * windows merge, and the eager actions of the body (here a
@@ -16,6 +16,7 @@ class StaticPlanSpec extends SparkSpec {
   private val AqeKey = "spark.sql.adaptive.enabled"
   private val ShufKey = "spark.sql.shuffle.partitions"
   private val CgKey = "spark.sql.codegen.wholeStage"
+  private val FactoryKey = "spark.sql.codegen.factoryMode"
 
   private def confs: Seq[Option[String]] =
     Seq(AqeKey, ShufKey, CgKey).map(spark.conf.getOption)
@@ -29,6 +30,11 @@ class StaticPlanSpec extends SparkSpec {
     GraftExpressionBridge.checkpointRdd(
       rot(frame.groupBy("k").agg(sum("v").as("s")))).getNumPartitions
 
+  /** `body` inside a loop window gated on `rows`, given the window's
+    * broadcast-hint function. */
+  private def window[T](rows: Long)(body: (DataFrame => DataFrame) => T): T =
+    Rounds("spec", spark) { rs => body(rs.gate(rows)) }
+
   /** The armed dials a frame of the body would run under. */
   private def armedConf(key: String): Option[String] =
     StaticPlan.armed(frame).sparkSession.conf.getOption(key)
@@ -36,8 +42,8 @@ class StaticPlanSpec extends SparkSpec {
   test("an armed body leaves the caller's confs unchanged and plans its rotation armed") {
     val before = confs
     val rot = new Rotation
-    // 40 000 rows: AQE off (< AqeOffRows), 2 partitions, codegen kept
-    val (parts, aqe, cg, bound) = StaticPlan.withMeasured(spark, 40000L) { _ =>
+    // 40 000 rows: AQE off and interpreted (< AqeOffRows), 2 partitions
+    val (parts, aqe, cg, bound) = window(40000L) { _ =>
       assert(confs == before, "the window wrote a caller conf")
       val parts = rotatedParts(rot)
       assert(confs == before, "the rotation wrote a caller conf")
@@ -47,9 +53,15 @@ class StaticPlanSpec extends SparkSpec {
     rot.release()
     assert(parts == 2, s"rotation planned $parts partitions, not the armed 2")
     assert(aqe.contains("false"))
-    assert(cg == spark.conf.getOption(CgKey))
+    assert(cg.contains("false"), "40 000 rows must run interpreted")
     assert(bound eq spark, "a rotation must return a caller-bound frame")
     assert(confs == before)
+    // 70 000 rows: above AqeOffRows, so AQE and codegen are kept
+    val kept = window(70000L) { _ =>
+      Seq(AqeKey, CgKey, FactoryKey).map(armedConf)
+    }
+    assert(kept == Seq(AqeKey, CgKey, FactoryKey).map(spark.conf.getOption),
+      s"70 000 rows must keep AQE and codegen: $kept")
   }
 
   // The name dates from armed windows that wrote the caller's confs and
@@ -65,7 +77,7 @@ class StaticPlanSpec extends SparkSpec {
       val runs = Seq(10L, 40000L).map { rows =>
         pool.submit(new Callable[(Boolean, Seq[Option[String]], Option[String])] {
           def call(): (Boolean, Seq[Option[String]], Option[String]) =
-            StaticPlan.withMeasured(spark, rows) { _ =>
+            window(rows) { _ =>
               bothInside.countDown()
               val overlapped = bothInside.await(60, TimeUnit.SECONDS)
               (overlapped, confs, armedConf(AqeKey))
@@ -90,7 +102,7 @@ class StaticPlanSpec extends SparkSpec {
       val runs = Seq(10L, 40000L).map { rows =>
         pool.submit(new Callable[(Boolean, Int)] {
           def call(): (Boolean, Int) =
-            StaticPlan.withMeasured(spark, rows) { _ =>
+            window(rows) { _ =>
               bothInside.countDown()
               val overlapped = bothInside.await(60, TimeUnit.SECONDS)
               val rot = new Rotation
@@ -107,19 +119,21 @@ class StaticPlanSpec extends SparkSpec {
   test("nested armed wraps restore the outer wrap's confs") {
     val before = confs
     val rot = new Rotation
-    StaticPlan.withMeasured(spark, 40000L) { _ =>
+    window(40000L) { _ =>
       assert(armedConf(ShufKey).contains("2"))
-      StaticPlan.withMeasured(spark, 70000L) { _ =>
-        // the inner window sets 3 partitions and leaves AQE alone, so
-        // the outer window's AQE-off stays in force
+      window(70000L) { _ =>
+        // the inner window sets 3 partitions and leaves AQE and codegen
+        // alone, so the outer window's static, interpreted dials stay
         assert(armedConf(ShufKey).contains("3"))
         assert(armedConf(AqeKey).contains("false"))
         assert(rotatedParts(rot) == 3)
-        StaticPlan.withMeasured(spark, 10L) { _ =>
+        window(10L) { _ =>
           assert(armedConf(ShufKey).contains("1"))
           assert(armedConf(CgKey).contains("false"))
         }
-        assert(armedConf(CgKey) == spark.conf.getOption(CgKey))
+        assert(armedConf(ShufKey).contains("3"))
+        assert(armedConf(FactoryKey).contains("NO_CODEGEN"),
+          "the innermost window must restore the outer window's dials")
       }
       assert(armedConf(ShufKey).contains("2"),
         "the inner window must restore the outer window's partitions")
@@ -138,7 +152,7 @@ class StaticPlanSpec extends SparkSpec {
     // an observation attached on the wrong side of the rebind never
     // completes: bound the wait so the spec fails instead of hanging
     val n = Await.result(Future {
-      StaticPlan.withMeasured(spark, 100L) { _ =>
+      window(100L) { _ =>
         rot.observe(frame.groupBy("k").agg(sum("v").as("s")),
           Seq(count(lit(1)).as("n")))._2.getLong(0)
       }
@@ -150,7 +164,7 @@ class StaticPlanSpec extends SparkSpec {
   test("unarmed path (rows above bound) touches no conf") {
     val shuf0 = spark.conf.get(ShufKey)
     val aqe0 = spark.conf.getOption(AqeKey)
-    StaticPlan.withMeasured(spark, StaticPlan.SmallRows + 1) { _ =>
+    window(StaticPlan.SmallRows + 1) { _ =>
       assert(spark.conf.get(ShufKey) == shuf0)
       assert(spark.conf.getOption(AqeKey) == aqe0)
     }
@@ -159,7 +173,7 @@ class StaticPlanSpec extends SparkSpec {
   test("the unarmed path creates no child") {
     val f = frame
     val rot = new Rotation
-    StaticPlan.withMeasured(spark, StaticPlan.SmallRows + 1) { bc =>
+    window(StaticPlan.SmallRows + 1) { bc =>
       assert(StaticPlan.armed(f) eq f)
       assert(bc(f) eq f, "the unarmed hint function is the identity")
       assert(rot(f).sparkSession eq spark)
