@@ -44,8 +44,11 @@ final class Rounds private (name: String, spark: SparkSession) {
   /** Arm the small-input law for `rows` measured rows until the
     * enclosing round (or, outside a round, the operator) exits; its
     * dials merge over an outer window's. The broadcast-hint function
-    * for the operator's measured-small join sides. */
-  def gate(rows: Long): DataFrame => DataFrame = StaticPlan.arm(spark, rows)
+    * for the operator's measured-small join sides. `scalar`: a round
+    * does a few scalar operations per row, so it runs interpreted
+    * through the law's static band ([[StaticPlan]]). */
+  def gate(rows: Long, scalar: Boolean = false): DataFrame => DataFrame =
+    StaticPlan.arm(spark, rows, scalar)
 
   /** Rounds 1..`maxRounds` of `step` (given the round number),
     * stopping after the first round whose change count is 0; the

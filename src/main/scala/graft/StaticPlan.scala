@@ -26,19 +26,23 @@ import org.apache.spark.sql.functions.broadcast
  *
  * 1. The loop window, [[graft.Rounds.gate]] in a bounded-round
  *    operator. The operator measures its loop frames' ROW count; under
- *    [[SmallRows]] the window arms two bands of dials.
+ *    [[SmallRows]] the window arms nested bands of dials.
  *
  *    - The hinted band, every armed window: shuffle partitions derived
  *      from the measured rows ([[RowsPerPartition]] each), and a
  *      broadcast-hint function for the caller's vertex-sized join
  *      sides (rotated leaves carry capped "unknown" stats, so static
  *      planning would otherwise sort-merge everything).
- *    - The static-and-interpreted band, below [[AqeOffRows]]: AQE off
- *      (each rotation's multi-exchange stage tree runs as ONE job, not
- *      one job per exchange) and the serve binding's interpreted dials
- *      (whole-stage codegen off plus `factoryMode=NO_CODEGEN`): a
- *      loop's round-varying literals and many distinct plans compile
- *      fresh classes that a round of this size never earns back.
+ *    - The static band, below [[AqeOffRows]]: AQE off (each
+ *      rotation's multi-exchange stage tree runs as ONE job, not one
+ *      job per exchange).
+ *    - Codegen: whole-stage codegen off at [[RowsPerPartition]] rows
+ *      or fewer (round-varying literals make every rotation compile
+ *      fresh classes). A `scalar` loop (a few scalar operations per
+ *      row: the PageRank kernel) runs the serve binding's interpreted
+ *      dials through the static band; other loops keep codegen's
+ *      per-row speedup (hyperBall and scc ran up to twice as slow
+ *      interpreted with a warm codegen cache, 4 cores).
  *
  *    The dials become the calling THREAD's armed scope for the body;
  *    a nested window merges its dials over the outer ones (inner wins
@@ -70,8 +74,8 @@ import org.apache.spark.sql.functions.broadcast
  * generated (one Janino compile each) unless the factory mode selects
  * their interpreted versions. Under [[SmallBytes]] interpreted
  * evaluation costs less than the compiles it avoids; a serve_mixed
- * cycle of 17 requests went from about 105 compiles to none. The
- * loop window's static band sets the same two dials: a batch of
+ * cycle of 17 requests went from about 105 compiles to none. A
+ * scalar loop window sets the same two dials: a batch of
  * iterative operators cycles through more distinct classes than
  * Spark's JVM-wide 100-entry codegen cache holds, so whole-stage
  * codegen alone left every warm call recompiling. `factoryMode` is an
@@ -124,8 +128,8 @@ object StaticPlan {
     * 500 k rows (6.4 MB), 44-62 % at 1.5 M. The rewrites bound it. */
   val SmallBytes = 2L << 20
 
-  /** Interpreted execution: the serve binding's dials, and the loop
-    * window's below [[AqeOffRows]]. */
+  /** Interpreted execution: the serve binding's dials, and a scalar
+    * loop window's below [[AqeOffRows]]. */
   private val Interpreted = Map(CodegenKey -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
@@ -238,23 +242,21 @@ object StaticPlan {
     * block exits; the broadcast-hint function. With
     * `SPARK_GRAFT_LAW_LOG` set, prints the dials it actually set (after
     * the kill-switches) to stderr. */
-  private[graft] def arm(spark: SparkSession,
-      measuredRows: Long): DataFrame => DataFrame = {
+  private[graft] def arm(spark: SparkSession, measuredRows: Long,
+      scalar: Boolean = false): DataFrame => DataFrame = {
     val small = measuredRows <= SmallRows && !disabled("all")
     val dials = if (!small) Seq.empty else {
       val parts = math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
         (measuredRows + RowsPerPartition - 1) / RowsPerPartition))
-      // The static band: below two partitions' worth of rows AQE has
-      // nothing to re-plan, and a round's Janino compiles (loops embed
-      // round-varying literals and cycle through more plans than the
-      // codegen cache holds) dwarf its rows. Above it AQE and codegen's
-      // per-row speedup stay on; at scale the law is unarmed.
       val static = measuredRows < AqeOffRows
+      val codegen = if (scalar && static) Interpreted
+        else if (measuredRows <= RowsPerPartition) Map(CodegenKey -> "false")
+        else Map.empty[String, String]
       Seq(
         ("aqe", static, Map(AqeKey -> "false")),
         ("parts", true, Map(ShufKey -> parts.toString)),
-        ("codegen", static, Interpreted))
+        ("codegen", codegen.nonEmpty, codegen))
         .collect { case (dial, true, kv) if !disabled(dial) => (dial, kv) }
     }
     val hints = small && !disabled("hints")

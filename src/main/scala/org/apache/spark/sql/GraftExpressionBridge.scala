@@ -82,7 +82,9 @@ object GraftExpressionBridge {
    * Second: the leaf reports the hash partitioning of `run`'s FINAL plan
    * when that hashes into the RDD's partition count: an adaptive plan
    * reports none before it runs, so the checkpoint froze none, and a
-   * co-partitioned join on it would re-shuffle it every round.
+   * co-partitioned join on it would re-shuffle it every round. A
+   * coalesced read reports `CoalescedHashPartitioning` (partition i
+   * holds a run of hash buckets), which is never adopted.
    */
   def checkpointLeaf(df: DataFrame, run: Option[DataFrame]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,

@@ -78,6 +78,48 @@ class RotationSpec extends SparkSpec {
     rot.release()
   }
 
+  test("a keyed slot adopts no coalesced read's partitioning") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.LogicalRDD
+    def leafPartitioning(df: DataFrame) = df.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.outputPartitioning
+      case p => fail(s"not a checkpoint: ${p.nodeName}")
+    }
+    // a groupBy over 4 shuffle partitions that AQE coalesces to 2 when
+    // allowed (each bucket shuffles 32-64 KB): coalesced partition i
+    // holds a run of hash buckets, not the rows whose hash is i mod 2
+    val s = spark.newSession()
+    Seq("spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "128k")
+      .foreach { case (k, v) => s.conf.set(k, v) }
+    def grouped = s.range(0, 20000, 1, 4)
+      .select((col("id") % 4000).as("k"), col("id").as("v"))
+      .groupBy("k").agg(sum("v").as("s"))
+    val rot = new Rotation(keyed = true)
+    try {
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      assert(leafPartitioning(rot(grouped)) match {
+        case h: HashPartitioning => h.numPartitions == 4
+        case _ => false
+      }, "an uncoalesced hash(k) root must be adopted")
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      val leaf = rot(grouped)
+      val parts = GraftExpressionBridge.checkpointRdd(leaf).getNumPartitions
+      assert(parts > 1 && parts < 4,
+        s"AQE must coalesce the fixture to 2 or 3 partitions, not $parts")
+      assert(!leafPartitioning(leaf).isInstanceOf[HashPartitioning],
+        s"a coalesced root was adopted: ${leafPartitioning(leaf)}")
+      // a join that trusted a claimed hash(k, parts) would skip the
+      // leaf's exchange and lose rows
+      val keys = s.range(0, 4000).select(col("id").as("k"))
+        .repartition(parts, col("k"))
+      assert(leaf.join(keys.hint("shuffle_hash"), "k").count() == 4000L)
+    } finally rot.release()
+  }
+
   test("released checkpoints log no lineage WARN") {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}

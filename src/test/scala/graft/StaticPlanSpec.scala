@@ -32,8 +32,9 @@ class StaticPlanSpec extends SparkSpec {
 
   /** `body` inside a loop window gated on `rows`, given the window's
     * broadcast-hint function. */
-  private def window[T](rows: Long)(body: (DataFrame => DataFrame) => T): T =
-    Rounds("spec", spark) { rs => body(rs.gate(rows)) }
+  private def window[T](rows: Long, scalar: Boolean = false)
+      (body: (DataFrame => DataFrame) => T): T =
+    Rounds("spec", spark) { rs => body(rs.gate(rows, scalar)) }
 
   /** The armed dials a frame of the body would run under. */
   private def armedConf(key: String): Option[String] =
@@ -42,7 +43,7 @@ class StaticPlanSpec extends SparkSpec {
   test("an armed body leaves the caller's confs unchanged and plans its rotation armed") {
     val before = confs
     val rot = new Rotation
-    // 40 000 rows: AQE off and interpreted (< AqeOffRows), 2 partitions
+    // 40 000 rows: AQE off (< AqeOffRows), 2 partitions, codegen kept
     val (parts, aqe, cg, bound) = window(40000L) { _ =>
       assert(confs == before, "the window wrote a caller conf")
       val parts = rotatedParts(rot)
@@ -53,15 +54,25 @@ class StaticPlanSpec extends SparkSpec {
     rot.release()
     assert(parts == 2, s"rotation planned $parts partitions, not the armed 2")
     assert(aqe.contains("false"))
-    assert(cg.contains("false"), "40 000 rows must run interpreted")
+    assert(cg == spark.conf.getOption(CgKey))
     assert(bound eq spark, "a rotation must return a caller-bound frame")
     assert(confs == before)
-    // 70 000 rows: above AqeOffRows, so AQE and codegen are kept
-    val kept = window(70000L) { _ =>
-      Seq(AqeKey, CgKey, FactoryKey).map(armedConf)
+    // 32 768 rows (one partition's worth): whole-stage codegen off;
+    // 40 000 rows of a scalar loop (below AqeOffRows): interpreted
+    val codegen = Seq(CgKey, FactoryKey)
+    val off = window(StaticPlan.RowsPerPartition)(_ => codegen.map(armedConf))
+    assert(off == Seq(Some("false"), spark.conf.getOption(FactoryKey)),
+      s"32 768 rows must turn whole-stage codegen off only: $off")
+    val interpreted = window(40000L, scalar = true)(_ => codegen.map(armedConf))
+    assert(interpreted == Seq(Some("false"), Some("NO_CODEGEN")),
+      s"a scalar loop of 40 000 rows must run interpreted: $interpreted")
+    // 70 000 rows: above AqeOffRows, so AQE and codegen are kept, also
+    // for a scalar loop
+    Seq(false, true).foreach { scalar =>
+      val kept = window(70000L, scalar)(_ => (AqeKey +: codegen).map(armedConf))
+      assert(kept == (AqeKey +: codegen).map(spark.conf.getOption),
+        s"70 000 rows must keep AQE and codegen: $kept")
     }
-    assert(kept == Seq(AqeKey, CgKey, FactoryKey).map(spark.conf.getOption),
-      s"70 000 rows must keep AQE and codegen: $kept")
   }
 
   // The name dates from armed windows that wrote the caller's confs and
@@ -123,7 +134,7 @@ class StaticPlanSpec extends SparkSpec {
       assert(armedConf(ShufKey).contains("2"))
       window(70000L) { _ =>
         // the inner window sets 3 partitions and leaves AQE and codegen
-        // alone, so the outer window's static, interpreted dials stay
+        // alone, so the outer window's AQE-off and codegen stay
         assert(armedConf(ShufKey).contains("3"))
         assert(armedConf(AqeKey).contains("false"))
         assert(rotatedParts(rot) == 3)
@@ -132,8 +143,8 @@ class StaticPlanSpec extends SparkSpec {
           assert(armedConf(CgKey).contains("false"))
         }
         assert(armedConf(ShufKey).contains("3"))
-        assert(armedConf(FactoryKey).contains("NO_CODEGEN"),
-          "the innermost window must restore the outer window's dials")
+        assert(armedConf(CgKey) == spark.conf.getOption(CgKey),
+          "the innermost window must restore the outer windows' codegen")
       }
       assert(armedConf(ShufKey).contains("2"),
         "the inner window must restore the outer window's partitions")
