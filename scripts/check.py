@@ -1,12 +1,15 @@
 #!/usr/bin/env python3
 """Local self-check mirroring the driver's DuckDB oracle compare.
 
-Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
+Usage: python3 scripts/check.py <sfDir> <verifyOutDir> [name,name,...]
 Reads each <outDir>/<name> parquet (Spark result) and replays
 <outDir>/oracle_sql.json in DuckDB with the sf tables registered as views,
-then compares row counts, sorted-column schemas, and value hashes.
+then compares row counts, sorted-column schemas, and value hashes. Each
+OK/FAIL line ends with the seconds DuckDB took for the oracle query.
+A table is a parquet file or, as graft.Amplify writes it, a directory
+of parquet files.
 """
-import json, os, sys, hashlib
+import json, os, sys, hashlib, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -52,10 +55,17 @@ def frame_hash(rows, cols):
     return h.hexdigest()
 
 
+def secs(duck_s):
+    return f" [duck {duck_s:.2f} s]"
+
+
 def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     ok = fail = skipped = 0
     for name, sql in sorted(oracle.items()):
@@ -75,10 +85,12 @@ def main(sf_dir, out_dir, only=None):
             s_cols = [c.lower() for c in spark_rel.columns]
             s_types = [type_class(t) for t in spark_rel.types]
             s_rows = spark_rel.fetchall()
+            t0 = time.perf_counter()
             duck_rel = con.sql(sql)
             d_cols = [c.lower() for c in duck_rel.columns]
             d_types = [type_class(t) for t in duck_rel.types]
             d_rows = duck_rel.fetchall()
+            duck_s = time.perf_counter() - t0
         except Exception as e:
             print(f"FAIL {name}: {e}")
             fail += 1
@@ -113,10 +125,10 @@ def main(sf_dir, out_dir, only=None):
                 if only_s: problems.append(f"only-spark {only_s}")
                 if only_d: problems.append(f"only-duck {only_d}")
         if problems:
-            print(f"FAIL {name}: " + "; ".join(problems))
+            print(f"FAIL {name}: " + "; ".join(problems) + secs(duck_s))
             fail += 1
         else:
-            print(f"OK   {name} ({len(s_rows)} rows)")
+            print(f"OK   {name} ({len(s_rows)} rows){secs(duck_s)}")
             ok += 1
     tail = f", {skipped} not-run" if skipped else ""
     print(f"\n{ok} ok, {fail} fail{tail}")

@@ -236,6 +236,29 @@ object Bench {
       s""","fast_sum":${fmt(omitted.map(_._2).sum, 1)}$errField""" + tail
   }
 
+  /** The retry valve's per-query floors: the queries of the newest
+    * `BENCH_LOCAL_r<N>[_opt<M>].json` record (by round, then opt pass)
+    * whose `"sf"` is `sfDir`. `records` are (file name, first line); a
+    * record of another directory gives no floors, since its times
+    * would trip the valve on every query of a larger or smaller input. */
+  private[graft] def refFloors(records: Seq[(String, String)],
+      sfDir: String): Map[String, Double] = {
+    val sf = "\"sf\":\"([^\"]*)\"".r
+    val same = records.filter { case (f, line) =>
+      f.matches("BENCH_LOCAL_r\\d+(_opt\\d+)?\\.json") &&
+        sf.findFirstMatchIn(line).exists(_.group(1) == sfDir)
+    }
+    if (same.isEmpty) Map.empty
+    else {
+      val (_, first) = same.maxBy { case (f, _) =>
+        val ns = "\\d+".r.findAllIn(f).map(_.toInt).toSeq
+        (ns.head, ns.drop(1).headOption.getOrElse(0))
+      }
+      "\"(q_[a-z0-9_]+)\":([0-9][0-9.]*)".r.findAllMatchIn(first)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    }
+  }
+
   private[graft] def shortName(k: String): String =
     Abbrev.foldLeft(k.stripPrefix("q_")) { case (s, (full, short)) =>
       if (s.startsWith(full)) short + s.substring(full.length) else s
@@ -303,30 +326,19 @@ object Bench {
     // r13 postmortem: min(warm, timed) rejects single-slot stalls but
     // q_eff_diameter hit a stall spanning BOTH slots (warm 56.4 /
     // timed 53.6, isolated 5.1) and polluted the headline by ~48s.
-    // Reference numbers from the latest committed BENCH_LOCAL_r<N>
-    // .json arm a bounded retry: a slot whose min exceeds 3x its
-    // committed value (and an absolute floor so sub-second noise never
-    // retries) re-runs up to 2 more times and the headline takes the
-    // best of all runs. Only stalled outliers pay the retry cost.
+    // Reference numbers from a committed BENCH_LOCAL_r<N>.json of this
+    // run's directory ([[refFloors]]) arm a bounded retry: a slot whose
+    // min exceeds 2x its committed value (and an absolute floor so
+    // sub-second noise never retries) re-runs up to 2 more times and
+    // the headline takes the best of all runs. Only stalled outliers
+    // pay the retry cost.
     val refTimes: Map[String, Double] = try {
       import scala.jdk.CollectionConverters._
-      // optimization rounds commit cooled records as _optN suffixes of
-      // the same round number; the newest record (by round, then opt
-      // pass) carries the freshest per-query floors for the retry valve
-      val files = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-        .iterator.asScala.map(_.getFileName.toString)
-        .filter(_.matches("BENCH_LOCAL_r\\d+(_opt\\d+)?\\.json")).toSeq
-      if (files.isEmpty) Map.empty
-      else {
-        val latest = files.maxBy { f =>
-          val ns = "\\d+".r.findAllIn(f).map(_.toInt).toSeq
-          (ns.head, ns.drop(1).headOption.getOrElse(0))
-        }
-        val first = java.nio.file.Files
-          .readString(java.nio.file.Paths.get(latest)).linesIterator.next()
-        """"(q_[a-z0-9_]+)":([0-9][0-9.]*)""".r.findAllMatchIn(first)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+      refFloors(java.nio.file.Files.list(java.nio.file.Paths.get("."))
+        .iterator.asScala.filter(_.getFileName.toString.startsWith("BENCH_LOCAL_"))
+        .map(p => p.getFileName.toString ->
+          java.nio.file.Files.readString(p).linesIterator.nextOption().getOrElse(""))
+        .toSeq, sfDir)
     } catch { case t: Throwable =>
       System.err.println(oneLine("refTimes", t)); Map.empty }
     // name, min over runs (warm, timed, retries), err,

@@ -47,8 +47,8 @@ object CacheScope {
     frames.remove(ds)
   }
 
-  /** Release only the registered operator-internal frames — harness-
-    * owned persists (e.g. ScaleSmoke's amplified fixtures) survive. */
+  /** Release only the registered operator-internal frames; persists
+    * the caller made itself survive. */
   def drainRegistered(): Unit = {
     var d = frames.poll()
     while (d != null) { d.unpersist(blocking = false); d = frames.poll() }

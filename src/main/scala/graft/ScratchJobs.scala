@@ -26,10 +26,8 @@ object ScratchJobs {
     val qname = sys.env.getOrElse("SPARK_GRAFT_PROBE", "q_leiden_full")
     val spark = SparkSession.builder()
       .master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_SHUF", "32"))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_AQE", "true"))
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", "1m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

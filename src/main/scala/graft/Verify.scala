@@ -21,9 +21,14 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // one line per query closes its block of `[law]` lines, so a run
+      // with SPARK_GRAFT_LAW_LOG set attributes each law window to its query
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // operator-internal persists must not accrete across queries

@@ -31,4 +31,18 @@ class BenchSpec extends AnyFunSuite {
     assert(line.startsWith("""{"metric":"total","""))
     assert(line.endsWith(""""fast_omitted":0,"fast_sum":0,"errors":3,"sf":"x"}"""), line)
   }
+
+  test("retry floors come only from a record of the run's directory") {
+    def rec(sf: String, secs: Double) =
+      s"""{"metric":"total","value":$secs,"unit":"sec","queries":{"q_a":$secs,"q_b":0.25},"sf":"$sf"}"""
+    val records = Seq(
+      "BENCH_LOCAL_r16.json" -> rec("/d/sf0.1", 3.0),
+      "BENCH_LOCAL_r16_opt1.json" -> rec("/d/sf0.1", 2.0),
+      "BENCH_LOCAL_r17.json" -> rec("/d/sf0.01", 1.0),
+      "SCALE_x10.json" -> rec("/d/sf0.1x10", 9.0))
+    assert(Bench.refFloors(records, "/d/sf0.1") == Map("q_a" -> 2.0, "q_b" -> 0.25))
+    assert(Bench.refFloors(records, "/d/sf0.01") == Map("q_a" -> 1.0, "q_b" -> 0.25))
+    assert(Bench.refFloors(records, "/d/sf0.1x10").isEmpty)
+    assert(Bench.refFloors(records, "/d/other").isEmpty)
+  }
 }
